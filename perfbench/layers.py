@@ -25,6 +25,7 @@ LAYER_UNITS = {
     "session.get_spark_s": "s",
     "session.warmup_s": "s",
     "session.cached_bytes_peak": "bytes",
+    "jvm.heap_live_mb": "MB",
     "io.scan_s": "s",
     "io.rows_read": "count",
     "io.bytes_read": "bytes",

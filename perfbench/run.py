@@ -40,15 +40,23 @@ from workloads import WORKLOADS, events_rows  # noqa: E402
 # Whole run, input generation and cleanup included, must end inside 180 s.
 RUN_BUDGET_S = 160.0
 END_TO_END = {"setup_s": "s", "op_s": "s", "jvm_peak_rss_mb": "MB"}
-# Launch options for the driver JVM: temp files stay in the checkout
-# and no hsperfdata file is written under /tmp.
-JAVA_OPTS = "-Xms2g -XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+# Launch options for the driver JVM: temp files stay in the checkout,
+# no hsperfdata file is written under /tmp, and the heap starts at its
+# full size (DRIVER_HEAP).
+JAVA_OPTS = "-Xms{heap} -XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+# A fixed driver heap, so that the JVM's peak RSS repeats from run to
+# run. Under the engine's 12g ceiling G1 grew the heap at
+# GC-timing-dependent points: peak RSS spread by half its median over
+# five wow_publish runs, and with only the start pinned at 2g two runs
+# in ten still grew to 4 GB. At the benchmark's input sizes 2g spills
+# nothing and caches under 2 MB (perfbench/README.md).
+DRIVER_HEAP = "2g"
 
 
 def worker_env(work: str, trace: bool) -> dict:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
-    submit = ["--driver-java-options", JAVA_OPTS.format(tmp=tmp)]
+    submit = ["--driver-java-options", JAVA_OPTS.format(heap=DRIVER_HEAP, tmp=tmp)]
     if trace:
         submit += [
             "--conf", "spark.eventLog.enabled=true",
@@ -64,10 +72,7 @@ def worker_env(work: str, trace: bool) -> dict:
         "PYSPARK_PYTHON": sys.executable,
         "PYSPARK_SUBMIT_ARGS": shlex.join(submit + ["pyspark-shell"]),
         "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
-        # A 2 GB driver heap fills early in every run, so the JVM's
-        # peak RSS repeats from run to run; the default 12 GB heap
-        # grows at GC-timing-dependent points.
-        "SPARK_DRIVER_MEM": "2g",
+        "SPARK_DRIVER_MEM": DRIVER_HEAP,
         "SPARK_LOCAL_DIRS": tmp,
         "TMPDIR": tmp,
     })
@@ -139,15 +144,13 @@ def report(args, res: dict, digest: str) -> dict:
     print(f"setup_s {res['setup_s']:.4f} s (n=1)")
     print(f"{WORKLOADS[args.workload]['op_name']} {statistics.median(times):.4f} s "
           f"(n={len(times)}, median; min {min(times):.4f} max {max(times):.4f})")
-    probes = res["probes"]
-    print(f"cpu_probe_s {statistics.median(probes):.4f} s (n={len(probes)}, median; host CPU "
-          f"speed around the timed operations, for reading drift between runs)")
     print(f"failed_op_ratio {failed / res['attempted']:.4f} ratio ({failed}/{res['attempted']})")
     print(f"jvm_peak_rss_mb {res['jvm_peak_rss_mb']:.1f} MB (n=1)")
     if args.trace:
         layers = res["layers"]
         for name, unit in LAYER_UNITS.items():
-            print(f"layer {name} {layers[name]:.6g} {unit}")
+            note = " (unresolved: not above the spread of its passes)" if name in res["unresolved"] else ""
+            print(f"layer {name} {layers[name]:.6g} {unit}{note}")
         return {n: {"value": layers[n], "unit": u} for n, u in LAYER_UNITS.items()}
     values = {"setup_s": res["setup_s"], "op_s": statistics.median(times),
               "jvm_peak_rss_mb": res["jvm_peak_rss_mb"]}

@@ -3,9 +3,11 @@ metric's spread: the distance between the first and third quartile
 (``statistics.quantiles(values, n=4)``) as a share of the median,
 next to the metric's bound in ``BENCHMARK.json``.
 
-    python3 perfbench/steadiness.py --runs 10 --first-seed 100
+    python3 perfbench/steadiness.py --first-seed 100
 
-Each run's JSON result is appended to ``--log``, one line per run.
+Runs every workload of ``BENCHMARK.json`` on ``RUNS`` consecutive
+seeds, workloads alternating within a seed. Each run's JSON result
+is appended to ``--log``, one line per run.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+RUNS = 10
 
 
 def spec() -> dict:
@@ -28,9 +31,9 @@ def spec() -> dict:
 
 def run_all(args, bench: dict) -> list[dict]:
     rows = []
-    for i in range(args.runs):
+    for i in range(RUNS):
         seed = args.first_seed + i
-        for wl in args.workloads or [w["name"] for w in bench["workloads"]]:
+        for wl in [w["name"] for w in bench["workloads"]]:
             cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", wl,
                    "--seed", str(seed), "--seconds", str(bench["run_seconds"]), "--trace", "0"]
             proc = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
@@ -63,9 +66,7 @@ def report(rows: list[dict], bench: dict) -> None:
 
 def main() -> None:
     p = argparse.ArgumentParser()
-    p.add_argument("--runs", type=int, default=10)
     p.add_argument("--first-seed", type=int, default=100)
-    p.add_argument("--workloads", nargs="*")
     p.add_argument("--log", default=os.path.join(HERE, ".work", "steadiness.jsonl"))
     args = p.parse_args()
     bench = spec()

@@ -6,11 +6,12 @@ options). Sequence, closed loop, one client thread:
 
 1. setup: import the registry, ``session.get_spark()``, then a warm-up
    pass of every query that collects its rows for the oracle check,
-   and one untimed operation;
+   and the workload's untimed ``warmup_ops``;
 2. timed operations until ``--seconds`` have passed;
 3. the oracle check of the warm-up rows (outside the timed region);
-4. traced runs only: the io → obs → rain → ingest prefix chain and the
-   substrate row counts, then per-layer metrics from the event log.
+4. traced runs only: the live heap after a full GC, the io → obs →
+   rain → ingest prefix chain and the substrate row counts, then
+   per-layer metrics from the event log.
 
 Writes one JSON result to ``--out``.
 """
@@ -31,11 +32,9 @@ from layers import StreamEvents, Tracer, per_op_metrics, read_eventlog, span_cou
 
 from workloads import STREAM_QIDS, WORKLOADS  # noqa: E402
 
-MIN_OPS = 2
-# CPU-speed probe: one process per core counts to CAL_LOOPS (about
-# 0.1 s on a 2.0 GHz vCPU of the machine the benchmark was defined on).
-CAL_LOOPS = 2_000_000
-CHAIN_PASSES = 2
+# an odd minimum, so that a run with few operations reports its middle one
+MIN_OPS = 3
+CHAIN_PASSES = 4
 CHAIN = ("io.scan", "obs.substrate", "rain.state", "ingest.payload")
 
 
@@ -51,34 +50,6 @@ class Frozen:
         return self.rows
 
 
-def _spin(n: int) -> float:
-    t0 = time.perf_counter()
-    total = 0
-    for i in range(n):
-        total += i
-    return time.perf_counter() - t0
-
-
-class Calibrator:
-    """Measures how fast the cores run right now. On a shared host the
-    CPU speed drifts by up to a third between minutes with no change to
-    the program; the probes, taken between timed operations, let a
-    reader of two runs tell that drift from a change in the program."""
-
-    def __init__(self) -> None:
-        import multiprocessing
-
-        self.procs = len(os.sched_getaffinity(0))
-        self.pool = multiprocessing.get_context("spawn").Pool(self.procs)
-
-    def probe(self) -> float:
-        return statistics.mean(self.pool.map(_spin, [CAL_LOOPS] * self.procs, chunksize=1))
-
-    def close(self) -> None:
-        self.pool.close()
-        self.pool.join()
-
-
 def storage_bytes(spark) -> int:
     """Block-manager bytes held by persisted frames right now."""
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -92,6 +63,13 @@ def jvm_peak_rss_mb(spark) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024.0
     raise RuntimeError("VmHWM missing from /proc status")
+
+
+def heap_live_mb(spark) -> float:
+    """Heap the program still holds: used heap right after a full GC."""
+    memory = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    memory.gc()
+    return memory.getHeapMemoryUsage().getUsed() / 2**20
 
 
 def stop_jvm(spark) -> None:
@@ -115,6 +93,8 @@ class Run:
         self.attempted = 0
         self.failures: list[str] = []
         self.cached_peak = 0
+        # self times that did not exceed the spread of their passes
+        self.unresolved: list[str] = []
 
     def run_query(self, qid: str, collect: bool = False):
         self.attempted += 1
@@ -147,25 +127,23 @@ class Run:
             self.spark.streams.addListener(self.stream.listener())
         with self.tracer.span("session.warmup"):
             frozen = {q: self.run_query(q, collect=True) for q in self.qids}
-            # one untimed operation: the first noop run after the
-            # collecting pass is still 25-35 % slow
-            for qid in self.qids:
-                self.run_query(qid)
+            # the first noop operations after the collecting pass are
+            # still 15-35 % slow
+            for _ in range(WORKLOADS[self.args.workload]["warmup_ops"]):
+                for qid in self.qids:
+                    self.run_query(qid)
         return frozen
 
-    def timed_ops(self) -> tuple[list[float], list[float]]:
-        """Wall time of each operation, and the CPU probes around them
-        (one before the first and one after each)."""
+    def timed_ops(self) -> list[float]:
+        """Wall time of each operation."""
         deadline = time.time() + self.args.seconds
         times: list[float] = []
-        probes = [self.calibrator.probe()]
         while len(times) < MIN_OPS or time.time() < deadline:
             with self.tracer.span("op", op=len(times)) as op:
                 for qid in self.qids:
                     self.run_query(qid)
             times.append(op["end"] - op["start"])
-            probes.append(self.calibrator.probe())
-        return times, probes
+        return times
 
     def oracle_check(self, frozen: dict) -> dict:
         import duckdb
@@ -203,32 +181,38 @@ class Run:
             "rain.state": rain_metrics,
             "ingest.payload": wow_payload,
         }
-        for _ in range(CHAIN_PASSES):
-            for name in CHAIN:
+        # Every pass runs all four prefixes back to back, forwards on
+        # even passes and backwards on odd ones, so a self time is a
+        # difference within one pass and host drift between passes,
+        # or warm-up within one, does not favour either prefix.
+        for i in range(CHAIN_PASSES):
+            for name in CHAIN if i % 2 == 0 else reversed(CHAIN):
                 with self.tracer.span(name):
                     builders[name](self.spark, self.args.data).write.format("noop").mode("overwrite").save()
         with self.tracer.span("counts"):
             events = load(self.spark, self.args.data, "events").count()
             obs = observations(self.spark, self.args.data).count()
-        med = {n: statistics.median(self.tracer.durations(n)) for n in CHAIN}
-        return {
-            "io.scan_s": med["io.scan"],
-            "obs.substrate_s": med["obs.substrate"] - med["io.scan"],
-            "rain.state_s": med["rain.state"] - med["obs.substrate"],
-            "ingest.payload_s": med["ingest.payload"] - med["rain.state"],
+        walls = {n: self.tracer.durations(n) for n in CHAIN}
+        out = {"io.scan_s": statistics.median(walls["io.scan"])}
+        for inner, outer in zip(CHAIN, CHAIN[1:]):
+            diffs = [b - a for a, b in zip(walls[inner], walls[outer])]
+            q1, med, q3 = statistics.quantiles(diffs, n=4)
+            out[f"{outer}_s"] = med
+            if med <= q3 - q1:
+                self.unresolved.append(f"{outer}_s")
+        out.update({
             "obs.rows_out": obs,
             "obs.rows_quarantined": events - obs,
             "obs.keep_ratio": obs / events,
-        }
+        })
+        return out
 
     def main(self) -> dict:
         frozen = self.setup()
         setup_s = time.time() - self.args.launched
-        self.calibrator = Calibrator()
-        try:
-            op_times, probes = self.timed_ops()
-        finally:
-            self.calibrator.close()
+        op_times = self.timed_ops()
+        # after the last timed operation, before anything else runs
+        live = heap_live_mb(self.spark) if self.args.trace else None
         verdicts = self.oracle_check(frozen)
         layers = self.chain() if self.args.trace else {}
         rss = jvm_peak_rss_mb(self.spark)
@@ -238,14 +222,15 @@ class Run:
         result = {
             "setup_s": setup_s,
             "op_times": op_times,
-            "probes": probes,
             "jvm_peak_rss_mb": rss,
             "attempted": self.attempted,
             "failures": self.failures,
             "verdicts": verdicts,
+            "unresolved": self.unresolved,
         }
         if self.args.trace:
             result["layers"] = self.layer_metrics(layers, setup_s, op_times)
+            result["layers"]["jvm.heap_live_mb"] = live
         with open(self.args.spans, "w") as fh:
             json.dump(self.tracer.spans, fh)
         return result

@@ -16,13 +16,17 @@ WORKLOADS: dict[str, dict] = {
         "qids": ["q_sink_http_form"],
         "op_name": "wow_job_s",
         "events": 50_000,
+        "warmup_ops": 2,
     },
-    # The tick as micro-batches: the rain state machine and the WOW
-    # foreachBatch sink, each replayed end to end and read back.
+    # The tick as micro-batches: the rain state machine replayed end to
+    # end into its parquet sink and read back. The other three stream
+    # queries of the registry do not fit the run-time budget of a
+    # benchmark pass (perfbench/README.md, "Scope").
     "stream_ticks": {
-        "qids": ["q_stream_stateful", "q_stream_sink"],
+        "qids": ["q_stream_stateful"],
         "op_name": "stream_round_s",
         "events": 20_000,
+        "warmup_ops": 1,
     },
 }
 

@@ -22,9 +22,15 @@ from metoffice_spark import registry  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: ingest sf0.001 → dew point, wind decode + mast
     correction, SMHI pressure reduction, stateful daily-rain machine,
-    imperial conversions → one WOW-shaped record per observation."""
-    from metoffice_spark.operators.ingest import wow_payload
+    imperial conversions → one WOW-shaped record per observation.
 
+    ``wow_payload`` is a helper, not a registered builder, so the
+    runtime confs are applied here the way the registry applies them
+    to every builder."""
+    from metoffice_spark.operators.ingest import wow_payload
+    from metoffice_spark.session import tune
+
+    tune(spark)
     return wow_payload(spark, "/root/testdata/sf0.001")
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 
 def _rev_cents(price: str = "l_extendedprice", disc: str = "l_discount"):
@@ -57,7 +57,6 @@ def q_olap_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: customer dim broadcasts into orders; the orders x lineitem
     equi-join shuffles on orderkey (bucketable at scale); top-k is
     TakeOrderedAndProject — no global sort."""
-    spark = tune(spark)
     cutoff = "TIMESTAMP '1998-06-01 00:00:00'"
     cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load(spark, sf_dir, "orders").filter(F.expr(f"o_orderdate < {cutoff}"))
@@ -101,7 +100,6 @@ def q_olap_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue from orders where the customer and supplier share a
     nation, per EUROPE nation, one year. Six-table join: all four
     dims broadcast, the two facts shuffle on orderkey only."""
-    spark = tune(spark)
     region = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     nation = load(spark, sf_dir, "nation")
     cust = load(spark, sf_dir, "customer")
@@ -151,7 +149,6 @@ GROUP BY n_name
 def q_olap_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers who returned goods in a quarter, ranked by lost
     revenue, top 20 — the classic churn report."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     orders = load(spark, sf_dir, "orders").filter(
@@ -204,7 +201,6 @@ def q_olap_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders with at least one line shipped after the order date
     (late shipment), counted by priority — EXISTS decorrelated to a
     left-semi join on orderkey."""
-    spark = tune(spark)
     orders = load(spark, sf_dir, "orders").filter(
         F.expr(
             "o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'"
@@ -241,7 +237,6 @@ def q_olap_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct suppliers shipping each small-part brand, excluding
     suppliers in arrears (anti join) — distinct-agg + anti-join in one
     plan."""
-    spark = tune(spark)
     part = load(spark, sf_dir, "part").filter(F.col("p_size") <= 10)
     bad = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
@@ -303,7 +298,7 @@ def q_percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle): a failed reading is not a data point of the value
     # distribution — its NULL v_fp ranks first in Spark and last in
     # DuckDB, shifting every percentile index.
-    ev = load(tune(spark), sf_dir, "events").filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
         & (F.abs(F.col("value")) < F.lit(9.0e12))
     ).select(
@@ -367,7 +362,7 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # time axis — a NULL-ts click sits at the frame's START in Spark
     # (sees no prior view) but at its END in DuckDB (sees every view),
     # flipping click_ok for that user.
-    ev = load(tune(spark), sf_dir, "events").filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
     ).select(
         "user_id", "event_id", "ts", "event_type"
@@ -463,7 +458,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two aggregates shuffling user_id / (user, week) pairs with
     map-side combine, then a broadcast of the cohort-size table
     (#weeks rows). No windows, no skew hotspot."""
-    ev = load(tune(spark), sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     week = lambda c: F.expr(f"div(datediff({c}, date'{_EPOCH_DAY}'), 7)")  # noqa: E731
     firsts = (
         ev.groupBy("user_id")
@@ -549,7 +544,7 @@ def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle): an untimestamped event has no inactivity gap to measure
     # — and its NULL epoch would split sessions differently under the
     # two engines' opposite NULL sort placement.
-    ev = load(tune(spark), sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.lag("ts").over(order_w)
     marked = ev.withColumn(
@@ -639,7 +634,6 @@ _PCTC = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
 def q_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, percentile): n, the lo/hi bracket values, and
     the exact interpolated value (1e-3 fixed point)."""
-    spark = tune(spark)
     # rank-validity boundary (r08 ts+value probe): as
     # q_percentile_exact — NULL/non-finite readings are not
     # distribution points.
@@ -744,7 +738,6 @@ QUERIES["q_percentile_cont"] = (q_percentile_cont, _pctc_oracle())
 def q_collab_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per anchor part: its top-5 co-purchase partners by lift
     (1e-6 fixed point), with support counts."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = scoped_persist(li.distinct())
     part_cnt = baskets.groupBy("l_partkey").agg(
@@ -852,7 +845,6 @@ QUERIES["q_collab_filter"] = (q_collab_filter, ORACLE_COLLAB_FILTER)
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: n, p05/p95 cutoffs (1e-3 fp), clipped-low/high
     counts, raw mean, winsorized mean."""
-    spark = tune(spark)
     # rank-validity boundary (r08 ts+value probe): NULL readings are
     # not distribution points — they'd shift the p05/p95 rank indices
     # differently per engine (NULLS FIRST vs LAST).
@@ -975,7 +967,6 @@ def q_metric_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: period counts/cents, total delta (1e-6 fp),
     volume effect, residual rate/mix effect; volume + rate == delta
     exactly."""
-    spark = tune(spark)
     ev = scoped_persist(
         load(spark, sf_dir, "events").select(
             "event_type",
@@ -1087,7 +1078,6 @@ QUERIES["q_metric_decompose"] = (q_metric_decompose, ORACLE_METRIC_DECOMPOSE)
 def q_olap_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: matching lineitem count and discounted revenue cents
     under three OR'd brand/size/quantity bands."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_quantity",

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_order_stats
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -70,7 +70,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle): a touch or purchase with no timestamp has no position
     # in the user's journey (Spark NULLS FIRST vs DuckDB NULLS LAST
     # would re-attribute every affected user otherwise).
-    ev = load(tune(spark), sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -142,7 +142,7 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle): an event with no timestamp has no position in the
     # user's sequence — and Spark orders NULL ts FIRST where DuckDB
     # orders it LAST, so keeping it diverges every transition pair.
-    ev = load(tune(spark), sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.select(
@@ -235,7 +235,6 @@ daily AS (
 def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, lag in {1, 2}): pair count, exact moment sums,
     and the autocorrelation coefficient (IEEE, computed last)."""
-    spark = tune(spark)
     daily = scoped_persist(_daily(spark, sf_dir))
     w = Window.partitionBy("event_type").orderBy("day")
     out = None
@@ -322,7 +321,6 @@ QUERIES["q_ts_autocorr"] = (q_ts_autocorr, ORACLE_TS_AUTOCORR)
 def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: series length, the CUSUM-peak day (earliest on
     ties), peak |cusum| (1e-6 fixed point), and shift direction."""
-    spark = tune(spark)
     # persisted: consumed twice (per-type stats + the cusum scan) —
     # without it the events scan and daily aggregate run twice.
     daily = scoped_persist(_daily(spark, sf_dir))
@@ -420,7 +418,6 @@ QUERIES["q_ts_changepoint"] = (q_ts_changepoint, ORACLE_TS_CHANGEPOINT)
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation after applying the 3-version changelog: surviving
     customer count and total balance in exact integer cents."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
@@ -530,7 +527,6 @@ QUERIES["q_cdc_apply"] = (q_cdc_apply, ORACLE_CDC_APPLY)
 def q_win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, day): the daily count and the trailing
     7-observation exact median."""
-    spark = tune(spark)
     daily = _daily(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
@@ -583,7 +579,6 @@ QUERIES["q_win_rolling_median"] = (q_win_rolling_median, ORACLE_WIN_ROLLING_MEDI
 def q_ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (dow 0=Sunday, hour): event count, value cents, and the
     cell's 1e-6 fixed-point share of all events."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     cells = ev.select(
         F.expr(
@@ -655,7 +650,7 @@ def q_behavior_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The rest of this module got the boundary in r08; this builder
     # survived the i.i.d. probes on seed luck until the independent-
     # mask composition exposed it.
-    ev = load(tune(spark), sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.lag("ts").over(order_w)
     marked = ev.withColumn(
@@ -766,7 +761,7 @@ def q_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the user's sequence — its char would sit at the FRONT of
     # Spark's struct sort (NULL fields first) and the BACK of the
     # oracle's ORDER BY (NULLS LAST), changing the match count.
-    ev = load(tune(spark), sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     seqs = (
         ev.select(
             "user_id",
@@ -831,7 +826,7 @@ QUERIES["q_pattern_match"] = (q_pattern_match, ORACLE_PATTERN_MATCH)
 def q_win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event: the user's trailing-1-hour event count and value
     cents (event-time RANGE frame, self inclusive)."""
-    ev = load(tune(spark), sf_dir, "events").select(
+    ev = load(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         F.col("ts").cast("long").alias("epoch_s"),
@@ -883,7 +878,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on the time axis a bar is defined over — NULL ts otherwise forms
     # a NULL day group AND enters the open/close struct picks, where
     # Spark compares NULL struct fields FIRST and DuckDB LAST.
-    ev = load(tune(spark), sf_dir, "events").filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
     ).select(
         "event_type",
@@ -955,7 +950,6 @@ QUERIES["q_ohlc_bars"] = (q_ohlc_bars, ORACLE_OHLC_BARS)
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (as_of_version, nation): surviving customers and balance
     cents of the snapshot at that version."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
@@ -1077,7 +1071,6 @@ QUERIES["q_time_travel"] = (q_time_travel, ORACLE_TIME_TRAVEL)
 def q_mad_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event type: n, median, MAD, and points beyond 3 MADs
     (count + share)."""
-    spark = tune(spark)
     # rank-validity boundary (r08 ts+value probe; non-finite added by
     # the r10 extreme-value probe, mirrored in the oracle): a NULL or
     # NaN/±Inf reading is not a point of the distribution — NULL rank
@@ -1224,7 +1217,6 @@ _TREND_R2 = f"({_TREND_NUM} * {_TREND_NUM}) / ({_TREND_DEN_X} * {_TREND_DEN_Y})"
 def q_ts_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event type: day count, OLS slope (dollars/day), intercept
     (dollars at the first day), and R^2 of the daily-total trend."""
-    spark = tune(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))
@@ -1335,7 +1327,6 @@ QUERIES["q_ts_trend"] = (q_ts_trend, ORACLE_TS_TREND)
 def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: n converted users, min / lower-median / p90 / max
     click→purchase latency in whole seconds."""
-    spark = tune(spark)
     ev = scoped_persist(
         load(spark, sf_dir, "events").select(
             "user_id",
@@ -1432,7 +1423,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributed revenue (1e-6-cent fixed point)."""
     # sequencing-validity boundary (r08 null-ts probe): see
     # q_attribution — an untimestamped event has no journey position.
-    ev = load(tune(spark), sf_dir, "events").filter(F.col("ts").isNotNull()).select(
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).select(
         "user_id",
         "ts",
         "event_id",

@@ -41,7 +41,7 @@ from metoffice_spark.operators.llm import (
     TOKS_SPARK,
     _spans_spark,
 )
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -83,7 +83,6 @@ def q_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix (actual_lang, pred_lang, n_docs) of a
     corpus-trained Laplace-smoothed naive-Bayes language classifier
     re-applied to its own training corpus."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
     # ONE explode feeds everything: per-(doc, token) partials carry the
     # lang label, and the corpus model counts are a SECOND-LEVEL
@@ -229,7 +228,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: token count, summed hashed-bucket weight (exact
     signed BIGINT), mean weight (one IEEE divide last), and the keep
     decision (non-negative mean)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     tok_w = docs.select(
         "doc_id", F.explode(F.expr(TOKS_SPARK)).alias("tok")
@@ -307,7 +305,6 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: distinct 8-token spans, spans shared with other
     documents, duplication fraction (1e-6 fixed point) and keep flag
     (< 50% duplicated)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     # The (doc_id, sh) table must be a SET across rows, not just
     # row-local array_distinct (r09 drdocs probe: a duplicate-id
@@ -407,7 +404,6 @@ _BOOL_TERMS = ("join", "filter", "stream", "window", "data", "slow")
 def q_bool_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three boolean queries (AND / OR / AND-NOT) over token postings:
     (query_id, n_hits, first five doc_ids '|'-joined)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     terms = ", ".join(f"'{t}'" for t in _BOOL_TERMS)
     postings = scoped_persist(
@@ -509,7 +505,6 @@ _MMR_K = 5
 def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 MMR-diversified results: (rnk, doc_id, rel_fp, mmr_fp);
     round 1 has mmr_fp = rel_fp (nothing picked yet)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     terms = ", ".join(f"'{t}'" for t in _MMR_TERMS)
     # persisted: tf feeds both the candidate ranking and the max_tf
@@ -677,7 +672,6 @@ QUERIES["q_mmr_diversify"] = (q_mmr_diversify, _mmr_oracle())
 def q_pref_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (source, lang): chosen/rejected doc ids and the exact
     score margin (strictly positive)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     tok_w = (
         docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("tok"))

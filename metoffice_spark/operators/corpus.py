@@ -38,7 +38,7 @@ from metoffice_spark.operators.llm import (
     _ivec_duck,
     _ivec_spark,
 )
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -91,7 +91,6 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Docs with < 2 tokens have no bigrams and are excluded (the model
     assigns them no probability), identically in both engines."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     # per-(doc, bigram) counts: the partial-aggregated substrate both
     # the model AND the scoring pass derive from (one tokenize).
@@ -199,7 +198,6 @@ _REP_GRAMS_DUCK = (
 def q_repetition_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document (with >= 1 3-gram): instances, distinct grams,
     duplicated fraction (1e-6 fixed point), max single-gram count."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     per_gram = (
         docs.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
@@ -260,7 +258,6 @@ _RRF_TOPK = 10
 def q_rank_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 documents by reciprocal-rank fusion of the tf ranking
     and the (match count, shortness) ranking; exact-integer scores."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = scoped_persist(
         docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("t"))
@@ -383,7 +380,6 @@ def q_semdedup_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per vector: its label, cosine to the label centroid, whether it
     is flagged near-centroid, and whether it survives the dedup
     (keep = not flagged, or the min-vec_id representative)."""
-    spark = tune(spark)
     emb = scoped_persist(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")
@@ -631,7 +627,6 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uniform deterministic K=10 sample per lang: (lang, doc_id,
     draw rank); the md5-of-key draw makes the sample identical on any
     cluster size and in the oracle."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select(
         "lang",
         "doc_id",
@@ -680,7 +675,6 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: docs, distinct langs, char totals/mean, token
     totals/mean, distinct text digests, and exact duplicate count
     (docs minus distinct digests) — one scan, one aggregate."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     row = docs.select(
         "source",
@@ -753,7 +747,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('new' = digest unseen anywhere, 'batch_first' = duplicate within
     the batch only, kept as first holder) — plus merge==batch audit
     columns proving the incremental result equals full-corpus dedup."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("digest")
     )
@@ -836,7 +829,6 @@ def q_fn_url_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: a synthesized URL, its scheme/host/path/q-param,
     and the canonical form (no fragment, no utm param, host kept
     lowercase)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     url = F.expr(
         "concat('https://', upper(source), '.Example.com/', lang, '/doc/',"

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from metoffice_spark.functions.distributed import global_row_number
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _ivec_duck, _ivec_spark
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -52,7 +52,6 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     with map-side combine; the flagged set (bounded by the DF cutoff
     — high-DF phrases are few by Zipf) joins back by phrase hash.
     Nothing is all-pairs; no Python in the path."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     n_docs = docs.count()  # setup scalar, inlined as a literal (llm.py discipline)
     cutoff = int(n_docs * _BP_DF_FRAC)
@@ -154,7 +153,6 @@ def q_bpe_pair_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the only corpus-wide work is the word count (map-side
     combine); pair explosion runs over <= 256 vocab rows; the final
     top-k is a window over #distinct-pairs rows."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.expr(TOKS_SPARK)).alias("w"))
@@ -227,7 +225,6 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: vocab is top-k (bounded, broadcast); the per-token
     membership probe is map-side; only (lang) partial sums shuffle."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = scoped_persist(
         docs.select("lang", F.explode(F.expr(TOKS_SPARK)).alias("t"))
@@ -286,7 +283,7 @@ def q_embed_dimstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the 64x row fan-out collapses to 64 rows per partition via
     map-side combine — the shuffle carries #dims rows regardless of
     corpus size."""
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     dims = emb.select(
         F.posexplode(F.expr(_ivec_spark("embedding"))).alias("dim", "x")
     )
@@ -363,7 +360,6 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel) + a broadcast 16-row offset table; the alternative
     single global ordered window serializes the corpus through one
     task."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.col("n_chars").alias("w"),
@@ -448,7 +444,7 @@ def q_fn_json_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-only JSON extraction (Jackson inside codegen, no
     Python), then a #event-types-row aggregate."""
-    ev = load(tune(spark), sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     agg = ev.select("event_type", k.alias("k")).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -506,7 +502,7 @@ def q_fn_regex_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     count via regex functions.
 
     Scale: map-only codegen expressions; no shuffle at all."""
-    part = load(tune(spark), sf_dir, "part")
+    part = load(spark, sf_dir, "part")
     name = F.col("p_name")
     return part.select(
         "p_partkey",
@@ -577,7 +573,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: codes are 8 nibbles/vector (64x compression); the ADC scan
     joins codes to a broadcast 128-cell-per-query LUT and shuffles
     only (query, vector) partial sums; nothing is all-pairs."""
-    spark = tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", F.expr(_ivec_spark("embedding")).alias("v"))
     qs = base.filter(F.col("vec_id") < _PQ_QUERIES)
@@ -766,7 +761,6 @@ def q_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffle regroups (doc_id, pos, id) rows back into arrays —
     and at 100 TB even that disappears if the explode/regroup runs
     partition-local per document batch."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = scoped_persist(
         docs.select(
@@ -860,7 +854,6 @@ def q_rank_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: no per-row floats until the final audit column; the
     corpus-wide inputs are two broadcast scalars and a 3-row term
     table."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = scoped_persist(
         docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("t"))
@@ -1007,7 +1000,6 @@ def _bpe_spaced_spark(col: str) -> str:
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per adopted merge: round, left/right symbols, merged
     token, and the weighted pair count that won the round."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.expr(TOKS_SPARK)).alias("w"))

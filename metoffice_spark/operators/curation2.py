@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -22,10 +22,9 @@ QUERIES: dict = {}
 # q_quality_gopher's repetition verdict, q_quality_classifier's
 # hashed-feature score sign, and q_text_readability's Flesch floor —
 # into one verdict with a first-failure reason code. The Spark side
-# reuses the three builders verbatim (all tune()-running calls come
-# FIRST, per the session.py scoped-persist contract); the oracle
-# nests the three oracle texts as derived tables, so the ensemble
-# stays bitwise-checkable without duplicating any filter logic.
+# reuses the three builders verbatim; the oracle nests the three
+# oracle texts as derived tables, so the ensemble stays
+# bitwise-checkable without duplicating any filter logic.
 #
 # Scale: three doc_id-keyed joins of per-doc aggregates — each input
 # is one row per document, so the ensemble adds no new wide shuffle.
@@ -40,8 +39,6 @@ def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metoffice_spark.operators.pipeline import q_quality_gopher
     from metoffice_spark.operators.stats import q_text_readability
 
-    # Builders run tune() internally; call all three before using any
-    # of their outputs (scoped-persist release contract).
     g = q_quality_gopher(spark, sf_dir).select(
         "doc_id", F.col("keep").alias("gopher_keep")
     )
@@ -132,7 +129,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivec_spark,
     )
 
-    spark = tune(spark)
     emb = scoped_persist(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")
@@ -232,7 +228,6 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     (input_text, target_text) denoising pair."""
     from metoffice_spark.operators.llm import TOKS_SPARK
 
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").filter("doc_id % 7 = 0")
     toks = scoped_persist(
         docs.select(

@@ -28,7 +28,7 @@ from metoffice_spark.io import load
 from metoffice_spark.operators.classify import _QC_BUCKET, _QC_WEIGHT
 from metoffice_spark.operators.corpus import _BIGRAMS_DUCK
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -50,7 +50,6 @@ QUERIES: dict = {}
 def q_eval_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per decile d=1..10 of the score ranking: depth k, cumulative
     true positives, precision/recall/F1 in 1e-6 fixed point."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     scored = (
         docs.select(
@@ -187,7 +186,6 @@ _Z_EXPR = (
 def q_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: cohort sizes, conversions, conversion rates, the
     pooled z statistic, and the 5%-level significance flag."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     flagged = ev.select(
         (F.col("event_id") % 2).alias("grp"),
@@ -301,7 +299,6 @@ def q_eval_rouge(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted as doubles)."""
     from metoffice_spark.operators.corpus import _bigrams_spark
 
-    spark = tune(spark)
     docs = scoped_persist(load(spark, sf_dir, "documents").select("doc_id", "source", "text"))
     w_src = Window.partitionBy("source").orderBy("doc_id")
     pairs = (
@@ -462,7 +459,6 @@ def q_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per probability bin: size, mean predicted probability,
     observed positive rate, calibration gap (all 1e-6 fixed
     point)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     scored = (
         docs.select("doc_id", "lang", F.explode(F.expr(TOKS_SPARK)).alias("tok"))

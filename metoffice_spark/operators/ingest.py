@@ -44,7 +44,6 @@ from metoffice_spark.operators.weather import (
     _SLP_SQL,
 )
 from metoffice_spark.parity import fixed_str, fixed_str_sql, form_enc_sql
-from metoffice_spark.session import tune
 
 _CTE = oracle_cte()
 
@@ -112,7 +111,7 @@ def q_src_json_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested-JSON ingestion: build the 3-device payload (positional
     contract MWC:109-114), parse with the explicit schema, extract
     typed fields (MWC:142-157)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     payload = F.to_json(
         F.struct(
             F.array(
@@ -203,7 +202,7 @@ def q_src_text_scrape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anchor-substring extraction with retry (MWC:169-183): find 'hPa',
     slice 6 chars, and when that fails to parse, slice 5 (the
     3-digit-pressure fallback at MWC:181-183)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     page = F.concat(
         F.lit("<div>Pressure p="),
         fixed_str(F.col("pressure_site_hpa"), 1),
@@ -245,7 +244,6 @@ def wow_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows verified identical). Guide §1.2 step 2: per-task work was
     already shared via codegen subexpression elimination, so the win
     is all driver-side."""
-    spark = tune(spark)
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(_WOW_PAYLOAD_SPARK_SQL)
 
@@ -359,7 +357,7 @@ def q_sink_error_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter channel (MWC:125-135, 399-409): validation failures
     become rows with a reason instead of aborting — the distributed
     analog of log+email+abort."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     reason = (
         F.when(F.col("hum") > 99.5, F.lit("humidity_out_of_range"))
         .when(F.col("windgust_ms") > F.lit(25.0), F.lit("gust_implausible"))
@@ -389,7 +387,7 @@ def q_fn_str_locate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``search('hPa')`` -> wide slice -> numeric-parse fallback to the
     narrow slice. The same expressions back q_src_text_scrape; this qid
     registers them as the survey's own q_fn_str_locate row."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     page = F.concat(
         F.lit("<div>Pressure p="),
         fixed_str(F.col("pressure_site_hpa"), 1),
@@ -450,7 +448,6 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     base = os.path.join(tempfile.gettempdir(), "metoffice_sink")
     for stale in _SINK_ROOTS[:-1]:
@@ -522,7 +519,6 @@ def q_src_multiformat(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars", "text"
     )
@@ -644,7 +640,6 @@ def q_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     base = os.path.join(tempfile.gettempdir(), "metoffice_compact")
     for stale in _COMPACT_ROOTS[:-1]:
@@ -716,7 +711,6 @@ def q_src_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     # Scratch lifecycle (ADVICE r04): the returned DataFrame reads the
     # drops lazily, so the current root must outlive this builder. Wipe

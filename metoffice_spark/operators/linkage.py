@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_row_number
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -44,7 +44,6 @@ def q_link_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2k ordered pairs) regardless of fact rows; per-name counts
     aggregate with map-side combine; the fan-out product is computed
     from the two counts, never by materializing record pairs."""
-    spark = tune(spark)
     part = load(spark, sf_dir, "part")
     names = scoped_persist(
         part.groupBy("p_name").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -109,7 +108,6 @@ QUERIES["q_link_editdist"] = (q_link_editdist, ORACLE_LINK_EDITDIST)
 
 def q_skew_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row of key-frequency skew statistics for events.user_id."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     freq = scoped_persist(
         ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -245,7 +243,6 @@ _SP_RECTS = (
 def q_join_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per query rectangle: contained-point count and value cents
     (empty rectangles report zeros)."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     points = ev.select(
         F.col("value").alias("x"),
@@ -353,7 +350,6 @@ _ER_MAXDIST = 2
 def q_er_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One audit row: names, blocks, candidate pairs, blocked vs
     total matches, and blocking recall (1e-6 fixed point)."""
-    spark = tune(spark)
     part = load(spark, sf_dir, "part")
     names = scoped_persist(
         part.select("p_name")

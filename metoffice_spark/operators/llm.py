@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 # --- shared dialect snippets ------------------------------------------------
 
@@ -187,7 +187,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the shuffle key is sha256 hex (64 bytes), not the document
     body — at 100 TB the exchange moves digests + ids only. Keep-first
     = min(doc_id) per group (deterministic winner)."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     keyed = docs.select(
         F.sha2(F.expr(NORM_SPARK), 256).alias("k"), "doc_id"
     )
@@ -265,7 +265,7 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(tune(spark), sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     planted = docs.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(_PLANT_SUFFIX)).alias("text"),
@@ -445,7 +445,7 @@ def q_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass over the corpus, no shuffle of embeddings. All arithmetic
     is JVM-side ``zip_with``/``aggregate`` over fixed-point BIGINTs.
     Scale path beyond brute force = q_sim_search_ivf."""
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id", F.expr(_ivec_spark("embedding")).alias("v")
     ).withColumn("n2", F.expr(NORM2_SPARK.format(v="v")))
@@ -582,7 +582,7 @@ def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate buckets, never the corpus. Candidates are ranked by
     exact fixed-point cosine; output is approximate top-5 (whatever
     the probed buckets contain), identically in both engines."""
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     base = scoped_persist(
         _spread(emb, "vec_id")
         .select("vec_id", F.expr(_ivec_spark("embedding")).alias("v"))
@@ -677,7 +677,7 @@ def q_multimodal_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     (struct-field filter, equi-join, byte-length sums, digests) stays
     JVM-side and column-pruned — the binary column is only read where
     actually referenced."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
     assets = docs.select(
         "doc_id",
@@ -970,7 +970,7 @@ def q_dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     |cluster|^2 work instead of N^2. Planted variants (vec_id % 25,
     scaled + shifted) sit at cos >= 0.997; natural same-label pairs
     top out at ~0.47 on this corpus."""
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     planted = emb.filter(F.col("vec_id") % 25 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         F.expr(f"transform(embedding, x -> {_PERTURB})").alias("embedding"),
@@ -1031,7 +1031,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the corpus is stored clustered (partitioned by label), a
     query reads ~1/k of the data — this is the scale path over
     q_sim_search's full scan."""
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")
     ).withColumn("n2", F.expr(NORM2_SPARK.format(v="v")))
@@ -1359,7 +1359,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder (tests/test_png_codec.py drives it through this same
     ``mapInPandas`` plumbing), PIL-extended for other formats, loud
     NotImplementedError when neither applies."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     assets = docs.select(
         "doc_id",
         F.encode(F.col("text"), "UTF-8").alias("payload"),
@@ -1461,7 +1461,7 @@ def q_split_train_val(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, stratified report per (split, lang). Map-only assignment —
     at 100 TB the split column is computed at scan time and partitions
     the written dataset; no shuffle beyond the tiny report rollup."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     tagged = docs.withColumn("split", F.expr(_SPLIT_EXPR))
     return (
         tagged.groupBy("split", "lang")
@@ -1512,11 +1512,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels); all data work is joins + aggregates. At 100 TB this is
     the alternating big-star/small-star pattern — each round is one
     shuffle on doc_id, diameter rounds total (here <= ~4)."""
-    # nodes FIRST: _corpus runs tune(), the query-scope boundary.
-    # Since the r09 scope-retention queue a nested tune() no longer
-    # unpersists this builder's caches (they rotate, still cached),
-    # but ordering tune()-running helpers first keeps all the loop's
-    # persists in ONE scope with a single retention lifetime.
     nodes = _corpus(spark, sf_dir).select("doc_id")
     edges = scoped_persist(_ngram_edges(spark, sf_dir))
     # bidirectional edge list
@@ -1639,7 +1634,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst-case reconstruction error per embedding. Map-only (zero
     shuffles) — at 100 TB this stage rewrites the embedding store and
     the error column is the acceptance gate."""
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         "label",
@@ -1730,7 +1725,7 @@ def _framesample_batches(batches):
 def q_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per sampled 64-byte frame of each video asset:
     (doc_id, frame_idx, frame_mean, n_dark)."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     assets = docs.filter(F.col("doc_id") % 3 == 2).select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
@@ -1834,7 +1829,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 20th long document) — true subset pairs with containment
     ~1 but low Jaccard, the case a Jaccard-only dedup ships to
     training twice."""
-    docs = load(tune(spark), sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     excerpts = (
         docs.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
         .filter((F.col("doc_id") % 20 == 0) & (F.size("toks") >= 48))

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -94,7 +94,6 @@ def _benford_case(digit_col: str) -> str:
 def q_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per leading digit of o_totalprice: observed count, expected
     1e-6 share, expected count (fixed point), chi² contribution."""
-    spark = tune(spark)
     orders = load(spark, sf_dir, "orders").select(
         F.substring(
             F.when(F.abs(F.col("o_totalprice")) < F.lit(9.0e12), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
@@ -171,7 +170,6 @@ QUERIES["q_benford_test"] = (q_benford_test, ORACLE_BENFORD)
 def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: n and Spearman rho between n_chars and token
     count (double, shared expression)."""
-    spark = tune(spark)
     # rank-validity boundary (r08 null-nchars probe; text leg added by
     # the r10 composed stress probe — PARTIAL-null text makes y NULL
     # for some rows, which Spark ranks first and DuckDB last; the r07
@@ -291,7 +289,6 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration: (round, n_nodes, n_edges)."""
     from metoffice_spark.operators.scale import bipartite_edges
 
-    spark = tune(spark)
     # shared graph-family edge substrate (scale.py:bipartite_edges);
     # no repartition(src): the keep sets broadcast into both prune
     # joins, so edge partitioning is irrelevant (q_graph_bfs lesson);
@@ -390,7 +387,6 @@ _ALS_SCALE = 1000
 def q_als_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One ALS user half-step: per customer, interaction count, sum
     of ratings, and the updated scalar factor (1e-6 fixed point)."""
-    spark = tune(spark)
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", _finite_qty().alias("qty")
@@ -464,7 +460,6 @@ QUERIES["q_als_step"] = (q_als_step, ORACLE_ALS)
 def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (cohort month, age in months): paying customers, revenue
     cents, and the cohort's cumulative revenue."""
-    spark = tune(spark)
     # sequencing-validity boundary (r08 null-orderdate probe, mirrored
     # in the oracle): an undated order belongs to no cohort month —
     # its NULL age forms a group the engines cumulate at opposite ends
@@ -558,7 +553,6 @@ _RAKE_MAXLEN = 3
 def q_text_keyphrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 RAKE keyphrases: (rnk, phrase, n_words, freq,
     score_fp)."""
-    spark = tune(spark)
     stops = ",".join(f"'{w}'" for w in _RAKE_STOP)
     docs = _spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
@@ -703,7 +697,6 @@ QUERIES["q_text_keyphrase"] = (q_text_keyphrase, _keyphrase_oracle())
 def q_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per return flag: group OLS slope of price-cents on quantity,
     the pooled slope, and whether the signs reverse."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         _finite_qty().alias("x"),
@@ -852,7 +845,6 @@ _ROLL_SLOPE = (
 def q_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event: trailing-8 OLS slope of value-cents per second
     (double; NULL when undefined), plus the window's row count."""
-    spark = tune(spark)
     # sequencing-validity boundary (r08 null-ts probe, mirrored in the
     # oracle): the regressor IS elapsed time — an untimestamped event
     # has no x (and its NULL epoch sorts at opposite ends on the two
@@ -960,7 +952,6 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, and the modularity term (double, shared expression)."""
     from metoffice_spark.operators.scale import bipartite_edges
 
-    spark = tune(spark)
     edges = scoped_persist(bipartite_edges(spark, sf_dir))
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("bigint").alias("node"),
@@ -1084,7 +1075,6 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     assortativity coefficient (double, shared expression)."""
     from metoffice_spark.operators.scale import bipartite_edges
 
-    spark = tune(spark)
     edges = scoped_persist(bipartite_edges(spark, sf_dir))
     deg = scoped_persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))

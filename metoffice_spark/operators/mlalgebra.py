@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import _ivec_duck, _ivec_spark
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -51,7 +51,6 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per dimension: the 1e3-scaled dominant-eigenvector estimate
     after two exact power-iteration rounds, with the IEEE Rayleigh
     eigenvalue estimate repeated on every row."""
-    spark = tune(spark)
     # unembedded (NULL) vectors do not participate in the Gram matrix —
     # boundary filter mirrored in the oracle (r07 null-embed finding;
     # the old posexplode DROPPED null-array rows where the oracle's
@@ -237,7 +236,6 @@ _KNN_K = 5
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per sampled query vector: actual label, kNN-majority predicted
     label, winning vote count, and the nearest neighbor id."""
-    spark = tune(spark)
     emb = scoped_persist(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")
@@ -362,7 +360,6 @@ def _rp_sign(j: str, pos: str) -> str:
 def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per vector: the _RP_K sign-projected coordinates (1e-6 fixed
     point) and the JL norm-preservation ratio."""
-    spark = tune(spark)
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_ivec_spark("embedding")).alias("v")
     )

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -66,7 +66,6 @@ QUERIES: dict = {}
 def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: n_en, n_other, and the two-sample KS statistic
     (1e-6 fixed point) between en and non-en n_chars distributions."""
-    spark = tune(spark)
     # rank-validity boundary (r08 null-nchars probe, mirrored in the
     # oracle): a scoreless document has no place in either empirical
     # CDF — its NULL x cumulates at opposite ends of the two engines'
@@ -191,7 +190,6 @@ _BFS_MAX_LEVEL = 4
 def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS levels 0..4 from MIN(o_custkey) over the customer-supplier
     graph: (level, n_nodes, min_node, max_node)."""
-    spark = tune(spark)
     # r13 optimization round (guide §2.4): BFS no longer materializes
     # the exploded-undirected bipartite_edges set. Two facts make the
     # shared substrate overkill here: (1) the per-round ``distinct``
@@ -309,7 +307,6 @@ _FH_NIBBLES = "0123456789abcdef"
 def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per doc: token count and the 24-bucket hashed bag-of-words as
     a 'bb:count|bb:count' string (buckets ascending)."""
-    spark = tune(spark)
     docs = _spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
@@ -420,7 +417,6 @@ def _ideal_case(npos_col: str) -> str:
 def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: n, n_pos, DCG@10 / ideal DCG / NDCG@10 of the
     n_chars ranker against lang='en', all 1e-6 fixed point."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
@@ -501,7 +497,6 @@ _L_DIVERSE = 3
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of QI classes by sensitive diversity l: (l, below_l,
     n_classes, n_rows)."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_nationkey").cast("bigint").alias("nat"),
         F.when(
@@ -584,7 +579,6 @@ QUERIES["q_l_diversity"] = (q_l_diversity, ORACLE_L_DIVERSITY)
 def q_jackknife_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per order priority: leave-group-out mean price (1e-4 dollars,
     fixed point) plus the shared jackknife variance of the mean."""
-    spark = tune(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.when(F.abs(F.col("o_totalprice")) < F.lit(9.0e12), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))

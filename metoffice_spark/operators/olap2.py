@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from metoffice_spark.io import register_views
-from metoffice_spark.session import tune
 
 QUERIES: dict = {}
 
@@ -32,7 +31,6 @@ _REV_CENTS = "CASE WHEN abs(l_extendedprice * (1.0 - l_discount)) < 9.0e12 THEN 
 
 def _sql_query(qid: str, sql: str, tables: tuple, doc: str):
     def fn(spark: SparkSession, sf_dir: str, _sql=sql, _tables=tables) -> DataFrame:
-        spark = tune(spark)
         register_views(spark, sf_dir, _tables)
         return spark.sql(_sql)
 

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
-from metoffice_spark.session import tune
 
 QUERIES: dict = {}
 
@@ -72,7 +71,7 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs, body never shuffled."""
     from metoffice_spark.session import scoped_persist
 
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     # persist barrier: CollapseProject would otherwise inline the
     # tokenize expression into EVERY downstream reference (the two
     # bigram size() calls, the explode, the CASE guard) — recomputing
@@ -187,7 +186,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the running sum windows by (lang) — at 100 TB the stratum
     key becomes (shard, date) so every sort is partition-local; the
     shuffle carries (doc_id, n_tokens) pairs only."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = _spread(docs, "doc_id").select(
         "doc_id",
         "lang",
@@ -281,7 +280,7 @@ def q_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both sides explode to (gram_hash, doc_id) and equi-join on
     the hash (inverted index) — candidate volume is shared-gram pairs,
     never |train| x |eval|; bodies never leave the scan."""
-    docs = load(tune(spark), sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     is_eval = F.col("doc_id") % 20 == 0
     evald = docs.filter(is_eval)
     train = docs.filter(~is_eval).unionByName(
@@ -373,7 +372,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: shuffles (doc_id, lang, 32-hex digest); the per-stratum
     window sorts one stratum per task."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     h = F.md5(F.concat(F.lit(_SAMPLE_SEED + "|"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("lang").orderBy("h", "doc_id")
     return (
@@ -416,7 +415,7 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: (doc, term) partial counts -> term document frequencies
     (distinct-doc counts, a term-keyed aggregate) -> broadcast-size N
     -> per-doc top-k window. The only wide rows are (term, doc, tf)."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     tok = (
         _spread(docs, "doc_id")
         .select("doc_id", F.expr(TOKS_SPARK.format(col="text")).alias("toks"))
@@ -500,7 +499,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     would iterate it to convergence."""
     from metoffice_spark.operators.llm import _ivec_spark
 
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     # unembedded (NULL) vectors do not participate in clustering —
     # boundary filter mirrored in the oracle (r07 null-embed finding)
     base = (
@@ -598,7 +597,7 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every document to one of N_SHARDS training shards by
     digest, and report per-shard balance: doc count, token total, and
     the first/last digest anchors of the shard's internal order."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     h = F.md5(F.concat(F.lit(_SHARD_SEED + "|"), F.col("doc_id").cast("string")))
     v = F.expr(
         f"(locate(substring(h, 1, 1), '{_NIBBLES}') - 1) * 16"
@@ -669,7 +668,7 @@ def q_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one count-by-lang aggregate (broadcast back — #langs rows),
     then a map-only keep decision per row; no sort, no sampling state,
     rerunnable on any cluster size with an identical result."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_docs"))
     n_min = counts.agg(F.min("n_docs").alias("n_min"))
     thr = counts.crossJoin(F.broadcast(n_min)).select(
@@ -757,7 +756,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     and leaves the scan only as digests and counts."""
     from metoffice_spark.operators.llm import NORM_SPARK
 
-    spark = tune(spark)
     g = q_quality_gopher(spark, sf_dir).filter("keep").select("doc_id", "lang", "n_tokens")
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.sha2(F.expr(NORM_SPARK), 256).alias("k")
@@ -880,7 +878,7 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny), keeping lineage bounded."""
     from metoffice_spark.operators.llm import _ivec_spark
 
-    emb = load(tune(spark), sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     # unembedded (NULL) vectors do not participate in clustering —
     # boundary filter mirrored in the oracle (r07 null-embed finding)
     base = (
@@ -1007,7 +1005,7 @@ def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only shuffle is the equi-join fetching the negative's
     features — co-located if the corpus is bucketed by doc_id. The
     1-row corpus count broadcasts."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     n1 = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     draws = []
     for j in range(_NEG_K):
@@ -1085,7 +1083,6 @@ _BLB_BATCH = 16
 def q_batch_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per batch of 16 length-sorted docs: size, max/min token
     length, padding tokens, and utilization (1e-6 fp)."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(f"size({TOKS_SPARK})").cast("bigint").alias("n_toks"),
@@ -1160,7 +1157,6 @@ def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per lang: doc count, sqrt-temperature weight, target mixture
     share (1e-6 fp), and the realized keep rate vs the
     largest-weight language."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
@@ -1241,7 +1237,6 @@ _SFT_TOKS = "size(filter(split(lower(r), '[^a-z0-9]+'), t -> t <> ''))"
 def q_sft_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (prompt, response) adjacent pair: rendered chat-template
     stats — char length, token count, md5 fingerprint."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents").select("source", "doc_id", "text")
     w = Window.partitionBy("source").orderBy("doc_id")
     paired = (

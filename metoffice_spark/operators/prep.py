@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from metoffice_spark.functions.distributed import global_running_sum
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -90,7 +90,6 @@ _PAIRS_DUCK = (
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-30 token collocations within a ±2 window by pointwise
     lift: (rnk, pair, pair_cnt, cnt_a, cnt_b, lift_fp)."""
-    spark = tune(spark)
     docs = _spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     ).select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
@@ -198,7 +197,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per user with >= 2 events: observation count, time span in
     seconds, and the trapezoidal time-weighted mean of value
     (1e-2 fixed point, i.e. cents)."""
-    spark = tune(spark)
     # sequencing-validity boundary (r08 null-ts probe, mirrored in the
     # oracle): an untimestamped observation has no trapezoid — its
     # NULL epoch sorts first in Spark and last in DuckDB, shifting
@@ -286,7 +284,6 @@ QUERIES["q_time_weighted_avg"] = (q_time_weighted_avg, ORACLE_TWAP)
 def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per doc: source, n_chars, and its tie-averaged within-source
     quantile (0..1e6 fixed point)."""
-    spark = tune(spark)
     # rank-validity boundary (r08 null-nchars probe, mirrored in the
     # oracle): a feature with no value has no quantile — its NULL
     # rank position differs between the engines (NULLS FIRST/LAST),
@@ -356,7 +353,6 @@ _RARE_PERMILLE = 15
 def q_rare_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding table after collapsing p_name values with < 1.5 %
     share: (label, n_rows, n_labels_merged, is_other)."""
-    spark = tune(spark)
     part = load(spark, sf_dir, "part").select("p_name")
     counts = part.groupBy("p_name").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
@@ -439,12 +435,11 @@ _WIDTH_CASE = (
 def q_delta_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per column: rows, blocks, raw bytes (8/value), delta-encoded
     bytes, and the compression ratio (1e-6 fixed point)."""
-    spark = tune(spark)
     orders = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("bigint").alias("k"),
         F.col("o_custkey").cast("bigint").alias("ck"),
         # o_orderdate loads as TIMESTAMP_NTZ — hop through TIMESTAMP
-        # (tune() pins the session to UTC, so wall-clock == epoch)
+        # (the registry pins the session to UTC, so wall-clock == epoch)
         F.col("o_orderdate").cast("timestamp").cast("long").alias("ep"),
     )
     long = orders.select(
@@ -539,7 +534,6 @@ QUERIES["q_delta_encode"] = (q_delta_encode, ORACLE_DELTA_ENCODE)
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per l_returnflag: total weight, row count, and the
     quantity-weighted median of l_extendedprice in cents."""
-    spark = tune(spark)
     # rank-validity boundary (r10 nullgroup probe, mirrored in the
     # oracle): an unpriced line has no position on the value axis the
     # median ranks over — a NULL cents group would enter the
@@ -648,7 +642,6 @@ _EMBARGO_S = 86_400
 def q_split_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per split (train/embargo/test): rows, users, and the epoch
     range; embargo = (cutoff, cutoff + 1 day]."""
-    spark = tune(spark)
     # sequencing-validity boundary (r08 null-ts probe, mirrored in the
     # oracle): an untimestamped row is assignable to NO temporal split
     # (its NULL epoch fails every cutoff comparison into 'test' in
@@ -739,7 +732,6 @@ QUERIES["q_split_temporal"] = (q_split_temporal, ORACLE_SPLIT_TEMPORAL)
 def q_null_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation: observed/imputed counts, observed mean, and the
     post-imputation mean (both 1e-2 fixed point = cents)."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_nationkey").cast("bigint").alias("nat"),
         F.when(F.abs(F.col("c_acctbal")) < F.lit(9.0e12), F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint"))
@@ -835,7 +827,6 @@ QUERIES["q_null_imputation"] = (q_null_imputation, ORACLE_NULL_IMPUTATION)
 def q_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event: cents value, lag-1/lag-2 cents, trailing-3 mean
     (1e-2 fixed point), and portable dow (0=Sunday)."""
-    spark = tune(spark)
     # sequencing-validity boundary (r08 null-ts probe, mirrored in the
     # oracle): lag/trailing features are positional — an untimestamped
     # event has no position (and lands at opposite ends of the two

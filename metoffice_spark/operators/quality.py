@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -59,7 +59,6 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks; the orders scan serves the PK-uniqueness, FK-orphan
     (broadcast left join + null count), and money-domain counts at
     once. No check shuffles row bodies — counts only."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -435,7 +434,6 @@ def q_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE full-outer join keyed on the primary key; with both
     snapshots bucketed on the key (q_join_bucketed layout) this is
     zero-shuffle; op classification is a map-side CASE."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment"
     )
@@ -526,7 +524,6 @@ def q_stats_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipdate ranges, the could-skip flag for the audit predicate, the
     uniformity-estimated matching rows (1e-6 fixed point), and the
     actual matching rows."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         (F.col("l_orderkey") % 8).cast("int").alias("pid"),
         F.expr("case when abs(l_quantity) < 9.0e12 then cast(floor(l_quantity * 1000000 + 0.5) as bigint) end").alias("q_fp"),
@@ -628,7 +625,6 @@ def q_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per orders-per-customer count: customers counted via raw keys
     vs via pseudonyms (must match), plus a sample-free injectivity
     audit (distinct pseudonyms == distinct keys)."""
-    spark = tune(spark)
     pseud = "md5(concat('PSEUD|', cast({k} as string)))"
     orders = load(spark, sf_dir, "orders").select(
         "o_custkey", F.expr(pseud.format(k="o_custkey")).alias("p_key")
@@ -756,7 +752,6 @@ _DP_NOISE = (
 def q_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: true count, the seeded Laplace noise (1e-6
     fixed point), and the released noisy count."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     counts = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_true")
@@ -827,7 +822,6 @@ def _bf_positions(key_expr: str) -> list[str]:
 def q_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (probe_key, file): bloom maybe-contains verdict, actual
     membership, and the false-positive flag."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         (F.col("l_orderkey") % 8).cast("int").alias("pid"), "l_partkey"
     )
@@ -954,7 +948,6 @@ _PROFILE_COLS = ("l_returnflag", "l_linestatus", "l_quantity", "l_partkey")
 
 def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One profiling row per column: counts, range, and modal value."""
-    spark = tune(spark)
     li = scoped_persist(
         load(spark, sf_dir, "lineitem").select(
             *[
@@ -1083,7 +1076,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: equivalence classes over the
     quasi-identifier tuple, classes/rows below k=5, suppression
     rate."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         "c_mktsegment",
         "c_nationkey",
@@ -1175,7 +1167,6 @@ QUERIES["q_k_anonymity"] = (q_k_anonymity, ORACLE_K_ANONYMITY)
 def q_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Island inventory of the o_orderkey sequence: per island its
     range and size plus the gap to the next island."""
-    spark = tune(spark)
     from pyspark.sql import Window
 
     from metoffice_spark.functions.distributed import global_row_number

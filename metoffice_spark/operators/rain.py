@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.obs import OBS_PER_HOUR, observations, oracle_cte
-from metoffice_spark.session import refresh_on_first_action, scoped_persist, tune
 
 _CTE = oracle_cte()
 
@@ -83,7 +82,7 @@ def add_rain_state(df: DataFrame) -> DataFrame:
 
 
 def _rain_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return add_rain_state(observations(tune(spark), sf_dir))
+    return add_rain_state(observations(spark, sf_dir))
 
 
 def rain_metrics_from_obs(df: DataFrame) -> DataFrame:
@@ -109,7 +108,7 @@ def rain_metrics_from_obs(df: DataFrame) -> DataFrame:
 
 
 def rain_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return rain_metrics_from_obs(observations(tune(spark), sf_dir))
+    return rain_metrics_from_obs(observations(spark, sf_dir))
 
 
 _RAIN_METRICS_SELECT = f"""
@@ -145,7 +144,7 @@ def q_win_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     an engine accident. Ordering by the counter itself makes the
     order total and naturally monotone; on unique-(ts, obs_id) data
     it is a no-op."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     w = Window.partitionBy("station_id", "day").orderBy(
         "ts", "obs_id", "rain_counter_mm"
     )
@@ -332,96 +331,52 @@ QUERIES = {
 
 
 # --- q_rollup_hypertable: multi-resolution time-bucket rollups ---------------
-
+#
+# One aggregate with three grouping sets. Each observation projects its
+# 15-minute bucket b15 and truncates it to the hour and day; GROUPING
+# SETS plans as one Expand (3 copies of each row, one per level)
+# feeding one hash aggregate, so the substrate is derived once and no
+# level reads another level's output. ``day`` is in every set: it is
+# functionally determined by each bucket (UTC day boundaries are
+# multiples of 15 minutes), so it never splits a group.
+#
+# 100 TB cost: every level is aggregated from the raw rows through the
+# 3x Expand, but the partial aggregate runs before the single shuffle,
+# so that shuffle carries at most one row per (station, day, bucket,
+# level) per task — 96 + 24 + 1 rows per station-day per task, not the
+# raw stream.
 
 
 def q_rollup_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style continuous-aggregate rollup: 15-minute buckets
-    from the raw stream, then hourly from the 15-minute level, then
-    daily from hourly — each coarser level RE-AGGREGATES THE FINER
-    AGGREGATE, never the raw data (the TimescaleDB continuous-aggregate
-    / OLAP aggregation-tree pattern). At 100 TB this is the difference
-    between scanning 96 rows/day/station and 100k raw rows: the rollup
-    tree is the materialized view hierarchy a time-series store keeps.
-
-    All measures re-aggregate losslessly: counts sum, integer
-    fixed-point windspeed sums sum, counter min/max nest. Output =
-    union of the three levels tagged by resolution.
-
-    Exchange sharing (r06): every level groups by (station_id, day,
-    bucket) where ``day`` is the substrate's chunk column — it is
-    functionally determined by each bucket (UTC day boundaries are
-    multiples of 15 min), so adding it never splits a group, and
-    hash-partitioning on the SUBSET (station_id, day) satisfies each
-    level's clustering requirement. The substrate's within-day rain
-    window already leaves the stream partitioned on exactly
-    (station_id, day), so the entire three-level tree re-aggregates
-    IN PLACE: zero exchanges beyond the derivation chain (was one
-    shuffle per level). That (station, day) chunk grain is the
-    hypertable layout itself at 100 TB — partitions stay bounded by
-    one station-day regardless of total history."""
-    obs = observations(tune(spark), sf_dir)
-    ws_fp = F.floor(F.col("windspeed_ms") * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
-    b15 = (
-        obs.groupBy(
-            "station_id", "day", F.window("ts", "15 minutes")["start"].alias("bucket")
-        )
-        .agg(
-            F.count("*").alias("n_obs"),
-            F.sum(ws_fp).alias("ws_sum_fp"),
-            F.min("rain_counter_mm").alias("r_min"),
-            F.max("rain_counter_mm").alias("r_max"),
-        )
+    """Hypertable-style rollup: per station, counts, windspeed sums
+    (integer fixed point) and rain-counter min/max at 15-minute,
+    hourly and daily resolution, tagged by ``level``."""
+    b15 = F.window("ts", "15 minutes")["start"]
+    obs = observations(spark, sf_dir).select(
+        "station_id",
+        "day",
+        b15.alias("b15"),
+        F.date_trunc("hour", b15).alias("b1h"),
+        F.date_trunc("day", b15).alias("b1d"),
+        F.floor(F.col("windspeed_ms") * F.lit(1000000.0) + F.lit(0.5))
+        .cast("bigint")
+        .alias("ws_fp"),
+        "rain_counter_mm",
     )
-    def up(df: DataFrame, trunc: str) -> DataFrame:
-        return (
-            df.groupBy("station_id", "day", F.date_trunc(trunc, "bucket").alias("bucket"))
-            .agg(
-                F.sum("n_obs").alias("n_obs"),
-                F.sum("ws_sum_fp").alias("ws_sum_fp"),
-                F.min("r_min").alias("r_min"),
-                F.max("r_max").alias("r_max"),
-            )
-        )
-    # persist + count = the materialized continuous aggregate: each
-    # level is REFRESHED (the hypertable refresh step), written once,
-    # and read by BOTH its own output branch and the next coarser
-    # level. The count() is not a driver data fetch — it forces the
-    # cache so the level's (station_id, day) output partitioning is
-    # statically known to Catalyst (an unmaterialized AQE cached plan
-    # reports UnknownPartitioning), which is what lets b1h/b1d
-    # re-aggregate with no exchange at all. Without the barrier the
-    # raw scan + substrate re-runs per union branch (3x the work) AND
-    # each level re-shuffles — verified in the plan lock.
-    #
-    # The refresh is GATED BEHIND FIRST EXECUTION (VERDICT r07 item 6):
-    # construction runs no refresh jobs, so plan-only consumers
-    # (audit_plans, the walker tests) can build the frame for free; the
-    # first action on the returned frame materializes the levels and
-    # then plans against the populated cache — the same zero-exchange
-    # shape the eager refresh produced. ORDERING TRAP inside the
-    # refresh: persist() compiles the cached physical plan EAGERLY
-    # (CacheManager.cacheQuery), so b1h may only be persisted AFTER
-    # b15.count() — persisting it at build time would bake an
-    # UnknownPartitioning exchange into b1h's cached plan forever. The
-    # union below references the UNPERSISTED b1h logical plan; cache
-    # substitution at post-refresh planning time matches it to the
-    # refreshed entry. The persists still live until the NEXT
-    # builder's tune() (scoped-persist contract): executing after
-    # another builder ran merely recomputes, correct but re-shuffled.
-    b15 = scoped_persist(b15)
-    b1h = up(b15, "hour")
-    b1d = up(b1h, "day")
-    lvl = lambda df, name: df.select(
-        F.lit(name).alias("level"), "station_id", "bucket", "n_obs", "ws_sum_fp", "r_min", "r_max"
-    )
-    out = lvl(b15, "15m").unionByName(lvl(b1h, "1h")).unionByName(lvl(b1d, "1d"))
-
-    def _refresh() -> None:
-        b15.count()
-        scoped_persist(b1h).count()
-
-    return refresh_on_first_action(out, _refresh)
+    keys = ["station_id", "day"]
+    return obs.groupingSets(
+        [keys + ["b15"], keys + ["b1h"], keys + ["b1d"]], *keys, "b15", "b1h", "b1d"
+    ).agg(
+        F.when(F.grouping("b15") == 0, "15m")
+        .when(F.grouping("b1h") == 0, "1h")
+        .otherwise("1d")
+        .alias("level"),
+        F.coalesce("b15", "b1h", "b1d").alias("bucket"),
+        F.count("*").alias("n_obs"),
+        F.sum("ws_fp").alias("ws_sum_fp"),
+        F.min("rain_counter_mm").alias("r_min"),
+        F.max("rain_counter_mm").alias("r_max"),
+    ).select("level", "station_id", "bucket", "n_obs", "ws_sum_fp", "r_min", "r_max")
 
 
 ORACLE_ROLLUP_HYPERTABLE = f"""{_CTE},
@@ -475,7 +430,7 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     (station, bucket) exactly like the rollup levels; the LOCF window
     sorts grid rows only (96/day/station). Nothing here scales with
     raw row count past the first bucket aggregate."""
-    obs = observations(tune(spark), sf_dir)
+    obs = observations(spark, sf_dir)
     b15 = (
         obs.groupBy(F.col("station_id"), F.window("ts", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n_obs"), F.max("rain_counter_mm").alias("r_max"))
@@ -565,7 +520,7 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_value-over-following spelling — DuckDB computes it
     linearly. Nothing scales with raw row count past the bucket
     aggregate."""
-    obs = observations(tune(spark), sf_dir)
+    obs = observations(spark, sf_dir)
     b15 = (
         obs.groupBy(F.col("station_id"), F.window("ts", "15 minutes").alias("w"))
         .agg(
@@ -694,7 +649,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass for per-station (n, sum, sumsq) — 3 BIGINTs per
     station however many rows — broadcast back onto the scan for a
     map-only flag; no window, no second shuffle."""
-    obs = observations(tune(spark), sf_dir)
+    obs = observations(spark, sf_dir)
     fp = F.floor(F.col("tempc") * 100 + F.lit(0.5)).cast("bigint")
     base = obs.select("station_id", "obs_id", fp.alias("t_fp"))
     stats = base.groupBy("station_id").agg(

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.parity import rhu, rhu_sql
-from metoffice_spark.session import tune
 
 
 def _cents(col: F.Column, scale: int = 100):
@@ -73,7 +72,7 @@ def _cents_sql(x: str, scale: int = 100) -> str:
 def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + filter that must reach the parquet scan
     (PushedFilters + pruned ReadSchema; verified in tests/test_plans)."""
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     return li.filter((F.col("l_quantity") < 25) & (F.col("l_discount") > 0.02)).select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_discount"
     )
@@ -87,7 +86,7 @@ FROM lineitem WHERE l_quantity < 25 AND l_discount > 0.02
 
 def q_filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunction/disjunction/range guards (the MWC:125/244/289 shapes)."""
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_discount") != 0.0)
         & (F.col("l_quantity") >= 10)
@@ -107,7 +106,7 @@ WHERE l_discount <> 0.0 AND l_quantity >= 10
 
 def q_project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Computed projection pipeline — per-row IEEE arithmetic, exact."""
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return li.select(
         "l_orderkey",
@@ -130,7 +129,7 @@ FROM lineitem
 def q_project_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Struct/array/map construction + field extraction (the
     devices[i].measurement shape, MWC:142-157, on relational data)."""
-    c = load(tune(spark), sf_dir, "customer")
+    c = load(spark, sf_dir, "customer")
     nested = c.select(
         "c_custkey",
         F.struct(
@@ -160,7 +159,7 @@ FROM customer
 def q_agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan → filter → hash aggregate. Partial (map-side)
     aggregation is automatic; money sums use the integer-cents pattern."""
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
     return (
@@ -196,7 +195,7 @@ GROUP BY l_returnflag, l_linestatus
 
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct aggregates (expand + two-phase agg under the hood)."""
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -220,7 +219,6 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over region → nation with explicit grouping flags
     (dialect-portable CASE instead of grouping_id; data has no real
     NULL keys so the flags are unambiguous)."""
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
@@ -259,7 +257,6 @@ GROUP BY ROLLUP (r_name, n_name)
 def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set → sorted → joined string (deterministic form of the
     list aggregate; binary sort order matches DuckDB's default collation)."""
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     joined = o.join(c, o.o_custkey == c.c_custkey)
@@ -291,7 +288,7 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fin(c: str):
         return F.when(F.abs(F.col(c)) < F.lit(9.0e12), F.col(c))
 
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         rhu(F.stddev_samp(fin("l_quantity")), 6).alias("sd_qty"),
         rhu(F.var_samp(fin("l_quantity")), 6).alias("var_qty"),
@@ -335,7 +332,6 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small dim × big fact: explicit broadcast → BroadcastHashJoin,
     zero shuffle of the fact side. At 100 TB the dim still broadcasts;
     the fact scan stays pipelined."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     return (
@@ -363,7 +359,6 @@ def q_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact × fact equi-join: both sides shuffle on the key (SMJ/SHJ per
     AQE). At scale: bucket both tables on orderkey to eliminate the
     shuffle entirely."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     return (
@@ -388,7 +383,6 @@ GROUP BY o_orderpriority
 
 def q_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer preserving customers with no orders."""
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return (
@@ -414,7 +408,6 @@ GROUP BY c_custkey, c_mktsegment
 
 def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Existence (left_semi) and non-existence (left_anti) in one result."""
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     semi = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
@@ -439,7 +432,6 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band (non-equi) join: order value into price bands derived from
     region keys. Small band side broadcast → BroadcastNestedLoopJoin;
     at scale, replace with a computed band key (equi) when possible."""
-    spark = tune(spark)
     o = load(spark, sf_dir, "orders")
     bands = (
         load(spark, sf_dir, "region")
@@ -482,7 +474,6 @@ def q_join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (probe-bin, build-bin) match per qualifying pair — no dedup needed.
     The ORACLE deliberately uses the naive O(n^2) formulation: same
     answer, different physical strategy."""
-    spark = tune(spark)
     p = load(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
     binned = p.withColumn("bin", F.when(F.abs(F.col("p_retailprice") / 1.0) < F.lit(9.0e12), F.floor(F.col("p_retailprice") / 1.0).cast("bigint")))
     probe = binned.select(
@@ -528,7 +519,7 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sequencing-validity boundary (r08 null-ts probe, mirrored in the
     # oracle): an untimestamped event has no "as of" position — the
     # engines place NULL ts at opposite ends of the ordered scan.
-    ev = load(tune(spark), sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -564,7 +555,7 @@ FROM enriched WHERE event_type = 'purchase'
 
 def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank / ntile with a unique tiebreak."""
-    o = load(tune(spark), sf_dir, "orders")
+    o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -596,7 +587,7 @@ def q_win_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the oracle): an undated order has no position in the
     # customer's running history — Spark sorts NULL dates first,
     # DuckDB last, shifting every prefix sum otherwise.
-    o = load(tune(spark), sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     running = w.rowsBetween(Window.unboundedPreceding, 0)
     sliding = w.rowsBetween(-2, 0)
@@ -629,7 +620,7 @@ def q_win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead / lag / first_value / last_value / nth_value."""
     # sequencing-validity boundary (r08 null-orderdate probe): as
     # q_win_frame — positional analytics need a positioned row.
-    o = load(tune(spark), sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return o.select(
@@ -664,7 +655,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
 def q_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort (value compare is order-insensitive; the sort
     itself is exercised by the plan test)."""
-    o = load(tune(spark), sf_dir, "orders")
+    o = load(spark, sf_dir, "orders")
     return o.orderBy(
         F.col("o_orderpriority").asc(), F.col("o_totalprice").desc(), F.col("o_orderkey")
     ).select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -679,7 +670,7 @@ ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey
 def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k: orderBy+limit → TakeOrderedAndProject (no full sort; each
     partition keeps k, driver merges). Unique tiebreak for determinism."""
-    o = load(tune(spark), sf_dir, "orders")
+    o = load(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .limit(100)
@@ -694,7 +685,6 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
 
 
 def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
@@ -708,7 +698,6 @@ SELECT s_nationkey FROM supplier
 
 
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
@@ -722,7 +711,6 @@ SELECT s_nationkey FROM supplier
 
 
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.subtract(s)
@@ -740,7 +728,7 @@ SELECT s_nationkey FROM supplier
 def q_fn_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General math surface (extends the reference's ln/log10/cos/exp/π,
     MWC:190/301/319/328). Transcendentals rounded via rhu."""
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -814,7 +802,6 @@ FROM lineitem
 
 def q_fn_string_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General string surface beyond locate/substring/concat (MWC:179-183)."""
-    spark = tune(spark)
     p = load(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -856,7 +843,6 @@ def q_fn_array_map_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-range, while ANSI element_at raises. try_element_at is the
     faithful Spark spelling of that defined NULL (the probe's empty /
     truncated shapes raised asymmetrically under plain element_at)."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     emb = load(spark, sf_dir, "embeddings")
     j = ev.select(
@@ -895,7 +881,7 @@ JOIN embeddings ON event_id = vec_id
 
 def q_fn_date_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-part extraction + truncation (generalizes MWC:206-222)."""
-    o = load(tune(spark), sf_dir, "orders")
+    o = load(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").alias("yr"),
@@ -965,7 +951,7 @@ def q_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero-fill — proves both reshape operators. Pivot with an
     explicit value list stays a single-pass aggregation (no extra
     distinct-scan); unpivot is a zero-shuffle generator expression."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     wide = (
         docs.groupBy("source")
         .pivot("lang", list(_LANGS))
@@ -1003,7 +989,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the small change set moves). Change set: 1996 order revenue
     per customer, plus planted new customers (custkey % 100 == 0 →
     custkey + 1000000) to exercise the insert branch."""
-    spark = tune(spark)
     base = load(spark, sf_dir, "customer").select(
         "c_custkey", _cents(F.col("c_acctbal")).alias("bal_cents")
     )
@@ -1078,7 +1063,6 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     4x8 reducers; the post-aggregation removes the salt again. The
     ORACLE is the plain unsalted join — same answer, different
     physical distribution."""
-    spark = tune(spark)
     from metoffice_spark.obs import observations
 
     obs = observations(spark, sf_dir)
@@ -1167,7 +1151,6 @@ def q_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct hashed keys; a production run would carry the k-array in
     an aggregate buffer. Estimate quality is the standard KMV bound
     (~1/sqrt(k-1) relative error)."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem")
     hashed = (
         li.select("l_returnflag", "l_partkey")
@@ -1226,7 +1209,6 @@ def q_set_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_set_intersect/q_set_except's DISTINCT forms don't cover. Spark
     plans these as aggregate+join on value with count arithmetic —
     shuffle on the value key, no row explosion."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "A").select("l_quantity")
     b = li.filter(F.col("l_returnflag") == "R").select("l_quantity")
@@ -1299,7 +1281,6 @@ def q_sql_ansi(spark: SparkSession, sf_dir: str) -> DataFrame:
     over registered views — parser, analyzer, and Catalyst pick the
     same physical strategies the DataFrame builders get (broadcast
     dims, partial aggregation)."""
-    spark = tune(spark)
     from metoffice_spark.io import register_views
 
     register_views(spark, sf_dir, ("customer", "nation", "orders"))
@@ -1334,7 +1315,6 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    spark = tune(spark)
     base = os.path.join(tempfile.gettempdir(), "metoffice_bucketed")
     for stale in _BUCKET_ROOTS[:-1]:
         shutil.rmtree(stale, ignore_errors=True)
@@ -1397,7 +1377,7 @@ QUERIES["q_join_bucketed"] = (q_join_bucketed, ORACLE_JOIN_BUCKETED)
 def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metoffice_spark.obs import observations
 
-    obs = observations(tune(spark), sf_dir)
+    obs = observations(spark, sf_dir)
     binned = obs.select(
         "station_id", F.floor("windspeed_ms").cast("int").alias("bin")
     )
@@ -1461,7 +1441,6 @@ QUERIES["q_agg_histogram"] = (q_agg_histogram, ORACLE_AGG_HISTOGRAM)
 def q_fn_null_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation: row count, non-null counts/sums of a planted
     nullable column, and null-safe equality tallies."""
-    spark = tune(spark)
     c = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
@@ -1531,7 +1510,6 @@ QUERIES["q_fn_null_suite"] = (q_fn_null_suite, ORACLE_FN_NULL_SUITE)
 def q_fn_datetime_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per sampled order: calendar parts, truncations, date
     arithmetic, and the portable day-of-week."""
-    spark = tune(spark)
     o = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 97 == 0)
@@ -1593,8 +1571,7 @@ QUERIES["q_fn_datetime_suite"] = (q_fn_datetime_suite, ORACLE_FN_DATETIME_SUITE)
 # (status, priority) aggregate — the only full-data shuffle — then
 # the three coarser levels re-aggregate the tiny persisted base, with
 # the () level an UNGROUPED agg, restoring the standard 1-row-on-
-# empty semantics for free. Same shared-exchange shape as
-# q_rollup_hypertable (rain.py).
+# empty semantics for free.
 
 
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1602,7 +1579,6 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     for all four grouping levels with explicit flags."""
     from metoffice_spark.session import scoped_persist
 
-    spark = tune(spark)
     o = load(spark, sf_dir, "orders")
     base = scoped_persist(
         o.groupBy("o_orderstatus", "o_orderpriority").agg(
@@ -1666,7 +1642,6 @@ QUERIES["q_agg_cube"] = (q_agg_cube, ORACLE_AGG_CUBE)
 def q_fn_bitwise_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per sampled order key: AND/OR/XOR masks, shifts, popcount,
     masked complement."""
-    spark = tune(spark)
     o = load(spark, sf_dir, "orders").filter("o_orderkey % 31 = 0")
     return o.select(
         "o_orderkey",

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.relational import _cents, _cents_sql
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -70,7 +70,7 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each side is scanned once with its filter pushed to
     parquet; the merge shuffles 2 x #groups pre-aggregated rows, so a
     daily refresh costs the delta scan, never the base rescan."""
-    li = load(tune(spark), sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     cutoff = F.lit(_INCR_CUTOFF).cast("timestamp")
 
     def partial(side: DataFrame) -> DataFrame:
@@ -155,7 +155,7 @@ def q_topk_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted two-phase ranking that never sorts a whole group in one
     task. Total order (price_fp DESC, l_orderkey, l_linenumber) makes
     the result unique; the salt only bounds intermediate sort size."""
-    li = load(tune(spark), sf_dir, "lineitem").select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_orderkey",
         "l_linenumber",
@@ -236,7 +236,6 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     large the dim grows, broadcast to every task; the fact side is
     pruned by ANDed map-side bit-tests before the one exact
     (also broadcast) join — no shuffle of orders at any point."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == _BLOOM_SEG)
     orders = load(spark, sf_dir, "orders")
 
@@ -319,7 +318,7 @@ def q_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the shuffle); exact counts exist only for the tracked
     heavy hitters, found via a TakeOrdered top-k, never a global
     single-partition sort."""
-    ev = load(tune(spark), sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
 
     poses = F.array(
         *[F.expr(_cms_pos_spark(j, "user_id")).cast("int") for j in range(_CMS_D)]
@@ -450,7 +449,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph diameter, and the driver loop only appends to the logical
     plan (no mid-loop action). The 1-row node-count side crossJoins
     as a broadcast."""
-    spark = tune(spark)
     # repartitioned on src ONCE: the degree aggregate and the ed join
     # both hang off this one exchange (zero extra |E| exchanges)
     edges = bipartite_edges(spark, sf_dir).repartition(F.col("src"))
@@ -562,7 +560,7 @@ def q_agg_distinct_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: phase 1's shuffle key is the whole pair (uniform however
     skewed event_type is); phase 2 shuffles pre-combined per-type
     counts only."""
-    ev = load(tune(spark), sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     pairs = ev.select(
         "event_type", "user_id", F.to_date("ts").alias("day")
     ).distinct()
@@ -647,7 +645,7 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both layouts are map-only assignments (Z uses fixed-width
     z-ranges = range partitioning by z-value, no global sort); stats
     are one combined aggregate per (layout, file)."""
-    li = load(tune(spark), sf_dir, "lineitem").select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
     morton = _morton_spark(
@@ -787,7 +785,7 @@ def q_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-partition state is 256 registers (map-side combine);
     the exact count exists only to audit the estimate and would be
     dropped at 100 TB."""
-    ev = load(tune(spark), sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     hashed = ev.select(
         F.expr("md5(concat('HLL|', cast(user_id as string)))").alias("h")
     )
@@ -874,7 +872,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: nodes, edges, ordered wedges, triangles, and the
     closure fraction (1e-6 fixed point) of the part-co-purchase
     graph."""
-    spark = tune(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
     b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
@@ -1007,7 +1004,6 @@ _HIER_LEVELS = 6  # covers keys < 10^7 (sf0.1 max custkey ~ 1.5e4)
 def q_hierarchy_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per customer key: its hierarchy root, depth, and the
     reached-root audit flag."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey")
     edges = scoped_persist(
         cust.filter(F.col("c_custkey") >= 10).select(
@@ -1093,7 +1089,6 @@ def _indep_flag(key_expr: str) -> str:
 def q_sample_coordinated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation: table/sample sizes, coordinated orphans (must be
     0), independent-sample orphans (the broken-join control)."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",

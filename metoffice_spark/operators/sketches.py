@@ -36,7 +36,7 @@ from metoffice_spark.operators.scale import (
     _rho_duck,
     _rho_spark,
 )
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -95,7 +95,6 @@ def q_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     (an ungrouped aggregate always emits one row). At 100 TB this is
     the difference between three scans of the element table and one.
     """
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     types = sorted({t for p in _PAIRS for t in p})
     # elem IS NOT NULL boundary (mirrored in the oracle): a NULL
@@ -321,7 +320,6 @@ QUERIES["q_sketch_setops"] = (q_sketch_setops, ORACLE_SKETCH_SETOPS)
 def q_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: type count, register mismatches between merged and
     direct sketches (must be 0), both estimates, exact distinct."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     hashed = scoped_persist(
         ev.select(
@@ -455,7 +453,6 @@ QUERIES["q_sketch_hll_merge"] = (q_sketch_hll_merge, ORACLE_SKETCH_HLL_MERGE)
 def q_agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: distinct users via bitmap popcount, words
     used, and the count(DISTINCT) audit."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     # Sign-correct decomposition (r13 idneg probe): ids are opaque
     # SIGNED words, and the naive (id div 32, id % 32) splits them
@@ -546,7 +543,6 @@ def q_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, percentile): histogram-sketch estimate (bin
     lower edge), the exact value, and the within-bin error in
     cents."""
-    spark = tune(spark)
     # rank-validity boundary (r08 ts+value probe, mirrored in the
     # oracle): a NULL reading has neither a histogram bin nor an
     # exact rank — and its NULL bin/rank sorts at opposite ends on
@@ -697,7 +693,6 @@ def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the N/K heavy-hitter verdict."""
     from metoffice_spark.operators.llm import TOKS_SPARK
 
-    spark = tune(spark)
     from metoffice_spark.session import scoped_persist
 
     toks = scoped_persist(

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -79,7 +79,6 @@ def _chi2_2x2(dialect_cast: str = "DOUBLE") -> str:
 def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: n, n_pos, tie-corrected AUC of n_chars predicting
     lang='en', in 1e-6 fixed point."""
-    spark = tune(spark)
     # rank-validity boundary (r08 null-nchars probe, mirrored in the
     # oracle): a document with no score cannot be ranked by the score
     # — and Spark ranks NULL scores first where DuckDB ranks them
@@ -165,7 +164,6 @@ def q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts and the chi² statistic."""
     from metoffice_spark.operators.llm import TOKS_SPARK
 
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     pairs = (
         docs.select(
@@ -260,7 +258,6 @@ QUERIES["q_chi2_terms"] = (q_chi2_terms, _chi2_oracle())
 def q_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: customer count, total spend (cents), and
     the Gini coefficient of per-customer spend."""
-    spark = tune(spark)
     # rank-validity boundary (r08 null-price probe, mirrored in the
     # oracle): an unpriced order contributes no spend; without the
     # filter a customer whose EVERY order is unpriced gets a NULL
@@ -388,7 +385,6 @@ def _ridge_solve_exprs() -> dict[str, str]:
 def q_ridge_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: the Gram sums and the ridge coefficients (intercept,
     hour, day-of-week) for value_cents ~ hour + dow."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events").select(
         F.hour("ts").cast("bigint").alias("x1"),
         F.expr(
@@ -472,7 +468,6 @@ _J_TOPK = 50
 def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top candidate customer pairs by neighbor (supplier) Jaccard:
     pair, intersection, union, jaccard_fp."""
-    spark = tune(spark)
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     edges = scoped_persist(
@@ -582,7 +577,6 @@ QUERIES["q_graph_jaccard"] = (q_graph_jaccard, ORACLE_GRAPH_JACCARD)
 
 def q_survival_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per lifetime day: events, censored, at-risk count, hazard_fp."""
-    spark = tune(spark)
     # sequencing-validity boundary (r10 nullgroup probe, mirrored in
     # the oracle): an untimestamped event has no position on the
     # lifetime axis. Partial-NULL users were already consistent
@@ -686,7 +680,6 @@ QUERIES["q_survival_hazard"] = (q_survival_hazard, ORACLE_SURVIVAL)
 def q_compress_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per profiled orders column: rows, distinct, exact bit width,
     dictionary vs plain size estimate, compression ratio."""
-    spark = tune(spark)
     cols = ["o_orderstatus", "o_orderpriority", "o_custkey"]
     o = load(spark, sf_dir, "orders").select(
         F.explode(
@@ -765,7 +758,6 @@ QUERIES["q_compress_dict"] = (q_compress_dict, ORACLE_COMPRESS)
 
 def q_sink_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: the JSONL manifest line and its byte length."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -834,7 +826,6 @@ QUERIES["q_sink_jsonl"] = (q_sink_jsonl, ORACLE_SINK_JSONL)
 def q_forecast_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: holdout hours scored, seasonal-naive MAE_fp
     (1e-6 cents) on the final day."""
-    spark = tune(spark)
     ev = scoped_persist(
         load(spark, sf_dir, "events").select(
             "event_type",
@@ -925,7 +916,6 @@ _TE_SMOOTH = 10
 def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per sampled event: its category, target cents, and the
     leave-one-out smoothed target encoding (1e-6 fixed point)."""
-    spark = tune(spark)
     ev = scoped_persist(
         load(spark, sf_dir, "events").select(
             "event_id",
@@ -1007,7 +997,6 @@ _DRIFT_BASE_DAYS = 14
 def q_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: baseline/current counts, window shares in
     1e-6 fixed point, and the 2x2 chi-squared drift statistic."""
-    spark = tune(spark)
     # sequencing-validity boundary (r08 null-ts probe, mirrored in the
     # oracle): an undated event belongs to neither drift window — and
     # the engines disagree on its flag (Spark's cast(NULL<14 as int)
@@ -1107,10 +1096,6 @@ def q_eval_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1e-6 fixed point), plus overall accuracy_fp and kappa."""
     from metoffice_spark.operators.classify import q_nb_langid
 
-    # Runs tune() internally — ordered before this builder's own
-    # scoped persists so they all land in one retention scope
-    # (session.py scope contract; no longer correctness-critical
-    # since the r09 retention queue, but keeps lifetimes aligned).
     conf = q_nb_langid(spark, sf_dir)
     conf = scoped_persist(conf)
     actuals = conf.groupBy(F.col("actual_lang").alias("cls")).agg(
@@ -1257,7 +1242,6 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flesch reading-ease score."""
     from metoffice_spark.operators.llm import TOKS_SPARK
 
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     counted = docs.select(
         "doc_id",

@@ -53,7 +53,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from metoffice_spark.io import load
 from metoffice_spark.obs import OBS_PER_HOUR, observations, oracle_cte
 from metoffice_spark.parity import fixed_str
-from metoffice_spark.session import tune
 
 _CTE = oracle_cte()
 
@@ -117,8 +116,8 @@ def _replay(
     # more — 4 substrate computations before streaming even started.
     # The persist is canonically equal to the callers' own
     # observations(...).select(_OBS_COLS) frames, so CacheManager
-    # serves them all from one entry; it rotates out at the next
-    # builder's tune() like every scoped persist.
+    # serves them all from one entry; it rotates out with the rest of
+    # this builder's scope (session.py).
     from metoffice_spark.session import scoped_persist
 
     obs = scoped_persist(observations(spark, sf_dir).select(*_OBS_COLS))
@@ -254,7 +253,6 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The timer-tick source (MWC:34-39): file-source replay through a
     stateless typed projection (the JSON-ingest shape of MWC:142-157),
     appended to a parquet sink. Stateless -> append mode, no watermark."""
-    spark = tune(spark)
     input_dir, root = _replay(spark, sf_dir)
     sdf = _read_stream(spark, input_dir, one_file_batches=False)
     shaped = sdf.select(
@@ -285,7 +283,6 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     a streaming aggregation). Append mode: a day emits when the
     watermark (max event time - 1h) passes its end — the final,
     still-open day stays in state, exactly what the oracle encodes."""
-    spark = tune(spark)
     input_dir, root = _replay(spark, sf_dir)
     sdf = _read_stream(spark, input_dir, one_file_batches=False)
     agg = (
@@ -321,7 +318,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly two windows. The oracle replicates the expansion with an
     explicit 2-offset unnest — the same row-multiplying expand Spark's
     physical plan uses."""
-    spark = tune(spark)
     input_dir, root = _replay(spark, sf_dir)
     sdf = _read_stream(spark, input_dir, one_file_batches=False)
     agg = (
@@ -355,7 +351,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     a session emits once the watermark passes its end (last obs + gap);
     each station's final open session stays in state — mirrored by the
     oracle's emission cutoff."""
-    spark = tune(spark)
     input_dir, root = _replay(spark, sf_dir)
     sdf = _read_stream(spark, input_dir, one_file_batches=False)
     agg = (
@@ -424,7 +419,6 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay plan: file0 = on-time history, file1 = next day (advances
     the watermark far past the planted windows), file2 = planted late
     rows + the final day. maxFilesPerTrigger=1 pins batch order."""
-    spark = tune(spark)
     # unprojected: _replay_max_ts projects to _OBS_COLS itself, so the
     # frame it persists is canonically identical to _replay's (one
     # cache entry); a pre-projected frame here would double-Project.
@@ -523,7 +517,6 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     output must equal the batch window-function form (rain.py) —
     SURVEY §5.2.4's replay-determinism requirement — so the oracle is
     the same SQL that checks q_rain_daily_delta/q_rain_rate."""
-    spark = tune(spark)
     obs = observations(spark, sf_dir)
     mx = _replay_max_ts(obs)
     split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
@@ -557,7 +550,6 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'error' events) to a dead-letter parquet (the MWC:399-409
     log+email analog) and the rest to the publish parquet. Returns the
     published rows; the dead-letter table is asserted in tests."""
-    spark = tune(spark)
     input_dir, root = _replay(spark, sf_dir)
     ok_dir = os.path.join(root, "wow_out")
     dl_dir = os.path.join(root, "dead_letter")
@@ -648,7 +640,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output == the distinct observation set. At scale the state store
     shards by key hash; with a watermark
     (dropDuplicatesWithinWatermark) the state is bounded."""
-    spark = tune(spark)
     from metoffice_spark.session import scoped_persist
 
     # r14: persist + parallel materialization (same discipline as
@@ -703,7 +694,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output is row-identical (verified: 873 552 rows equal at
     sf0.1; 20 s vs 89 s). State per (station, bucket) key is bounded
     by one half-hour of one station regardless of history length."""
-    spark = tune(spark)
     input_dir, root = _replay(spark, sf_dir)
     base = _read_stream(spark, input_dir, one_file_batches=False)
     # 30 min in microseconds — the bucket width equals the join
@@ -808,7 +798,6 @@ def q_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is one BIGINT per user in the state store (sharded
     by user like the shuffle); the pattern here is fixed — a
     production CEP layers an NFA over the same carry."""
-    spark = tune(spark)
     ev = load(spark, sf_dir, "events")
     root = _run_root()
     input_dir = os.path.join(root, "input")
@@ -876,7 +865,6 @@ def q_stream_cagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     final emission includes all data), which is the right trade for
     a small always-hot rollup; a production variant adds one to
     bound state."""
-    spark = tune(spark)
     # coalesce: the batch split must be EXHAUSTIVE (the r08 q_incr_agg
     # lesson, re-found by the r09 null-id probe) — a NULL obs_id fails
     # all three plain `% 3 == k` predicates and silently vanishes from
@@ -974,7 +962,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     next batch without restarting the query."""
     from metoffice_spark.io import load
 
-    spark = tune(spark)
     # coalesce: exhaustive batch split under NULL obs_id (r09 null-id
     # probe; same class as q_stream_cagg / the r08 q_incr_agg split).
     # pmod, not % (r13 idneg probe): truncated % sends a NEGATIVE
@@ -1065,7 +1052,6 @@ def _twap_machine(key, pdf_iter, state: GroupState):
 def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-station TWAP of tempc after each observation,
     state carried across two micro-batches."""
-    spark = tune(spark)
     obs = observations(spark, sf_dir)
     mx = _replay_max_ts(obs)
     split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
@@ -1207,7 +1193,6 @@ def _anomaly_machine(key, pdf_iter, state: GroupState):
 def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per observation: prior-count, prequential z-score of tempc and
     the |z| > 3 anomaly flag, state across two micro-batches."""
-    spark = tune(spark)
     obs = observations(spark, sf_dir)
     mx = _replay_max_ts(obs)
     split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
@@ -1308,7 +1293,6 @@ def q_stream_gap_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missed-tick alerts: observations arriving more than 1.5
     cadences after their predecessor, with the implied missed count;
     state across two micro-batches."""
-    spark = tune(spark)
     obs = observations(spark, sf_dir)
     mx = _replay_max_ts(obs)
     split = F.lit(mx) - F.expr("INTERVAL 1 DAY")

@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import register_views
-from metoffice_spark.session import tune
 
 QUERIES: dict = {}
 
@@ -79,7 +78,6 @@ def q_olap_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q17: correlated scalar subqueries, exact-integer rewrite of
     the 0.2*avg threshold; one final IEEE division for the yearly
     average."""
-    spark = tune(spark)
     register_views(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(SQL_OLAP_SCALAR_SUBQUERY)
 
@@ -112,7 +110,6 @@ ORDER BY o.o_orderpriority
 
 def q_olap_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4: correlated EXISTS -> left-semi join with a date residual."""
-    spark = tune(spark)
     register_views(spark, sf_dir, ("orders", "lineitem"))
     return spark.sql(SQL_OLAP_EXISTS)
 
@@ -153,7 +150,6 @@ LIMIT 20
 def q_olap_having_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18: IN over a grouped-HAVING subquery -> semi-join on the
     grouped orderkeys; top-20 by exact cents with a key tie-break."""
-    spark = tune(spark)
     register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
     return spark.sql(SQL_OLAP_HAVING_IN)
 
@@ -205,7 +201,6 @@ def q_olap_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, distributed 1-row max, broadcast filter join."""
     from metoffice_spark.session import scoped_persist
 
-    spark = tune(spark)
     register_views(spark, sf_dir, ("supplier", "lineitem"))
     revenue = scoped_persist(spark.sql(_Q15_REVENUE_SQL))
     mx = revenue.agg(F.max("rev_cents").alias("max_cents"))
@@ -267,7 +262,6 @@ def q_olap_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8: nation market share per year — five broadcast dims, one
     fact-fact shuffle, share as a single IEEE division of exact
     cents."""
-    spark = tune(spark)
     register_views(
         spark,
         sf_dir,
@@ -315,7 +309,6 @@ ORDER BY n.n_name
 def q_olap_avg_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22: above-average balances with NOT EXISTS recent orders —
     1-row scalar broadcast + left-anti join."""
-    spark = tune(spark)
     register_views(spark, sf_dir, ("customer", "nation", "orders"))
     return spark.sql(SQL_OLAP_AVG_BALANCE)
 

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.relational import _cents, _cents_sql
-from metoffice_spark.session import tune
 
 QUERIES: dict = {}
 
@@ -150,7 +149,7 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both windows and the aggregate shuffle on user_id only —
     one exchange reused across all three (sort within partitions);
     no global ordering, no state beyond a key's own timeline."""
-    return _scd2(tune(spark), sf_dir)
+    return _scd2(spark, sf_dir)
 
 
 QUERIES["q_scd2_build"] = (q_scd2_build, _SCD2_SQL)
@@ -178,7 +177,6 @@ def q_join_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative BETWEEN-join plans as BroadcastNestedLoopJoin and
     dies at scale. Probe cardinality is bounded by distinct
     (user, day), not events."""
-    spark = tune(spark)
     dim = _scd2(spark, sf_dir).select(
         "user_id",
         F.col("valid_from").alias("pts"),
@@ -274,7 +272,7 @@ def q_interval_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: 2 rows per order, one shuffle on o_custkey, one running
     sum per key — O(n log n) per key vs the O(n^2) self-range-join;
     parallel across the full customer keyspace."""
-    orders = load(tune(spark), sf_dir, "orders").select("o_custkey", "o_orderdate")
+    orders = load(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
     bounds = orders.select(
         "o_custkey",
         F.explode(
@@ -345,7 +343,7 @@ def q_win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe: an untimestamped reading has no kernel position — NULL
     # sorts at opposite ends on the two engines).
     ev = (
-        load(tune(spark), sf_dir, "events")
+        load(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
             & F.col("ts").isNotNull()
@@ -415,7 +413,7 @@ def q_win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both windows share one shuffle+sort on c_mktsegment (the
     second orders by a prefix-compatible key); segment cardinality is
     small but each partition streams — no per-row state."""
-    cust = load(tune(spark), sf_dir, "customer").select(
+    cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", _cents(F.col("c_acctbal")).alias("bal_fp")
     )
     w_val = Window.partitionBy("c_mktsegment").orderBy(F.desc("bal_fp"))
@@ -466,7 +464,6 @@ def q_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the rank window runs over #distinct-segments rows per
     nation, never raw customers; the nation dim joins broadcast."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     counts = cust.groupBy("c_nationkey", "c_mktsegment").agg(
@@ -531,7 +528,7 @@ def q_cov_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     #event-types rows — the textbook distributive-aggregate shape
     (a Welford/centered pass would need the same shuffle but lose
     exactness)."""
-    ev = load(tune(spark), sf_dir, "events").filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
         & (F.abs(F.col("value")) < F.lit(9.0e12))
     )

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK
-from metoffice_spark.session import tune
 
 
 # --- q_text_analysis: term frequencies + top-k per language -----------------
@@ -36,7 +35,7 @@ def q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale path: explode produces (lang, term) rows, partial
     aggregation combines map-side, the final shuffle carries one row
     per distinct (lang, term). The top-k window partitions by lang."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "lang", F.explode(F.expr(TOKS_SPARK)).alias("term")
     )
@@ -97,7 +96,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram-marker language ID: deterministic stopword scoring with a
     fixed argmax precedence (en > de > fr > es on ties). Map-only —
     the 100 TB plan is a pure projection, zero shuffles."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         "lang",
@@ -174,7 +173,7 @@ def _qscore(e: dict[str, str]) -> str:
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length/punctuation/stopword quality heuristics + composite score.
     Map-only projection — embarrassingly parallel at any scale."""
-    docs = load(tune(spark), sf_dir, "documents").filter(F.expr(_Q_NTOK_SPARK) > 0)
+    docs = load(spark, sf_dir, "documents").filter(F.expr(_Q_NTOK_SPARK) > 0)
     cols = [F.expr(x).alias(name) for name, x in _QUAL_SPARK.items()]
     return docs.select(
         "doc_id",
@@ -217,7 +216,7 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer sums only — the per-lang rollup is a tiny-cardinality
     shuffle with map-side combine; the token counting itself is
     map-only JVM regex work."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
         F.expr(_WS_SPARK).cast("bigint").alias("ws_tokens"),
@@ -252,7 +251,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the min and max hash are the document's fingerprint anchors (the
     k=1 special case of a min-k sketch), plus the distinct-shingle
     count. Map-only; at scale the fingerprint feeds the dedup index."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     shingled = (
         docs.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
@@ -310,7 +309,7 @@ _WITH_PII_SQL = (
 def q_text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction: count + replace emails/phones with typed tags.
     Map-only regex work — embarrassingly parallel at any scale."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     with_pii = docs.withColumn("t", F.expr(_WITH_PII_SQL))
     redacted = F.regexp_replace(
         F.regexp_replace(F.col("t"), _EMAIL_PAT, "<EMAIL>"),
@@ -377,7 +376,7 @@ def q_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (pair) count aggregation (map-side combined) and the final
     top-k — at 100 TB the pair vocabulary is tiny, so the reduce side
     is trivially small."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.expr(TOKS_SPARK)).alias("tok")).filter(
         F.length("tok") >= 2
     )
@@ -434,7 +433,7 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-only — tokenize, generate start offsets with
     ``sequence``, explode, slice. No shuffle, no Python; at 100 TB
     this is the embarrassingly parallel stage before embedding."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id", F.expr(TOKS_SPARK.format(col="text")).alias("toks")
     ).filter(F.size("toks") > 0)
@@ -503,7 +502,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (lang, token) partial-aggregated shuffle, then a
     #langs-row aggregate; bodies never move, only token strings."""
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     counts = (
         docs.select("lang", F.explode(F.expr(TOKS_SPARK.format(col="text"))).alias("t"))
         .groupBy("lang", "t")

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
 from metoffice_spark.io import load
-from metoffice_spark.session import tune
 
 
 # --- q_udf_scalar: vectorized scalar pandas UDFs -----------------------------
@@ -57,7 +56,7 @@ def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Arrow), never per row."""
     norm_text = pandas_udf(_norm_text_impl, "string")
     vowel_count = pandas_udf(_vowel_count_impl, "long")
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         norm_text(F.col("text")).alias("norm_text"),
@@ -95,7 +94,7 @@ def q_udaf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality), each group aggregated inside one Arrow batch."""
     weighted_sum = pandas_udf(_weighted_sum_impl, "long")
     weighted_mean = pandas_udf(_weighted_mean_impl, "double")
-    docs = load(tune(spark), sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     w = (F.col("doc_id") + F.lit(1)).cast("long")
     return (
         docs.groupBy("lang")
@@ -136,10 +135,9 @@ class _TokenExplode:
 def q_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral Python UDTF: documents x token_explode(text). Arrow
     serialization on; at scale this is a map-side expand (no shuffle)."""
-    spark = tune(spark)
     # session-wide conf: set for THIS builder only and restore after —
     # a leaked flag would change every later UDTF in the shared
-    # parity/bench session (the sanctioned tuning home is tune()).
+    # parity/bench session (session-wide tuning lives in session.py).
     _k = "spark.sql.execution.pythonUDTF.arrow.enabled"
     try:
         _prev = spark.conf.get(_k, None)
@@ -244,7 +242,7 @@ def q_udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    ev = load(tune(spark), sf_dir, "events").select(
+    ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
     return ev.groupBy("event_type").applyInPandas(
@@ -313,7 +311,6 @@ def q_udf_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     session's parallelism so a bigger cluster gets more buckets; the
     OUTPUT is bucket-count-invariant (the merge is keyed by user
     inside the kernel, so every choice of B yields the same rows)."""
-    spark = tune(spark)
     # sequencing-validity boundary (r08 null-ts probe, mirrored in the
     # oracle): an as-of merge is defined on the time axis — an
     # untimestamped click/purchase has no "at-or-before" position

@@ -14,7 +14,7 @@ from metoffice_spark.functions.distributed import (
     global_strict_prefix_min,
 )
 from metoffice_spark.io import load
-from metoffice_spark.session import scoped_persist, tune
+from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
 
@@ -54,7 +54,6 @@ def _hexn(h: str, n: int) -> str:
 def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per RFM segment: customer count and exact mean
     recency/frequency/monetary (1e-6 fixed point)."""
-    spark = tune(spark)
     # rank-validity boundary (ADVICE r08, mirrored in the oracle): an
     # order with NULL price or NULL date can't contribute to any RFM
     # metric; without the filter a customer whose EVERY order is
@@ -200,7 +199,6 @@ _PATH_TOPK = 20
 
 def q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top 20 'a>b>c' consecutive event-type paths with counts."""
-    spark = tune(spark)
     # event_type IS NOT NULL: Spark's concat_ws SKIPS null arguments
     # while the oracle's || propagates NULL — a NULL type row would
     # silently produce a 2-element path on one engine and a NULL
@@ -279,7 +277,6 @@ _FP_SHARDS = 16
 def q_dataset_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per shard (and the ROLLUP total): row count, additive 32-bit
     checksum, xor 48-bit checksum."""
-    spark = tune(spark)
     docs = load(spark, sf_dir, "documents")
     row_h = (
         "md5(concat(cast(doc_id as string), '|', lang, '|', source, '|', "
@@ -354,7 +351,6 @@ QUERIES["q_dataset_fingerprint"] = (q_dataset_fingerprint, _fp_oracle())
 def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per spend decile (ascending): customers, revenue cents, and
     cumulative revenue share (1e-6 fixed point)."""
-    spark = tune(spark)
     # rank-validity boundary (r08 null-price probe, mirrored in the
     # oracle): as q_gini_spend — an all-unpriced customer's NULL
     # total sorts at opposite ends of the decile order per engine.
@@ -460,7 +456,6 @@ QUERIES["q_lorenz_curve"] = (q_lorenz_curve, ORACLE_LORENZ)
 def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per ABC class: parts, revenue cents, revenue share (1e-6),
     min/max cumulative-share position."""
-    spark = tune(spark)
     # rank-validity boundary (ADVICE r08, mirrored in the oracle): an
     # unpriced line contributes no revenue; without the filter a part
     # whose EVERY line is unpriced gets NULL r, which the revenue
@@ -572,7 +567,6 @@ QUERIES["q_abc_classification"] = (q_abc_classification, ORACLE_ABC)
 def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation: customers, total spend cents, and the ppm-
     resolution Herfindahl index (1e-6 fixed point, 0..1e6)."""
-    spark = tune(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders = load(spark, sf_dir, "orders").select(
         "o_custkey",
@@ -658,7 +652,6 @@ QUERIES["q_hhi_concentration"] = (q_hhi_concentration, ORACLE_HHI)
 def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The price/size Pareto frontier of parts: (p_partkey,
     price_cents, p_size), dominated rows removed."""
-    spark = tune(spark)
     # rank-validity boundary (r10 extreme-value + dim-null probes):
     # the price is a RANK KEY of the dominance order — a part whose
     # price is NULL or non-finite has no position on the price axis

@@ -25,7 +25,6 @@ from metoffice_spark.obs import (
     oracle_cte,
 )
 from metoffice_spark.parity import fixed_str, fixed_str_sql, rhu, rhu_sql
-from metoffice_spark.session import tune
 
 _CTE = oracle_cte()
 
@@ -48,7 +47,7 @@ _SLP_SQL = (
 
 def q_fn_dewpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Magnus dew point with the as-written 17.7 constant (MWC:189-191)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         "station_id",
@@ -67,7 +66,7 @@ FROM observations
 
 def q_fn_winddir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wind-direction decode: '000' calm / '360' north / sector*22.5 (MWC:282-307)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         "winddir_sector",
@@ -89,7 +88,7 @@ FROM observations
 def q_fn_mast_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WMO mast-height wind correction; gust only corrected when speed!=0
     (quirk, MWC:292-306)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         "windspeed_ms",
@@ -113,7 +112,7 @@ FROM observations
 
 def q_fn_baro_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMHI sea-level pressure reduction (MWC:309-331)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         "pressure_site_hpa",
@@ -136,7 +135,7 @@ FROM observations
 
 def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way piecewise temperature correction bands (MWC:320-327)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     band = (
         F.when(F.col("tempc") < -7.0, F.lit("cold"))
         .when((F.col("tempc") >= -7.0) & (F.col("tempc") < 2.0), F.lit("mid"))
@@ -163,7 +162,7 @@ FROM observations
 def q_fn_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Imperial unit conversions (MWC:338-365). Linear IEEE ops — exact,
     no rounding needed for parity."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         W.c_to_f(F.col("tempc")).alias("tempf"),
@@ -185,7 +184,7 @@ FROM observations
 
 def q_fn_round_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JS toFixed analog: fixed-precision decimal strings (MWC:290, 349-365)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         fixed_str(W.c_to_f(F.col("tempc")), 1).alias("tempf_s"),
@@ -208,7 +207,7 @@ FROM observations
 def q_fn_date_fmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timestamp formatting: UTC 'yyyy-MM-dd HH:mm:ss' (MWC:194) and
     ISO-'T' form (MWC:219-222)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("dateutc"),
@@ -226,7 +225,7 @@ FROM observations
 
 def q_fn_epoch2ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch seconds ↔ timestamp + day-of-month (MWC:206-208)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     epoch = F.unix_timestamp("ts")
     return df.select(
         "obs_id",
@@ -247,7 +246,7 @@ FROM observations
 
 def q_fn_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String building à la 'deviceids=a,b,c' (MWC:115, 129)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     return df.select(
         "obs_id",
         F.concat(
@@ -273,7 +272,7 @@ FROM observations
 
 def q_fn_num_coerce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """parseFloat / isNaN-guard analog: try_cast with fallback (MWC:181-183, 296-297)."""
-    df = observations(tune(spark), sf_dir)
+    df = observations(spark, sf_dir)
     dirty = F.when(F.col("obs_id") % 7 == 0, F.lit("N/A")).otherwise(
         F.col("tempc").cast("string")
     )

@@ -11,29 +11,28 @@ round; the window rotates exactly once per round (see the _PRIORITY
 comment), and new operators register AFTER the window so they never
 silently displace a planned check.
 
-Builder contract (ADVICE r06, refined VERDICT r07 item 6): builders
-are NOT guaranteed side-effect-free, but expensive side effects are
-gated behind FIRST EXECUTION. q_rollup_hypertable materializes its
-continuous-aggregate levels (persist + count) so the cached
-(station_id, day) partitioning is statically known and the rollup
-tree plans with zero extra exchanges — since r08 that refresh runs on
-the returned frame's first ACTION (session.refresh_on_first_action),
-not at build time, so plan-only consumers (plan walkers, audit tools)
-build frames job-free. A builder may still run bounded setup scalars
-(q_graph_pagerank's nodes.count(), the streaming replays' max-ts
-lookups). Scoped persists are retained across builder boundaries
-(session.py scope queue, VERDICT r08 stretch item 8): a frame's
-cached plan survives until _RETAIN_SCOPES newer builders have
-started, so drivers may freely interleave builds and executions; a
-scope that falls off the retention queue merely recomputes — always
-correct, just no longer exchange-free.
+Builder contract: ``_collect`` wraps every builder so that
+``session.tune(spark)`` runs once before it. That applies the runtime
+confs (UTC session zone, AQE, Arrow, scan split cost) to whatever
+session the caller passes and starts the builder's persist scope, so
+builders themselves never call ``tune``. Builders may run bounded
+setup actions (q_graph_pagerank's ``nodes.count()``, the streaming
+replays' max-ts lookups) but no cache refresh: q_rollup_hypertable is
+one grouping-sets aggregate. A builder's ``scoped_persist`` caches
+survive until ``session._RETAIN_SCOPES`` newer persist-bearing builders
+have started, so a driver may build the next query before executing
+the previous frame; a frame run after its scope was released merely
+recomputes.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from metoffice_spark.session import tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -195,6 +194,14 @@ _PRIORITY = (
 )
 
 
+def _tuned(fn: QueryFn) -> QueryFn:
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(tune(spark), sf_dir)
+
+    return build
+
+
 def _collect() -> dict[str, tuple[QueryFn, str | None]]:
     modules = []
     for name in _MODULES:
@@ -212,7 +219,8 @@ def _collect() -> dict[str, tuple[QueryFn, str | None]]:
         for qid, spec in mod.QUERIES.items():
             if qid in merged:
                 raise ValueError(f"duplicate qid {qid!r}")
-            merged[qid] = spec
+            fn, oracle = spec
+            merged[qid] = (_tuned(fn), oracle)
     ordered: dict[str, tuple[QueryFn, str | None]] = {}
     for qid in _PRIORITY:
         if qid in merged:

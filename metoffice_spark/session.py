@@ -14,79 +14,54 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs applied defensively at the top of every query
-# builder: the driver may hand us a session we didn't configure.
+# Runtime-settable confs. The registry applies them (via :func:`tune`)
+# before every builder, because the driver may hand over a session this
+# package did not configure.
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # r13 optimization round (guide §6): the driver tables ship as ONE
-    # parquet file each (2-11 MB at sf0.1), and the default
-    # openCostInBytes=4 MB floors the computed split size at 4 MB —
-    # every scan degenerates to 1-3 tasks REGARDLESS of core count
-    # (measured: lineitem scans as 3 partitions on local[32]; the
-    # plain orders⋈lineitem noop is ~20 % faster once the scan splits
-    # 32 ways). 128 KB keeps scan parallelism adaptive to
-    # spark.sql.files.minPartitionNum (= default parallelism = the
-    # core count), which is also what the driver's low-core bench rep
-    # should see. At the 100 TB design point files are 128 MB-1 GB, so
-    # the split size is governed by maxPartitionBytes and this knob is
-    # inert; it only matters for the small-file tail, where a lower
-    # open-cost charge packs fewer tiny files per task — more
-    # parallelism at a slightly higher task count, the right trade on
-    # a large cluster too.
+    # The driver tables ship as ONE parquet file each (2-11 MB at
+    # sf0.1). The default openCostInBytes=4 MB floors the split size
+    # at 4 MB, so every scan runs as 1-3 tasks whatever the core count.
+    # 128 KB lets scan parallelism follow
+    # spark.sql.files.minPartitionNum (= the core count). At the
+    # 100 TB design point files are 128 MB-1 GB, so maxPartitionBytes
+    # governs the split and this knob only affects the small-file
+    # tail, packing fewer tiny files per task.
     "spark.sql.files.openCostInBytes": "131072",
 }
 
 
-# Persisted intermediates, grouped per query-build SCOPE. The driver
-# runs ~290 queries through one session; without release the sketch /
-# rollup / label-propagation caches accumulate (VERDICT r02 "What's
-# wrong" #4). Lifetime contract (VERDICT r08 stretch item 8): each
-# builder's persists form one scope; :func:`tune` (the query-scope
-# boundary every builder crosses first) ROTATES the current scope into
-# a small retention queue instead of releasing it, and only the queue
-# overflow (older than the newest ``_RETAIN_SCOPES`` scopes) is
-# unpersisted. Consequences:
-#   - interleaved build/execute drivers are safe: building up to
-#     _RETAIN_SCOPES other queries before executing a frame leaves its
-#     cached plan intact (previously ONE intervening build degraded it
-#     to recompute);
-#   - the nested-tune() trap (the q_dedup_components round-3 bug:
-#     a helper running tune() mid-builder instantly released the
-#     builder's own persists) is gone — rotation keeps them cached;
-#   - memory stays bounded: at most _RETAIN_SCOPES executed queries'
-#     intermediates are cached at once (persist() is lazy, so scopes
-#     that were built but never executed hold no blocks), and Spark's
-#     MEMORY_AND_DISK eviction backstops pressure;
-#   - an evicted scope's unpersist may uncache a logical plan a newer
-#     re-build of the SAME query still references — that frame then
-#     recomputes (always correct, merely no longer exchange-free).
-# Env-tunable depth. Default 1: the r09 bench A/B on local[32]/12g
-# (3-rep sweeps, sf0.1) measured depth 4 at ~5% slower than depth 0
-# (extra materialized caches squeeze execution memory in a single
-# JVM), while depth 1 was indistinguishable from 0 (48.2 vs 51.0 s
-# totals, warm sweeps 46.8 vs 47.0) — and depth 1 already delivers
-# the contract: the PREVIOUS builder's frame stays cached through the
-# next build (one-ahead interleave, the realistic driver pattern) and
-# a nested tune() can no longer release its own builder's persists.
-# Deployments interleaving deeper can raise it; 0 restores the
-# pre-r09 release-at-next-builder behavior.
-_RETAIN_SCOPES = int(os.environ.get("SPARK_GRAFT_RETAIN_SCOPES", "1"))
+# Persisted intermediates, grouped per query-build SCOPE. One session
+# runs ~290 queries, so persists must be released or they accumulate.
+# Each builder's ``scoped_persist`` calls form one scope. :func:`tune`,
+# which the registry runs before every builder, closes the current
+# scope into a retention queue and unpersists only what falls off the
+# end of it (scopes older than the newest ``_RETAIN_SCOPES``).
+#   - A driver may build the next query before executing the previous
+#     frame: that frame's cache is still retained.
+#   - Memory stays bounded: at most ``_RETAIN_SCOPES`` executed
+#     queries' intermediates are cached at once (persist() is lazy, so
+#     a scope that was built but never executed holds no blocks), and
+#     MEMORY_AND_DISK eviction backstops pressure.
+#   - A released scope may uncache a plan that a newer build of the
+#     SAME query still references; that frame then recomputes, which
+#     is correct, merely slower.
+# Depth 1 measured the same as depth 0 on the bench (sf0.1, local[32]),
+# while depth 4 was ~5 % slower: extra caches squeeze execution memory.
+_RETAIN_SCOPES = 1
 _SCOPES: list[list] = []   # retention queue, oldest first
 _CURRENT: list = []        # persists of the currently building query
 
 
 def scoped_persist(df):
-    """``df.persist()`` scoped to the building query: stays cached
-    until ``_RETAIN_SCOPES`` newer PERSIST-BEARING query builders have
-    started (each :func:`tune` call rotates scopes, but a builder with
-    no scoped persists contributes no scope and so does not age the
-    queue — ADVICE r09 item 4: retention depth counts persist-bearing
-    builders, and a cache can live arbitrarily longer across
-    persist-free builds), then is unpersisted — cache discipline for
-    one-session drivers that may interleave builds and executions."""
+    """``df.persist()`` scoped to the building query.
+
+    The cache lives until ``_RETAIN_SCOPES`` newer persist-bearing
+    builders have started, then is unpersisted. A builder with no
+    scoped persists adds no scope, so it does not age the queue."""
     df = df.persist()
     _CURRENT.append(df)
     return df
@@ -94,10 +69,8 @@ def scoped_persist(df):
 
 def _rotate_scope() -> None:
     """Close the current scope into the retention queue; release only
-    the queue overflow. Empty scopes are NOT pushed: a persist-free
-    builder does not age the queue (see :func:`scoped_persist` — kept
-    deliberately, so one-ahead interleave survives persist-free
-    builds in between; the docstring is the contract of record)."""
+    the queue overflow. Empty scopes are not pushed (see
+    :func:`scoped_persist`)."""
     global _CURRENT
     if _CURRENT:
         _SCOPES.append(_CURRENT)
@@ -121,237 +94,14 @@ def release_scoped_persists() -> None:
                 pass  # session already stopped; nothing to release
 
 
-try:  # classic (JVM) DataFrame — the only mode this repo runs in
-    from pyspark.sql.classic.dataframe import DataFrame as _BaseDataFrame
-except ImportError:  # pragma: no cover - pre-4.0 module layout
-    from pyspark.sql import DataFrame as _BaseDataFrame  # type: ignore
-
-
-class _RefreshOnFirstAction(_BaseDataFrame):
-    """DataFrame that runs a pending builder refresh (cache
-    materialization jobs) immediately before its FIRST action.
-
-    Companion to the builder contract in registry.py: a continuous-
-    aggregate builder wants its levels persisted AND materialized so
-    the coarser levels re-aggregate exchange-free against statically
-    known cached partitioning — but plan-only consumers
-    (tools/audit_plans.py, the plan-walker tests) must be able to
-    BUILD the frame without paying the refresh jobs (VERDICT r07
-    item 6). Deferring the refresh to the first action gives both:
-    construction is job-free, and any action first materializes the
-    levels, then plans against the populated cache (physical planning
-    happens lazily at first use, so the action's own plan shows the
-    same zero-exchange shape as an eager refresh — locked by
-    tests/test_plans.py::test_rollup_tree_reuses_cached_levels).
-    Derived frames (.filter/.select results) are plain DataFrames and
-    do NOT carry the hook — they still compute correctly, merely
-    without the exchange-free replan guarantee.
-    """
-
-    def __init__(self, df, refresh):
-        super().__init__(df._jdf, df.sparkSession)
-        self._pending_refresh = refresh
-
-    @property
-    def refresh_pending(self) -> bool:
-        """True while the builder refresh has not yet run — public
-        accessor so tests/tools need not reach for the private slot."""
-        return self._pending_refresh is not None
-
-    def refresh(self) -> None:
-        """Run the pending refresh once; later calls are no-ops."""
-        cb, self._pending_refresh = self._pending_refresh, None
-        if cb is not None:
-            cb()
-
-    def _warn_derivation_skips_refresh(self, name: str) -> None:
-        # Only the GroupedData-returning derivations (groupBy/groupby)
-        # still lose the hook — their eventual .agg() result is a
-        # plain DataFrame two hops away. DataFrame-returning
-        # derivations PROPAGATE the refresh (see _wrap_derivation), so
-        # this warning is the residual "handled by telling you" path
-        # (VERDICT r09 item 3).
-        if self._pending_refresh is not None and not getattr(
-            self, "_derivation_warned", False
-        ):
-            self._derivation_warned = True
-            import warnings
-
-            warnings.warn(
-                f"DataFrame.{name}() on a frame with a pending builder "
-                "refresh: the derived frame will not trigger the "
-                "refresh (results stay correct; the cached-plan "
-                "guarantee is lost). Call .refresh() first to keep it.",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-
-    @property
-    def write(self):
-        self.refresh()
-        return _BaseDataFrame.write.fget(self)
-
-    def writeTo(self, *args, **kwargs):
-        self.refresh()
-        return super().writeTo(*args, **kwargs)
-
-    # RDD-shaped escape hatches (ADVICE r08): toJSON()/.rdd fix the
-    # physical plan at access time, so the refresh must run first or
-    # the zero-exchange replan guarantee is silently lost.
-    def toJSON(self, *args, **kwargs):
-        self.refresh()
-        return super().toJSON(*args, **kwargs)
-
-    @property
-    def rdd(self):
-        self.refresh()
-        return _BaseDataFrame.rdd.fget(self)
-
-
-def _wrap_action(name: str):
-    base = getattr(_BaseDataFrame, name)
-
-    def action(self, *args, **kwargs):
-        self.refresh()
-        return base(self, *args, **kwargs)
-
-    action.__name__ = name
-    action.__doc__ = base.__doc__
-    return action
-
-
-for _name in (
-    "collect",
-    "count",
-    "toPandas",
-    "toArrow",
-    "toLocalIterator",
-    "show",
-    "take",
-    "head",
-    "first",
-    "tail",
-    "foreach",
-    "foreachPartition",
-    "isEmpty",
-    # job-running materializers (ADVICE r08): checkpointing a frame
-    # whose levels aren't yet cached would checkpoint the un-replanned
-    # shape; summary/describe run aggregate jobs over the frame.
-    "checkpoint",
-    "localCheckpoint",
-    "summary",
-    "describe",
-    # stat-function job runners (VERDICT r09 item 3): these delegate
-    # to DataFrameStatFunctions but run jobs over THIS frame.
-    "approxQuantile",
-    "corr",
-    "cov",
-    "crosstab",
-    "freqItems",
-    "sampleBy",
-):
-    if hasattr(_BaseDataFrame, _name):
-        setattr(_RefreshOnFirstAction, _name, _wrap_action(_name))
-
-
-def _wrap_derivation(name: str):
-    base = getattr(_BaseDataFrame, name)
-
-    def derive(self, *args, **kwargs):
-        out = base(self, *args, **kwargs)
-        if self._pending_refresh is not None and isinstance(
-            out, _BaseDataFrame
-        ):
-            # PROPAGATE the pending refresh: the child forwards to the
-            # PARENT's one-shot refresh() (idempotent — the first
-            # firing, from any descendant or the parent itself, nulls
-            # the parent's callback and every later forward is a
-            # no-op), so an action on a derived frame still
-            # materializes the levels before planning (VERDICT r09
-            # item 3, upgraded from warn-on-skip to handled).
-            return _RefreshOnFirstAction(out, self.refresh)
-        return out
-
-    derive.__name__ = name
-    derive.__doc__ = base.__doc__
-    return derive
-
-
-def _wrap_grouping(name: str):
-    base = getattr(_BaseDataFrame, name)
-
-    def group(self, *args, **kwargs):
-        # GroupedData is not a DataFrame — the hook cannot ride along;
-        # warn once instead of losing the guarantee silently.
-        self._warn_derivation_skips_refresh(name)
-        return base(self, *args, **kwargs)
-
-    group.__name__ = name
-    group.__doc__ = base.__doc__
-    return group
-
-
-for _name in ("groupBy", "groupby", "rollup", "cube", "groupingSets"):
-    if hasattr(_BaseDataFrame, _name):
-        setattr(_RefreshOnFirstAction, _name, _wrap_grouping(_name))
-
-
-# Common derivation surface: DataFrame-returning derivations carry the
-# pending refresh forward onto the child (VERDICT r09 item 3).
-for _name in (
-    "select",
-    "selectExpr",
-    "filter",
-    "where",
-    "withColumn",
-    "withColumns",
-    "withColumnRenamed",
-    "drop",
-    "join",
-    "crossJoin",
-    "agg",
-    "orderBy",
-    "sort",
-    "sortWithinPartitions",
-    "limit",
-    "offset",
-    "distinct",
-    "dropDuplicates",
-    "union",
-    "unionAll",
-    "unionByName",
-    "intersect",
-    "intersectAll",
-    "exceptAll",
-    "subtract",
-    "sample",
-    "repartition",
-    "repartitionByRange",
-    "coalesce",
-    "alias",
-    "hint",
-    "transform",
-    "unpivot",
-    "melt",
-    "mapInPandas",
-    "mapInArrow",
-):
-    if hasattr(_BaseDataFrame, _name):
-        setattr(_RefreshOnFirstAction, _name, _wrap_derivation(_name))
-
-
-def refresh_on_first_action(df, refresh):
-    """Wrap ``df`` so ``refresh()`` runs before its first action."""
-    return _RefreshOnFirstAction(df, refresh)
-
-
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally provided session.
+    """Apply the runtime confs to ``spark`` and start a new query scope.
 
-    Every query builder calls this first, so it doubles as the
-    query-scope boundary: the previous query's scoped persists rotate
-    into the retention queue here (released once ``_RETAIN_SCOPES``
-    newer scopes exist — see the scope contract above)."""
+    The registry wraps every builder so this runs once before it
+    (``registry._collect``); ``get_spark`` and the driver's ``entry``
+    call it for sessions that bypass the registry. Starting a scope
+    rotates the previous builder's scoped persists into the retention
+    queue (see the scope comment above)."""
     _rotate_scope()
     for k, v in _RUNTIME_CONF.items():
         try:

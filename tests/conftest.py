@@ -20,6 +20,17 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _release_scoped_persists():
+    """Release every scoped persist after each test. Tests that call a
+    builder directly skip the registry's scope rotation, so without
+    this a later test could plan against a cache an earlier one left."""
+    yield
+    from metoffice_spark.session import release_scoped_persists
+
+    release_scoped_persists()
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

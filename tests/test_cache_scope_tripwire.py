@@ -1,4 +1,4 @@
-"""Cache-scope tripwire (VERDICT r13 item 8).
+"""Cache-scope tripwire.
 
 `scoped_persist` retention (`_RETAIN_SCOPES=1`) deliberately lets one
 query's cache survive into the NEXT builder's scope.  Today no bench
@@ -30,6 +30,10 @@ def test_bench_headliner_plans_do_not_cross_scopes(spark, sf_smoke):
 
     first = reg[_PERSIST_HEAVY](spark, sf_smoke)
     first.write.format("noop").mode("overwrite").save()  # caches populated
+    # Plan the first frame now, while its own scope is the current one:
+    # planned later, the result would depend on which scopes earlier
+    # tests left in the retention queue.
+    plan_first = first._jdf.queryExecution().executedPlan().toString()
 
     second = reg[_PERSIST_FREE](spark, sf_smoke)
     # executedPlan AFTER the first query ran: if a retained scope leaked
@@ -38,10 +42,9 @@ def test_bench_headliner_plans_do_not_cross_scopes(spark, sf_smoke):
     plan = second._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" not in plan, (
         f"{_PERSIST_FREE} plans against a cached relation it did not "
-        f"build — a scoped_persist crossed the tune() boundary:\n{plan}"
+        f"build — a scoped_persist crossed the builder boundary:\n{plan}"
     )
     # sanity: the tripwire is live — the persist-heavy query really did
     # populate a cache in this session (otherwise the assertion above
     # can never fire and the test is vacuous)
-    plan_first = first._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan_first

@@ -84,107 +84,68 @@ def test_dedup_exact_shuffles_digest_not_text(spark, sf_smoke):
     assert ex and all("text" not in ln for ln in ex)
 
 
-def test_rollup_tree_reuses_cached_levels(spark, sf_smoke):
-    """Each rollup level must be materialized once and re-read by BOTH
-    its own output branch and the next coarser level (the continuous-
-    aggregate tree, rain.py). If the persist barriers are dropped, the
-    union re-derives the raw scan + substrate per branch (3x work) and
-    no InMemoryTableScan appears."""
+def test_rollup_is_one_grouping_sets_aggregate(spark, sf_smoke):
+    """q_rollup_hypertable derives the observation substrate once and
+    aggregates all three levels in one Expand-fed aggregate: no cached
+    level, no events scan beyond the substrate's own, and no shuffle on
+    a bucket or window expression except that aggregate's one."""
+    from metoffice_spark.obs import observations
     from metoffice_spark.operators.rain import q_rollup_hypertable
 
-    df = q_rollup_hypertable(spark, sf_smoke)
-    # The refresh is gated behind first execution (VERDICT r07 item 6):
-    # building the frame runs NO jobs, so fire the refresh explicitly —
-    # exactly what the first action does — before locking the plan
-    # shape an executing consumer sees.
-    df.refresh()
-    plan = _plan(df)
-    # b15 read twice (own branch + b1h build is inside b1h's cache) and
-    # b1h read twice (own branch + b1d build): >= 3 cached scans in the
-    # final plan
-    n_cached = plan.count("InMemoryTableScan")
-    assert n_cached >= 3, f"rollup levels not cached: {n_cached} InMemoryTableScan"
-    # r06 exchange sharing: all three levels group by (station_id, day,
-    # bucket) so they re-aggregate in place on the substrate's
-    # (station_id, day) partitioning — the tree itself must add NO
-    # exchange. Any hashpartitioning on a window/bucket/grouping
-    # expression means a level re-shuffled.
+    plan = _plan(q_rollup_hypertable(spark, sf_smoke))
+    assert "InMemoryTableScan" not in plan
+    assert plan.count("Expand [") == 1, plan
+
+    def events_scans(p: str) -> int:
+        return sum(
+            1 for ln in p.splitlines() if "Scan parquet" in ln and "events" in ln
+        )
+
+    n_obs_scans = events_scans(_plan(observations(spark, sf_smoke)))
+    assert 0 < events_scans(plan) <= n_obs_scans
     agg_shuffles = [
         ln
         for ln in plan.splitlines()
         if "hashpartitioning" in ln
-        and ("window#" in ln or "_groupingexpression" in ln or "bucket#" in ln)
+        and any(
+            k in ln
+            for k in ("window#", "_groupingexpression", "bucket#", "b15#", "b1h#", "b1d#")
+        )
     ]
-    assert not agg_shuffles, f"rollup level re-shuffled: {agg_shuffles}"
+    assert len(agg_shuffles) == 1, f"rollup re-shuffled per level: {agg_shuffles}"
+    assert "spark_grouping_id" in agg_shuffles[0], agg_shuffles
 
 
-def test_rollup_refresh_is_gated_behind_first_action(spark, sf_smoke):
+def test_rollup_build_runs_no_jobs(spark, sf_smoke):
     """Plan-only consumers (audit_plans, the walker tests) build every
-    query's frame; the rollup's level refresh must not execute Spark
-    jobs at build time — only the first ACTION pays it (VERDICT r07
-    item 6)."""
+    query's frame, so building the rollup must not execute its
+    aggregation; the first collect then runs it in one pass."""
     from metoffice_spark.operators.rain import q_rollup_hypertable
 
-    # r10 (ADVICE r09 item: off private internals): job accounting via
-    # the PUBLIC SparkStatusTracker job-group API, and refresh state
-    # via the wrapper's public `refresh_pending` property — no _jsc /
-    # getRDDStorageInfo, which do not exist under Spark Connect.
+    # Job accounting through the public SparkStatusTracker job-group
+    # API (no _jsc internals, which do not exist under Spark Connect).
     if not hasattr(spark, "sparkContext"):
         pytest.skip("statusTracker unavailable (connect mode?)")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    # Cold-cache premise: the r09 scope-retention queue keeps an
-    # earlier test's rollup levels cached across builder boundaries,
-    # and a re-build of the SAME plans re-attaches to those entries —
-    # the refresh would then be near-free and the job-count
-    # assertions below vacuous. Flush first.
-    from metoffice_spark.session import release_scoped_persists
-
-    release_scoped_persists()
     sc.setJobGroup("rollup-build-probe", "plan-only build")
     df = q_rollup_hypertable(spark, sf_smoke)
     build_jobs = tracker.getJobIdsForGroup("rollup-build-probe")
     # read.parquet's footer/listing job is inherent to every builder;
-    # a refresh at build time would run the level-materialization
-    # batch (empirically ~10+ jobs), so a tight bound separates them.
+    # running the aggregation at build time would add several more.
     assert len(build_jobs) <= 2, (
-        f"building the rollup frame ran {len(build_jobs)} jobs — the "
-        "level refresh leaked into build time"
+        f"building the rollup frame ran {len(build_jobs)} jobs"
     )
-    assert df.refresh_pending
     sc.setJobGroup("rollup-action-probe", "first action")
-    assert df.count() > 0  # first action fires the refresh, then runs
-    assert not df.refresh_pending
+    assert df.collect()
     action_jobs = tracker.getJobIdsForGroup("rollup-action-probe")
-    # count alone is 1-2 jobs (AQE); the deferred refresh adds the
-    # materialization batch on top — well above the build-time bound.
-    assert len(action_jobs) > 2, (
-        f"first action ran only {len(action_jobs)} jobs — the level "
-        "refresh did not fire"
+    # One pass: the substrate's broadcast and shuffle stages plus the
+    # single grouping-sets aggregate (6 jobs measured; the persisted
+    # level tree it replaced ran 11).
+    assert len(action_jobs) <= 8, (
+        f"first collect ran {len(action_jobs)} jobs"
     )
-
-
-def test_rollup_refresh_propagates_to_derived_frames(spark, sf_smoke):
-    """A .filter/.select child of a pending-refresh frame must carry
-    the hook forward (VERDICT r09 item 3): its first action fires the
-    PARENT's one-shot refresh, and later actions anywhere are no-ops."""
-    from metoffice_spark.operators.rain import q_rollup_hypertable
-    from metoffice_spark.session import release_scoped_persists
-
-    release_scoped_persists()
-    df = q_rollup_hypertable(spark, sf_smoke)
-    assert df.refresh_pending
-    child = df.filter("n_obs >= 0").select("station_id", "bucket", "n_obs")
-    assert getattr(child, "refresh_pending", False), (
-        "derived frame lost the pending-refresh hook"
-    )
-    assert child.count() > 0
-    # the child's action fired the PARENT's refresh exactly once
-    assert not df.refresh_pending
-    assert not child.refresh_pending
-    # post-refresh derivations are plain frames (nothing left to carry)
-    assert not hasattr(df.limit(1), "refresh_pending")
 
 
 def test_olap_local_supplier_broadcasts_dims(spark, sf_smoke):
@@ -669,9 +630,9 @@ def test_pagerank_degree_join_no_window_sort(spark, sf_smoke):
 
 
 def test_scope_retention_survives_interleaved_builds(spark):
-    """VERDICT r08 stretch item 8: a builder's scoped persists must
-    stay cached while up to _RETAIN_SCOPES newer builders start (each
-    tune() call is a scope rotation), so an interleaved build/execute
+    """A builder's scoped persists must stay cached while up to
+    _RETAIN_SCOPES newer builders start (each tune() call is a scope
+    rotation), so an interleaved build/execute
     driver keeps the cached plan; only the retention-queue overflow is
     unpersisted, and a full flush releases everything."""
     from metoffice_spark.session import (
@@ -685,7 +646,7 @@ def test_scope_retention_survives_interleaved_builds(spark):
     dfs = []
     try:
         for i in range(_RETAIN_SCOPES + 3):
-            tune(spark)  # scope boundary, as at every builder's top
+            tune(spark)  # scope boundary, as the registry runs before each builder
             dfs.append(scoped_persist(spark.range(100 + i)))
         overflow = len(dfs) - (_RETAIN_SCOPES + 1)  # queue + current
         for d in dfs[:overflow]:

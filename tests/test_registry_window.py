@@ -102,3 +102,17 @@ def test_every_driver_unchecked_qid_is_queued_for_verification():
         q for q in all_queries() if q not in checked and q not in set(_PRIORITY)
     ]
     assert unqueued == []
+
+
+def test_registry_builders_repin_session_confs(spark, sf_smoke):
+    """Builders never call tune() themselves; the registry wrapper must
+    apply it, so a driver-supplied non-UTC session is repinned to UTC
+    by any builder taken from all_queries()."""
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        all_queries()["q_rain_daily_delta"](spark, sf_smoke)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, before)

@@ -1,18 +1,19 @@
 """TZ-safety probes for the round-5j/k/l/m time-touching operators
 (the q_rain_daily_delta discipline, test_testdata_schema.py): a
-driver may hand over a non-UTC session; tune() must repin UTC so
-epoch casts (TWAP, delta-encode) and calendar math (cohort months)
-are session-independent."""
+driver may hand over a non-UTC session; the registry's tune() must
+repin UTC so epoch casts (TWAP, delta-encode) and calendar math
+(cohort months) are session-independent."""
 
 from __future__ import annotations
 
 
 def test_new_time_ops_tz_safety(spark, sf_smoke):
-    from metoffice_spark.operators.mining import q_cohort_ltv
-    from metoffice_spark.operators.prep import (
-        q_delta_encode,
-        q_time_weighted_avg,
-    )
+    from metoffice_spark.registry import all_queries
+
+    reg = all_queries()
+    q_cohort_ltv = reg["q_cohort_ltv"]
+    q_delta_encode = reg["q_delta_encode"]
+    q_time_weighted_avg = reg["q_time_weighted_avg"]
 
     def snap():
         a = {

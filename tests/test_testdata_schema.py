@@ -125,11 +125,13 @@ def test_events_loader_is_schema_adaptive(spark):
 
 def test_loader_tz_safety_under_non_utc_session(spark, sf_smoke):
     """The events loader casts TIMESTAMP_NTZ to session-TZ timestamp;
-    that is only value-correct because every query builder repins UTC
-    via tune() before loading. Simulate a driver handing a non-UTC
-    session: results must be identical to the UTC build (the verify
-    recipe's TZ probe, locked in-repo)."""
-    from metoffice_spark.operators.rain import q_rain_daily_delta
+    that is only value-correct because the registry repins UTC (via
+    tune()) before every builder loads. Simulate a driver handing a
+    non-UTC session: results must be identical to the UTC build (the
+    verify recipe's TZ probe, locked in-repo)."""
+    from metoffice_spark.registry import all_queries
+
+    q_rain_daily_delta = all_queries()["q_rain_daily_delta"]
 
     baseline = {(r["station_id"], r["obs_id"]): (r["r"], r["dailyrainmm"])
                 for r in q_rain_daily_delta(spark, sf_smoke).collect()}
@@ -193,13 +195,15 @@ def test_survey_qid_inventory_matches_registry():
 def test_round5_time_ops_tz_safety(spark, sf_smoke):
     """Round-5 operators that bucket by calendar fields (hour-of-week
     profile, OHLC days, trailing range frames) must repin UTC via
-    tune() — simulate a driver handing a non-UTC session and require
-    identical results (the q_rain_daily_delta TZ-probe discipline)."""
-    from metoffice_spark.operators.behavior import (
-        q_ohlc_bars,
-        q_ts_seasonal_profile,
-        q_win_range_interval,
-    )
+    tune(), which the registry applies before every builder — simulate
+    a driver handing a non-UTC session and require identical results
+    (the q_rain_daily_delta TZ-probe discipline)."""
+    from metoffice_spark.registry import all_queries
+
+    reg = all_queries()
+    q_ohlc_bars = reg["q_ohlc_bars"]
+    q_ts_seasonal_profile = reg["q_ts_seasonal_profile"]
+    q_win_range_interval = reg["q_win_range_interval"]
 
     def snap():
         a = {(r["dow"], r["hr"]): r["n_events"]

@@ -77,15 +77,11 @@ def main() -> None:
         "  broadcast; the remaining exchange is the final aggregation.",
         "- `q_dedup_*` / `q_sim_search*`: shuffle keys are digests, band",
         "  buckets, or (q_id) — never document bodies or embedding payloads.",
-        "- `q_rollup_hypertable`: one shared (station, day)-clustered",
-        "  exchange feeds a persisted minute level; each coarser level",
-        "  re-aggregates the persisted finer one, so the static-plan",
-        "  scan/exchange counts re-print cached lineage per level and",
-        "  overstate runtime work (same artifact as the graph family).",
-        "  The level refresh is gated behind first execution (r08), so",
-        "  the row here shows the UNREFRESHED build-time plan; the",
-        "  zero-exchange executed shape is locked by",
-        "  tests/test_plans.py::test_rollup_tree_reuses_cached_levels.",
+        "- `q_rollup_hypertable`: one grouping-sets aggregate. The",
+        "  substrate is derived once, an Expand emits each row once per",
+        "  level (15m, 1h, 1d), and the partial aggregate runs before",
+        "  the single shuffle; no level is cached. The shape is locked",
+        "  by tests/test_plans.py::test_rollup_is_one_grouping_sets_aggregate.",
         "- `q_graph_bfs` (and the iterative graph family): the STATIC plan",
         "  text re-prints every persisted frame's child lineage per round,",
         "  so scan/exchange counts here overstate runtime work massively —",

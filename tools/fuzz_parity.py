@@ -690,14 +690,13 @@ def _null_leading_probe():
     def build(spark, d):
         from metoffice_spark.functions.distributed import global_running_sum
         from metoffice_spark.io import load
-        from metoffice_spark.session import tune
 
         # the probe targets NULL VALUES in the running sum, not NULL
         # ordering keys — a NULL user_id group would sort NULLS FIRST
         # in Spark's range partitioner and NULLS LAST in DuckDB's
         # window (r10 composed battery), which is the separate,
         # already-bounded sequencing class. Keep the axis clean.
-        ev = load(tune(spark), d, "events").filter(
+        ev = load(spark, d, "events").filter(
             F.col("user_id").isNotNull()
         )
         per_u = ev.groupBy("user_id").agg(

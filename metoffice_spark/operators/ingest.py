@@ -36,8 +36,8 @@ from pyspark.sql.types import (
 )
 
 from metoffice_spark.io import load
-from metoffice_spark.obs import OBS_PER_HOUR, observations, oracle_cte
-from metoffice_spark.operators.rain import _RAIN_BASE_SQL
+from metoffice_spark.obs import observations, oracle_cte
+from metoffice_spark.operators.rain import _RAIN_BASE_SQL, _RAIN_DAILY_SQL, _RAIN_RATE_SQL
 from metoffice_spark.operators.weather import (
     _DEWPOINT_SQL,
     _MAST_CORR_SQL,
@@ -294,12 +294,6 @@ def http_post_wow(df: DataFrame, url: str, timeout_s: float = 10.0) -> DataFrame
     )
 
 
-_DAILY_SQL = "CASE WHEN fresh AND r <> day_start THEN r - day_start ELSE 0.0 END"
-_RATE_SQL = (
-    "CASE WHEN fresh AND r <> day_start THEN "
-    f"CASE WHEN COALESCE(prev_saved, 0.0) <> 0.0 THEN {OBS_PER_HOUR}.0 * (r - prev_saved) "
-    f"ELSE {OBS_PER_HOUR}.0 * (r - day_start) END ELSE 0.0 END"
-)
 _WS_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windspeed_ms * {_MAST_CORR_SQL} ELSE windspeed_ms END)"
 _WG_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windgust_ms * {_MAST_CORR_SQL} ELSE windgust_ms END)"
 
@@ -323,8 +317,8 @@ SELECT obs_id,
               CAST(CAST(floor(CAST(winddir_sector AS DOUBLE) * 22.5 + 0.5) AS INT) AS STRING)
             ELSE '360' END AS winddir,
        {fixed_str_sql(f"({_DEWPOINT_SQL}) * 1.8 + 32.0", 1)} AS dewptf,
-       {fixed_str_sql(f"({_DAILY_SQL}) * 0.0393701", 3)} AS dailyrainin,
-       {fixed_str_sql(f"({_RATE_SQL}) * 0.0393701", 3)} AS rainin,
+       {fixed_str_sql(f"({_RAIN_DAILY_SQL}) * 0.0393701", 3)} AS dailyrainin,
+       {fixed_str_sql(f"({_RAIN_RATE_SQL}) * 0.0393701", 3)} AS rainin,
        {fixed_str_sql(f"({_SLP_SQL}) * 0.029529983071445", 3)} AS baromin,
        'metoffice-spark' AS softwaretype
 FROM rain_state

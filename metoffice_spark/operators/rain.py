@@ -111,14 +111,19 @@ def rain_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rain_metrics_from_obs(observations(spark, sf_dir))
 
 
+# The two metrics as SQL over rain_state's columns, shared by the oracle
+# texts below and the WOW payload (ingest.py).
+_RAIN_DAILY_SQL = "CASE WHEN fresh AND r <> day_start THEN r - day_start ELSE 0.0 END"
+_RAIN_RATE_SQL = (
+    "CASE WHEN fresh AND r <> day_start THEN "
+    f"CASE WHEN COALESCE(prev_saved, 0.0) <> 0.0 THEN {OBS_PER_HOUR}.0 * (r - prev_saved) "
+    f"ELSE {OBS_PER_HOUR}.0 * (r - day_start) END ELSE 0.0 END"
+)
+
 _RAIN_METRICS_SELECT = f"""
 SELECT station_id, obs_id, ts, r,
-       CASE WHEN fresh AND r <> day_start THEN r - day_start ELSE 0.0 END AS dailyrainmm,
-       CASE WHEN fresh AND r <> day_start THEN
-         CASE WHEN COALESCE(prev_saved, 0.0) <> 0.0
-              THEN {OBS_PER_HOUR}.0 * (r - prev_saved)
-              ELSE {OBS_PER_HOUR}.0 * (r - day_start) END
-       ELSE 0.0 END AS rainmm
+       {_RAIN_DAILY_SQL} AS dailyrainmm,
+       {_RAIN_RATE_SQL} AS rainmm
 FROM rain_state
 """
 
@@ -192,7 +197,7 @@ def q_rain_daily_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_RAIN_DAILY = f"""{_CTE}, {_RAIN_BASE_SQL.strip()}
 SELECT station_id, obs_id, ts, r,
-       CASE WHEN fresh AND r <> day_start THEN r - day_start ELSE 0.0 END AS dailyrainmm
+       {_RAIN_DAILY_SQL} AS dailyrainmm
 FROM rain_state
 """
 
@@ -204,11 +209,7 @@ def q_rain_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_RAIN_RATE = f"""{_CTE}, {_RAIN_BASE_SQL.strip()}
 SELECT station_id, obs_id, ts, r,
-       CASE WHEN fresh AND r <> day_start THEN
-         CASE WHEN COALESCE(prev_saved, 0.0) <> 0.0
-              THEN {OBS_PER_HOUR}.0 * (r - prev_saved)
-              ELSE {OBS_PER_HOUR}.0 * (r - day_start) END
-       ELSE 0.0 END AS rainmm
+       {_RAIN_RATE_SQL} AS rainmm
 FROM rain_state
 """
 

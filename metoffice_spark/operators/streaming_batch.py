@@ -16,8 +16,9 @@ IncrementalExecution -> state store -> sink), then returns the sink's
 contents as a batch DataFrame so the driver's DuckDB oracle can check
 final results value-for-value. Determinism comes from controlled
 replay: the observation stream is snapshotted to parquet files whose
-modification times fix the micro-batch order (`maxFilesPerTrigger=1`
-where multi-batch behavior is the point).
+modification times fix the micro-batch order, one file per micro-batch
+(`maxFilesPerTrigger=1`). Every query goes through one replay path,
+:func:`_stream`: snapshot, run to completion, clean up.
 
 Empirically pinned Spark semantics the oracles encode (verified on
 this Spark build, see tests/test_streaming.py):
@@ -40,19 +41,22 @@ stay executor-side. Nothing here funnels through the driver.
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import tempfile
 import uuid
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from metoffice_spark.io import load
 from metoffice_spark.obs import OBS_PER_HOUR, observations, oracle_cte
-from metoffice_spark.parity import fixed_str
+from metoffice_spark.operators.rain import ORACLE_RAIN_METRICS
+from metoffice_spark.parity import fixed_str, fixed_str_sql
+from metoffice_spark.session import scoped_persist
 
 _CTE = oracle_cte()
 
@@ -71,7 +75,7 @@ _OBS_COLS = [
 def _run_root() -> str:
     base = os.path.join(tempfile.gettempdir(), "metoffice_stream")
     # Sweep replay trees left by OLDER queries in this process (their
-    # input/ckpt were already deleted on success; their small out/ stays
+    # input/ckpt were deleted when their run ended; their small out/ stays
     # until later queries start in case the driver re-collects). The
     # last _KEEP_ROOTS survive so a caller holding the results of a few
     # recent streaming queries (e.g. a stashed dead-letter dir) can
@@ -83,9 +87,10 @@ def _run_root() -> str:
     return os.path.join(base, uuid.uuid4().hex[:12])
 
 
-# Roots whose streaming run finished; oldest are deleted when the next
-# replay starts (the returned DataFrames of the last _KEEP_ROOTS runs
-# may still be lazily re-collected by the driver, so they are kept).
+# Roots whose streaming run ended, failed runs included; oldest are
+# deleted when the next replay starts (the returned DataFrames of the
+# last _KEEP_ROOTS runs may still be lazily re-collected by the driver,
+# so they are kept).
 _KEEP_ROOTS = 4
 _COMPLETED_ROOTS: list[str] = []
 
@@ -101,141 +106,101 @@ def _write_file(df: DataFrame, path: str, mtime: int) -> None:
     os.utime(path, (mtime, mtime))
 
 
-def _replay(
-    spark: SparkSession, sf_dir: str, split_preds: list | None = None
-) -> tuple[str, str]:
-    """Snapshot the observation stream into ``input/`` files (one per
-    split predicate, replayed in order) and return (input_dir, root)."""
+def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return observations(spark, sf_dir).select(*_OBS_COLS)
+
+
+def _replay(spark: SparkSession, frame: DataFrame, preds=None) -> tuple[str, str]:
+    """Snapshot ``frame`` into ``input/`` files, one per predicate in
+    ``preds`` (one file of every row when None), and return
+    (input_dir, root). File order is micro-batch order.
+
+    ``preds`` may also be a function of the frame's max event time (a
+    timestamp literal), for splits placed relative to the stream's end."""
     root = _run_root()
     input_dir = os.path.join(root, "input")
     os.makedirs(input_dir)
-    # r13 optimization round: persist the projected substrate for the
-    # replay setup. A split replay wrote one file PER predicate, each
-    # re-running the full observation derivation (two window chains
-    # over events), and the callers' _replay_max_ts scalar ran it once
-    # more — 4 substrate computations before streaming even started.
-    # The persist is canonically equal to the callers' own
-    # observations(...).select(_OBS_COLS) frames, so CacheManager
-    # serves them all from one entry; it rotates out with the rest of
-    # this builder's scope (session.py).
-    from metoffice_spark.session import scoped_persist
-
-    obs = scoped_persist(observations(spark, sf_dir).select(*_OBS_COLS))
-    # r14 (profiled: q_stream_join setup was ~8.9 s cold): the persist
-    # is lazy, and for no-split replays the FIRST action used to be the
-    # coalesce(1) single-file write below — whose one task computed the
-    # entire two-window observation derivation SINGLE-THREADED while
-    # populating the cache. One parallel noop materialization first
-    # (every column, guide §1.4) fills the cache with all cores; the
-    # coalesce(1) writes then just drain cached batches. Callers that
-    # ran _replay_max_ts already materialized the same entry, so for
-    # them this action is a cheap cache scan.
-    obs.write.format("noop").mode("overwrite").save()
-    if not split_preds:
-        _write_file(obs, os.path.join(input_dir, "0000.parquet"), 1_000_000)
+    # Every file filters one persisted frame, so the substrate is computed
+    # once whatever the number of files. Each file write is coalesce(1),
+    # one task; the single action before the writes fills the cache with
+    # all cores instead. That action is the max-ts collect when the split
+    # needs it, and a noop write otherwise.
+    frame = scoped_persist(frame)
+    if callable(preds):
+        mx = frame.select(F.max("ts")).collect()[0][0]
+        # An empty table has no max ts, and NULL - INTERVAL fails
+        # analysis. The epoch keeps every split well-typed and selects
+        # no rows, like the oracle's NULL scalar subquery.
+        preds = preds(F.lit(mx if mx is not None else datetime.datetime(1970, 1, 1)))
     else:
-        for i, pred in enumerate(split_preds):
-            _write_file(
-                obs.filter(pred),
-                os.path.join(input_dir, f"{i:04d}.parquet"),
-                1_000_000 + i * 1000,
-            )
+        frame.write.format("noop").mode("overwrite").save()
+    for i, pred in enumerate(preds or [F.lit(True)]):
+        _write_file(
+            frame.filter(pred),
+            os.path.join(input_dir, f"{i:04d}.parquet"),
+            1_000_000 + i * 1000,
+        )
     return input_dir, root
 
 
-def _read_stream(spark: SparkSession, input_dir: str, one_file_batches: bool):
-    reader = spark.readStream.schema(_OBS_SCHEMA)
-    if one_file_batches:
-        reader = reader.option("maxFilesPerTrigger", "1")
-    return reader.parquet(input_dir)
+def _read_stream(spark: SparkSession, input_dir: str, schema: str = _OBS_SCHEMA):
+    return (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(input_dir)
+    )
 
 
-def _dump_stream_plan(q) -> None:
-    """Write the EXECUTED streaming plan (StreamingQuery.explain) and
-    the last progress JSON when $SPARK_GRAFT_STREAM_PLAN_DIR is set.
-
-    r14 (VERDICT r13 item 2): a post-hoc ``.explain()`` on the frame a
-    streaming builder RETURNS only shows the parquet scan of the sink —
-    the StreamingSymmetricHashJoin / StateStore operators live in the
-    micro-batch's own IncrementalExecution, reachable only through the
-    StreamingQuery handle. This hook is the auditable capture path for
-    plans/ evidence; it is inert (one env lookup) outside plan dumps."""
-    plan_dir = os.environ.get("SPARK_GRAFT_STREAM_PLAN_DIR")
-    if not plan_dir:
-        return
-    try:
-        text = q._jsq.explainInternal(True)  # extended=True: all plan levels
-    except Exception as exc:  # pragma: no cover - capture must never fail a run
-        text = f"explainInternal unavailable: {exc}"
-    progress = q.lastProgress
-    os.makedirs(plan_dir, exist_ok=True)
-    name = (q.name or q.id or uuid.uuid4().hex[:8])
-    fname = os.path.join(plan_dir, f"stream_{name}.txt")
-    import json as _json
-
-    with open(fname, "a") as fh:
-        fh.write(text)
-        fh.write("\n\n=== lastProgress ===\n")
-        fh.write(_json.dumps(progress, indent=1, default=str))
-        fh.write("\n")
+def _append(df: DataFrame, _bid: int, out: str) -> None:
+    df.write.mode("append").parquet(out)
 
 
-def _run_to_parquet(stream_df: DataFrame, root: str, mode: str = "append") -> str:
-    """Run the streaming query to completion (availableNow), sinking via
-    foreachBatch into parquet; returns the output path."""
+def _stream(
+    spark: SparkSession,
+    frame: DataFrame,
+    transform,
+    preds=None,
+    batch=None,
+    mode: str = "append",
+    schema: str = _OBS_SCHEMA,
+) -> DataFrame:
+    """The replay path of every query here: snapshot ``frame``
+    (:func:`_replay`), run ``transform`` of the replayed stream to
+    completion (availableNow), sink each micro-batch through
+    ``batch(df, batch_id, out)`` (default: append it to ``out``) and
+    return the parquet at ``out``.
+
+    Raises on a failed or timed-out run rather than return a partial
+    sink. Either way the input and checkpoint are deleted and the root
+    is queued for the sweep in :func:`_run_root`."""
+    input_dir, root = _replay(spark, frame, preds)
+    shaped = transform(_read_stream(spark, input_dir, schema))
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: df.write.mode("append").parquet(out)
+    sink = batch or _append
+    try:
+        q = (
+            shaped.writeStream.foreachBatch(lambda df, bid: sink(df, bid, out))
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(600)
-    if q.exception() is not None:
-        raise q.exception()
-    if not finished:
-        # never return a partially-materialized sink
-        q.stop()
-        raise TimeoutError("streaming replay did not finish within 600s")
-    _dump_stream_plan(q)
-    # the run is complete: the replay input and checkpoint are dead
-    # weight (only out/ is read by the returned DataFrame) — drop them
-    # now, and let the next replay sweep the whole root
-    shutil.rmtree(os.path.join(root, "input"), ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _COMPLETED_ROOTS.append(root)
-    return out
+        if not q.awaitTermination(600):  # raises if the query failed
+            q.stop()
+            raise TimeoutError("streaming replay did not finish within 600s")
+    finally:
+        shutil.rmtree(input_dir, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        _COMPLETED_ROOTS.append(root)
+    # the default sink writes exactly ``shaped``'s schema; naming it
+    # spares the parquet schema-inference job
+    return (spark.read if batch else spark.read.schema(shaped.schema)).parquet(out)
 
 
-# Replay-setup max event time (driver-side constant; marked collect).
-# On an EMPTY observations table max(ts) collects as None, and
-# `F.lit(None) - INTERVAL` fails analysis (TIMESTAMP vs INTERVAL
-# binary-op mismatch) — substitute the Unix epoch so every
-# `ts <= mx - delay` replay split stays well-typed and evaluates to
-# zero rows, exactly what the DuckDB oracle's NULL-propagating
-# scalar subquery yields on the same empty slice.
-def _replay_max_ts(obs: DataFrame):
-    import datetime as _dt
-
-    from metoffice_spark.session import scoped_persist
-
-    # r13: persist before the scalar collect — the callers' obs frame
-    # is canonically equal to the one _replay() persists, so this
-    # materialization is the ONE substrate computation the whole
-    # replay setup pays (max scalar, then every split-file filter all
-    # hit the same cache entry).
-    # r14 (ADVICE r13): project to _OBS_COLS HERE, not in the callers —
-    # four of five callers passed the unprojected observations frame,
-    # creating a second (full-width) cache entry next to _replay's
-    # projected one; projecting inside makes the one-entry claim true
-    # for every caller.
-    obs = scoped_persist(obs.select(*_OBS_COLS))
-    mx = obs.select(F.max("ts").alias("m")).collect()[0].m  # replay setup only
-    return mx if mx is not None else _dt.datetime(1970, 1, 1)
+def _last_day(mx):
+    """Two micro-batches split one day before the last event, so
+    per-key state crosses a checkpoint between them."""
+    split = mx - F.expr("INTERVAL 1 DAY")
+    return [F.col("ts") <= split, F.col("ts") > split]
 
 
 # Final-watermark emission cutoff, as a DuckDB scalar subquery:
@@ -253,19 +218,19 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The timer-tick source (MWC:34-39): file-source replay through a
     stateless typed projection (the JSON-ingest shape of MWC:142-157),
     appended to a parquet sink. Stateless -> append mode, no watermark."""
-    input_dir, root = _replay(spark, sf_dir)
-    sdf = _read_stream(spark, input_dir, one_file_batches=False)
-    shaped = sdf.select(
-        "station_id",
-        "obs_id",
-        "ts",
-        "tempc",
-        "hum",
-        (F.col("windspeed_ms") != 0).alias("has_wind"),
-        (F.to_date("rain_sensor_ts") == F.to_date("ts")).alias("fresh"),
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: sdf.select(
+            "station_id",
+            "obs_id",
+            "ts",
+            "tempc",
+            "hum",
+            (F.col("windspeed_ms") != 0).alias("has_wind"),
+            (F.to_date("rain_sensor_ts") == F.to_date("ts")).alias("fresh"),
+        ),
     )
-    out = _run_to_parquet(shaped, root)
-    return spark.read.parquet(out)
 
 
 ORACLE_STREAM_INGEST = f"""{_CTE}
@@ -283,21 +248,21 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     a streaming aggregation). Append mode: a day emits when the
     watermark (max event time - 1h) passes its end — the final,
     still-open day stays in state, exactly what the oracle encodes."""
-    input_dir, root = _replay(spark, sf_dir)
-    sdf = _read_stream(spark, input_dir, one_file_batches=False)
-    agg = (
-        sdf.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 day").alias("w"), F.col("station_id"))
-        .agg(
-            F.count("*").alias("n_obs"),
-            (F.max("rain_counter_mm") - F.min("rain_counter_mm")).alias("rain_day_mm"),
-        )
-        .select(
-            "station_id", F.col("w.start").alias("day_start"), "n_obs", "rain_day_mm"
-        )
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: (
+            sdf.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 day").alias("w"), F.col("station_id"))
+            .agg(
+                F.count("*").alias("n_obs"),
+                (F.max("rain_counter_mm") - F.min("rain_counter_mm")).alias("rain_day_mm"),
+            )
+            .select(
+                "station_id", F.col("w.start").alias("day_start"), "n_obs", "rain_day_mm"
+            )
+        ),
     )
-    out = _run_to_parquet(agg, root)
-    return spark.read.parquet(out)
 
 
 ORACLE_STREAM_TUMBLING = f"""{_CTE}
@@ -318,16 +283,16 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly two windows. The oracle replicates the expansion with an
     explicit 2-offset unnest — the same row-multiplying expand Spark's
     physical plan uses."""
-    input_dir, root = _replay(spark, sf_dir)
-    sdf = _read_stream(spark, input_dir, one_file_batches=False)
-    agg = (
-        sdf.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), F.col("station_id"))
-        .agg(F.count("*").alias("n_obs"), F.max("windspeed_ms").alias("max_wind"))
-        .select("station_id", F.col("w.start").alias("wstart"), "n_obs", "max_wind")
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: (
+            sdf.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), F.col("station_id"))
+            .agg(F.count("*").alias("n_obs"), F.max("windspeed_ms").alias("max_wind"))
+            .select("station_id", F.col("w.start").alias("wstart"), "n_obs", "max_wind")
+        ),
     )
-    out = _run_to_parquet(agg, root)
-    return spark.read.parquet(out)
 
 
 ORACLE_STREAM_SLIDING = f"""{_CTE},
@@ -351,21 +316,21 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     a session emits once the watermark passes its end (last obs + gap);
     each station's final open session stays in state — mirrored by the
     oracle's emission cutoff."""
-    input_dir, root = _replay(spark, sf_dir)
-    sdf = _read_stream(spark, input_dir, one_file_batches=False)
-    agg = (
-        sdf.withWatermark("ts", "1 second")
-        .groupBy(F.col("station_id"), F.session_window("ts", "30 minutes").alias("sw"))
-        .agg(F.count("*").alias("n_obs"))
-        .select(
-            "station_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_obs",
-        )
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: (
+            sdf.withWatermark("ts", "1 second")
+            .groupBy(F.col("station_id"), F.session_window("ts", "30 minutes").alias("sw"))
+            .agg(F.count("*").alias("n_obs"))
+            .select(
+                "station_id",
+                F.col("sw.start").alias("session_start"),
+                F.col("sw.end").alias("session_end"),
+                "n_obs",
+            )
+        ),
     )
-    out = _run_to_parquet(agg, root)
-    return spark.read.parquet(out)
 
 
 # A new session starts when the gap is >= 30 min (session intervals are
@@ -416,37 +381,34 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed two batches after their window closed, so the watermark
     drops them (MWC:244's stale-sensor guard, generalized).
 
-    Replay plan: file0 = on-time history, file1 = next day (advances
-    the watermark far past the planted windows), file2 = planted late
-    rows + the final day. maxFilesPerTrigger=1 pins batch order."""
-    # unprojected: _replay_max_ts projects to _OBS_COLS itself, so the
-    # frame it persists is canonically identical to _replay's (one
-    # cache entry); a pre-projected frame here would double-Project.
-    obs = observations(spark, sf_dir)
-    mx = _replay_max_ts(obs)
-    t1 = F.lit(mx) - F.expr("INTERVAL 2 DAY")
-    t2 = F.lit(mx) - F.expr("INTERVAL 1 DAY")
-    late = (F.col("obs_id") % 89 == 0) & (
-        F.col("ts") <= t1 - F.expr("INTERVAL 12 HOUR")
-    )
-    input_dir, root = _replay(
-        spark,
-        sf_dir,
-        split_preds=[
+    Replay plan, one micro-batch per file: file0 = on-time history,
+    file1 = next day (advances the watermark far past the planted
+    windows), file2 = planted late rows + the final day. The split
+    points are set from the max event time (:func:`_replay`)."""
+
+    def splits(mx):
+        t1 = mx - F.expr("INTERVAL 2 DAY")
+        t2 = mx - F.expr("INTERVAL 1 DAY")
+        late = (F.col("obs_id") % 89 == 0) & (
+            F.col("ts") <= t1 - F.expr("INTERVAL 12 HOUR")
+        )
+        return [
             (F.col("ts") <= t1) & ~late,
             (F.col("ts") > t1) & (F.col("ts") <= t2),
             late | (F.col("ts") > t2),
-        ],
+        ]
+
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: (
+            sdf.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"), F.col("station_id"))
+            .agg(F.count("*").alias("n_obs"))
+            .select("station_id", F.col("w.start").alias("wstart"), "n_obs")
+        ),
+        preds=splits,
     )
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    agg = (
-        sdf.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("station_id"))
-        .agg(F.count("*").alias("n_obs"))
-        .select("station_id", F.col("w.start").alias("wstart"), "n_obs")
-    )
-    out = _run_to_parquet(agg, root)
-    return spark.read.parquet(out)
 
 
 ORACLE_STREAM_WATERMARK = f"""{_CTE},
@@ -517,28 +479,10 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     output must equal the batch window-function form (rain.py) —
     SURVEY §5.2.4's replay-determinism requirement — so the oracle is
     the same SQL that checks q_rain_daily_delta/q_rain_rate."""
-    obs = observations(spark, sf_dir)
-    mx = _replay_max_ts(obs)
-    split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
-    input_dir, root = _replay(
-        spark, sf_dir, split_preds=[F.col("ts") <= split, F.col("ts") > split]
-    )
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    shaped = sdf.groupBy("station_id").applyInPandasWithState(
-        _rain_machine,
-        "station_id string, obs_id long, ts timestamp, r double,"
-        " dailyrainmm double, rainmm double",
-        "cur_day long, day_start double, saved double",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    out = _run_to_parquet(shaped, root)
-    return spark.read.parquet(out)
+    return _machine_stream(spark, sf_dir, "q_stream_stateful")
 
 
 # Same semantics as the batch rain machine -> reuse its oracle text.
-from metoffice_spark.operators.rain import ORACLE_RAIN_METRICS  # noqa: E402
-
 ORACLE_STREAM_STATEFUL = ORACLE_RAIN_METRICS
 
 
@@ -550,22 +494,11 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'error' events) to a dead-letter parquet (the MWC:399-409
     log+email analog) and the rest to the publish parquet. Returns the
     published rows; the dead-letter table is asserted in tests."""
-    input_dir, root = _replay(spark, sf_dir)
-    ok_dir = os.path.join(root, "wow_out")
-    dl_dir = os.path.join(root, "dead_letter")
-    ckpt = os.path.join(root, "ckpt")
 
-    sdf = _read_stream(spark, input_dir, one_file_batches=False)
-    payload = sdf.select(
-        "obs_id",
-        F.concat(F.lit("wow-"), F.col("station_id")).alias("siteid"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("dateutc"),
-        fixed_str(F.col("tempc") * 1.8 + 32.0, 1).alias("tempf"),
-        fixed_str(F.col("hum"), 0).alias("humidity"),
-        F.col("windspeed_ms").alias("ws"),
-    )
-
-    def route(df: DataFrame, _bid: int) -> None:
+    def route(df: DataFrame, _bid: int, out: str) -> None:
+        dl_dir = os.path.join(os.path.dirname(out), "dead_letter")
+        # stash the dead-letter path so tests can inspect the side channel
+        q_stream_sink.last_dead_letter_dir = dl_dir  # type: ignore[attr-defined]
         df.persist()
         try:
             ok = df.filter(F.col("ws") != 0).withColumn(
@@ -577,7 +510,7 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.concat(F.lit("humidity="), F.col("humidity")),
                 ),
             ).drop("ws")
-            ok.write.mode("append").parquet(ok_dir)
+            ok.write.mode("append").parquet(out)
             dl = df.filter(F.col("ws") == 0).select(
                 "obs_id", F.lit("sensor fault: windspeed=0").alias("reason")
             )
@@ -585,29 +518,20 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             df.unpersist()
 
-    q = (
-        payload.writeStream.foreachBatch(route)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: sdf.select(
+            "obs_id",
+            F.concat(F.lit("wow-"), F.col("station_id")).alias("siteid"),
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("dateutc"),
+            fixed_str(F.col("tempc") * 1.8 + 32.0, 1).alias("tempf"),
+            fixed_str(F.col("hum"), 0).alias("humidity"),
+            F.col("windspeed_ms").alias("ws"),
+        ),
+        batch=route,
     )
-    finished = q.awaitTermination(600)
-    if q.exception() is not None:
-        raise q.exception()
-    if not finished:
-        q.stop()
-        raise TimeoutError("streaming replay did not finish within 600s")
-    _dump_stream_plan(q)
-    shutil.rmtree(input_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _COMPLETED_ROOTS.append(root)
-    # stash the dead-letter path so tests can inspect the side channel
-    q_stream_sink.last_dead_letter_dir = dl_dir  # type: ignore[attr-defined]
-    return spark.read.parquet(ok_dir)
 
-
-from metoffice_spark.parity import fixed_str_sql  # noqa: E402
 
 ORACLE_STREAM_SINK = f"""{_CTE}
 SELECT obs_id,
@@ -640,25 +564,15 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output == the distinct observation set. At scale the state store
     shards by key hash; with a watermark
     (dropDuplicatesWithinWatermark) the state is bounded."""
-    from metoffice_spark.session import scoped_persist
-
-    # r14: persist + parallel materialization (same discipline as
-    # _replay) — the two coalesce(1) file writes below used to run the
-    # full observation derivation twice, single-threaded each
-    obs = scoped_persist(observations(spark, sf_dir).select(*_OBS_COLS))
-    obs.write.format("noop").mode("overwrite").save()
-    dup_pred = F.col("obs_id") % 101 == 0
-    root = _run_root()
-    input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
-    _write_file(obs, os.path.join(input_dir, "0000.parquet"), 1_000_000)
-    _write_file(obs.filter(dup_pred), os.path.join(input_dir, "0001.parquet"), 1_001_000)
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    deduped = sdf.dropDuplicates(
-        ["station_id", "obs_id", "ts", "rain_counter_mm"]
-    ).select("station_id", "obs_id", "ts", "rain_counter_mm")
-    out = _run_to_parquet(deduped, root)
-    return spark.read.parquet(out)
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: sdf.dropDuplicates(
+            ["station_id", "obs_id", "ts", "rain_counter_mm"]
+        ).select("station_id", "obs_id", "ts", "rain_counter_mm"),
+        # the second file re-delivers a subset of the first
+        preds=[F.lit(True), F.col("obs_id") % 101 == 0],
+    )
 
 
 ORACLE_STREAM_DEDUP = f"""{_CTE}
@@ -680,68 +594,67 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition is what bounds the state at scale (without it, both
     buffers grow forever).
 
-    r13 optimization round (guide §2.5 — hot state keys): keyed only
-    on station_id, the symmetric-hash join state held EVERY buffered
-    row of a station under one key, and each arriving row scanned the
-    whole opposite buffer — O(n²) per station (measured 89 s for the
-    sf0.1 replay; the true 100 TB killer, since a station's history
-    is unbounded). The standard interval-join decomposition adds a
-    30-minute event-time BUCKET to the equality key: the wind side
-    joins on its own bucket, the rain side explodes to the three
-    buckets a ±30 min match can land in, and the unchanged range
+    Hot state keys: keyed only on station_id, the symmetric-hash join
+    state would hold EVERY buffered row of a station under one key, and
+    each arriving row would scan the whole opposite buffer — O(n²) per
+    station (89 s for the sf0.1 replay; the true 100 TB killer, since a
+    station's history is unbounded). The standard interval-join
+    decomposition adds a 30-minute event-time BUCKET to the equality
+    key: the wind side joins on its own bucket, the rain side explodes
+    to the three buckets a ±30 min match can land in, and the unchanged range
     predicate keeps semantics exact — each qualifying pair matches in
     exactly ONE exploded copy (bucket(w_ts) is a single value), so
     the output is row-identical (verified: 873 552 rows equal at
     sf0.1; 20 s vs 89 s). State per (station, bucket) key is bounded
     by one half-hour of one station regardless of history length."""
-    input_dir, root = _replay(spark, sf_dir)
-    base = _read_stream(spark, input_dir, one_file_batches=False)
     # 30 min in microseconds — the bucket width equals the join
     # half-window, which is what makes the 3-bucket explode complete
     _bkt = "floor(unix_micros({c}) / 1800000000)"
-    wind = (
-        base.filter(F.col("obs_id") % 2 == 0)
-        .select(
-            F.col("station_id").alias("w_station"),
-            F.col("ts").alias("w_ts"),
-            F.col("obs_id").alias("w_obs"),
-            "windspeed_ms",
+
+    def join(base: DataFrame) -> DataFrame:
+        wind = (
+            base.filter(F.col("obs_id") % 2 == 0)
+            .select(
+                F.col("station_id").alias("w_station"),
+                F.col("ts").alias("w_ts"),
+                F.col("obs_id").alias("w_obs"),
+                "windspeed_ms",
+            )
+            .withWatermark("w_ts", "1 hour")
+            .withColumn("wb", F.expr(_bkt.format(c="w_ts")))
         )
-        .withWatermark("w_ts", "1 hour")
-        .withColumn("wb", F.expr(_bkt.format(c="w_ts")))
-    )
-    rain = (
-        base.filter(F.col("obs_id") % 2 == 1)
-        .select(
-            F.col("station_id").alias("r_station"),
-            F.col("ts").alias("r_ts"),
-            F.col("obs_id").alias("r_obs"),
-            "rain_counter_mm",
-        )
-        .withWatermark("r_ts", "1 hour")
-        .withColumn(
-            "rb",
-            F.explode(
-                F.expr(
-                    "array({b} - 1, {b}, {b} + 1)".format(
-                        b=_bkt.format(c="r_ts")
+        rain = (
+            base.filter(F.col("obs_id") % 2 == 1)
+            .select(
+                F.col("station_id").alias("r_station"),
+                F.col("ts").alias("r_ts"),
+                F.col("obs_id").alias("r_obs"),
+                "rain_counter_mm",
+            )
+            .withWatermark("r_ts", "1 hour")
+            .withColumn(
+                "rb",
+                F.explode(
+                    F.expr(
+                        "array({b} - 1, {b}, {b} + 1)".format(
+                            b=_bkt.format(c="r_ts")
+                        )
                     )
-                )
-            ),
+                ),
+            )
         )
-    )
-    joined = (
-        wind.join(
-            rain,
-            (F.col("w_station") == F.col("r_station"))
-            & (F.col("wb") == F.col("rb"))
-            & (F.col("r_ts") >= F.col("w_ts") - F.expr("INTERVAL 30 MINUTES"))
-            & (F.col("r_ts") < F.col("w_ts") + F.expr("INTERVAL 30 MINUTES")),
+        return (
+            wind.join(
+                rain,
+                (F.col("w_station") == F.col("r_station"))
+                & (F.col("wb") == F.col("rb"))
+                & (F.col("r_ts") >= F.col("w_ts") - F.expr("INTERVAL 30 MINUTES"))
+                & (F.col("r_ts") < F.col("w_ts") + F.expr("INTERVAL 30 MINUTES")),
+            )
+            .select("w_station", "w_obs", "r_obs", "windspeed_ms", "rain_counter_mm")
         )
-        .select("w_station", "w_obs", "r_obs", "windspeed_ms", "rain_counter_mm")
-    )
-    out = _run_to_parquet(joined, root)
-    return spark.read.parquet(out)
+
+    return _stream(spark, _obs(spark, sf_dir), join)
 
 
 ORACLE_STREAM_JOIN = f"""{_CTE}
@@ -798,36 +711,26 @@ def q_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is one BIGINT per user in the state store (sharded
     by user like the shuffle); the pattern here is fixed — a
     production CEP layers an NFA over the same carry."""
-    ev = load(spark, sf_dir, "events")
-    root = _run_root()
-    input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
-    # three TIME-ORDERED batches (calendar split: the events corpus
-    # spans 2024-01-01..30 at every SF) so per-user event order is
-    # preserved across the replay, as a real log/Kafka source would.
-    splits = [
-        ev.filter(F.col("ts") < "2024-01-11"),
-        ev.filter((F.col("ts") >= "2024-01-11") & (F.col("ts") < "2024-01-21")),
-        ev.filter(F.col("ts") >= "2024-01-21"),
-    ]
-    for i, part in enumerate(splits):
-        _write_file(
-            part, os.path.join(input_dir, f"{i:04d}.parquet"), 1_000_000 + i * 1000
-        )
-    sdf = (
-        spark.readStream.schema(_EV_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
+    return _stream(
+        spark,
+        load(spark, sf_dir, "events"),
+        lambda sdf: sdf.groupBy("user_id").applyInPandasWithState(
+            _cep_machine,
+            "user_id long, purchase_event_id long, lag_us long",
+            "last_view_us long",
+            "append",
+            GroupStateTimeout.NoTimeout,
+        ),
+        # three TIME-ORDERED batches (calendar split: the events corpus
+        # spans 2024-01-01..30 at every SF) so per-user event order is
+        # preserved across the replay, as a real log/Kafka source would.
+        preds=[
+            F.col("ts") < "2024-01-11",
+            (F.col("ts") >= "2024-01-11") & (F.col("ts") < "2024-01-21"),
+            F.col("ts") >= "2024-01-21",
+        ],
+        schema=_EV_SCHEMA,
     )
-    matched = sdf.groupBy("user_id").applyInPandasWithState(
-        _cep_machine,
-        "user_id long, purchase_event_id long, lag_us long",
-        "last_view_us long",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    out = _run_to_parquet(matched, root)
-    return spark.read.parquet(out)
 
 
 ORACLE_STREAM_CEP = f"""
@@ -875,56 +778,31 @@ def q_stream_cagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # predicates — the same silent-nondelivery class as the NULL id,
     # on the sign axis; pmod makes the split exhaustive over int64.
     bucket3 = F.coalesce(F.pmod(F.col("obs_id"), F.lit(3)), F.lit(2))
-    input_dir, root = _replay(
+    sunk = _stream(
         spark,
-        sf_dir,
-        split_preds=[bucket3 == 0, bucket3 == 1, bucket3 == 2],
+        _obs(spark, sf_dir),
+        lambda sdf: (
+            sdf.groupBy(F.window("ts", "15 minutes").alias("w"), F.col("station_id"))
+            .agg(
+                F.count("*").alias("n_obs"),
+                F.sum(F.floor(F.col("tempc") * 1000 + F.lit(0.5)).cast("bigint"))
+                .cast("bigint")
+                .alias("tempc_fp_sum"),
+            )
+            .select(
+                "station_id",
+                F.col("w.start").alias("bucket_start"),
+                "n_obs",
+                "tempc_fp_sum",
+            )
+        ),
+        preds=[bucket3 == 0, bucket3 == 1, bucket3 == 2],
+        batch=lambda df, bid, out: df.withColumn("bid", F.lit(bid))
+        .write.mode("append")
+        .parquet(out),
+        mode="update",
     )
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    agg = (
-        sdf.groupBy(
-            F.window("ts", "15 minutes").alias("w"), F.col("station_id")
-        )
-        .agg(
-            F.count("*").alias("n_obs"),
-            F.sum(F.floor(F.col("tempc") * 1000 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("tempc_fp_sum"),
-        )
-        .select(
-            "station_id",
-            F.col("w.start").alias("bucket_start"),
-            "n_obs",
-            "tempc_fp_sum",
-        )
-    )
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    q = (
-        agg.writeStream.foreachBatch(
-            lambda df, bid: df.withColumn("bid", F.lit(bid))
-            .write.mode("append")
-            .parquet(out)
-        )
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(600)
-    if q.exception() is not None:
-        raise q.exception()
-    if not finished:
-        q.stop()
-        raise TimeoutError("streaming replay did not finish within 600s")
-    _dump_stream_plan(q)
-    shutil.rmtree(input_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _COMPLETED_ROOTS.append(root)
-    from pyspark.sql import Window as W
-
-    sunk = spark.read.parquet(out)
-    w_last = W.partitionBy("station_id", "bucket_start").orderBy(
+    w_last = Window.partitionBy("station_id", "bucket_start").orderBy(
         F.col("bid").desc()
     )
     return (
@@ -960,8 +838,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero streaming state — the static side is a broadcast
     re-resolved per micro-batch, so a dimension refresh lands on the
     next batch without restarting the query."""
-    from metoffice_spark.io import load
-
     # coalesce: exhaustive batch split under NULL obs_id (r09 null-id
     # probe; same class as q_stream_cagg / the r08 q_incr_agg split).
     # pmod, not % (r13 idneg probe): truncated % sends a NEGATIVE
@@ -969,21 +845,18 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # predicates — the same silent-nondelivery class as the NULL id,
     # on the sign axis; pmod makes the split exhaustive over int64.
     bucket3 = F.coalesce(F.pmod(F.col("obs_id"), F.lit(3)), F.lit(2))
-    input_dir, root = _replay(
-        spark,
-        sf_dir,
-        split_preds=[bucket3 == 0, bucket3 == 1, bucket3 == 2],
-    )
     region = load(spark, sf_dir, "region").select(
         F.col("r_regionkey").cast("string").alias("station_id"),
         F.col("r_name").alias("region_name"),
     )
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    enriched = sdf.join(F.broadcast(region), "station_id", "left").select(
-        "station_id", "obs_id", "region_name", "tempc", "windspeed_ms"
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: sdf.join(F.broadcast(region), "station_id", "left").select(
+            "station_id", "obs_id", "region_name", "tempc", "windspeed_ms"
+        ),
+        preds=[bucket3 == 0, bucket3 == 1, bucket3 == 2],
     )
-    out = _run_to_parquet(enriched, root)
-    return spark.read.parquet(out)
 
 
 ORACLE_STREAM_STATIC_JOIN = f"""{_CTE}
@@ -1052,22 +925,7 @@ def _twap_machine(key, pdf_iter, state: GroupState):
 def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-station TWAP of tempc after each observation,
     state carried across two micro-batches."""
-    obs = observations(spark, sf_dir)
-    mx = _replay_max_ts(obs)
-    split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
-    input_dir, root = _replay(
-        spark, sf_dir, split_preds=[F.col("ts") <= split, F.col("ts") > split]
-    )
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    shaped = sdf.groupBy("station_id").applyInPandasWithState(
-        _twap_machine,
-        "station_id string, obs_id long, n_obs long, span_s long, twap_fp long",
-        "first_es long, prev_es long, prev_vfp long, num long, n long",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    out = _run_to_parquet(shaped, root)
-    return spark.read.parquet(out)
+    return _machine_stream(spark, sf_dir, "q_stream_twap")
 
 
 ORACLE_STREAM_TWAP = f"""{_CTE},
@@ -1193,23 +1051,7 @@ def _anomaly_machine(key, pdf_iter, state: GroupState):
 def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per observation: prior-count, prequential z-score of tempc and
     the |z| > 3 anomaly flag, state across two micro-batches."""
-    obs = observations(spark, sf_dir)
-    mx = _replay_max_ts(obs)
-    split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
-    input_dir, root = _replay(
-        spark, sf_dir, split_preds=[F.col("ts") <= split, F.col("ts") > split]
-    )
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    shaped = sdf.groupBy("station_id").applyInPandasWithState(
-        _anomaly_machine,
-        "station_id string, obs_id long, n_prior long, z double,"
-        " is_anomaly int",
-        "n long, s1 long, s2 long",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    out = _run_to_parquet(shaped, root)
-    return spark.read.parquet(out)
+    return _machine_stream(spark, sf_dir, "q_stream_anomaly")
 
 
 ORACLE_STREAM_ANOMALY = f"""{_CTE},
@@ -1293,22 +1135,7 @@ def q_stream_gap_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missed-tick alerts: observations arriving more than 1.5
     cadences after their predecessor, with the implied missed count;
     state across two micro-batches."""
-    obs = observations(spark, sf_dir)
-    mx = _replay_max_ts(obs)
-    split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
-    input_dir, root = _replay(
-        spark, sf_dir, split_preds=[F.col("ts") <= split, F.col("ts") > split]
-    )
-    sdf = _read_stream(spark, input_dir, one_file_batches=True)
-    shaped = sdf.groupBy("station_id").applyInPandasWithState(
-        _gap_machine,
-        "station_id string, obs_id long, gap_s long, n_missed long",
-        "prev_es long",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    out = _run_to_parquet(shaped, root)
-    return spark.read.parquet(out)
+    return _machine_stream(spark, sf_dir, "q_stream_gap_detector")
 
 
 ORACLE_STREAM_GAP = f"""{_CTE},
@@ -1329,3 +1156,43 @@ FROM gaps WHERE gap_s > {_GAP_TOL}
 """
 
 QUERIES["q_stream_gap_detector"] = (q_stream_gap_detector, ORACLE_STREAM_GAP)
+
+
+# --- the per-station state machines, each replayed over _last_day's two
+# micro-batches: qid -> (machine, output schema, state schema) ----------------
+
+_MACHINES = {
+    "q_stream_stateful": (
+        _rain_machine,
+        "station_id string, obs_id long, ts timestamp, r double,"
+        " dailyrainmm double, rainmm double",
+        "cur_day long, day_start double, saved double",
+    ),
+    "q_stream_twap": (
+        _twap_machine,
+        "station_id string, obs_id long, n_obs long, span_s long, twap_fp long",
+        "first_es long, prev_es long, prev_vfp long, num long, n long",
+    ),
+    "q_stream_anomaly": (
+        _anomaly_machine,
+        "station_id string, obs_id long, n_prior long, z double, is_anomaly int",
+        "n long, s1 long, s2 long",
+    ),
+    "q_stream_gap_detector": (
+        _gap_machine,
+        "station_id string, obs_id long, gap_s long, n_missed long",
+        "prev_es long",
+    ),
+}
+
+
+def _machine_stream(spark: SparkSession, sf_dir: str, qid: str) -> DataFrame:
+    machine, out_schema, state_schema = _MACHINES[qid]
+    return _stream(
+        spark,
+        _obs(spark, sf_dir),
+        lambda sdf: sdf.groupBy("station_id").applyInPandasWithState(
+            machine, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        ),
+        preds=_last_day,
+    )

@@ -59,15 +59,12 @@ def test_checkpoint_recovery_resumes_state(spark, sf_smoke):
     mx = obs.select(F.max("ts").alias("m")).collect()[0].m
     split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
 
+    machine, out_schema, state_schema = sb._MACHINES["q_stream_stateful"]
+
     def run_job() -> None:
-        sdf = sb._read_stream(spark, input_dir, one_file_batches=True)
+        sdf = sb._read_stream(spark, input_dir)
         shaped = sdf.groupBy("station_id").applyInPandasWithState(
-            sb._rain_machine,
-            "station_id string, obs_id long, ts timestamp, r double,"
-            " dailyrainmm double, rainmm double",
-            "cur_day long, day_start double, saved double",
-            "append",
-            GroupStateTimeout.NoTimeout,
+            machine, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
         q = (
             shaped.writeStream.foreachBatch(
@@ -113,31 +110,9 @@ import pytest
 
 
 @pytest.mark.parametrize(
-    "machine, out_schema, state_schema, qid",
-    [
-        (
-            "_twap_machine",
-            "station_id string, obs_id long, n_obs long, span_s long, twap_fp long",
-            "first_es long, prev_es long, prev_vfp long, num long, n long",
-            "q_stream_twap",
-        ),
-        (
-            "_anomaly_machine",
-            "station_id string, obs_id long, n_prior long, z double, is_anomaly int",
-            "n long, s1 long, s2 long",
-            "q_stream_anomaly",
-        ),
-        (
-            "_gap_machine",
-            "station_id string, obs_id long, gap_s long, n_missed long",
-            "prev_es long",
-            "q_stream_gap_detector",
-        ),
-    ],
+    "qid", ["q_stream_twap", "q_stream_anomaly", "q_stream_gap_detector"]
 )
-def test_mid_replay_crash_recovers_exactly_once(
-    spark, sf_smoke, machine, out_schema, state_schema, qid
-):
+def test_mid_replay_crash_recovers_exactly_once(spark, sf_smoke, qid):
     """Fault injection MID-replay (SURVEY §7 endgame item 2, started
     early): the sink crashes inside the SECOND micro-batch before
     writing — the failure mode test_checkpoint_recovery_resumes_state
@@ -152,20 +127,15 @@ def test_mid_replay_crash_recovers_exactly_once(
 
     from metoffice_spark.operators import streaming_batch as sb
 
-    fn = getattr(sb, machine)
-    obs = sb.observations(spark, sf_smoke)
-    mx = obs.select(F.max("ts").alias("m")).collect()[0].m
-    split = F.lit(mx) - F.expr("INTERVAL 1 DAY")
-    input_dir, root = sb._replay(
-        spark, sf_smoke, split_preds=[F.col("ts") <= split, F.col("ts") > split]
-    )
+    machine, out_schema, state_schema = sb._MACHINES[qid]
+    input_dir, root = sb._replay(spark, sb._obs(spark, sf_smoke), sb._last_day)
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
 
     def run(sink):
-        sdf = sb._read_stream(spark, input_dir, one_file_batches=True)
+        sdf = sb._read_stream(spark, input_dir)
         shaped = sdf.groupBy("station_id").applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+            machine, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
         q = (
             shaped.writeStream.foreachBatch(sink)
@@ -206,6 +176,30 @@ def test_mid_replay_crash_recovers_exactly_once(
         assert _rows(final, cols) == _rows(reg_fn(spark, sf_smoke), cols)
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_failed_replay_raises_and_queues_its_root(spark, sf_smoke):
+    """A replay whose batch function raises must re-raise, and its root
+    (input, checkpoint and partial output) must still be queued for the
+    sweep, with the input and checkpoint already gone."""
+    from metoffice_spark.operators import streaming_batch as sb
+
+    def boom(df, bid, out):
+        df.write.mode("append").parquet(out)
+        raise RuntimeError("injected sink failure")
+
+    before = list(sb._COMPLETED_ROOTS)
+    with pytest.raises(Exception, match="injected sink failure"):
+        sb._stream(spark, sb._obs(spark, sf_smoke), lambda sdf: sdf, batch=boom)
+    queued = [r for r in sb._COMPLETED_ROOTS if r not in before]
+    try:
+        assert len(queued) == 1
+        assert os.path.isdir(os.path.join(queued[0], "out"))  # the partial sink
+        assert not os.path.exists(os.path.join(queued[0], "input"))
+        assert not os.path.exists(os.path.join(queued[0], "ckpt"))
+    finally:
+        for root in queued:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 def test_sink_dead_letter_channel(spark, sf_smoke):

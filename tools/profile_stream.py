@@ -2,19 +2,21 @@
 
 Splits a q_stream_* qid's wall time into its real phases:
 
-  1. setup    — tune() + substrate persist + replay input-file write
-                (everything before readStream.start())
-  2. stream   — StreamingQuery start → awaitTermination
-  3. readback — spark.read.parquet(out) through the noop sink
+  1. setup    — builder start → the StreamingQuery starts (substrate
+                persist, max-ts lookup, replay input-file writes)
+  2. stream   — query started → query terminated
+  3. readback — query terminated → the returned frame has run through
+                the noop sink
 
-and dumps the per-micro-batch ``recentProgress`` (triggerExecution,
-addBatch, stateOperators' allUpdatesTimeMs / allRemovalsTimeMs /
-commitTimeMs / numRowsTotal) so state-store cost is attributable —
-the instrument VERDICT r13 item 1 asks for.  Phase boundaries come
-from monkey-patching the module's ``_read_stream`` (phase 1→2 edge)
-and ``_run_to_parquet``'s return (2→3 edge); query code is untouched.
+and dumps the per-micro-batch progress (triggerExecution, addBatch,
+stateOperators' allUpdatesTimeMs / allRemovalsTimeMs / commitTimeMs /
+numRowsTotal) so state-store cost is attributable. Everything comes
+from a ``StreamingQueryListener``: the phase edges are the receipt
+times of its QueryStarted / QueryTerminated events, the batches its
+QueryProgress events. Query code is untouched.
 
-Usage: PYTHONPATH=/root/repo python tools/profile_stream.py q_stream_join ...
+Usage: python tools/profile_stream.py q_stream_join ...
+(reads $SPARK_GRAFT_SF_DIR, default sf0.1 test data)
 """
 
 from __future__ import annotations
@@ -26,82 +28,77 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql.streaming import StreamingQueryListener
+
 from metoffice_spark.registry import all_queries
 from metoffice_spark.session import get_spark
-import metoffice_spark.operators.streaming_batch as sb
+
+_STATE_KEYS = (
+    "operatorName", "numRowsTotal", "numRowsUpdated",
+    "allUpdatesTimeMs", "allRemovalsTimeMs", "commitTimeMs", "memoryUsedBytes",
+)
+
+
+class _Recorder(StreamingQueryListener):
+    """Listener events as (kind, receipt time, payload)."""
+
+    def __init__(self) -> None:
+        self.events: list[tuple[str, float, dict]] = []
+
+    def onQueryStarted(self, event):
+        self.events.append(("started", time.perf_counter(), {}))
+
+    def onQueryProgress(self, event):
+        self.events.append(("progress", time.perf_counter(), json.loads(event.progress.json)))
+
+    def onQueryTerminated(self, event):
+        self.events.append(("terminated", time.perf_counter(), {}))
+
+    def wait_terminated(self, timeout_s: float = 10.0) -> None:
+        """Delivery is asynchronous: wait until every started query's
+        termination has arrived."""
+        deadline = time.perf_counter() + timeout_s
+        while time.perf_counter() < deadline:
+            kinds = [k for k, _, _ in self.events]
+            if kinds.count("started") <= kinds.count("terminated"):
+                return
+            time.sleep(0.05)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("metoffice-profile-stream")
+    rec = _Recorder()
+    spark.streams.addListener(rec)
     reg = all_queries()
     qids = sys.argv[1:] or ["q_stream_join"]
 
-    marks: dict[str, float] = {}
-    progress: list[dict] = []
-
-    orig_read_stream = sb._read_stream
-    orig_run = sb._run_to_parquet
-
-    def read_stream_hook(*a, **k):
-        marks.setdefault("stream_start", time.perf_counter())
-        return orig_read_stream(*a, **k)
-
-    def run_hook(stream_df, root, mode="append"):
-        # _read_stream may have been bypassed (inline runners); mark late
-        marks.setdefault("stream_start", time.perf_counter())
-        out = orig_run(stream_df, root, mode)
-        marks["stream_end"] = time.perf_counter()
-        return out
-
-    sb._read_stream = read_stream_hook
-    sb._run_to_parquet = run_hook
-
-    # capture recentProgress via the plan-dump hook (no env needed)
-    orig_dump = sb._dump_stream_plan
-
-    def dump_hook(q):
-        for p in q.recentProgress:
-            progress.append(p)
-        return orig_dump(q)
-
-    sb._dump_stream_plan = dump_hook
-
     reg[qids[0]](spark, sf_dir).limit(1).collect()  # warm-up
+    rec.wait_terminated()
 
     report = {}
     for qid in qids:
-        marks.clear()
-        progress.clear()
+        rec.events.clear()
         t0 = time.perf_counter()
         df = reg[qid](spark, sf_dir)
         t_build = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t_end = time.perf_counter()
-        ss = marks.get("stream_start", t_build)
-        se = marks.get("stream_end", t_build)
-        batches = []
-        for p in progress:
-            d = p.get("durationMs", {})
-            ops = [
-                {
-                    k: so.get(k)
-                    for k in (
-                        "operatorName", "numRowsTotal", "numRowsUpdated",
-                        "allUpdatesTimeMs", "allRemovalsTimeMs",
-                        "commitTimeMs", "stateMemory",
-                    )
-                }
-                for so in p.get("stateOperators", [])
-            ]
-            batches.append(
-                {
-                    "batchId": p.get("batchId"),
-                    "numInputRows": p.get("numInputRows"),
-                    "durationMs": d,
-                    "stateOperators": ops,
-                }
-            )
+        rec.wait_terminated()
+        ss = next((t for k, t, _ in rec.events if k == "started"), t_build)
+        se = max((t for k, t, _ in rec.events if k == "terminated"), default=t_build)
+        batches = [
+            {
+                "batchId": p.get("batchId"),
+                "numInputRows": p.get("numInputRows"),
+                "durationMs": p.get("durationMs", {}),
+                "stateOperators": [
+                    {k: so.get(k) for k in _STATE_KEYS} for so in p.get("stateOperators", [])
+                ],
+            }
+            for k, _, p in rec.events
+            if k == "progress"
+        ]
         report[qid] = {
             "wall": round(t_end - t0, 3),
             "setup": round(ss - t0, 3),
@@ -112,6 +109,7 @@ def main() -> None:
         print(f"{qid}: {json.dumps(report[qid]['wall'])} "
               f"(setup {report[qid]['setup']}, stream {report[qid]['stream']},"
               f" readback {report[qid]['readback']})", file=sys.stderr)
+    spark.streams.removeListener(rec)
     print(json.dumps(report, indent=1))
 
 

@@ -234,16 +234,12 @@ def wow_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full WOW observation record (MWC:373-387): every REF
     derivation composed end-to-end, one row per observation.
 
-    r13 optimization round: runs as ONE SQL text (the same template
-    the DuckDB oracle executes, modulo the engine-specific timestamp
-    formatter) instead of the old Column-by-Column construction. The
-    arithmetic is unchanged — the Column form mirrored these exact
-    fragments — but a single SQL parse replaces several hundred py4j
-    expression-builder round-trips, cutting the per-build driver time
-    roughly in half (measured 2.9 s → 2.3 s warm build+exec at sf0.1;
-    rows verified identical). Guide §1.2 step 2: per-task work was
-    already shared via codegen subexpression elimination, so the win
-    is all driver-side."""
+    Runs as ONE SQL text, the template the DuckDB oracle also executes
+    (only the timestamp formatter differs), so the build is a single
+    SQL parse rather than hundreds of py4j expression-builder calls.
+    Its last stage fuses into a whole-stage method too large for the
+    JIT; ``spark.sql.codegen.hugeMethodLimit`` in ``session`` makes
+    Spark run that stage unfused (see the comment there)."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(_WOW_PAYLOAD_SPARK_SQL)
 
@@ -297,10 +293,10 @@ def http_post_wow(df: DataFrame, url: str, timeout_s: float = 10.0) -> DataFrame
 _WS_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windspeed_ms * {_MAST_CORR_SQL} ELSE windspeed_ms END)"
 _WG_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windgust_ms * {_MAST_CORR_SQL} ELSE windgust_ms END)"
 
-# One payload template, two engines (r13 optimization round): the
-# Spark builder and the DuckDB oracle run the SAME text except for
-# the timestamp formatter (date_format vs strftime), so the flagship
-# arithmetic cannot diverge between them by construction.
+# One payload template, two engines: the Spark builder and the DuckDB
+# oracle run the SAME text except for the timestamp formatter
+# (date_format vs strftime), so the flagship arithmetic cannot diverge
+# between them by construction.
 def _wow_payload_sql(datefmt: str) -> str:
     return f"""{_CTE}, {_RAIN_BASE_SQL.strip()},
 payload AS (

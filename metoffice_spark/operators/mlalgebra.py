@@ -8,18 +8,24 @@ trajectory is bitwise identical cross-engine (the q_graph_pagerank /
 q_kmeans_train fixed-point discipline applied to matvecs).
 
 Pipeline: fixed-point vectors (1e-6 BIGINT, llm.py `_ivec_*`) →
-Gram accumulation G[i,j] = Σ_vec x_i·x_j ((i,j) partial aggregate
-with map-side combine) → downscale (sign-split truncating div, the
-q_semdedup_centroid idiom — Gram sums are signed) → two unrolled
-matvec+renormalize rounds → 64 rows of the 1e3-scaled eigenvector
-estimate plus a Rayleigh-quotient eigenvalue estimate (IEEE, last).
+per-vec_id row sums s → Gram G[i,j] = Σ_vec s_i·s_j (one int64 gemm
+per task, partials summed per (i,j)) → downscale (sign-split
+truncating div, the q_semdedup_centroid idiom — Gram sums are
+signed) → two unrolled matvec+renormalize rounds → 64 rows of the
+1e3-scaled eigenvector estimate plus a Rayleigh-quotient eigenvalue
+estimate (IEEE, last).
 
-Overflow budget (int64 max ≈ 9.2e18): |x_fp| ≤ 1e6 ⇒ |G| ≤ n·1e12
-(5e15 at sf0.1's 5e3 vectors); G' = G div 1e6 ≤ n·1e6; |v| ≤ 1e3 ⇒
-|matvec| ≤ 64·n·1e9 (3.2e14 at sf0.1) — three orders of headroom,
-and the d²·n explosion is bounded by d = 64 (at much larger d the
-Gram accumulates per-partition via mapInPandas outer products
-instead of an explode join; documented boundary).
+Overflow budget (int64 max ≈ 9.2e18): `_ivec` admits components
+|x| < 90, so |x_fp| < 9e7 and one product |x_i·x_j| < 8.1e15. A
+vec_id carried by k rows enters as its row sum (|s| < k·9e7), so
+|G| < Σ_vec k²·8.1e15, which fits int64 only while Σ_vec k² < ~1,100
+(sf0.1 has 5e3 vectors). Embedding components are unit-scale in
+practice (|x_fp| ≲ 1e6 ⇒ |G| ≲ Σ_vec k²·1e12, 5e15 at sf0.1), so
+the bound is enforced rather than assumed: the numpy gemm checks a
+float64 |X|ᵀ|X| bound before each int64 product and raises, and
+every Spark-side BIGINT sum and product is ANSI arithmetic, which
+raises on overflow instead of wrapping. G' = G div 1e6 < 9.2e12 and
+|v| ≤ 1e3, so a matvec row stays under 64·9.2e12·1e3 ≈ 5.9e17.
 """
 
 from __future__ import annotations
@@ -34,6 +40,12 @@ from metoffice_spark.session import scoped_persist
 QUERIES: dict = {}
 
 _PCA_ROUNDS = 2
+# element-wise sum of one vec_id's fixed-point vectors (ANSI BIGINT
+# addition: overflow raises)
+_VSUM_SPARK = (
+    "aggregate(collect_list(v), array_repeat(cast(0 as bigint), 64),"
+    " (acc, x) -> zip_with(acc, x, (a, b) -> a + b))"
+)
 # sign-split truncating division: |num| // den is non-negative (the
 # engines agree), sign reapplied == truncate-toward-zero == Spark div.
 def _tdiv_spark(num: str, den: str) -> str:
@@ -51,28 +63,27 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per dimension: the 1e3-scaled dominant-eigenvector estimate
     after two exact power-iteration rounds, with the IEEE Rayleigh
     eigenvalue estimate repeated on every row."""
-    # unembedded (NULL) vectors do not participate in the Gram matrix —
-    # boundary filter mirrored in the oracle (r07 null-embed finding;
-    # the old posexplode DROPPED null-array rows where the oracle's
-    # range-spine unnest kept emitting NULL cells; the explicit
-    # v IS NOT NULL below keeps the same boundary for quarantined
-    # (_ivec → NULL) vectors).
-    # r14 optimization round (guide §4.2; the header's own documented
-    # boundary): the Gram matrix no longer goes through the explode
-    # self-join — 320k exploded rows joined on vec_id fanned out to
-    # 20.5M (row, pair) products through JVM row codegen (~92 executor-
-    # seconds at sf0.1, the whole query's CPU). Each task now stacks
-    # its vectors into one int64 matrix and hands numpy ONE exact
-    # X^T·X gemm (int64 ops are the same wrap-on-overflow arithmetic
-    # as BIGINT, and the header's overflow budget bounds |G| ≤ n·1e12
-    # ≪ 2^63), emitting 64×64 partial rows per task; one global
-    # aggregate sums the partials. Gram relation verified equal
-    # cell-for-cell vs the join form at sf0.1.
+    # Unembedded (NULL) and quarantined (_ivec → NULL) vectors do not
+    # participate in the Gram matrix; the oracle's xs relation yields
+    # NULL cells for them, which its sums skip.
+    #
+    # The oracle pairs rows by `xs a JOIN xs b USING (vec_id)`, so a
+    # vec_id carried by k rows contributes every cross pair:
+    # G = Σ_vec (Σ_r x_r)(Σ_s x_s)ᵀ, and a NULL vec_id contributes
+    # nothing. Rows are therefore summed per vec_id first (one shuffle;
+    # each group holds one vec_id's duplicate rows), and each task then
+    # stacks its per-vec_id sums into one int64 matrix and runs ONE
+    # exact X^T·X gemm, emitting 64×64 partial rows; one global
+    # aggregate sums the partials. An explode self-join would fan
+    # sf0.1's 320k exploded rows out to 20.5M (row, pair) products.
     vecs = (
         load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(F.expr(_ivec_spark("embedding")).alias("v"))
+        .filter(F.col("embedding").isNotNull() & F.col("vec_id").isNotNull())
+        .select("vec_id", F.expr(_ivec_spark("embedding")).alias("v"))
         .filter(F.col("v").isNotNull())
+        .groupBy("vec_id")
+        .agg(F.expr(_VSUM_SPARK).alias("v"))
+        .select("v")
     )
 
     def _gram_partials(it):
@@ -85,6 +96,11 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             x = np.array(pdf["v"].tolist(), dtype=np.int64)
+            # int64 matmul wraps silently; |X|ᵀ|X| in float64 bounds
+            # every partial sum, so check it before trusting the gemm
+            ax = np.abs(x).astype(np.float64)
+            if (ax.T @ ax).max(initial=0.0) + np.abs(acc).max() >= 2.0**62:
+                raise OverflowError("q_pca_power: Gram partial exceeds int64")
             acc += x.T @ x
             any_rows = True
         if any_rows:

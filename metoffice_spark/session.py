@@ -31,6 +31,16 @@ _RUNTIME_CONF = {
     # governs the split and this knob only affects the small-file
     # tail, packing fewer tiny files per task.
     "spark.sql.files.openCostInBytes": "131072",
+    # HotSpot never JIT-compiles a method over 8,000 bytes of bytecode
+    # (-XX:+DontCompileHugeMethods), so a fused whole-stage method past
+    # that size runs in the bytecode interpreter on every row. The WOW
+    # payload stage (q_sink_http_form: 13 fixed_str_sql expansions) fuses
+    # into one 17,685-byte method. At this limit Spark runs such a stage
+    # unfused, with its projections split into small compiled methods.
+    # Publishing 50,000 rows on a 4-vCPU host, the payload stage fell
+    # from ~1.3 s to ~0.45 s and executor CPU from ~2.75 s to ~1.0 s.
+    # Plans and rows are unchanged.
+    "spark.sql.codegen.hugeMethodLimit": "8000",
 }
 
 

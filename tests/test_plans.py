@@ -660,3 +660,35 @@ def test_scope_retention_survives_interleaved_builds(spark):
         release_scoped_persists()
     for d in dfs:
         assert not d.storageLevel.useMemory, "full flush left a cache"
+
+
+# HotSpot does not JIT-compile a method over 8,000 bytes of bytecode
+# (-XX:+DontCompileHugeMethods), so such a method runs interpreted.
+_JIT_METHOD_LIMIT = 8000
+
+
+@pytest.mark.parametrize("qid", ["q_sink_http_form", "q_negative_sample"])
+def test_fused_stage_methods_fit_the_jit(qid, spark, sf_smoke):
+    """No whole-stage method over the JIT limit may run fused. Spark
+    runs a codegen subtree unfused when its largest compiled method
+    exceeds ``spark.sql.codegen.hugeMethodLimit`` (the check in
+    ``WholeStageCodegenExec.doExecute``). The generated code itself
+    does not depend on that conf, so a subtree over the JIT limit is
+    acceptable only if it is also over the session's limit.
+    These two qids fuse methods of 17,685 and 8,218 bytes."""
+    from metoffice_spark import registry
+
+    df = registry.all_queries()[qid](spark, sf_smoke)
+    df.collect()
+    # walks the final AQE plan once the frame has run
+    seq = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(
+        df._jdf.queryExecution().executedPlan()
+    )
+    sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+    assert sizes, "no whole-stage codegen subtree in the final plan"
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    largest_fused = max((s for s in sizes if s <= limit), default=0)
+    assert largest_fused <= _JIT_METHOD_LIMIT, (
+        f"{qid}: fused method of {largest_fused} bytes runs interpreted "
+        f"(all subtrees: {sizes}, hugeMethodLimit={limit})"
+    )

@@ -4,8 +4,9 @@ Re-expresses the query/data-processing capabilities of the reference
 ETL job (``/root/reference/MetOffice_WOW_Connect.txt``, cited as
 ``MWC:N`` throughout) as an idiomatic Spark engine:
 
-- ``functions/``  — scalar meteorological / unit column functions
-  (pure Catalyst expressions, no row UDFs).
+- ``functions/``  — the meteorological / unit formulas as
+  dialect-common SQL text (``weather``) and distributed order
+  statistics (``distributed``).
 - ``operators/``  — DataFrame query builders, one module per surface:
   ``relational`` (scans/joins/aggs/windows/set ops), ``weather`` +
   ``rain`` + ``ingest`` (the reference's REF surface incl. sources and

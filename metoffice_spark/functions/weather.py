@@ -1,9 +1,15 @@
-"""Meteorological + unit-conversion scalar functions.
+"""Meteorological and unit-conversion formulas as dialect-common SQL text.
 
-Each function is a pure ``Column -> Column`` Catalyst expression (no
-Python UDFs — everything stays inside whole-stage codegen). Formulas
-replicate the reference **as written**, including its quirks; each
-cites `/root/reference/MetOffice_WOW_Connect.txt` (``MWC:N``).
+Each formula is written once, here, as SQL that Spark SQL and DuckDB
+both parse. The Spark builders run it through ``spark.sql`` or
+``F.expr`` and the DuckDB oracles embed it verbatim, so the two
+engines evaluate the same text (Catalyst compiles SQL text and
+DataFrame calls to the same plan). Fragments read the observation
+columns by name (``tempc``, ``hum``, ``windspeed_ms``,
+``windgust_ms``, ``winddir_sector``, ``pressure_site_hpa``) and bake
+in the site constants from ``obs``. Formulas replicate the reference
+script **as written**, including its quirks; each cites its line as
+``MWC:N``.
 
 Quirks preserved on purpose (SURVEY.md §7):
 - dew point denominator constant is ``17.7`` (not the textbook
@@ -15,119 +21,65 @@ Quirks preserved on purpose (SURVEY.md §7):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from metoffice_spark.obs import MAST_HEIGHT_M, SITE_ALTITUDE_M, SITE_LATITUDE_DEG
 
-# --- dew point -------------------------------------------------------------
+# --- dew point (MWC:189-191) ----------------------------------------------
+# Magnus form: g = (17.27*t)/(237.7+t) + ln(h/100); dewpt = 237.7*g/(17.7-g).
+# The reference inlines g twice; Catalyst's CSE evaluates it once.
+G_SQL = "((17.27 * tempc) / (237.7 + tempc) + ln(hum / 100.0))"
+DEWPOINT_SQL = f"(237.7 * {G_SQL} / (17.7 - {G_SQL}))"
 
-def dewpoint_c(tempc: Column, hum: Column) -> Column:
-    """Magnus-form dew point, as written at MWC:189-191.
+# --- wind (MWC:282-307) ---------------------------------------------------
+# WMO 10 m exposure correction for a mast under 10 m. The reference
+# computes Math.LOG10E * Math.log(x), which is exactly log10(x).
+MAST_CORR_SQL = f"(1.0 / (0.233 + 0.656 * log10({MAST_HEIGHT_M} + 4.75)))"
+WS_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windspeed_ms * {MAST_CORR_SQL} ELSE windspeed_ms END)"
+# Gated on *speed*, not gust: a gust with calm mean wind stays uncorrected.
+WG_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windgust_ms * {MAST_CORR_SQL} ELSE windgust_ms END)"
+# Sector 0-15 → degrees string: calm '000', round(sector*22.5) half-up,
+# sector 0 with wind '360'. The line breaks keep the oracle texts that
+# embed it unchanged.
+WINDDIR_SQL = (
+    "CASE WHEN windspeed_ms = 0 THEN '000'\n"
+    "            WHEN winddir_sector <> 0 THEN\n"
+    "              CAST(CAST(floor(CAST(winddir_sector AS DOUBLE) * 22.5 + 0.5) AS INT) AS STRING)\n"
+    "            ELSE '360' END"
+)
 
-    ``g = (17.27*t)/(237.7+t) + ln(h/100)``;
-    ``dewpt = 237.7*g / (17.7 - g)`` — the 17.7 is the reference's
-    own constant (MWC:191), preserved for fidelity. The reference
-    inlines ``g`` twice; here it is a single expression so Catalyst
-    CSE emits it once.
-    """
-    g = (F.lit(17.27) * tempc) / (F.lit(237.7) + tempc) + F.log(hum / F.lit(100.0))
-    return (F.lit(237.7) * g) / (F.lit(17.7) - g)
-
-
-# --- wind ------------------------------------------------------------------
-
-def wind_dir_str(sector: Column, windspeed: Column) -> Column:
-    """Sector 0-15 → degrees string, per MWC:282-290 + calm MWC:307.
-
-    speed==0 → '000'; sector!=0 → str(round(sector*22.5)); sector 0
-    (with wind) → '360'.
-    """
-    degrees = F.floor(sector.cast("double") * F.lit(22.5) + F.lit(0.5)).cast("int")
-    return (
-        F.when(windspeed == 0, F.lit("000"))
-        .when(sector != 0, degrees.cast("string"))
-        .otherwise(F.lit("360"))
-    )
-
-
-def mast_correction(mast_height_m: float) -> Column:
-    """WMO 10 m exposure correction factor, MWC:292-306.
-
-    ``1 / (0.233 + 0.656*log10(h + 4.75))`` — the reference computes
-    ``Math.LOG10E * Math.log(x)`` which is exactly log10(x).
-    Returns a literal Column (the mast height is site config).
-    """
-    return F.lit(1.0) / (F.lit(0.233) + F.lit(0.656) * F.log10(F.lit(mast_height_m + 4.75)))
-
-
-def corrected_windspeed(windspeed: Column, mast_height_m: float) -> Column:
-    """Apply mast correction when speed != 0 and mast < 10 m (MWC:296-303)."""
-    if mast_height_m >= 10:
-        return windspeed
-    return F.when(windspeed != 0, windspeed * mast_correction(mast_height_m)).otherwise(
-        windspeed
-    )
-
-
-def corrected_windgust(windgust: Column, windspeed: Column, mast_height_m: float) -> Column:
-    """Gust correction — gated on *speed* != 0, the reference's quirk
-    (MWC:299-305): a gust with calm mean wind is left uncorrected."""
-    if mast_height_m >= 10:
-        return windgust
-    return F.when(windspeed != 0, windgust * mast_correction(mast_height_m)).otherwise(
-        windgust
-    )
-
-
-# --- barometric reduction (SMHI method, MWC:309-331) -----------------------
-
-def baro_temp_correction(tempc: Column) -> Column:
-    """Piecewise temperature term, MWC:320-327 (band edges -7 and 2;
-    note the reference's >= / < closure)."""
-    return (
-        F.when(tempc < -7.0, F.lit(0.5) * tempc + F.lit(275.0))
-        .when((tempc >= -7.0) & (tempc < 2.0), F.lit(0.535) * tempc + F.lit(275.6))
-        .otherwise(F.lit(1.07) * tempc + F.lit(274.5))
-    )
-
-
-def sea_level_pressure_hpa(
-    pressure_site_hpa: Column, tempc: Column, latitude_deg: float, altitude_m: float
-) -> Column:
-    """SMHI sea-level reduction, MWC:309-331.
-
-    ``lat_corr = 0.034163 * (1 - 0.0026373*cos(2φ·π/180))``;
-    ``slp = p_site * exp(altitude * lat_corr / tempcorr)``.
-    """
-    lat_corr = F.lit(0.034163) * (
-        F.lit(1.0) - F.lit(0.0026373) * F.cos(F.radians(F.lit(2.0 * latitude_deg)))
-    )
-    return pressure_site_hpa * F.exp(F.lit(altitude_m) * lat_corr / baro_temp_correction(tempc))
+# --- barometric reduction (SMHI method, MWC:309-331) ----------------------
+# Piecewise temperature term (MWC:320-327): band edges -7 and 2, with
+# the reference's >= / < closure.
+TEMPCORR_SQL = (
+    "(CASE WHEN tempc < -7.0 THEN 0.5 * tempc + 275.0 "
+    "WHEN tempc >= -7.0 AND tempc < 2.0 THEN 0.535 * tempc + 275.6 "
+    "ELSE 1.07 * tempc + 274.5 END)"
+)
+LAT_CORR_SQL = (
+    f"(0.034163 * (1.0 - 0.0026373 * cos(radians(2.0 * {SITE_LATITUDE_DEG}))))"
+)
+# slp = p_site * exp(altitude * lat_corr / tempcorr)
+SLP_SQL = (
+    f"(pressure_site_hpa * exp({SITE_ALTITUDE_M} * {LAT_CORR_SQL} / {TEMPCORR_SQL}))"
+)
 
 
 # --- unit conversions (MWC:338-365) ---------------------------------------
 
-def c_to_f(c: Column) -> Column:
-    """°C → °F, MWC:349-350 (rounded to 1 dp at the sink layer)."""
-    return c * F.lit(1.8) + F.lit(32.0)
+def c_to_f_sql(c: str) -> str:
+    """°C → °F, MWC:349-350."""
+    return f"{c} * 1.8 + 32.0"
 
 
-def ms_to_mph(ms: Column) -> Column:
+def ms_to_mph_sql(ms: str) -> str:
     """m/s → mph, MWC:352-356."""
-    return ms * F.lit(2.236936)
+    return f"{ms} * 2.236936"
 
 
-def mm_to_in(mm: Column) -> Column:
+def mm_to_in_sql(mm: str) -> str:
     """mm → inches, MWC:357-361."""
-    return mm * F.lit(0.0393701)
+    return f"{mm} * 0.0393701"
 
 
-def hpa_to_inhg(hpa: Column) -> Column:
+def hpa_to_inhg_sql(hpa: str) -> str:
     """hPa → inHg, MWC:362-365."""
-    return hpa * F.lit(0.029529983071445)
-
-
-def to_fixed(x: Column, digits: int) -> Column:
-    """JS ``Number.toFixed(d)`` analog: fixed-precision decimal string
-    (MWC:290, 349-365). ``format_string('%.Nf')`` matches toFixed's
-    half-away-from-zero on the magnitudes the reference emits."""
-    return F.format_string(f"%.{digits}f", x)
+    return f"{hpa} * 0.029529983071445"

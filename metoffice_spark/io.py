@@ -36,14 +36,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        # events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
-        # Spark's vectorized reader rejects unless read as long) and as
+        # events.ts has shipped as both parquet TIMESTAMP(NANOS) and
         # timestamp[us]; adapt to whatever the file actually contains
-        # rather than hardcoding one physical type.  With nanosAsLong
-        # set, a NANOS column surfaces as LongType (truncate ns→µs, the
-        # same truncation DuckDB applies, so oracle parity holds) while
-        # a MICROS column still reads as a timestamp and passes through.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # rather than hardcoding one physical type. The session reads
+        # NANOS as LongType (spark.sql.legacy.parquet.nanosAsLong in
+        # session._RUNTIME_CONF); it is truncated ns→µs here, the same
+        # truncation DuckDB applies, so oracle parity holds. A MICROS
+        # column reads as a timestamp and passes through.
         df = spark.read.parquet(table_path(sf_dir, name))
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType

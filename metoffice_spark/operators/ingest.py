@@ -35,15 +35,21 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from metoffice_spark.functions.weather import (
+    DEWPOINT_SQL,
+    SLP_SQL,
+    WG_CORR_SQL,
+    WINDDIR_SQL,
+    WS_CORR_SQL,
+    c_to_f_sql,
+    hpa_to_inhg_sql,
+    mm_to_in_sql,
+    ms_to_mph_sql,
+)
 from metoffice_spark.io import load
 from metoffice_spark.obs import observations, oracle_cte
 from metoffice_spark.operators.rain import _RAIN_BASE_SQL, _RAIN_DAILY_SQL, _RAIN_RATE_SQL
-from metoffice_spark.operators.weather import (
-    _DEWPOINT_SQL,
-    _MAST_CORR_SQL,
-    _SLP_SQL,
-)
-from metoffice_spark.parity import fixed_str, fixed_str_sql, form_enc_sql
+from metoffice_spark.parity import fixed_str_sql, form_enc_sql
 
 _CTE = oracle_cte()
 
@@ -198,24 +204,21 @@ def scrape_pressure(
     )
 
 
+_PAGE_SQL = (
+    "('<div>Pressure p=' || " + fixed_str_sql("pressure_site_hpa", 1) + " || ' hPa</div>')"
+)
+
+
 def q_src_text_scrape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anchor-substring extraction with retry (MWC:169-183): find 'hPa',
     slice 6 chars, and when that fails to parse, slice 5 (the
     3-digit-pressure fallback at MWC:181-183)."""
     df = observations(spark, sf_dir)
-    page = F.concat(
-        F.lit("<div>Pressure p="),
-        fixed_str(F.col("pressure_site_hpa"), 1),
-        F.lit(" hPa</div>"),
-    )
     return scrape_pressure(
-        df.withColumn("page", page), "page", keep=["obs_id"]
+        df.withColumn("page", F.expr(_PAGE_SQL)), "page", keep=["obs_id"]
     )
 
 
-_PAGE_SQL = (
-    "('<div>Pressure p=' || " + fixed_str_sql("pressure_site_hpa", 1) + " || ' hPa</div>')"
-)
 ORACLE_SRC_TEXT_SCRAPE = f"""{_CTE},
 pages AS (
   SELECT obs_id, {_PAGE_SQL} AS page, strpos({_PAGE_SQL}, 'hPa') AS n
@@ -290,9 +293,6 @@ def http_post_wow(df: DataFrame, url: str, timeout_s: float = 10.0) -> DataFrame
     )
 
 
-_WS_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windspeed_ms * {_MAST_CORR_SQL} ELSE windspeed_ms END)"
-_WG_CORR_SQL = f"(CASE WHEN windspeed_ms <> 0 THEN windgust_ms * {_MAST_CORR_SQL} ELSE windgust_ms END)"
-
 # One payload template, two engines: the Spark builder and the DuckDB
 # oracle run the SAME text except for the timestamp formatter
 # (date_format vs strftime), so the flagship arithmetic cannot diverge
@@ -304,18 +304,15 @@ SELECT obs_id,
        'wow-' || station_id AS siteid,
        '9999999' AS siteauthenticationkey,
        {datefmt} AS dateutc,
-       {fixed_str_sql("tempc * 1.8 + 32.0", 1)} AS tempf,
+       {fixed_str_sql(c_to_f_sql("tempc"), 1)} AS tempf,
        {fixed_str_sql("hum", 0)} AS humidity,
-       {fixed_str_sql(f"({_WS_CORR_SQL}) * 2.236936", 2)} AS windspeedmph,
-       {fixed_str_sql(f"({_WG_CORR_SQL}) * 2.236936", 2)} AS windgustmph,
-       CASE WHEN windspeed_ms = 0 THEN '000'
-            WHEN winddir_sector <> 0 THEN
-              CAST(CAST(floor(CAST(winddir_sector AS DOUBLE) * 22.5 + 0.5) AS INT) AS STRING)
-            ELSE '360' END AS winddir,
-       {fixed_str_sql(f"({_DEWPOINT_SQL}) * 1.8 + 32.0", 1)} AS dewptf,
-       {fixed_str_sql(f"({_RAIN_DAILY_SQL}) * 0.0393701", 3)} AS dailyrainin,
-       {fixed_str_sql(f"({_RAIN_RATE_SQL}) * 0.0393701", 3)} AS rainin,
-       {fixed_str_sql(f"({_SLP_SQL}) * 0.029529983071445", 3)} AS baromin,
+       {fixed_str_sql(ms_to_mph_sql(f"({WS_CORR_SQL})"), 2)} AS windspeedmph,
+       {fixed_str_sql(ms_to_mph_sql(f"({WG_CORR_SQL})"), 2)} AS windgustmph,
+       {WINDDIR_SQL} AS winddir,
+       {fixed_str_sql(c_to_f_sql(f"({DEWPOINT_SQL})"), 1)} AS dewptf,
+       {fixed_str_sql(mm_to_in_sql(f"({_RAIN_DAILY_SQL})"), 3)} AS dailyrainin,
+       {fixed_str_sql(mm_to_in_sql(f"({_RAIN_RATE_SQL})"), 3)} AS rainin,
+       {fixed_str_sql(hpa_to_inhg_sql(f"({SLP_SQL})"), 3)} AS baromin,
        'metoffice-spark' AS softwaretype
 FROM rain_state
 )
@@ -378,12 +375,7 @@ def q_fn_str_locate(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow slice. The same expressions back q_src_text_scrape; this qid
     registers them as the survey's own q_fn_str_locate row."""
     df = observations(spark, sf_dir)
-    page = F.concat(
-        F.lit("<div>Pressure p="),
-        fixed_str(F.col("pressure_site_hpa"), 1),
-        F.lit(" hPa</div>"),
-    )
-    df = df.withColumn("page", page).withColumn("n", F.locate("hPa", F.col("page")))
+    df = df.withColumn("page", F.expr(_PAGE_SQL)).withColumn("n", F.locate("hPa", F.col("page")))
     wide_ok = F.expr("try_cast(substring(page, n - 7, 6) AS DOUBLE)").isNotNull()
     return df.select(
         "obs_id",

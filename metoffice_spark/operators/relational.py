@@ -10,7 +10,7 @@ money aggregate therefore goes through the *integer cents* pattern —
 ``floor(x*100 + 0.5)`` per row into BIGINT (bit-identical in both
 engines), exact integer sums, divide once at the end. Genuinely
 order-sensitive statistics (stddev/corr/percentile) are rounded via
-the shared ``rhu`` helper instead.
+the shared ``parity.rhu_sql`` text instead.
 
 Scale notes per query are in the docstrings — these run on 60k rows
 here but are written for the 100 TB layout (bucketed fact tables,
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.parity import rhu, rhu_sql
+from metoffice_spark.parity import rhu_sql
 
 
 def _cents(col: F.Column, scale: int = 100):
@@ -47,8 +47,8 @@ def _cents(col: F.Column, scale: int = 100):
     Huge-finite is now the fourth quarantined validity class (after
     NULL, non-finite, out-of-horizon), DETECTED by q_dq_checks'
     *_fits_fixed_point rows. Every _cents-shaped site (here, the
-    inline spellings in stats.py/mining.py/behavior.py, rhu/
-    fixed_str in parity.py, and the obs substrate) shares this ONE
+    inline spellings in stats.py/mining.py/behavior.py, rhu_sql/
+    fixed_str_sql in parity.py, and the obs substrate) shares this ONE
     bound; do NOT widen individual sites ad hoc."""
     from metoffice_spark.parity import FIXED_POINT_MAX
 
@@ -276,34 +276,22 @@ GROUP BY c_mktsegment
 
 
 def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates; rounded via rhu since the merge order of
-    the underlying moments differs across engines.
+    """Statistical aggregates; rounded via rhu_sql since the merge order
+    of the underlying moments differs across engines.
 
     Moment-validity (r10 extreme-value probe): each aggregate's INPUT
     is masked to finite — a NaN/±Inf measurement is not a point of the
     distribution (DuckDB's STDDEV raises outright on one; Spark
     returns NaN), and NULL-skipping aggregates drop the masked rows
     identically in both engines. Group membership is untouched."""
-
-    def fin(c: str):
-        return F.when(F.abs(F.col(c)) < F.lit(9.0e12), F.col(c))
-
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
-        rhu(F.stddev_samp(fin("l_quantity")), 6).alias("sd_qty"),
-        rhu(F.var_samp(fin("l_quantity")), 6).alias("var_qty"),
-        rhu(
-            F.corr(fin("l_quantity"), fin("l_extendedprice")), 6
-        ).alias("corr_qty_price"),
-        rhu(
-            F.expr(
-                "percentile(CASE WHEN abs(l_extendedprice) <"
-                " 9.0e12 THEN l_extendedprice END, 0.5)"
-            ),
-            4,
-        ).alias("median_price"),
-        F.min(fin("l_extendedprice")).alias("min_price"),
-        F.max(fin("l_extendedprice")).alias("max_price"),
+        F.expr(_SD_QTY).alias("sd_qty"),
+        F.expr(_VAR_QTY).alias("var_qty"),
+        F.expr(_CORR_QTY_PRICE).alias("corr_qty_price"),
+        F.expr(rhu_sql(f"percentile({_FIN_PRICE}, 0.5)", 4)).alias("median_price"),
+        F.expr(f"min({_FIN_PRICE})").alias("min_price"),
+        F.expr(f"max({_FIN_PRICE})").alias("max_price"),
     )
 
 
@@ -312,12 +300,15 @@ _FIN_PRICE = (
     "CASE WHEN abs(l_extendedprice) < 9.0e12"
     " THEN l_extendedprice END"
 )
+_SD_QTY = rhu_sql(f"stddev_samp({_FIN_QTY})", 6)
+_VAR_QTY = rhu_sql(f"var_samp({_FIN_QTY})", 6)
+_CORR_QTY_PRICE = rhu_sql(f"corr({_FIN_QTY}, {_FIN_PRICE})", 6)
 
 ORACLE_AGG_STATS = f"""
 SELECT l_returnflag,
-       {rhu_sql(f"stddev_samp({_FIN_QTY})", 6)} AS sd_qty,
-       {rhu_sql(f"var_samp({_FIN_QTY})", 6)} AS var_qty,
-       {rhu_sql(f"corr({_FIN_QTY}, {_FIN_PRICE})", 6)} AS corr_qty_price,
+       {_SD_QTY} AS sd_qty,
+       {_VAR_QTY} AS var_qty,
+       {_CORR_QTY_PRICE} AS corr_qty_price,
        {rhu_sql(f"quantile_cont({_FIN_PRICE}, 0.5)", 4)} AS median_price,
        min({_FIN_PRICE}) AS min_price,
        max({_FIN_PRICE}) AS max_price
@@ -727,7 +718,8 @@ SELECT s_nationkey FROM supplier
 
 def q_fn_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General math surface (extends the reference's ln/log10/cos/exp/π,
-    MWC:190/301/319/328). Transcendentals rounded via rhu."""
+    MWC:190/301/319/328). Transcendentals rounded via rhu_sql, the
+    same text the oracle embeds."""
     li = load(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
@@ -742,30 +734,16 @@ def q_fn_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_quantity") >= 0) & ~F.isnan("l_quantity"),
             F.sqrt("l_quantity"),
         ).alias("sqrt_qty"),
-        rhu(F.pow("l_quantity", F.lit(2.0)), 6).alias("qty_sq"),
+        F.expr(_QTY_SQ).alias("qty_sq"),
         F.when(F.abs("l_extendedprice") < F.lit(9.0e12), F.floor("l_extendedprice").cast("bigint")).alias("floor_price"),
         F.when(
             F.abs("l_extendedprice") < F.lit(9.0e12),
             F.ceil("l_extendedprice").cast("bigint"),
         ).alias("ceil_price"),
-        rhu(F.exp("l_discount"), 8).alias("exp_disc"),
-        rhu(
-            F.when(
-                (F.col("l_extendedprice") > 0)
-                & ~F.isnan("l_extendedprice"),
-                F.log("l_extendedprice"),
-            ),
-            8,
-        ).alias("ln_price"),
-        rhu(
-            F.when(
-                (F.col("l_extendedprice") > 0)
-                & ~F.isnan("l_extendedprice"),
-                F.log10("l_extendedprice"),
-            ),
-            8,
-        ).alias("log10_price"),
-        rhu(F.cos("l_discount"), 8).alias("cos_disc"),
+        F.expr(_EXP_DISC).alias("exp_disc"),
+        F.expr(_LN_PRICE).alias("ln_price"),
+        F.expr(_LOG10_PRICE).alias("log10_price"),
+        F.expr(_COS_DISC).alias("cos_disc"),
         # NaN masked (r10 money probe): sign(NaN) is NaN in Spark but
         # 0.0 in DuckDB — the sign of an unmeasurable value is NULL
         F.when(
@@ -777,21 +755,27 @@ def q_fn_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_QTY_SQ = rhu_sql("pow(l_quantity, 2.0)", 6)
+_EXP_DISC = rhu_sql("exp(l_discount)", 8)
+_LN_PRICE = rhu_sql("CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice)"
+                    " THEN ln(l_extendedprice) END", 8)
+_LOG10_PRICE = rhu_sql("CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice)"
+                       " THEN log10(l_extendedprice) END", 8)
+_COS_DISC = rhu_sql("cos(l_discount)", 8)
+
 ORACLE_FN_MATH_SUITE = f"""
 SELECT l_orderkey, l_linenumber,
        abs(l_discount - 0.05) AS abs_v,
        CASE WHEN l_quantity >= 0 AND NOT isnan(l_quantity)
             THEN sqrt(l_quantity) END AS sqrt_qty,
-       {rhu_sql("pow(l_quantity, 2.0)", 6)} AS qty_sq,
+       {_QTY_SQ} AS qty_sq,
        CASE WHEN abs(l_extendedprice) < 9.0e12 THEN CAST(floor(l_extendedprice) AS BIGINT) END AS floor_price,
        CASE WHEN abs(l_extendedprice) < 9.0e12
             THEN CAST(ceil(l_extendedprice) AS BIGINT) END AS ceil_price,
-       {rhu_sql("exp(l_discount)", 8)} AS exp_disc,
-       {rhu_sql("CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice)"
-                " THEN ln(l_extendedprice) END", 8)} AS ln_price,
-       {rhu_sql("CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice)"
-                " THEN log10(l_extendedprice) END", 8)} AS log10_price,
-       {rhu_sql("cos(l_discount)", 8)} AS cos_disc,
+       {_EXP_DISC} AS exp_disc,
+       {_LN_PRICE} AS ln_price,
+       {_LOG10_PRICE} AS log10_price,
+       {_COS_DISC} AS cos_disc,
        CASE WHEN NOT isnan(l_discount)
             THEN CAST(sign(l_discount - 0.05) AS DOUBLE) END AS sign_v,
        greatest(l_tax, l_discount) AS max_rate,

@@ -467,10 +467,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ReuseExchange dedupes inside ed's one materialization job, so
     # dropping the extra persist costs no recompute. Measured
     # (7-rep strict-alternation A/B, rows identical): 2.88 → 1.89 s
-    # median. Two rejected variants with A/B numbers are in
-    # OPTIMIZATION_r14.md (unpartitioned cache + per-round broadcast-
-    # deg re-join: slower; pre-broadcast per-node contributions:
-    # slower — the extra per-round stage outweighs the narrower probe).
+    # median. Two variants measured slower and were rejected: an
+    # unpartitioned cache with a per-round broadcast-deg re-join, and
+    # pre-broadcast per-node contributions (the extra per-round stage
+    # outweighs the narrower probe).
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     ed = scoped_persist(edges.join(deg, "src"))
 

@@ -52,10 +52,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from metoffice_spark.functions.weather import c_to_f_sql
 from metoffice_spark.io import load
 from metoffice_spark.obs import OBS_PER_HOUR, observations, oracle_cte
 from metoffice_spark.operators.rain import ORACLE_RAIN_METRICS
-from metoffice_spark.parity import fixed_str, fixed_str_sql
+from metoffice_spark.parity import fixed_str_sql
 from metoffice_spark.session import scoped_persist
 
 _CTE = oracle_cte()
@@ -525,8 +526,8 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "obs_id",
             F.concat(F.lit("wow-"), F.col("station_id")).alias("siteid"),
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("dateutc"),
-            fixed_str(F.col("tempc") * 1.8 + 32.0, 1).alias("tempf"),
-            fixed_str(F.col("hum"), 0).alias("humidity"),
+            F.expr(fixed_str_sql(c_to_f_sql("tempc"), 1)).alias("tempf"),
+            F.expr(fixed_str_sql("hum", 0)).alias("humidity"),
             F.col("windspeed_ms").alias("ws"),
         ),
         batch=route,
@@ -537,10 +538,10 @@ ORACLE_STREAM_SINK = f"""{_CTE}
 SELECT obs_id,
        'wow-' || station_id AS siteid,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS dateutc,
-       {fixed_str_sql("tempc * 1.8 + 32.0", 1)} AS tempf,
+       {fixed_str_sql(c_to_f_sql("tempc"), 1)} AS tempf,
        {fixed_str_sql("hum", 0)} AS humidity,
        'siteid=wow-' || station_id
-         || '&tempf=' || {fixed_str_sql("tempc * 1.8 + 32.0", 1)}
+         || '&tempf=' || {fixed_str_sql(c_to_f_sql("tempc"), 1)}
          || '&humidity=' || {fixed_str_sql("hum", 0)} AS body
 FROM observations
 WHERE windspeed_ms <> 0

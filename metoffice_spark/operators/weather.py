@@ -1,86 +1,64 @@
 """Weather-domain queries: the reference's REF surface re-expressed.
 
 Every builder takes ``(spark, sf_dir)`` and returns a DataFrame over
-the deterministic observations view (``metoffice_spark.obs``); each
-has a DuckDB oracle SQL string sharing the same arithmetic so the
-driver's value-hash comparison passes bit-for-bit (transcendental
-outputs are rounded via the shared half-up helpers in ``parity``).
+the deterministic observations view (``metoffice_spark.obs``), and
+each has a DuckDB oracle SQL string. The formula builders (dew point,
+wind, sea-level pressure, units, fixed-point strings) run their oracle
+text itself through ``spark.sql``; the formulas come from
+``functions.weather`` and the half-up rounding from ``parity``, so the
+oracle check's value-hash comparison passes bit-for-bit.
 
-Reference citations are ``MWC:N`` = /root/reference/MetOffice_WOW_Connect.txt:N.
+Reference citations are ``MWC:N``, line N of the reference script.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metoffice_spark import obs as obsmod
-from metoffice_spark.functions import weather as W
-from metoffice_spark.obs import (
-    MAST_HEIGHT_M,
-    OBS_PER_HOUR,
-    SITE_ALTITUDE_M,
-    SITE_LATITUDE_DEG,
-    observations,
-    oracle_cte,
+from metoffice_spark.functions.weather import (
+    DEWPOINT_SQL,
+    SLP_SQL,
+    TEMPCORR_SQL,
+    WG_CORR_SQL,
+    WINDDIR_SQL,
+    WS_CORR_SQL,
+    c_to_f_sql,
+    hpa_to_inhg_sql,
+    mm_to_in_sql,
+    ms_to_mph_sql,
 )
-from metoffice_spark.parity import fixed_str, fixed_str_sql, rhu, rhu_sql
+from metoffice_spark.io import register_views
+from metoffice_spark.obs import observations, oracle_cte
+from metoffice_spark.parity import fixed_str_sql, rhu_sql
 
 _CTE = oracle_cte()
 
-# SQL fragments mirroring functions/weather.py (for oracle parity).
-_G_SQL = "((17.27 * tempc) / (237.7 + tempc) + ln(hum / 100.0))"
-_DEWPOINT_SQL = f"(237.7 * {_G_SQL} / (17.7 - {_G_SQL}))"
-_MAST_CORR_SQL = f"(1.0 / (0.233 + 0.656 * log10({MAST_HEIGHT_M} + 4.75)))"
-_TEMPCORR_SQL = (
-    "(CASE WHEN tempc < -7.0 THEN 0.5 * tempc + 275.0 "
-    "WHEN tempc >= -7.0 AND tempc < 2.0 THEN 0.535 * tempc + 275.6 "
-    "ELSE 1.07 * tempc + 274.5 END)"
-)
-_LAT_CORR_SQL = (
-    f"(0.034163 * (1.0 - 0.0026373 * cos(radians(2.0 * {SITE_LATITUDE_DEG}))))"
-)
-_SLP_SQL = (
-    f"(pressure_site_hpa * exp({SITE_ALTITUDE_M} * {_LAT_CORR_SQL} / {_TEMPCORR_SQL}))"
-)
-
 
 def q_fn_dewpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Magnus dew point with the as-written 17.7 constant (MWC:189-191)."""
-    df = observations(spark, sf_dir)
-    return df.select(
-        "obs_id",
-        "station_id",
-        "tempc",
-        "hum",
-        rhu(W.dewpoint_c(F.col("tempc"), F.col("hum")), 4).alias("dewpoint_c"),
-    )
+    """Magnus dew point with the reference's as-written denominator
+    constant (MWC:189-191)."""
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(ORACLE_DEWPOINT)
 
 
 ORACLE_DEWPOINT = f"""{_CTE}
 SELECT obs_id, station_id, tempc, hum,
-       {rhu_sql(_DEWPOINT_SQL, 4)} AS dewpoint_c
+       {rhu_sql(DEWPOINT_SQL, 4)} AS dewpoint_c
 FROM observations
 """
 
 
 def q_fn_winddir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wind-direction decode: '000' calm / '360' north / sector*22.5 (MWC:282-307)."""
-    df = observations(spark, sf_dir)
-    return df.select(
-        "obs_id",
-        "winddir_sector",
-        "windspeed_ms",
-        W.wind_dir_str(F.col("winddir_sector"), F.col("windspeed_ms")).alias("winddir"),
-    )
+    """Wind-direction decode: '000' calm / '360' north / sector degrees
+    (MWC:282-307)."""
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(ORACLE_WINDDIR)
 
 
 ORACLE_WINDDIR = f"""{_CTE}
 SELECT obs_id, winddir_sector, windspeed_ms,
-       CASE WHEN windspeed_ms = 0 THEN '000'
-            WHEN winddir_sector <> 0 THEN
-              CAST(CAST(floor(CAST(winddir_sector AS DOUBLE) * 22.5 + 0.5) AS INT) AS STRING)
-            ELSE '360' END AS winddir
+       {WINDDIR_SQL} AS winddir
 FROM observations
 """
 
@@ -88,65 +66,35 @@ FROM observations
 def q_fn_mast_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WMO mast-height wind correction; gust only corrected when speed!=0
     (quirk, MWC:292-306)."""
-    df = observations(spark, sf_dir)
-    return df.select(
-        "obs_id",
-        "windspeed_ms",
-        "windgust_ms",
-        rhu(W.corrected_windspeed(F.col("windspeed_ms"), MAST_HEIGHT_M), 4).alias(
-            "windspeed_corr_ms"
-        ),
-        rhu(W.corrected_windgust(F.col("windgust_ms"), F.col("windspeed_ms"), MAST_HEIGHT_M), 4).alias(
-            "windgust_corr_ms"
-        ),
-    )
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(ORACLE_MAST_CORR)
 
 
 ORACLE_MAST_CORR = f"""{_CTE}
 SELECT obs_id, windspeed_ms, windgust_ms,
-       {rhu_sql(f"CASE WHEN windspeed_ms <> 0 THEN windspeed_ms * {_MAST_CORR_SQL} ELSE windspeed_ms END", 4)} AS windspeed_corr_ms,
-       {rhu_sql(f"CASE WHEN windspeed_ms <> 0 THEN windgust_ms * {_MAST_CORR_SQL} ELSE windgust_ms END", 4)} AS windgust_corr_ms
+       {rhu_sql(WS_CORR_SQL, 4)} AS windspeed_corr_ms,
+       {rhu_sql(WG_CORR_SQL, 4)} AS windgust_corr_ms
 FROM observations
 """
 
 
 def q_fn_baro_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMHI sea-level pressure reduction (MWC:309-331)."""
-    df = observations(spark, sf_dir)
-    return df.select(
-        "obs_id",
-        "pressure_site_hpa",
-        "tempc",
-        rhu(
-            W.sea_level_pressure_hpa(
-                F.col("pressure_site_hpa"), F.col("tempc"), SITE_LATITUDE_DEG, SITE_ALTITUDE_M
-            ),
-            4,
-        ).alias("pressure_slp_hpa"),
-    )
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(ORACLE_BARO_REDUCE)
 
 
 ORACLE_BARO_REDUCE = f"""{_CTE}
 SELECT obs_id, pressure_site_hpa, tempc,
-       {rhu_sql(_SLP_SQL, 4)} AS pressure_slp_hpa
+       {rhu_sql(SLP_SQL, 4)} AS pressure_slp_hpa
 FROM observations
 """
 
 
 def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way piecewise temperature correction bands (MWC:320-327)."""
-    df = observations(spark, sf_dir)
-    band = (
-        F.when(F.col("tempc") < -7.0, F.lit("cold"))
-        .when((F.col("tempc") >= -7.0) & (F.col("tempc") < 2.0), F.lit("mid"))
-        .otherwise(F.lit("warm"))
-    )
-    return df.select(
-        "obs_id",
-        "tempc",
-        band.alias("band"),
-        rhu(W.baro_temp_correction(F.col("tempc")), 6).alias("tempcorr"),
-    )
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(ORACLE_CASE_WHEN)
 
 
 ORACLE_CASE_WHEN = f"""{_CTE}
@@ -154,7 +102,7 @@ SELECT obs_id, tempc,
        CASE WHEN tempc < -7.0 THEN 'cold'
             WHEN tempc >= -7.0 AND tempc < 2.0 THEN 'mid'
             ELSE 'warm' END AS band,
-       {rhu_sql(_TEMPCORR_SQL, 6)} AS tempcorr
+       {rhu_sql(TEMPCORR_SQL, 6)} AS tempcorr
 FROM observations
 """
 
@@ -162,43 +110,31 @@ FROM observations
 def q_fn_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Imperial unit conversions (MWC:338-365). Linear IEEE ops — exact,
     no rounding needed for parity."""
-    df = observations(spark, sf_dir)
-    return df.select(
-        "obs_id",
-        W.c_to_f(F.col("tempc")).alias("tempf"),
-        W.ms_to_mph(F.col("windspeed_ms")).alias("windspeedmph"),
-        W.mm_to_in(F.col("rain_counter_mm")).alias("rain_in"),
-        W.hpa_to_inhg(F.col("pressure_site_hpa")).alias("baro_inhg"),
-    )
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(ORACLE_UNITS)
 
 
 ORACLE_UNITS = f"""{_CTE}
 SELECT obs_id,
-       tempc * 1.8 + 32.0 AS tempf,
-       windspeed_ms * 2.236936 AS windspeedmph,
-       rain_counter_mm * 0.0393701 AS rain_in,
-       pressure_site_hpa * 0.029529983071445 AS baro_inhg
+       {c_to_f_sql("tempc")} AS tempf,
+       {ms_to_mph_sql("windspeed_ms")} AS windspeedmph,
+       {mm_to_in_sql("rain_counter_mm")} AS rain_in,
+       {hpa_to_inhg_sql("pressure_site_hpa")} AS baro_inhg
 FROM observations
 """
 
 
 def q_fn_round_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JS toFixed analog: fixed-precision decimal strings (MWC:290, 349-365)."""
-    df = observations(spark, sf_dir)
-    return df.select(
-        "obs_id",
-        fixed_str(W.c_to_f(F.col("tempc")), 1).alias("tempf_s"),
-        fixed_str(W.ms_to_mph(F.col("windspeed_ms")), 2).alias("windmph_s"),
-        fixed_str(W.mm_to_in(F.col("rain_counter_mm")), 3).alias("rain_in_s"),
-        fixed_str(F.col("hum"), 0).alias("hum_s"),
-    )
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(ORACLE_ROUND_FIXED)
 
 
 ORACLE_ROUND_FIXED = f"""{_CTE}
 SELECT obs_id,
-       {fixed_str_sql("tempc * 1.8 + 32.0", 1)} AS tempf_s,
-       {fixed_str_sql("windspeed_ms * 2.236936", 2)} AS windmph_s,
-       {fixed_str_sql("rain_counter_mm * 0.0393701", 3)} AS rain_in_s,
+       {fixed_str_sql(c_to_f_sql("tempc"), 1)} AS tempf_s,
+       {fixed_str_sql(ms_to_mph_sql("windspeed_ms"), 2)} AS windmph_s,
+       {fixed_str_sql(mm_to_in_sql("rain_counter_mm"), 3)} AS rain_in_s,
        {fixed_str_sql("hum", 0)} AS hum_s
 FROM observations
 """

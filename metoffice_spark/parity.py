@@ -8,38 +8,31 @@ correctness harness agree bit-for-bit, every rounded value is computed
 with the SAME SQL text on both sides — integer-exact floor arithmetic
 that has one defined answer in IEEE doubles:
 
-- ``rhu(x, d)``      → round-half-up to d decimals, returned as DOUBLE
-- ``fixed_str(x, d)``→ fixed-precision decimal STRING (toFixed analog)
+- ``rhu_sql(x, d)``       → round-half-up to d decimals, as DOUBLE
+- ``fixed_str_sql(x, d)`` → fixed-precision decimal STRING (toFixed analog)
+- ``form_enc_sql(x)``     → x-www-form-urlencoded value
 
-Spark consumes these via ``F.expr(...)``; oracle SQL embeds the same
-text verbatim. Both parsers accept the subset used here (CASE, CAST,
-floor, abs, lpad, ``||``).
+Spark consumes these via ``spark.sql`` or ``F.expr(...)``; oracle SQL
+embeds the same text verbatim. Both parsers accept the subset used
+here (CASE, CAST, floor, abs, lpad, replace, ``||``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-# ONE magnitude bound for every fixed-point spelling in the repo
-# (r12 huge-finite probe, closing ADVICE r10 item 2 / VERDICT r11
-# item 3). A FINITE word with |x| >= 9.0e12 passes every abs(x) < inf
-# guard, but its scaled fixed-point value overflows int64 at scale
-# 10^6 (9.0e12 * 1e6 = 9.0e18 < 2^63 ~ 9.22e18, anything much bigger
-# is not); scales ABOVE 10^6 (d=8 is in use, relational.py exp_disc/
-# ln_price/log10_price/cos_disc) need a TIGHTER bound — see
-# _bound_sql below (ADVICE r12 item 1). The r11 contract said the
-# overflow is a "loud symmetric crash" — the r12 registry-wide probe
-# (--extval kind=huge at 1e17, FUZZPARITY logs) FALSIFIED that:
-# Spark's floor(double) returns LONG via Java's saturating double->
-# long conversion, so un-summed floor paths silently answer
-# Long.MAX-shaped values (q_benford_test's leading digit became '9',
-# every unguarded rhu() returned 9223372036854.775807) while DuckDB's
-# explicit CAST raises — 13 asymmetric divergences. A huge-finite
-# word is therefore QUARANTINED like NaN/±Inf: every fixed-point
-# guard bounds the magnitude, the value becomes NULL (missing
-# measurement, the validity-class semantics every null-axis probe
-# pins), and q_dq_checks DETECTS the violation
+# ONE magnitude bound for every fixed-point spelling in the repo. A
+# FINITE word with |x| >= 9.0e12 passes every abs(x) < inf guard, but
+# its scaled fixed-point value overflows int64 at scale 10^6 (9.0e12 *
+# 1e6 = 9.0e18 < 2^63 ~ 9.22e18, anything much bigger is not); scales
+# ABOVE 10^6 (d=8 is in use, relational.py exp_disc/ln_price/
+# log10_price/cos_disc) need a TIGHTER bound — see _bound_sql below.
+# The overflow is not a symmetric crash: Spark's floor(double) returns
+# LONG via Java's saturating double->long conversion, so an unguarded
+# floor path silently answers a Long.MAX-shaped value (a leading digit
+# of '9', a rounded 9223372036854.775807) while DuckDB's explicit CAST
+# raises. A huge-finite word is therefore QUARANTINED like NaN/±Inf:
+# every fixed-point guard bounds the magnitude, the value becomes NULL
+# (missing measurement, the validity-class semantics every null-axis
+# probe pins), and q_dq_checks DETECTS the violation
 # (*_fits_fixed_point rows). Keep the SQL literal '9.0e12' textually
 # identical on both engines.
 FIXED_POINT_MAX = 9.0e12
@@ -53,33 +46,26 @@ def _bound_sql(d: int) -> str:
     int64 for d <= 6; at d=8 (in use: relational.py exp_disc et al.) a
     value in [2^63/1e8 ~ 9.22e10, 9.0e12) passes the flat guard yet
     saturates Spark's floor->LONG while DuckDB's floor stays an exact
-    double — the same silent asymmetric class the r12 huge probe
-    caught (ADVICE r12 item 1). Shrink the bound one decade per digit
-    beyond 6: 9.0e12 / 10^(d-6), which is always < 2^63/10^d with a
-    whole ~2.4% + decade margin against float rounding at the
-    boundary. For d <= 6 the literal stays textually '9.0e12', so the
-    dialect-common SQL for every existing d<=6 site is unchanged.
-    Both engines always receive the SAME generated text, so parity is
-    structural whatever d is."""
+    double — a silent asymmetric answer. Shrink the bound one decade
+    per digit beyond 6: 9.0e12 / 10^(d-6), which is always
+    < 2^63/10^d with a whole ~2.4% + decade margin against float
+    rounding at the boundary. For d <= 6 the literal stays textually
+    '9.0e12'. Both engines always receive the SAME generated text, so
+    parity is structural whatever d is."""
     return f"9.0e{12 - max(0, d - 6)}"
-
-
-def _bound(d: int) -> float:
-    """Float twin of ``_bound_sql`` for the Column builders."""
-    return float(_bound_sql(d))
 
 
 def rhu_sql(x: str, d: int) -> str:
     """Round-half-up(+inf) of expression ``x`` to ``d`` decimals, as DOUBLE.
 
-    Non-finite inputs round to NULL (r10 extreme-value probe): Spark's
-    ``floor`` converts NaN to BIGINT 0 where DuckDB keeps NaN — a
-    SILENT divergence, not even a crash. An unroundable value is an
-    invalid measurement; NULL is the engine-agnostic spelling.
-    HUGE-finite inputs (|x| >= FIXED_POINT_MAX) round to NULL too
-    (r12): Spark's floor->LONG saturates at Long.MAX where DuckDB
-    keeps the exact double — the q_case_when probe read
-    9223372036854.775 vs 1.07e16 on the same 1e17 word."""
+    Non-finite inputs round to NULL: Spark's ``floor`` converts NaN to
+    BIGINT 0 where DuckDB keeps NaN — a SILENT divergence, not even a
+    crash. An unroundable value is an invalid measurement; NULL is the
+    engine-agnostic spelling. HUGE-finite inputs (|x| >=
+    ``_bound_sql(d)``) round to NULL too: Spark's floor->LONG
+    saturates at Long.MAX where DuckDB keeps the exact double
+    (q_case_when read 9223372036854.775 against 1.07e16 on the same
+    1e17 word)."""
     if d == 0:
         body = f"floor(({x}) + 0.5)"
     else:
@@ -93,10 +79,10 @@ def fixed_str_sql(x: str, d: int) -> str:
 
     JS ``toFixed`` analog (MWC:290, 349-365) with half-up-on-abs ties;
     sign handled separately so negative values render correctly.
-    Non-finite or huge-finite inputs (|x| >= FIXED_POINT_MAX) render
-    NULL (r12): the BIGINT casts inside would raise on DuckDB while
-    Spark's floor->LONG silently saturates — self-defending guard,
-    same validity class as rhu_sql."""
+    Non-finite or huge-finite inputs (|x| >= ``_bound_sql(d)``) render
+    NULL: the BIGINT casts inside would raise on DuckDB while Spark's
+    floor->LONG silently saturates — self-defending guard, same
+    validity class as rhu_sql."""
     if d == 0:
         body = (
             f"(CASE WHEN ({x}) < 0 AND floor(abs({x}) + 0.5) > 0 THEN '-' ELSE '' END"
@@ -115,49 +101,11 @@ def fixed_str_sql(x: str, d: int) -> str:
     return f"CASE WHEN abs({x}) < {_bound_sql(d)} THEN {body} END"
 
 
-def rhu(x: Column, d: int) -> Column:
-    """Column form of ``rhu_sql`` (same arithmetic, DataFrame API)."""
-    if d == 0:
-        body = F.floor(x + F.lit(0.5)).cast("double")
-    else:
-        p = float(10 ** d)
-        body = F.floor(x * F.lit(p) + F.lit(0.5)) / F.lit(p)
-    return F.when(F.abs(x) < F.lit(_bound(d)), body)
-
-
-def fixed_str(x: Column, d: int) -> Column:
-    """Column form of ``fixed_str_sql`` via ``F.expr`` on a one-off alias."""
-    # Build through expr on a self-contained expression tree: wrap the
-    # column into a SQL fragment is impossible generically, so rebuild
-    # with Column ops mirroring fixed_str_sql exactly (including the
-    # r12 magnitude guard — F.when with no otherwise = NULL).
-    if d == 0:
-        n = F.floor(F.abs(x) + F.lit(0.5)).cast("bigint")
-        sign = F.when((x < 0) & (n > 0), F.lit("-")).otherwise(F.lit(""))
-        return F.when(
-            F.abs(x) < F.lit(_bound(d)), F.concat(sign, n.cast("string"))
-        )
-    p = 10 ** d
-    n = F.floor(F.abs(x) * F.lit(float(p)) + F.lit(0.5)).cast("bigint")
-    whole = F.floor(n / F.lit(float(p))).cast("bigint")
-    frac = n - whole * F.lit(p)
-    sign = F.when((x < 0) & (n > 0), F.lit("-")).otherwise(F.lit(""))
-    return F.when(
-        F.abs(x) < F.lit(_bound(d)),
-        F.concat(
-            sign,
-            whole.cast("string"),
-            F.lit("."),
-            F.lpad(frac.cast("string"), d, "0"),
-        ),
-    )
-
-
 # --- x-www-form-urlencoded encoding (dialect-common replace chain) ----------
 #
 # The reference url-encodes its form body implicitly via UrlFetchApp
 # (MWC:389-396). A bare space/colon replace corrupts values containing
-# '&', '=', '%' or '+' (ADVICE r01), so this encodes the full reserved
+# '&', '=', '%' or '+', so this encodes the full reserved
 # set for the WOW payload charset. Order matters: '%' first (so
 # introduced escapes are not re-escaped), literal '+' before space→'+'.
 
@@ -171,15 +119,8 @@ _FORM_ENC_CHAIN = [
 ]
 
 
-def form_enc(c: Column) -> Column:
-    """Percent-encode a form value (Column form)."""
-    for src, dst in _FORM_ENC_CHAIN:
-        c = F.replace(c, F.lit(src), F.lit(dst))
-    return c
-
-
 def form_enc_sql(x: str) -> str:
-    """Same encoding as SQL text (valid in Spark SQL and DuckDB)."""
+    """Percent-encode form value ``x`` (valid in Spark SQL and DuckDB)."""
     for src, dst in _FORM_ENC_CHAIN:
         x = f"replace({x}, '{src}', '{dst}')"
     return x

@@ -22,6 +22,11 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Spark's vectorized reader rejects parquet TIMESTAMP(NANOS); read
+    # such a column as LongType and let io.load adapt it. Set for the
+    # whole session, so a table's schema never depends on which tables
+    # were loaded before it.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # The driver tables ship as ONE parquet file each (2-11 MB at
     # sf0.1). The default openCostInBytes=4 MB floors the split size
     # at 4 MB, so every scan runs as 1-3 tasks whatever the core count.

@@ -11,7 +11,7 @@ Two contracts:
    source tree and asserts every bound-class literal equals the
    canonical one.
 
-2. **Scale-aware guard** — ``rhu``/``fixed_str`` at scale 10**d must
+2. **Scale-aware guard** — ``rhu_sql``/``fixed_str_sql`` at scale 10**d must
    bound the INPUT so the scaled value ``floor(x * 10**d + 0.5)``
    stays inside int64 (ADVICE r12 item 1: a flat 9.0e12 guard at d=8
    admits inputs in [2**63/1e8 ~ 9.22e10, 9.0e12) whose scaled floor
@@ -33,11 +33,8 @@ from pyspark.sql import functions as F
 from metoffice_spark.parity import (
     FIXED_POINT_MAX,
     FIXED_POINT_MAX_SQL,
-    _bound,
     _bound_sql,
-    fixed_str,
     fixed_str_sql,
-    rhu,
     rhu_sql,
 )
 
@@ -105,6 +102,37 @@ def test_vector_bound_literal_in_sync_everywhere():
     )
 
 
+# The reference's formula constants: dew point, mast correction, SMHI
+# reduction, wind sector and the imperial unit factors.
+_FORMULA_CONSTANTS = (
+    "17.27", "237.7", "17.7", "0.233", "0.656", "4.75", "0.034163",
+    "0.0026373", "0.535", "275.6", "274.5", "22.5",
+    "2.236936", "0.0393701", "0.029529983071445",
+)
+
+
+def test_formula_constants_written_in_one_module():
+    """Each weather formula has one spelling: its SQL text in
+    functions/weather.py, which the Spark builders and the DuckDB
+    oracles both run. A constant written anywhere else under
+    metoffice_spark/ is a second spelling that can drift."""
+    lit = re.compile(
+        r"(?<![\d.])(" + "|".join(map(re.escape, _FORMULA_CONSTANTS)) + r")(?!\d)"
+    )
+    home = os.path.join("metoffice_spark", "functions", "weather.py")
+    stray = []
+    for path in glob.glob(os.path.join(_ROOT, "metoffice_spark", "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, _ROOT)
+        if rel == home:
+            continue
+        with open(path) as f:
+            for lineno, line in enumerate(f, 1):
+                stray += [f"{rel}:{lineno}: {c}" for c in lit.findall(line)]
+    assert stray == [], (
+        f"formula constants written outside {home}:\n" + "\n".join(stray)
+    )
+
+
 def test_bound_is_scale_aware():
     # d <= 6: the flat bound, textually unchanged ('9.0e12' everywhere)
     for d in (0, 1, 2, 3, 4, 6):
@@ -113,7 +141,7 @@ def test_bound_is_scale_aware():
     assert _bound_sql(7) == "9.0e11"
     assert _bound_sql(8) == "9.0e10"
     for d in range(0, 9):
-        assert _bound(d) * 10**d + 0.5 < 2**63
+        assert float(_bound_sql(d)) * 10**d + 0.5 < 2**63
 
 
 @pytest.mark.parametrize("x", [5.0e11, -5.0e11, 9.3e10])
@@ -128,8 +156,8 @@ def test_d8_band_nulls_on_both_engines(spark, x):
         row = (
             spark.range(1)
             .select(
-                rhu(F.lit(x), d).alias("r"),
-                fixed_str(F.lit(x), d).alias("s"),
+                F.expr(rhu_sql(xe, d)).alias("r"),
+                F.expr(fixed_str_sql(xe, d)).alias("s"),
             )
             .first()
         )
@@ -139,6 +167,7 @@ def test_d8_band_nulls_on_both_engines(spark, x):
         assert row["s"] == o_s
     # in-range value rounds identically at d=8 on both engines
     v = 1.234567891
-    o = con.sql(f"SELECT {rhu_sql(f'CAST({v!r} AS DOUBLE)', 8)} AS v").fetchone()[0]
-    got = spark.range(1).select(rhu(F.lit(v), 8).alias("r")).first()["r"]
+    ve = f"CAST({v!r} AS DOUBLE)"
+    o = con.sql(f"SELECT {rhu_sql(ve, 8)} AS v").fetchone()[0]
+    got = spark.range(1).select(F.expr(rhu_sql(ve, 8)).alias("r")).first()["r"]
     assert got == o == 1.23456789

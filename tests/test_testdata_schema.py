@@ -123,6 +123,33 @@ def test_events_loader_is_schema_adaptive(spark):
     assert n >= 1
 
 
+def test_table_schema_independent_of_load_order(spark, tmp_path):
+    """A table's schema must not depend on which tables were loaded
+    before it. A session conf that only an ``events`` load applied
+    (parquet nanosAsLong) used to turn a later TIMESTAMP(NANOS) column
+    of another table from a read error into a bigint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from metoffice_spark.session import tune
+
+    ts = pa.array([0, 86_400 * 10**9], pa.timestamp("ns"))
+    pq.write_table(
+        pa.table({"o_orderkey": pa.array([1, 2], pa.int64()), "o_orderdate": ts}),
+        tmp_path / "orders.parquet",
+    )
+    pq.write_table(
+        pa.table({"station_id": ["s1", "s2"], "ts": ts.cast(pa.timestamp("us"))}),
+        tmp_path / "events.parquet",
+    )
+    # a fresh session: the conf unset, then the package's tuning
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    tune(spark)
+    before = load(spark, str(tmp_path), "orders").schema
+    load(spark, str(tmp_path), "events")
+    assert load(spark, str(tmp_path), "orders").schema == before
+
+
 def test_loader_tz_safety_under_non_utc_session(spark, sf_smoke):
     """The events loader casts TIMESTAMP_NTZ to session-TZ timestamp;
     that is only value-correct because the registry repins UTC (via

@@ -10,7 +10,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 TABLES = (
     "region",
@@ -35,27 +39,26 @@ def table_path(sf_dir: str, name: str) -> str:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        # events.ts has shipped as both parquet TIMESTAMP(NANOS) and
-        # timestamp[us]; adapt to whatever the file actually contains
-        # rather than hardcoding one physical type. The session reads
-        # NANOS as LongType (spark.sql.legacy.parquet.nanosAsLong in
-        # session._RUNTIME_CONF); it is truncated ns→µs here, the same
-        # truncation DuckDB applies, so oracle parity holds. A MICROS
-        # column reads as a timestamp and passes through.
-        df = spark.read.parquet(table_path(sf_dir, name))
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        if isinstance(ts_type, TimestampNTZType):
-            # Session TZ is pinned UTC (session.py), so NTZ→LTZ is
-            # value-identical; keep the historical downstream type.
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.parquet(path)
+    # Timestamp columns have shipped as both parquet TIMESTAMP(NANOS)
+    # and timestamp[us]. The session reads NANOS as LongType
+    # (spark.sql.legacy.parquet.nanosAsLong in session._RUNTIME_CONF),
+    # so the file's own schema (footer only, no Spark job) names those
+    # columns; each is truncated ns→µs into a timestamp, the same
+    # truncation DuckDB applies, so oracle parity holds.
+    nanos = {
+        f.name: F.expr(f"timestamp_micros(`{f.name}` div 1000)")
+        for f in ds.dataset(path, format="parquet").schema
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    }
+    if nanos:
+        df = df.withColumns(nanos)
+    if name == "events" and isinstance(df.schema["ts"].dataType, TimestampNTZType):
+        # Session TZ is pinned UTC (session.py), so NTZ→LTZ is
+        # value-identical; keep the historical downstream type.
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:

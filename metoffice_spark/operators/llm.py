@@ -1030,7 +1030,8 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     and integer sums are exact + order-free in both engines). At
     100 TB: the corpus is stored clustered (partitioned by label), a
     query reads ~1/k of the data — this is the scale path over
-    q_sim_search's full scan."""
+    q_sim_search's full scan. Every shuffle key is a dimension index,
+    a cluster label or a q_id, never an embedding payload."""
     emb = load(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")

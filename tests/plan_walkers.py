@@ -126,3 +126,21 @@ def nested_loop_join_count(plan) -> int:
         for j in range(node.children().length()):
             stack.append(node.children().apply(j))
     return count
+
+
+def exchange_count(plan) -> int:
+    """Shuffle and broadcast Exchange nodes of a physical plan, read
+    through the AQE wrapper and into subquery plans. A cached frame is
+    an InMemoryTableScan leaf: its lineage is not counted."""
+    count = 0
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name in ("Exchange", "BroadcastExchange"):
+            count += 1
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        for seq in (node.children(), node.subqueries()):
+            stack += [seq.apply(j) for j in range(seq.length())]
+    return count

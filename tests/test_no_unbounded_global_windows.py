@@ -20,6 +20,14 @@
    anywhere — or one more in an audited query — fails; when a
    refactor removes one, ratchet the number DOWN here.
 
+3. Exchange RATCHET for the bench headliners: each ``bench.HEADLINE``
+   qid's shuffle + broadcast Exchange count in its ``executedPlan()``
+   (the AQE initial plan and its subqueries; a cached frame counts as
+   its InMemoryTableScan leaf) is pinned exactly. At sf0.1 every
+   exchange costs a stage materialization (~0.5 s) whatever its
+   bytes, so a new one is a cost to justify, and a removed one is
+   ratcheted DOWN here.
+
 Builder errors fail loudly — a query these tests cannot plan is not
 covered (r06 review)."""
 
@@ -28,10 +36,12 @@ from __future__ import annotations
 import pytest
 from plan_walkers import (
     cartesian_product_count,
+    exchange_count,
     nested_loop_join_count,
     unbounded_global_windows_in,
 )
 
+from bench import HEADLINE
 from metoffice_spark.registry import all_queries
 
 # qid -> required substring per justified global window, matched
@@ -106,22 +116,72 @@ _NLJ_RATCHET = {
     "q_ts_seasonal_profile": 1,
 }
 
+# bench.HEADLINE qid -> Exchange count of its executedPlan() at sf_smoke
+# (see module docstring)
+_EXCHANGE_RATCHET = {
+    "q_sink_http_form": 4,
+    "q_rain_daily_delta": 4,
+    "q_agg_hash": 2,
+    "q_join_shuffle": 2,
+    "q_join_broadcast": 2,
+    "q_olap_local_supplier": 6,
+    "q_merge_upsert": 3,
+    "q_rollup_hypertable": 5,
+    "q_win_rank": 1,
+    "q_dedup_exact": 1,
+    "q_dedup_fuzzy": 6,
+    "q_sim_search_lsh": 2,
+    "q_sim_search_ivf": 10,
+    "q_ann_pq": 10,
+    "q_text_analysis": 2,
+    "q_topk_twophase": 2,
+    "q_graph_pagerank": 6,
+    "q_funnel_steps": 3,
+    "q_scd2_build": 1,
+    "q_interval_sweep": 1,
+    "q_nb_langid": 18,
+    "q_dedup_lines": 4,
+    "q_attribution": 2,
+    "q_sketch_setops": 5,
+    "q_behavior_e2e": 2,
+    "q_olap_volume_shipping": 7,
+    "q_olap_waiting_supplier": 8,
+    "q_graph_jaccard": 11,
+    "q_text_keyphrase": 5,
+    "q_graph_bfs": 2,
+    "q_time_weighted_avg": 1,
+    "q_olap_scalar_subquery": 6,
+    "q_olap_min_cost_supp": 12,
+}
+
 
 @pytest.fixture(scope="module")
-def registry_plans(spark, sf_smoke):
-    """One physical plan per registered query (streaming excluded:
+def registry_builds(spark, sf_smoke):
+    """One QueryExecution per registered query (streaming excluded:
     building one RUNS the replay, and its sink-read plan is a bare
-    parquet scan). Builder failures fail here, visibly."""
-    plans, errors = {}, {}
+    parquet scan), its physical plan forced at build time, while the
+    query's scoped persists are still cached; for the bench headliners
+    the executedPlan too. Builder failures fail here, visibly."""
+    builds, errors = {}, {}
     for qid, fn in all_queries().items():
         if qid.startswith("q_stream_"):
             continue
         try:
-            plans[qid] = fn(spark, sf_smoke)._jdf.queryExecution().sparkPlan()
+            qe = fn(spark, sf_smoke)._jdf.queryExecution()
+            qe.sparkPlan()
+            if qid in HEADLINE:
+                qe.executedPlan()
+            builds[qid] = qe
         except Exception as e:  # noqa: BLE001 - report, don't skip
             errors[qid] = f"{type(e).__name__}: {e}"
     assert errors == {}, f"builders failed to plan: {errors}"
-    return plans
+    return builds
+
+
+@pytest.fixture(scope="module")
+def registry_plans(registry_builds):
+    """One physical plan per registered query (see registry_builds)."""
+    return {qid: qe.sparkPlan() for qid, qe in registry_builds.items()}
 
 
 def test_no_registered_query_plans_an_unbounded_global_window(registry_plans):
@@ -193,6 +253,14 @@ def test_nested_loop_join_ratchet(registry_plans):
     assert offenders == {}, (
         "nested-loop count changed (audit, then fix the plan or "
         f"re-pin the ratchet consciously): {offenders}"
+    )
+
+
+def test_headline_exchange_ratchet(registry_builds):
+    counts = {qid: exchange_count(registry_builds[qid].executedPlan()) for qid in HEADLINE}
+    assert counts == _EXCHANGE_RATCHET, (
+        "exchange count changed (fix the plan, or re-pin consciously: "
+        "down freely, up only with a comment that justifies it)"
     )
 
 

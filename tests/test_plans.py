@@ -117,7 +117,7 @@ def test_rollup_is_one_grouping_sets_aggregate(spark, sf_smoke):
 
 
 def test_rollup_build_runs_no_jobs(spark, sf_smoke):
-    """Plan-only consumers (audit_plans, the walker tests) build every
+    """Plan-only consumers (the plan-walker tests) build every
     query's frame, so building the rollup must not execute its
     aggregation; the first collect then runs it in one pass."""
     from metoffice_spark.operators.rain import q_rollup_hypertable

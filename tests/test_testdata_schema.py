@@ -125,21 +125,24 @@ def test_events_loader_is_schema_adaptive(spark):
 
 def test_table_schema_independent_of_load_order(spark, tmp_path):
     """A table's schema must not depend on which tables were loaded
-    before it. A session conf that only an ``events`` load applied
-    (parquet nanosAsLong) used to turn a later TIMESTAMP(NANOS) column
-    of another table from a read error into a bigint."""
+    before it, and a TIMESTAMP(NANOS) column of ANY table loads as a
+    timestamp truncated to µs (as DuckDB reads it), not as raw
+    nanoseconds in a bigint."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
 
     from metoffice_spark.session import tune
 
-    ts = pa.array([0, 86_400 * 10**9], pa.timestamp("ns"))
+    ns = [0, 86_400 * 10**9 + 1_999, -1_500]
     pq.write_table(
-        pa.table({"o_orderkey": pa.array([1, 2], pa.int64()), "o_orderdate": ts}),
+        pa.table({"o_orderkey": pa.array([1, 2, 3], pa.int64()),
+                  "o_orderdate": pa.array(ns, pa.timestamp("ns"))}),
         tmp_path / "orders.parquet",
     )
     pq.write_table(
-        pa.table({"station_id": ["s1", "s2"], "ts": ts.cast(pa.timestamp("us"))}),
+        pa.table({"station_id": ["s1", "s2"],
+                  "ts": pa.array([0, 86_400 * 10**6], pa.timestamp("us"))}),
         tmp_path / "events.parquet",
     )
     # a fresh session: the conf unset, then the package's tuning
@@ -147,7 +150,13 @@ def test_table_schema_independent_of_load_order(spark, tmp_path):
     tune(spark)
     before = load(spark, str(tmp_path), "orders").schema
     load(spark, str(tmp_path), "events")
-    assert load(spark, str(tmp_path), "orders").schema == before
+    orders = load(spark, str(tmp_path), "orders")
+    assert orders.schema == before
+    assert isinstance(orders.schema["o_orderdate"].dataType, TimestampType)
+    got = [r[0] for r in orders.orderBy("o_orderkey").selectExpr("unix_micros(o_orderdate)").collect()]
+    # pyarrow's own ns -> µs cast, which truncates toward zero
+    want = pa.array(ns, pa.timestamp("ns")).cast(pa.timestamp("us"), safe=False)
+    assert got == want.cast(pa.int64()).to_pylist()
 
 
 def test_loader_tz_safety_under_non_utc_session(spark, sf_smoke):

@@ -1,0 +1,48 @@
+"""The measuring tools under ``tools/``: the A/B harness's run order and
+an end-to-end run of ``tools/measure.py``."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+
+def test_bench_ab_alternates_the_leader(monkeypatch, capsys):
+    import bench_ab
+
+    ran: list[str] = []
+
+    def fake_run_once(tree: str) -> dict:
+        ran.append(tree)
+        return {"value": 1.0, "queries": {"q": 1.0}}
+
+    monkeypatch.setattr(bench_ab, "run_once", fake_run_once)
+    bench_ab.main(["A:/a", "B:/b", "4"])
+    assert ran == ["/a", "/b", "/b", "/a", "/a", "/b", "/b", "/a"]
+    leaders = [ln.rsplit("leader ", 1)[1] for ln in capsys.readouterr().out.splitlines()
+               if ln.startswith("rep ")]
+    assert leaders == ["A)", "A)", "B)", "B)", "A)", "A)", "B)", "B)"]
+
+
+def test_measure_reports_one_record_per_qid(sf_smoke):
+    env = dict(os.environ, PYTHONPATH=ROOT, SPARK_GRAFT_CPUS="2")
+    proc = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "measure.py"), sf_smoke, "q_sink_http_form"],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    (line,) = proc.stdout.strip().splitlines()
+    record = json.loads(line)
+    assert {
+        "qid", "wall_s", "error", "spark.jobs", "spark.stages", "spark.tasks",
+        "spark.executor_run_s", "spark.executor_cpu_s", "spark.driver_gap_s",
+        "shuffle.read_bytes", "shuffle.write_bytes", "shuffle.spill_bytes",
+        "plan.exchanges", "python.eval_s", "plan.scans", "plan.joins", "plan.windows",
+    } <= set(record)
+    assert record["qid"] == "q_sink_http_form" and record["error"] is None
+    assert record["spark.jobs"] > 0

@@ -1,12 +1,13 @@
-"""Interleaved A/B bench harness (VERDICT r09 item 3): run two
-checked-out trees' bench.py ALTERNATELY, cold process each rep, under
-the driver's invocation (default env, sf0.1, local[32]), and print
-per-tree totals + the median ratio.
+"""Interleaved A/B bench harness: run two checked-out trees' bench.py
+ALTERNATELY, cold process each rep, as bench.py runs by default
+(default env, sf0.1, local[32]), and print per-tree totals + the
+median ratio.
 
 Interleaving is the point — a monolithic "all A then all B" sweep
 confounds tree identity with machine drift (page cache, thermal,
-co-tenant load), which is exactly the confound that made the r09
-driver 3-rep read 1.26x while the same HEAD's 5-rep read 0.88x.
+co-tenant load). The leader alternates too (A,B then B,A): on a
+shared 4-vCPU host the tree that ran second in a pair measured ~12 %
+slower across untouched queries. Each rep line names its leader.
 
     python tools/bench_ab.py LABEL_A:/path/a LABEL_B:/path/b [reps]
 """
@@ -31,10 +32,10 @@ def run_once(tree: str) -> dict:
     return json.loads(line)
 
 
-if __name__ == "__main__":
+def main(argv: list[str]) -> None:
     specs = []
     reps = 3
-    for a in sys.argv[1:]:
+    for a in argv:
         if a.isdigit():
             reps = int(a)
         else:
@@ -46,11 +47,13 @@ if __name__ == "__main__":
     totals: dict[str, list[float]] = {lab: [] for lab, _ in specs}
     queries: dict[str, list[dict]] = {lab: [] for lab, _ in specs}
     for rep in range(reps):
-        for label, path in specs:
+        order = specs if rep % 2 == 0 else specs[::-1]
+        for label, path in order:
             r = run_once(path)
             totals[label].append(r["value"])
             queries[label].append(r["queries"])
-            print(f"rep {rep + 1} {label:10s} {r['value']:8.3f} s", flush=True)
+            print(f"rep {rep + 1} {label:10s} {r['value']:8.3f} s  (leader {order[0][0]})",
+                  flush=True)
 
     (la, _), (lb, _) = specs
     ma, mb = statistics.median(totals[la]), statistics.median(totals[lb])
@@ -71,3 +74,7 @@ if __name__ == "__main__":
         f"per-query median of ratios: "
         f"{statistics.median(r for r, _ in ratios):.3f}"
     )
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])

@@ -1,0 +1,159 @@
+"""Measure what each query did: one JSON record per qid on stdout.
+
+    PYTHONPATH=. python tools/measure.py [sf_dir] [qid ...]
+
+Runs each qid (default: ``bench.HEADLINE``) once through the noop sink
+in one ``session.get_spark()`` session with the Spark event log on.
+Each run is a ``perfbench/layers.py`` Tracer span named after the qid,
+with ``build:`` and ``exec:`` children, so its jobs, stages and SQL
+executions are attributed to it. After the session stops, the event
+log gives every counter ``layers.span_counters`` reports (jobs, stages,
+tasks, executor run/CPU time, shuffle bytes, spill, Python-eval time,
+exchanges in the final AQE plan, driver gap), plus counts of scans,
+joins by strategy and windows from the node names of that same final
+plan. ``q_stream_*`` qids add the setup / stream / read-back split and
+each micro-batch's progress, from ``layers.StreamEvents``.
+
+A qid that fails is recorded with its error and the run goes on.
+PYTHONPATH must name the repo root: Spark's Python workers import
+``metoffice_spark`` by name. Progress goes to stderr.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import json
+import os
+import shlex
+import shutil
+import sys
+import tempfile
+from datetime import datetime
+
+from bench import HEADLINE
+from metoffice_spark.io import DEFAULT_SF_DIR
+from metoffice_spark.registry import all_queries
+from metoffice_spark.session import get_spark
+from perfbench.layers import StreamEvents, Tracer, read_eventlog, span_counters
+
+_STATE_KEYS = (
+    "operatorName", "numRowsTotal", "numRowsUpdated",
+    "allUpdatesTimeMs", "allRemovalsTimeMs", "commitTimeMs", "memoryUsedBytes",
+)
+
+
+def plan_shape(plans: list[dict]) -> dict:
+    """Scan, join (by strategy) and window counts of event-log plans."""
+    shape = {"plan.scans": 0, "plan.joins": {}, "plan.windows": 0}
+    stack = list(plans)
+    while stack:
+        node = stack.pop()
+        stack += node["children"]
+        name = node["nodeName"]
+        if name.startswith("Scan "):
+            shape["plan.scans"] += 1
+        elif name == "Window":
+            shape["plan.windows"] += 1
+        elif name.endswith("Join") or name == "CartesianProduct":
+            shape["plan.joins"][name] = shape["plan.joins"].get(name, 0) + 1
+    return shape
+
+
+def stream_split(events: list, root: dict) -> dict:
+    """Setup (span start to the first stream's start), stream (to the
+    end of the last micro-batch) and read-back (to the span's end) of
+    the streams started inside ``root``, and their batches. The edges
+    are the JVM's event timestamps: the listener's receipt times lag
+    the events by up to a few hundred ms."""
+    starts = {r: _epoch(body["timestamp"]) for k, _, r, body in events if k == "started"}
+    runs = {r for r, t in starts.items() if root["start"] <= t <= root["end"]}
+    if not runs:
+        return {}
+    progress = [p for k, _, r, p in events if k == "progress" and r in runs]
+    started = min(starts[r] for r in runs)
+    ended = max((_epoch(p["timestamp"]) + p["durationMs"]["triggerExecution"] / 1e3
+                 for p in progress), default=started)
+    return {
+        "stream.setup_s": round(started - root["start"], 3),
+        "stream.run_s": round(ended - started, 3),
+        "stream.readback_s": round(root["end"] - ended, 3),
+        "stream.progress": [
+            {
+                "batchId": p.get("batchId"),
+                "numInputRows": p.get("numInputRows"),
+                "durationMs": p["durationMs"],
+                "stateOperators": [{k: so.get(k) for k in _STATE_KEYS}
+                                   for so in p.get("stateOperators", [])],
+            }
+            for p in progress
+        ],
+    }
+
+
+def _epoch(iso: str) -> float:
+    return datetime.fromisoformat(iso).timestamp()
+
+
+def main() -> None:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
+    reg = all_queries()
+    qids = list(dict.fromkeys(sys.argv[2:] or HEADLINE))
+    unknown = [q for q in qids if q not in reg]
+    if unknown:
+        sys.exit(f"unknown qid(s): {unknown} — not in the registry")
+
+    log_dir = tempfile.mkdtemp(prefix="measure-eventlog-")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--conf", "spark.eventLog.enabled=true",
+        "--conf", "spark.eventLog.compress=false",
+        "--conf", "spark.eventLog.rolling.enabled=false",
+        "--conf", f"spark.eventLog.dir=file://{log_dir}",
+        "pyspark-shell",
+    ])
+    spark = get_spark("metoffice-measure")
+    tracer, stream = Tracer(), StreamEvents()
+    spark.streams.addListener(stream.listener())
+    with contextlib.suppress(Exception):  # JVM warm-up, outside every span
+        reg[qids[0]](spark, sf_dir).limit(1).collect()
+    tracer.spark_context = spark.sparkContext
+
+    errors: dict[str, str] = {}
+    for qid in qids:
+        with tracer.span(qid) as root:
+            try:
+                with tracer.span(f"build:{qid}"):
+                    df = reg[qid](spark, sf_dir)
+                with tracer.span(f"exec:{qid}"):
+                    df.write.format("noop").mode("overwrite").save()
+            except Exception as exc:  # noqa: BLE001 - record it, run the rest
+                errors[qid] = f"{type(exc).__name__}: {exc}"
+        wall = root["end"] - root["start"]
+        print(f"{qid}: {'FAILED ' + errors[qid] if qid in errors else f'{wall:.3f} s'}",
+              file=sys.stderr, flush=True)
+    stream.wait_terminated()
+    spark.stop()
+
+    try:
+        (log_file,) = os.listdir(log_dir)
+        log = read_eventlog(os.path.join(log_dir, log_file))
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    for root in (s for s in tracer.spans if s["parent"] is None):
+        qid = root["name"]
+        ids = {s["id"] for s in tracer.spans if root["id"] in (s["id"], s["parent"])}
+        # the owner rule of span_counters: a span's job group, else the
+        # innermost span open when the execution started (stream batches)
+        plans = [x["plan"] for x in log["execs"].values()
+                 if (int(x["group"][5:]) if (x["group"] or "").startswith("span-")
+                     else tracer.innermost(x["time"])) in ids]
+        record = {"qid": qid, "wall_s": round(root["end"] - root["start"], 3),
+                  "error": errors.get(qid)}
+        (counters,) = span_counters(tracer, log, qid)
+        record.update(counters)
+        record.update(plan_shape(plans))
+        record.update(stream_split(stream.events, root))
+        print(json.dumps(record))
+
+
+if __name__ == "__main__":
+    main()

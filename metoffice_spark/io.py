@@ -8,10 +8,9 @@ the same reader handles via partition discovery.
 
 from __future__ import annotations
 
+import functools
 import os
 
-import pyarrow as pa
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
@@ -36,23 +35,44 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _stamp(path: str) -> tuple[int, int]:
+    st = os.stat(path)
+    return st.st_mtime_ns, st.st_size
+
+
+@functools.lru_cache(maxsize=None)
+def _nanos_columns(path: str, stamp: tuple[int, int]) -> tuple[str, ...]:
+    """The parquet TIMESTAMP(NANOS) columns of ``path``, from the
+    file's own schema (footer only, no Spark job).
+
+    Timestamp columns have shipped as both TIMESTAMP(NANOS) and
+    timestamp[us]. The session reads NANOS as LongType
+    (spark.sql.legacy.parquet.nanosAsLong in session._RUNTIME_CONF), so
+    only the footer tells such a column from a plain long. The answer is
+    kept per file version (``stamp``: mtime and size), so repeated loads
+    of one table read no footer and stay off the query's hot path."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    return tuple(
+        f.name
+        for f in ds.dataset(path, format="parquet").schema
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    )
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = table_path(sf_dir, name)
     df = spark.read.parquet(path)
-    # Timestamp columns have shipped as both parquet TIMESTAMP(NANOS)
-    # and timestamp[us]. The session reads NANOS as LongType
-    # (spark.sql.legacy.parquet.nanosAsLong in session._RUNTIME_CONF),
-    # so the file's own schema (footer only, no Spark job) names those
-    # columns; each is truncated ns→µs into a timestamp, the same
-    # truncation DuckDB applies, so oracle parity holds.
     nanos = {
-        f.name: F.expr(f"timestamp_micros(`{f.name}` div 1000)")
-        for f in ds.dataset(path, format="parquet").schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        c: F.expr(f"timestamp_micros(`{c}` div 1000)")
+        for c in _nanos_columns(path, _stamp(path))
     }
     if nanos:
+        # Truncated ns→µs, the same truncation DuckDB applies, so
+        # oracle parity holds.
         df = df.withColumns(nanos)
     if name == "events" and isinstance(df.schema["ts"].dataType, TimestampNTZType):
         # Session TZ is pinned UTC (session.py), so NTZ→LTZ is

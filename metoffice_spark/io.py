@@ -3,7 +3,9 @@
 Scans are plain ``spark.read.parquet`` so Catalyst's DSv2 path gives
 predicate pushdown, column pruning, and partition pruning for free —
 the 100 TB layout assumption is date/key-partitioned parquet, which
-the same reader handles via partition discovery.
+the same reader handles via partition discovery. A repeated load of
+one file version passes the schema inferred the first time, so only
+the first load runs Spark's schema-inference job.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.types import StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -61,14 +63,28 @@ def _nanos_columns(path: str, stamp: tuple[int, int]) -> tuple[str, ...]:
     )
 
 
+# Spark's inferred schema per (path, file version, nanosAsLong value).
+# Inference runs a one-task Spark job over the footers; a repeated load
+# of one file version passes the schema back and runs none. The conf is
+# part of the key, because it decides how a NANOS column reads.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
+    stamp = _stamp(path)
+    key = (path, stamp, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     nanos = {
         c: F.expr(f"timestamp_micros(`{c}` div 1000)")
-        for c in _nanos_columns(path, _stamp(path))
+        for c in _nanos_columns(path, stamp)
     }
     if nanos:
         # Truncated ns→µs, the same truncation DuckDB applies, so

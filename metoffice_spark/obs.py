@@ -35,9 +35,15 @@ each sorting 1/4 of all rows. Instead the counter is composed from
      over ~stations x days rows — negligible);
   4. a within-day running sum windowed by (station_id, day) — the sort
      is local to one day of one station, the natural date-partitioned
-     parquet layout at 100 TB.
+     parquet layout at 100 TB. It is computed over ``ev`` before the
+     join (``ev_run``), so its (station_id, day) shuffle reads the scan
+     directly and runs beside the day-total chain instead of waiting
+     for the broadcast of its result.
 
-The day-offset join broadcasts (day_off is tiny). The final value
+The day-offset join broadcasts (day_off is tiny) and is 1:1 on
+(station, day), so it keeps the rows and the (station_id, day)
+partitioning of ``ev_run``: downstream (station, day) windows add no
+exchange. The final value
 ``(prior_days + within_day) / 100.0`` is bit-identical to the old
 whole-history form because the integer totals are < 2^53.
 
@@ -146,6 +152,14 @@ day_off AS (
                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
            - day_sum                                 AS prior_days_sum
   FROM day_tot
+),
+ev_run AS (
+  SELECT *,
+         SUM(rain_incr) OVER (PARTITION BY station_id, day
+                              ORDER BY ts, obs_id
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                                                     AS day_run
+  FROM ev
 )
 SELECT
   e.station_id                                       AS station_id,
@@ -159,16 +173,12 @@ SELECT
         ELSE e.value - floor(e.value / 20) * 20 END)
       * 1.3 + 1.0                                    AS windgust_ms,
   CAST(e.obs_id % 16 AS INT)                         AS winddir_sector,
-  CAST(d.prior_days_sum
-       + SUM(e.rain_incr) OVER (PARTITION BY e.station_id, e.day
-                                ORDER BY e.ts, e.obs_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-       AS DOUBLE) / 100.0                            AS rain_counter_mm,
+  CAST(d.prior_days_sum + e.day_run AS DOUBLE) / 100.0 AS rain_counter_mm,
   CASE WHEN e.event_type = 'signup' THEN e.ts - INTERVAL 1 DAY
        ELSE e.ts END                                 AS rain_sensor_ts,
   975.0 + (e.value - floor(e.value / 50) * 50)       AS pressure_site_hpa,
   e.day                                              AS day
-FROM ev e
+FROM ev_run e
 JOIN day_off d ON e.station_id = d.station_id AND e.day = d.day
 """
 

@@ -36,15 +36,26 @@ _RUNTIME_CONF = {
     # governs the split and this knob only affects the small-file
     # tail, packing fewer tiny files per task.
     "spark.sql.files.openCostInBytes": "131072",
+    # The post-shuffle twin of openCostInBytes. With parallelismFirst
+    # (the default) AQE coalesces a shuffle toward defaultParallelism
+    # partitions, but never below minPartitionSize (default 1 MB) each.
+    # The WOW payload stage reads a 1.5-3.3 MB shuffle, so it ran as
+    # 1-2 tasks and left the other cores idle. At 64 KB it runs one
+    # task per core, and tiny shuffles (the day-total aggregate) still
+    # collapse to one partition. At the 100 TB design point shuffle
+    # partitions are far above 1 MB, so this knob only affects small
+    # shuffles.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "65536",
     # HotSpot never JIT-compiles a method over 8,000 bytes of bytecode
     # (-XX:+DontCompileHugeMethods), so a fused whole-stage method past
     # that size runs in the bytecode interpreter on every row. The WOW
-    # payload stage (q_sink_http_form: 13 fixed_str_sql expansions) fuses
-    # into one 17,685-byte method. At this limit Spark runs such a stage
-    # unfused, with its projections split into small compiled methods.
-    # Publishing 50,000 rows on a 4-vCPU host, the payload stage fell
-    # from ~1.3 s to ~0.45 s and executor CPU from ~2.75 s to ~1.0 s.
-    # Plans and rows are unchanged.
+    # payload stage (q_sink_http_form: the rain windows, the derived
+    # values and 8 fixed_str_sql roundings) fuses into one 11,317-byte
+    # method, q_negative_sample's largest subtree into 8,218 bytes. At
+    # this limit Spark runs such a stage unfused, with its projections
+    # split into small compiled methods. Publishing 50,000 rows on a
+    # 4-vCPU host, the payload stage ran ~3x faster unfused than
+    # interpreted. Plans and rows are unchanged.
     "spark.sql.codegen.hugeMethodLimit": "8000",
 }
 

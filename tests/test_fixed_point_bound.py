@@ -133,6 +133,36 @@ def test_formula_constants_written_in_one_module():
     )
 
 
+def test_wow_payload_expands_each_formula_once():
+    """The payload rounds named columns of its ``derived`` CTE, so each
+    formula is written once in the text Spark parses and analyses.
+    ``fixed_str_sql`` repeats its argument six times: rounding the
+    formula itself would put six copies of it into the text."""
+    from metoffice_spark.functions.weather import (
+        DEWPOINT_SQL,
+        SLP_SQL,
+        WG_CORR_SQL,
+        WS_CORR_SQL,
+    )
+    from metoffice_spark.operators.ingest import (
+        _WOW_PAYLOAD_SPARK_SQL,
+        ORACLE_SINK_HTTP_FORM,
+    )
+    from metoffice_spark.operators.rain import _RAIN_DAILY_SQL, _RAIN_RATE_SQL
+
+    formulas = {
+        "DEWPOINT_SQL": DEWPOINT_SQL,
+        "SLP_SQL": SLP_SQL,
+        "WS_CORR_SQL": WS_CORR_SQL,
+        "WG_CORR_SQL": WG_CORR_SQL,
+        "_RAIN_DAILY_SQL": _RAIN_DAILY_SQL,
+        "_RAIN_RATE_SQL": _RAIN_RATE_SQL,
+    }
+    for text in (_WOW_PAYLOAD_SPARK_SQL, ORACLE_SINK_HTTP_FORM):
+        counts = {name: text.count(f) for name, f in formulas.items()}
+        assert counts == dict.fromkeys(formulas, 1), counts
+
+
 def test_bound_is_scale_aware():
     # d <= 6: the flat bound, textually unchanged ('9.0e12' everywhere)
     for d in (0, 1, 2, 3, 4, 6):

@@ -132,8 +132,9 @@ def test_rollup_build_runs_no_jobs(spark, sf_smoke):
     sc.setJobGroup("rollup-build-probe", "plan-only build")
     df = q_rollup_hypertable(spark, sf_smoke)
     build_jobs = tracker.getJobIdsForGroup("rollup-build-probe")
-    # read.parquet's footer/listing job is inherent to every builder;
-    # running the aggregation at build time would add several more.
+    # The first load of a table runs read.parquet's schema job (io.load
+    # keeps the schema after it); running the aggregation at build time
+    # would add several more.
     assert len(build_jobs) <= 2, (
         f"building the rollup frame ran {len(build_jobs)} jobs"
     )
@@ -203,6 +204,46 @@ def test_obs_substrate_single_full_data_exchange(spark, sf_smoke):
     # one (station, day) exchange over events + one over the tiny
     # day_tot aggregate — never a third for the rain-state windows
     assert len(full) <= 2, full
+
+
+def _subtree_lines(lines: list[str], i: int) -> list[str]:
+    """The tree-string lines of the node on line ``i`` and of every
+    node below it."""
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out = [lines[i]]
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_obs_events_shuffle_reads_the_scan(spark, sf_smoke):
+    """The substrate's within-day running sum is computed before the
+    day-offset join, so its (station_id, day) shuffle of ``events``
+    reads the scan and runs beside the day-total chain. Above the
+    broadcast join it could start only after the day-offset table had
+    been aggregated, windowed and broadcast."""
+    import re
+
+    from metoffice_spark import registry
+
+    df = registry.all_queries()["q_sink_http_form"](spark, sf_smoke)
+    plan = _plan(df)
+    lines = plan.splitlines()
+    shuffles = [
+        i
+        for i, ln in enumerate(lines)
+        if re.search(r"Exchange hashpartitioning\(station_id#\d+, day#\d+,", ln)
+    ]
+    assert shuffles, "no (station_id, day) shuffle in the plan"
+    for i in shuffles:
+        below = _subtree_lines(lines, i)
+        assert not any("BroadcastHashJoin" in ln for ln in below), "\n".join(below)
+    assert "BroadcastHashJoin" in plan
 
 
 def test_join_bucketed_has_no_join_key_exchange(spark, sf_smoke):
@@ -675,7 +716,7 @@ def test_fused_stage_methods_fit_the_jit(qid, spark, sf_smoke):
     ``WholeStageCodegenExec.doExecute``). The generated code itself
     does not depend on that conf, so a subtree over the JIT limit is
     acceptable only if it is also over the session's limit.
-    These two qids fuse methods of 17,685 and 8,218 bytes."""
+    These two qids fuse methods of 11,317 and 8,218 bytes."""
     from metoffice_spark import registry
 
     df = registry.all_queries()[qid](spark, sf_smoke)

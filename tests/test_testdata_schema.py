@@ -159,6 +159,21 @@ def test_table_schema_independent_of_load_order(spark, tmp_path):
     assert got == want.cast(pa.int64()).to_pylist()
 
 
+def test_repeated_load_runs_no_spark_job(spark, sf_smoke):
+    """Spark infers a parquet schema with a one-task job over the
+    footers. ``load`` keeps the inferred schema per file version, so a
+    second load of one table runs no job at all."""
+    sc = spark.sparkContext
+    first = load(spark, sf_smoke, "events")
+    sc.setJobGroup("repeat-load-probe", "second load")
+    try:
+        again = load(spark, sf_smoke, "events")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("repeat-load-probe") == []
+    assert again.schema == first.schema
+
+
 def test_loader_tz_safety_under_non_utc_session(spark, sf_smoke):
     """The events loader casts TIMESTAMP_NTZ to session-TZ timestamp;
     that is only value-correct because the registry repins UTC (via

@@ -50,22 +50,16 @@ whole-history form because the integer totals are < 2^53.
 Only dialect-common constructs are used: CAST, CASE WHEN, floor,
 window SUM with ROWS frame, JOIN ON, INTERVAL 1 DAY, nested CTEs.
 
-Reading-validity boundary (r07 null-value fuzz finding; extended to
-the timestamp by the r08 null-ts probe, to NON-FINITE readings by
-the r10 extreme-value probe, to OUT-OF-HORIZON timestamps by the
-r11 epoch0/tsfar probe — see OBS_TIME_MIN/MAX below — and to
-HUGE-FINITE readings by the r12 kind=huge probe): a NULL ``value``
-is a FAILED sensor reading, a NULL ``ts`` is an UNPLACEABLE one, a
-NaN/±Inf OR huge-finite (|value| >= 9.0e12, the repo-wide
-FIXED_POINT_MAX — a magnitude no physical sensor word reaches, at
-which Spark's floor->LONG saturates SILENTLY where DuckDB's cast
-raises, see parity.py) ``value`` is a CORRUPT one, and a
-sentinel-dated ``ts`` is a POISONED one — none produces an
-observation (``WHERE value IS NOT
-NULL AND ts IS NOT NULL AND abs(value) < 9.0e12`` in
-the ev CTE; the abs-compare doubles as the dialect-common isfinite —
-both engines order NaN above +Inf above every finite, so one
-predicate excludes NaN, ±Inf, and huge-finite words alike),
+Reading-validity boundary: a NULL ``value`` is a FAILED sensor
+reading, a NULL ``ts`` is an UNPLACEABLE one, a NaN/±Inf OR
+huge-finite ``value`` (one that fails ``parity.fits_sql``, a
+magnitude no physical sensor word reaches, at which Spark's
+floor->LONG saturates SILENTLY where DuckDB's cast raises) is a
+CORRUPT one, and a ``ts`` outside OBS_TIME_MIN/MAX (below) is a
+POISONED one — none produces an observation (the WHERE of the ev
+CTE; the ``fits_sql`` abs-compare doubles as the dialect-common
+isfinite — both engines order NaN above +Inf above every finite, so
+one predicate excludes NaN, ±Inf, and huge-finite words alike),
 mirroring the reference's own non-numeric-reading guard
 (MWC:181-183) and its dated-row cadence assumption (MWC:34-39: every
 observation IS a 15-minute slot; a row that cannot be placed on the
@@ -108,6 +102,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from metoffice_spark.io import load
+from metoffice_spark.parity import fits_sql
 
 # TIME-BOUNDS validity horizon (r11, the watermark-poisoning fix):
 # an observation stamped outside [TIME_MIN, TIME_MAX) is a corrupt
@@ -137,7 +132,7 @@ WITH ev AS (
               ELSE CAST(0 AS BIGINT) END             AS rain_incr
   FROM events
   WHERE value IS NOT NULL AND ts IS NOT NULL
-    AND abs(value) < 9.0e12
+    AND {fits_sql("value")}
     AND ts >= TIMESTAMP '{OBS_TIME_MIN}'
     AND ts < TIMESTAMP '{OBS_TIME_MAX}'
 ),

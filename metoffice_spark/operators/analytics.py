@@ -27,25 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
+from metoffice_spark.operators.relational import _DISC_PRICE
+from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
-
-
-def _rev_cents(price: str = "l_extendedprice", disc: str = "l_discount"):
-    # non-finite guard (r10 extreme-value probe): NaN/±Inf money is an
-    # invalid measurement — NULL cents (sums skip it identically in
-    # both engines) instead of a BIGINT-cast crash under ANSI
-    rev = F.col(price) * (F.lit(1.0) - F.col(disc))
-    return F.when(
-        F.abs(rev) < F.lit(9.0e12),
-        F.floor(rev * F.lit(100.0) + F.lit(0.5)).cast("bigint"),
-    )
-
-
-_REV_CENTS_SQL = (
-    "CASE WHEN abs(l_extendedprice * (1.0 - l_discount)) < 9.0e12"
-    " THEN CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0 + 0.5)"
-    " AS BIGINT) END"
-)
 
 
 # --- Q3 shape: shipping priority ---------------------------------------------
@@ -66,7 +50,7 @@ def q_olap_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
     )
     agg = joined.groupBy("l_orderkey", "o_orderdate").agg(
-        F.sum(_rev_cents()).alias("rev_cents")
+        F.sum(F.expr(cents_sql(_DISC_PRICE))).alias("rev_cents")
     )
     return (
         agg.select(
@@ -81,7 +65,7 @@ def q_olap_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_OLAP_SHIPPING_PRIORITY = f"""
 SELECT l_orderkey, o_orderdate,
-       sum({_REV_CENTS_SQL}) / 100.0 AS revenue
+       sum({cents_sql(_DISC_PRICE)}) / 100.0 AS revenue
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -124,13 +108,13 @@ def q_olap_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         joined.groupBy("n_name")
-        .agg(F.sum(_rev_cents()).alias("rev_cents"))
+        .agg(F.sum(F.expr(cents_sql(_DISC_PRICE))).alias("rev_cents"))
         .select("n_name", (F.col("rev_cents") / F.lit(100.0)).alias("revenue"))
     )
 
 
 ORACLE_OLAP_LOCAL_SUPPLIER = f"""
-SELECT n_name, sum({_REV_CENTS_SQL}) / 100.0 AS revenue
+SELECT n_name, sum({cents_sql(_DISC_PRICE)}) / 100.0 AS revenue
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -164,7 +148,7 @@ def q_olap_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
     )
     agg = joined.groupBy("c_custkey", "c_name", "c_acctbal", "n_name").agg(
-        F.sum(_rev_cents()).alias("rev_cents")
+        F.sum(F.expr(cents_sql(_DISC_PRICE))).alias("rev_cents")
     )
     return (
         agg.select(
@@ -181,7 +165,7 @@ def q_olap_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_OLAP_RETURNED_ITEMS = f"""
 SELECT c_custkey, c_name, c_acctbal, n_name,
-       sum({_REV_CENTS_SQL}) / 100.0 AS revenue
+       sum({cents_sql(_DISC_PRICE)}) / 100.0 AS revenue
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -300,7 +284,7 @@ def q_percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB, shifting every percentile index.
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
-        & (F.abs(F.col("value")) < F.lit(9.0e12))
+        & F.expr(fits_sql("value"))
     ).select(
         "event_type",
         "event_id",
@@ -328,7 +312,7 @@ def q_percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PERCENTILE_EXACT = """
+ORACLE_PERCENTILE_EXACT = f"""
 WITH ranked AS (
   SELECT event_type,
          CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_fp,
@@ -336,7 +320,7 @@ WITH ranked AS (
            CAST(floor(value * 1000 + 0.5) AS BIGINT), event_id) AS rn,
          count(*) OVER (PARTITION BY event_type) AS n
   FROM events
-  WHERE value IS NOT NULL AND abs(value) < 9.0e12
+  WHERE value IS NOT NULL AND {fits_sql("value")}
 )
 SELECT event_type,
        CAST(max(n) AS BIGINT) AS n,
@@ -639,7 +623,7 @@ def q_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distribution points.
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
-        & (F.abs(F.col("value")) < F.lit(9.0e12))
+        & F.expr(fits_sql("value"))
     ).select(
         "event_type",
         "event_id",
@@ -708,7 +692,7 @@ WITH ranked AS (
                                      event_id) AS rn,
          count(*) OVER (PARTITION BY event_type) AS n
   FROM events
-  WHERE value IS NOT NULL AND abs(value) < 9.0e12
+  WHERE value IS NOT NULL AND {fits_sql("value")}
 )
 {" UNION ALL ".join(parts)}
 """
@@ -852,7 +836,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
-            & (F.abs(F.col("value")) < F.lit(9.0e12))
+            & F.expr(fits_sql("value"))
         )
         .select(
             "event_type",
@@ -907,12 +891,12 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WINSORIZE = """
+ORACLE_WINSORIZE = f"""
 WITH ev AS (
   SELECT event_type, event_id,
          CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_fp
   FROM events
-  WHERE value IS NOT NULL AND abs(value) < 9.0e12
+  WHERE value IS NOT NULL AND {fits_sql("value")}
 ),
 ranked AS (
   SELECT event_type, v_fp,
@@ -971,10 +955,7 @@ def q_metric_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events").select(
             "event_type",
             F.to_date("ts").alias("d"),
-            F.expr(
-                "case when abs(value) < 9.0e12 "
-                "then cast(floor(value * 100 + 0.5) as bigint) end"
-            ).alias("cents"),
+            F.expr(cents_sql("value")).alias("cents"),
         )
     )
 
@@ -1018,11 +999,10 @@ def q_metric_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_METRIC_DECOMPOSE = """
+ORACLE_METRIC_DECOMPOSE = f"""
 WITH ev AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("value")} AS cents
   FROM events
 ),
 p1 AS (
@@ -1082,9 +1062,8 @@ def q_olap_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey",
         "l_quantity",
         F.expr(
-            "case when abs(l_extendedprice) < 9.0e12"
-            " then cast(floor(l_extendedprice * 100 + 0.5) as bigint) end"
-            " * case when abs(l_discount) < 9.0e12"
+            f"{cents_sql('l_extendedprice')}"
+            f" * case when {fits_sql('l_discount')}"
             " then cast(100 - floor(l_discount * 100 + 0.5) as bigint) end"
             " div 100"
         ).alias("rev_cents"),
@@ -1105,10 +1084,10 @@ def q_olap_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_OLAP_DISJUNCTIVE = """
+ORACLE_OLAP_DISJUNCTIVE = f"""
 SELECT CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CASE WHEN abs(l_extendedprice) < 9.0e12 THEN CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) END
-                * CASE WHEN abs(l_discount) < 9.0e12
+       CAST(sum({cents_sql("l_extendedprice")}
+                * CASE WHEN {fits_sql("l_discount")}
                        THEN CAST(100 - floor(l_discount * 100 + 0.5) AS BIGINT)
                   END // 100)
          AS BIGINT) AS revenue_cents

@@ -35,17 +35,10 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_order_stats
 from metoffice_spark.io import load
+from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
-
-# validity guard: non-finite OR huge-finite value words quarantine to
-# NULL (r12, the FIXED_POINT_MAX contract — see relational._cents)
-_CENTS = (
-    "case when abs(value) < 9.0e12 "
-    "then cast(floor(value * 100 + 0.5) as bigint) end"
-)
-
 
 # --- q_attribution: last-touch conversion attribution ------------------------
 #
@@ -81,7 +74,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         "event_type",
-        F.expr(_CENTS).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
         F.last(
             F.when(F.col("event_type").isin("view", "click"), F.col("event_type")),
             ignorenulls=True,
@@ -102,7 +95,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_ATTRIBUTION = f"""
 WITH touched AS (
-  SELECT user_id, ts, event_id, event_type, {_CENTS} AS cents,
+  SELECT user_id, ts, event_id, event_type, {cents_sql("value")} AS cents,
          last_value(CASE WHEN event_type IN ('view', 'click')
                          THEN event_type END IGNORE NULLS)
            OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -421,10 +414,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
-        F.expr(
-            "case when abs(c_acctbal) < 9.0e12 "
-            "then cast(floor(c_acctbal * 100 + 0.5) as bigint) end"
-        ).alias("cents"),
+        F.expr(cents_sql("c_acctbal")).alias("cents"),
     )
     v1 = cust.select(
         "c_custkey", "c_nationkey", F.lit(1).alias("version"),
@@ -472,11 +462,10 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CDC_APPLY = """
+ORACLE_CDC_APPLY = f"""
 WITH cust AS (
   SELECT c_custkey, c_nationkey,
-         CASE WHEN abs(c_acctbal) < 9.0e12
-              THEN CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("c_acctbal")} AS cents
   FROM customer
 ),
 log AS (
@@ -585,7 +574,7 @@ def q_ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast((datediff(to_date(ts), date'1970-01-01') + 4) % 7 as int)"
         ).alias("dow"),
         F.hour("ts").cast("int").alias("hr"),
-        F.expr(_CENTS).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     ).groupBy("dow", "hr").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.sum("cents").cast("bigint").alias("cents_total"),
@@ -600,14 +589,13 @@ def q_ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TS_SEASONAL_PROFILE = """
+ORACLE_TS_SEASONAL_PROFILE = f"""
 WITH cells AS (
   SELECT CAST((date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) + 4) % 7
               AS INT) AS dow,
          CAST(hour(ts) AS INT) AS hr,
          CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CASE WHEN abs(value) < 9.0e12
-                  THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END)
+         CAST(sum({cents_sql("value")})
               AS BIGINT) AS cents_total
   FROM events GROUP BY 1, 2
 )
@@ -681,7 +669,7 @@ def q_behavior_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "sid",
         F.coalesce("last_touch", F.lit("none")).alias("channel"),
-        F.expr(_CENTS).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     )
     per_session = purchases.groupBy("user_id", "sid", "channel").agg(
         F.sum("cents").alias("cents")
@@ -722,7 +710,7 @@ touched AS (
 ),
 per_session AS (
   SELECT user_id, sid, coalesce(last_touch, 'none') AS channel,
-         sum({_CENTS}) AS cents
+         sum({cents_sql("value")}) AS cents
   FROM touched WHERE event_type = 'purchase'
   GROUP BY user_id, sid, coalesce(last_touch, 'none')
 )
@@ -830,7 +818,7 @@ def q_win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.col("ts").cast("long").alias("epoch_s"),
-        F.expr(_CENTS).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -849,7 +837,7 @@ def q_win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_WIN_RANGE_INTERVAL = f"""
 SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS epoch_s,
        CAST(count(*) OVER w AS BIGINT) AS n_trailing_1h,
-       CAST(sum({_CENTS}) OVER w AS BIGINT) AS cents_trailing_1h
+       CAST(sum({cents_sql("value")}) OVER w AS BIGINT) AS cents_trailing_1h
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
              RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)
@@ -885,10 +873,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
         "ts",
         "event_id",
-        F.when(
-            F.abs(F.col("value")) < F.lit(9.0e12),
-            F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("bigint"),
-        ).alias("v_fp"),
+        F.expr(cents_sql("value", 1000)).alias("v_fp"),
     )
     # open/close pick only rows with a FINITE reading (ADVICE r10
     # item 3): a masked v_fp inside the struct would be compared when
@@ -909,11 +894,10 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_OHLC_BARS = """
+ORACLE_OHLC_BARS = f"""
 WITH ev AS (
   SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 1000 + 0.5) AS BIGINT) END AS v_fp
+         {cents_sql("value", 1000)} AS v_fp
   FROM events WHERE ts IS NOT NULL
 )
 SELECT event_type, day,
@@ -953,10 +937,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
-        F.expr(
-            "case when abs(c_acctbal) < 9.0e12 "
-            "then cast(floor(c_acctbal * 100 + 0.5) as bigint) end"
-        ).alias("cents"),
+        F.expr(cents_sql("c_acctbal")).alias("cents"),
     )
     v1 = cust.select(
         "c_custkey", "c_nationkey", F.lit(1).alias("version"),
@@ -1001,11 +982,10 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TIME_TRAVEL = """
+ORACLE_TIME_TRAVEL = f"""
 WITH cust AS (
   SELECT c_custkey, c_nationkey,
-         CASE WHEN abs(c_acctbal) < 9.0e12
-              THEN CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("c_acctbal")} AS cents
   FROM customer
 ),
 log AS (
@@ -1080,7 +1060,7 @@ def q_mad_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
-            & (F.abs(F.col("value")) < F.lit(9.0e12))
+            & F.expr(fits_sql("value"))
         )
         .select(
             "event_type",
@@ -1141,12 +1121,12 @@ def q_mad_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MAD_OUTLIER = """
+ORACLE_MAD_OUTLIER = f"""
 WITH ev AS (
   SELECT event_type, event_id,
          CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_fp
   FROM events
-  WHERE value IS NOT NULL AND abs(value) < 9.0e12
+  WHERE value IS NOT NULL AND {fits_sql("value")}
 ),
 ranked AS (
   SELECT event_type, v_fp,
@@ -1221,12 +1201,7 @@ def q_ts_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(
-            F.sum(
-                F.when(
-                    F.abs(F.col("value")) < F.lit(9.0e12),
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-                )
-            ).alias("cents")
+            F.sum(F.expr(cents_sql("value"))).alias("cents")
         )
         .select(
             "event_type",
@@ -1268,8 +1243,7 @@ def q_ts_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_TS_TREND = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(sum(CASE WHEN abs(value) < 9.0e12
-                  THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END)
+         CAST(sum({cents_sql("value")})
               AS BIGINT) AS cents
   FROM events GROUP BY 1, 2
 ),
@@ -1428,7 +1402,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         "event_type",
-        F.expr(_CENTS).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     )
     w_prev = (
         Window.partitionBy("user_id")
@@ -1480,7 +1454,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_ATTRIBUTION_LINEAR = f"""
 WITH seg AS (
-  SELECT user_id, event_type, {_CENTS} AS cents,
+  SELECT user_id, event_type, {cents_sql("value")} AS cents,
          CAST(coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
            OVER (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)

@@ -49,7 +49,7 @@ from metoffice_spark.functions.weather import (
 from metoffice_spark.io import load
 from metoffice_spark.obs import observations, oracle_cte
 from metoffice_spark.operators.rain import _RAIN_BASE_SQL, _RAIN_DAILY_SQL, _RAIN_RATE_SQL
-from metoffice_spark.parity import fixed_str_sql, form_enc_sql
+from metoffice_spark.parity import cents_sql, fixed_str_sql, form_enc_sql
 
 _CTE = oracle_cte()
 
@@ -659,22 +659,16 @@ def q_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
-        F.sum(
-            F.when(
-                F.abs(F.col("value")) < F.lit(9.0e12),
-                F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("bigint"),
-            )
-        )
+        F.sum(F.expr(cents_sql("value", 1000)))
         .cast("bigint")
         .alias("value_fp_total"),
     )
 
 
-ORACLE_SINK_COMPACT = """
+ORACLE_SINK_COMPACT = f"""
 SELECT event_type, count(*) AS n_events,
        count(DISTINCT user_id) AS n_users,
-       CAST(sum(CASE WHEN abs(value) < 9.0e12
-                THEN CAST(floor(value * 1000 + 0.5) AS BIGINT) END) AS BIGINT)
+       CAST(sum({cents_sql("value", 1000)}) AS BIGINT)
          AS value_fp_total
 FROM events
 GROUP BY event_type

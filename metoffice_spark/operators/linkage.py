@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_row_number
 from metoffice_spark.io import load
+from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -247,16 +248,13 @@ def q_join_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
     points = ev.select(
         F.col("value").alias("x"),
         (F.col("event_id") % 100).cast("double").alias("y"),
-        F.expr(
-            "case when abs(value) < 9.0e12 "
-            "then cast(floor(value * 100 + 0.5) as bigint) end"
-        ).alias("cents"),
-        # masked cell key (r10 extreme-value probe): floor(±inf) casts
+        F.expr(cents_sql("value")).alias("cents"),
+        # masked cell key: floor(±inf) casts
         # to INT overflow under ANSI; a non-finite x joins no grid cell
         # — exactly what the oracle's direct range predicate does (NaN
         # and ±Inf fail x < xhi in both engines)
         F.expr(
-            "case when abs(value) < 9.0e12 "
+            f"case when {fits_sql('value')} "
             "then cast(floor(value / 50) as int) end"
         ).alias("cx"),
         F.expr("cast(floor((event_id % 100) / 25) as int)").alias("cy"),
@@ -306,8 +304,7 @@ def q_join_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_JOIN_SPATIAL = f"""
 WITH points AS (
   SELECT value AS x, CAST(event_id % 100 AS DOUBLE) AS y,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("value")} AS cents
   FROM events
 ),
 rects(rid, xlo, xhi, ylo, yhi) AS (

@@ -52,9 +52,8 @@ TOKS_SPARK = "filter(split(lower(text), '[^a-z0-9]+'), t -> t <> '')"
 TOKS_DUCK = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
 
 
-# Dot-safe vector-component bound (r13 bigvec probe,
-# artifacts/FUZZPARITY_r13_extbigvec_FINDING.log). The cast bound
-# (9.0e12, parity.FIXED_POINT_MAX) only guarantees the scaled
+# Dot-safe vector-component bound. The cast bound
+# (parity.FIXED_POINT_MAX) only guarantees the scaled
 # component floor(x*1e6+0.5) fits int64; every downstream consumer
 # SQUARES the scaled words and sums them across the vector (NORM2,
 # DOT, PQ squared-diffs, Gram partials), so a component that merely

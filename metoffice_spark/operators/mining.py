@@ -30,18 +30,10 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
+from metoffice_spark.parity import bigint_sql, cents_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
-
-
-def _finite_qty(col: str = "l_quantity"):
-    """BIGINT quantity with the finite-money guard (r10 extreme-value
-    probe): CAST(±inf AS BIGINT) raises under ANSI; a non-finite
-    quantity is an invalid measurement -> NULL, as the masked cents."""
-    return F.when(
-        F.abs(F.col(col)) < F.lit(9.0e12), F.col(col).cast("bigint")
-    )
 
 
 def _ols_num(n: str, sxy: str, sx: str, sy: str) -> str:
@@ -96,8 +88,7 @@ def q_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6 share, expected count (fixed point), chi² contribution."""
     orders = load(spark, sf_dir, "orders").select(
         F.substring(
-            F.when(F.abs(F.col("o_totalprice")) < F.lit(9.0e12), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("string"),
+            F.expr(cents_sql("o_totalprice")).cast("string"),
             1,
             1,
         )
@@ -130,7 +121,7 @@ def q_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_BENFORD = f"""
 WITH per_d AS (
-  SELECT CAST(substring(CAST(CASE WHEN abs(o_totalprice) < 9.0e12 THEN CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) END
+  SELECT CAST(substring(CAST({cents_sql("o_totalprice")}
                              AS VARCHAR), 1, 1) AS INT) AS digit,
          CAST(count(*) AS BIGINT) AS obs
   FROM orders GROUP BY 1
@@ -389,7 +380,7 @@ def q_als_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ratings, and the updated scalar factor (1e-6 fixed point)."""
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", _finite_qty().alias("qty")
+        "l_orderkey", "l_partkey", F.expr(bigint_sql("l_quantity")).alias("qty")
     )
     ratings = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
@@ -418,8 +409,7 @@ def q_als_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_ALS = f"""
 WITH ratings AS (
   SELECT o.o_custkey, l.l_partkey,
-         CAST(sum(CASE WHEN abs(l.l_quantity) < 9.0e12
-                  THEN CAST(l.l_quantity AS BIGINT) END) AS BIGINT) AS r
+         CAST(sum({bigint_sql("l.l_quantity")}) AS BIGINT) AS r
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
   GROUP BY o.o_custkey, l.l_partkey
 ),
@@ -473,8 +463,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("ym"),
-        F.when(F.abs(F.col("o_totalprice")) < F.lit(9.0e12), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     first = orders.groupBy("o_custkey").agg(F.min("ym").alias("cohort_ym"))
     cells = (
@@ -499,11 +488,11 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_COHORT_LTV = """
+ORACLE_COHORT_LTV = f"""
 WITH orders_m AS (
   SELECT o_custkey,
          CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS ym,
-         CASE WHEN abs(o_totalprice) < 9.0e12 THEN CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("o_totalprice")} AS cents
   FROM orders
   WHERE o_orderdate IS NOT NULL
 ),
@@ -699,9 +688,8 @@ def q_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pooled slope, and whether the signs reverse."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        _finite_qty().alias("x"),
-        F.when(F.abs(F.col("l_extendedprice")) < F.lit(9.0e12), F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .alias("y"),
+        F.expr(bigint_sql("l_quantity")).alias("x"),
+        F.expr(cents_sql("l_extendedprice")).alias("y"),
     )
     g = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -756,9 +744,8 @@ def _simpson_oracle() -> str:
     return f"""
 WITH li AS (
   SELECT l_returnflag,
-         CASE WHEN abs(l_quantity) < 9.0e12
-              THEN CAST(l_quantity AS BIGINT) END AS x,
-         CASE WHEN abs(l_extendedprice) < 9.0e12 THEN CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) END AS y
+         {bigint_sql("l_quantity")} AS x,
+         {cents_sql("l_extendedprice")} AS y
   FROM lineitem
 ),
 g AS (
@@ -853,10 +840,7 @@ def q_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.col("ts").cast("long").alias("es"),
-        F.when(
-            F.abs(F.col("value")) < F.lit(9.0e12),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-        ).alias("y"),
+        F.expr(cents_sql("value")).alias("y"),
     )
     w_first = Window.partitionBy("user_id").orderBy("es", "event_id")
     based = ev.select(
@@ -898,8 +882,7 @@ ORACLE_ROLLING_REG = f"""
 WITH ev AS (
   SELECT user_id, event_id,
          CAST(floor(epoch(ts)) AS BIGINT) AS es,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS y
+         {cents_sql("value")} AS y
   FROM events
   WHERE ts IS NOT NULL
 ),

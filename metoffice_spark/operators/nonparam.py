@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
+from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -492,6 +493,13 @@ QUERIES["q_eval_ndcg"] = (q_eval_ndcg, ORACLE_EVAL_NDCG)
 # the same keys.
 
 _L_DIVERSE = 3
+# Balance bucket of the quasi-identifier tuple: whole 1,000-unit bands
+# of the exact cents, NULL for a balance that does not fit.
+_BAL_BUCKET = (
+    f"CASE WHEN {fits_sql('c_acctbal')}"
+    " THEN CAST(floor(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)"
+    " / 100000.0) AS BIGINT) END"
+)
 
 
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,13 +507,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_classes, n_rows)."""
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_nationkey").cast("bigint").alias("nat"),
-        F.when(
-            F.abs(F.col("c_acctbal")) < F.lit(9.0e12),
-            F.floor(
-                F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint")
-                / F.lit(100000.0)
-            ).cast("bigint"),
-        ).alias("bal_bucket"),
+        F.expr(_BAL_BUCKET).alias("bal_bucket"),
         "c_mktsegment",
     )
     classes = cust.groupBy("nat", "bal_bucket").agg(
@@ -531,9 +533,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_L_DIVERSITY = f"""
 WITH base AS (
   SELECT CAST(c_nationkey AS BIGINT) AS nat,
-         CASE WHEN abs(c_acctbal) < 9.0e12
-              THEN CAST(floor(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
-                              / 100000.0) AS BIGINT) END AS bal_bucket,
+         {_BAL_BUCKET} AS bal_bucket,
          c_mktsegment
   FROM customer
 ),
@@ -581,8 +581,7 @@ def q_jackknife_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed point) plus the shared jackknife variance of the mean."""
     orders = load(spark, sf_dir, "orders").select(
         "o_orderpriority",
-        F.when(F.abs(F.col("o_totalprice")) < F.lit(9.0e12), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     per_g = orders.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_i"),
@@ -627,11 +626,11 @@ def q_jackknife_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_JACKKNIFE = """
+ORACLE_JACKKNIFE = f"""
 WITH per_g AS (
   SELECT o_orderpriority,
          CAST(count(*) AS BIGINT) AS n_i,
-         CAST(sum(CASE WHEN abs(o_totalprice) < 9.0e12 THEN CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) END) AS BIGINT) AS s_i
+         CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS s_i
   FROM orders GROUP BY o_orderpriority
 ),
 totals AS (

@@ -23,11 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from metoffice_spark.io import register_views
+from metoffice_spark.operators.relational import _DISC_PRICE
+from metoffice_spark.parity import bigint_sql, cents_sql
 
 QUERIES: dict = {}
-
-_REV_CENTS = "CASE WHEN abs(l_extendedprice * (1.0 - l_discount)) < 9.0e12 THEN CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0 + 0.5) AS BIGINT) END"
-
 
 def _sql_query(qid: str, sql: str, tables: tuple, doc: str):
     def fn(spark: SparkSession, sf_dir: str, _sql=sql, _tables=tables) -> DataFrame:
@@ -81,9 +80,9 @@ _sql_query(
 # Both date bounds and all three predicates push to the parquet scan;
 # the aggregate is a single partial-combinable global sum.
 
-SQL_OLAP_REVENUE_DELTA = """
+SQL_OLAP_REVENUE_DELTA = f"""
 SELECT CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CASE WHEN abs(l_extendedprice * l_discount) < 9.0e12 THEN CAST(floor(l_extendedprice * l_discount * 100.0 + 0.5) AS BIGINT) END) AS BIGINT) AS revenue_cents
+       CAST(sum({cents_sql("l_extendedprice * l_discount")}) AS BIGINT) AS revenue_cents
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_shipdate < TIMESTAMP '1997-01-01'
@@ -109,7 +108,7 @@ _sql_query(
 SQL_OLAP_VOLUME_SHIPPING = f"""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(year(l.l_shipdate) AS INT) AS l_year,
-       CAST(sum({_REV_CENTS}) AS BIGINT) AS revenue_cents
+       CAST(sum({cents_sql(_DISC_PRICE)}) AS BIGINT) AS revenue_cents
 FROM lineitem l, orders o, customer c, supplier s, nation n1, nation n2
 WHERE s.s_suppkey = l.l_suppkey AND o.o_orderkey = l.l_orderkey
   AND c.c_custkey = o.o_custkey
@@ -137,15 +136,9 @@ _sql_query(
 # per-line amount can be NEGATIVE — summed as exact signed BIGINT
 # cents (order-free), with no division anywhere.
 
-SQL_OLAP_PRODUCT_PROFIT = """
+SQL_OLAP_PRODUCT_PROFIT = f"""
 SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
-       CAST(sum(CASE WHEN abs(l.l_extendedprice * (1.0 - l.l_discount)
-                             - 0.5 * p.p_retailprice * l.l_quantity)
-                          < 9.0e12
-                     THEN CAST(floor((l.l_extendedprice * (1.0 - l.l_discount)
-                                      - 0.5 * p.p_retailprice * l.l_quantity)
-                                     * 100.0 + 0.5) AS BIGINT)
-                END) AS BIGINT) AS profit_cents
+       CAST(sum({cents_sql("l.l_extendedprice * (1.0 - l.l_discount) - 0.5 * p.p_retailprice * l.l_quantity")}) AS BIGINT) AS profit_cents
 FROM lineitem l, orders o, part p, supplier s, nation n
 WHERE o.o_orderkey = l.l_orderkey AND p.p_partkey = l.l_partkey
   AND s.s_suppkey = l.l_suppkey AND n.n_nationkey = s.s_nationkey
@@ -170,18 +163,15 @@ _sql_query(
 # cross-multiplication (1000 * part_value > total) instead of a
 # fractional divide.
 
-SQL_OLAP_IMPORTANT_STOCK = """
+SQL_OLAP_IMPORTANT_STOCK = f"""
 SELECT l.l_partkey,
-       CAST(sum(CASE WHEN abs(l.l_quantity * p.p_retailprice) < 9.0e12 THEN CAST(floor(l.l_quantity * p.p_retailprice * 100.0 + 0.5) AS BIGINT) END) AS BIGINT) AS value_cents
+       CAST(sum({cents_sql("l.l_quantity * p.p_retailprice")}) AS BIGINT) AS value_cents
 FROM lineitem l, part p, supplier s, nation n
 WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
   AND n.n_nationkey = s.s_nationkey AND n.n_name = 'NATION_3'
 GROUP BY l.l_partkey
-HAVING 1000 * sum(CASE WHEN abs(l.l_quantity * p.p_retailprice) < 9.0e12 THEN CAST(floor(l.l_quantity * p.p_retailprice * 100.0 + 0.5) AS BIGINT) END)
-       > (SELECT sum(CASE WHEN abs(l2.l_quantity * p2.p_retailprice)
-                                   < 9.0e12
-                          THEN CAST(floor(l2.l_quantity * p2.p_retailprice
-                                          * 100.0 + 0.5) AS BIGINT) END)
+HAVING 1000 * sum({cents_sql("l.l_quantity * p.p_retailprice")})
+       > (SELECT sum({cents_sql("l2.l_quantity * p2.p_retailprice")})
           FROM lineitem l2, part p2, supplier s2, nation n2
           WHERE p2.p_partkey = l2.l_partkey AND s2.s_suppkey = l2.l_suppkey
             AND n2.n_nationkey = s2.s_nationkey AND n2.n_name = 'NATION_3')
@@ -261,12 +251,12 @@ _sql_query(
 # IEEE division (house rule).
 
 SQL_OLAP_PROMO_SHARE = f"""
-SELECT CAST(sum(CASE WHEN p.p_type = 'PROMO' THEN {_REV_CENTS}
+SELECT CAST(sum(CASE WHEN p.p_type = 'PROMO' THEN {cents_sql(_DISC_PRICE)}
                      ELSE 0 END) AS BIGINT) AS promo_cents,
-       CAST(sum({_REV_CENTS}) AS BIGINT) AS total_cents,
-       100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO' THEN {_REV_CENTS}
+       CAST(sum({cents_sql(_DISC_PRICE)}) AS BIGINT) AS total_cents,
+       100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO' THEN {cents_sql(_DISC_PRICE)}
                              ELSE 0 END) AS DOUBLE)
-         / CAST(sum({_REV_CENTS}) AS DOUBLE) AS promo_share
+         / CAST(sum({cents_sql(_DISC_PRICE)}) AS DOUBLE) AS promo_share
 FROM lineitem l, part p
 WHERE l.l_partkey = p.p_partkey
   AND l.l_shipdate >= TIMESTAMP '1997-03-01'
@@ -288,7 +278,7 @@ _sql_query(
 # (supplier IN (grouped lineitem x part)). The grouped subquery keys
 # on (suppkey, partkey); the IN collapses to a semi-join on suppkey.
 
-SQL_OLAP_PART_PROMOTION = """
+SQL_OLAP_PART_PROMOTION = f"""
 SELECT s.s_name, s.s_acctbal
 FROM supplier s, nation n
 WHERE s.s_nationkey = n.n_nationkey AND n.n_name = 'NATION_5'
@@ -299,8 +289,7 @@ WHERE s.s_nationkey = n.n_nationkey AND n.n_name = 'NATION_5'
       AND l.l_shipdate >= TIMESTAMP '1996-01-01'
       AND l.l_shipdate < TIMESTAMP '1997-01-01'
     GROUP BY l.l_suppkey, l.l_partkey
-    HAVING sum(CASE WHEN abs(l.l_quantity) < 9.0e12
-               THEN CAST(l.l_quantity AS BIGINT) END) > 50)
+    HAVING sum({bigint_sql("l.l_quantity")}) > 50)
 ORDER BY s.s_name
 """
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from metoffice_spark.functions.distributed import global_running_sum
 from metoffice_spark.io import load
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
+from metoffice_spark.parity import bigint_sql, cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -205,10 +206,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("ts").cast("long").alias("es"),
         "event_id",
-        F.when(
-            F.abs(F.col("value")) < F.lit(9.0e12),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-        ).alias("vfp"),
+        F.expr(cents_sql("value")).alias("vfp"),
     )
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
     seg = ev.select(
@@ -233,13 +231,12 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TWAP = """
+ORACLE_TWAP = f"""
 WITH ev AS (
   SELECT user_id,
          CAST(floor(epoch(ts)) AS BIGINT) AS es,
          event_id,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS vfp
+         {cents_sql("value")} AS vfp
   FROM events
   WHERE ts IS NOT NULL
 ),
@@ -544,16 +541,12 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "lineitem")
         .filter(
             F.col("l_extendedprice").isNotNull()
-            & (F.abs(F.col("l_extendedprice")) < F.lit(9.0e12))
+            & F.expr(fits_sql("l_extendedprice"))
         )
         .select(
             "l_returnflag",
-            F.when(F.abs(F.col("l_extendedprice")) < F.lit(9.0e12), F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint"))
-            .alias("cents"),
-            F.when(
-                F.abs(F.col("l_quantity")) < F.lit(9.0e12),
-                F.col("l_quantity").cast("bigint"),
-            ).alias("wt"),
+            F.expr(cents_sql("l_extendedprice")).alias("cents"),
+            F.expr(bigint_sql("l_quantity")).alias("wt"),
         )
     )
     per_v = li.groupBy("l_returnflag", "cents").agg(
@@ -583,14 +576,13 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WEIGHTED_MEDIAN = """
+ORACLE_WEIGHTED_MEDIAN = f"""
 WITH li AS (
   SELECT l_returnflag,
-         CASE WHEN abs(l_extendedprice) < 9.0e12 THEN CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) END AS cents,
-         CASE WHEN abs(l_quantity) < 9.0e12
-              THEN CAST(l_quantity AS BIGINT) END AS wt
+         {cents_sql("l_extendedprice")} AS cents,
+         {bigint_sql("l_quantity")} AS wt
   FROM lineitem WHERE l_extendedprice IS NOT NULL
-    AND abs(l_extendedprice) < 9.0e12
+    AND {fits_sql("l_extendedprice")}
 ),
 per_v AS (
   SELECT l_returnflag, cents, CAST(sum(wt) AS BIGINT) AS w_v,
@@ -734,8 +726,7 @@ def q_null_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-imputation mean (both 1e-2 fixed point = cents)."""
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_nationkey").cast("bigint").alias("nat"),
-        F.when(F.abs(F.col("c_acctbal")) < F.lit(9.0e12), F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint"))
-        .alias("cents"),
+        F.expr(cents_sql("c_acctbal")).alias("cents"),
         F.expr(
             "substring(md5(concat('IMP1|', CAST(c_custkey AS STRING))), 1, 1)"
             " IN ('0', '1')"
@@ -772,10 +763,10 @@ def q_null_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_NULL_IMPUTATION = """
+ORACLE_NULL_IMPUTATION = f"""
 WITH cust AS (
   SELECT CAST(c_nationkey AS BIGINT) AS nat,
-         CASE WHEN abs(c_acctbal) < 9.0e12 THEN CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) END AS cents,
+         {cents_sql("c_acctbal")} AS cents,
          substring(md5('IMP1|' || CAST(c_custkey AS VARCHAR)), 1, 1)
            IN ('0', '1') AS masked
   FROM customer
@@ -835,10 +826,7 @@ def q_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.when(
-            F.abs(F.col("value")) < F.lit(9.0e12),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-        ).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w3 = w.rowsBetween(-2, Window.currentRow)
@@ -862,11 +850,10 @@ def q_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LAG_FEATURES = """
+ORACLE_LAG_FEATURES = f"""
 WITH ev AS (
   SELECT user_id, event_id, ts,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("value")} AS cents
   FROM events
   WHERE ts IS NOT NULL
 )

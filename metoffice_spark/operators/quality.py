@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
+from metoffice_spark.operators.nonparam import _BAL_BUCKET
+from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -29,30 +31,36 @@ QUERIES: dict = {}
 # --- q_dq_checks: declarative table validations ------------------------------
 
 
+def _huge_sql(c: str) -> str:
+    """A finite value that fails the fixed-point bound: ``< inf``
+    excludes NaN/±Inf on both engines' NaN-above-all order, NULL stays
+    NULL. Detection only: a pure double comparison never raises."""
+    return f"(NOT ({fits_sql(c)}) AND abs({c}) < CAST('inf' AS DOUBLE))"
+
+
+_HUGE_LINEITEM = " OR ".join(
+    _huge_sql(c) for c in ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+)
+
+
 def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per data-quality check: (check_name, n_checked,
     n_violations, pass). Checks: primary-key uniqueness (orders,
     documents), the corpus id-content-conflict contract (a doc_id
-    carrying >1 distinct text — the violation class under which the
-    per-doc operator families are out of contract, r09 dkdocs probe),
-    not-null, referential integrity (orders→customer), domain
-    ranges (discount ∈ [0,1], quantity > 0), finite-money domain
-    (no NaN/±Inf in any orders/lineitem money or quantity word — the
-    r10 extreme-value contract under which the TPC-H operator
-    families' integer-cents casts are defined), and the huge-finite
-    fixed-point bound (r12, ADVICE r10 item 2): a FINITE word with
-    |x| >= 9.0e12 passes every non-finite guard but overflows the
-    int64 fixed-point cast at the strictest scale in use (10^6;
-    2^63/10^6 ≈ 9.22e12). The r12 kind=huge probe showed such words
-    SILENTLY SATURATE Spark's floor->LONG where DuckDB's cast raises
-    (13 asymmetric divergences), so they are QUARANTINED to NULL at
-    every fixed-point guard (the FIXED_POINT_MAX contract,
-    parity.py/relational._cents) and DETECTED here — the
-    documents_id_content_conflict precedent. Probed, not argued:
-    tools/fuzz_parity.py --extval kind=huge, registry-wide green
-    (tests/test_degenerate_slices.py pins the slice). The events.value
-    word — the money-domain input of the behavior/stats/stream
-    families — gets both the finite and the fixed-point check too.
+    carrying >1 distinct text, under which the per-doc operator
+    families are out of contract), not-null, referential integrity
+    (orders→customer), domain ranges (discount ∈ [0,1], quantity >
+    0), finite-money domain (no NaN/±Inf in any orders/lineitem money
+    or quantity word, the contract under which the TPC-H operator
+    families' integer-cents casts are defined), and the fixed-point
+    bound: a FINITE word that fails ``parity.fits_sql`` would overflow
+    the int64 fixed-point cast, so every fixed-point guard turns it
+    into NULL and this check counts it. ``tools/fuzz_parity.py
+    --extval kind=huge`` drives such words through every operator
+    (tests/test_degenerate_slices.py pins the slice). The
+    events.value word, the money-domain input of the
+    behavior/stats/stream families, gets both the finite and the
+    fixed-point check too.
 
     Scale: the five lineitem range/null/domain checks share ONE scan
     (a single aggregate computes them all), as do the two events
@@ -66,34 +74,21 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
     emb = load(spark, sf_dir, "embeddings")
 
-    # finite-domain contract (r10 extreme-value probe): a NaN/±Inf
-    # money or quantity word is corrupt upstream data, and the
-    # integer-cents discipline every money consumer shares would
-    # CRASH both ANSI engines on it (CAST nan AS BIGINT) — so
-    # non-finite money is OUT of contract for the TPC-H operator
-    # families and DETECTED here, the documents_id_content_conflict
-    # precedent. abs(x) >= inf is the dialect-common non-finite test:
-    # both engines order NaN above +Inf, so one predicate catches NaN
-    # and ±Inf alike (NULL stays NULL → not counted; the NULL axes
-    # have their own checks and probes).
+    # Finite-domain check: a NaN/±Inf money or quantity word is corrupt
+    # upstream data. The money consumers' fixed-point guards turn it
+    # into NULL and this check counts it. abs(x) >= inf is the
+    # dialect-common non-finite test: both engines order NaN above
+    # +Inf, so one predicate catches NaN and ±Inf alike (NULL stays
+    # NULL and is not counted; the NULL axes have their own checks).
     _inf = F.lit(float("inf"))
-    # huge-finite bound: finite (< inf excludes NaN/±Inf on both
-    # engines' NaN-above-all total order) but too large for the int64
-    # fixed-point cast at the strictest scale in use. Detection only —
-    # a pure double comparison, so the check itself can never crash.
-    _huge = F.lit(9.0e12)
-
-    def _huge_hit(c: str):
-        return (F.abs(F.col(c)) >= _huge) & (F.abs(F.col(c)) < _inf)
 
     li_agg = li.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("l_quantity") <= 0, 1)).alias("bad_qty"),
-        # isnan spelled out as EXPLICIT INTENT, not necessity
-        # (ADVICE r10 re-verification): on the pinned DuckDB 1.0.0
-        # BOTH the constant-folded and vectorized comparison paths
-        # order NaN above every finite (NaN > 1 true), same as
-        # Spark's total order — so the disjunct is redundant today.
+        # isnan spelled out as EXPLICIT INTENT, not necessity: on the
+        # pinned DuckDB 1.0.0 BOTH the constant-folded and vectorized
+        # comparison paths order NaN above every finite (NaN > 1 true),
+        # same as Spark's total order — so the disjunct is redundant today.
         # It stays, mirrored in the oracle, because "a NaN discount
         # is a violation" should not hinge on an engine keeping
         # non-IEEE comparison semantics across upgrades.
@@ -116,13 +111,7 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bad_money"),
         F.count(
-            F.when(
-                _huge_hit("l_quantity")
-                | _huge_hit("l_extendedprice")
-                | _huge_hit("l_discount")
-                | _huge_hit("l_tax"),
-                1,
-            )
+            F.when(F.expr(_HUGE_LINEITEM), 1)
         ).alias("huge_money"),
     )
     # vector-consumability contract (r13 dimvec + bigvec + nulvec
@@ -159,7 +148,7 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(
             F.when(F.abs(F.col("value")) >= _inf, 1)
         ).alias("bad_money"),
-        F.count(F.when(_huge_hit("value"), 1)).alias("huge_money"),
+        F.count(F.when(F.expr(_huge_sql("value")), 1)).alias("huge_money"),
     )
     # one scan of orders serves BOTH the uniqueness and the FK check:
     # broadcast-left-join the dim key set, count nulls instead of a
@@ -180,7 +169,7 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(
                 F.when(F.abs(F.col("o_totalprice")) >= _inf, 1)
             ).alias("bad_money"),
-            F.count(F.when(_huge_hit("o_totalprice"), 1)).alias("huge_money"),
+            F.count(F.when(F.expr(_huge_sql("o_totalprice")), 1)).alias("huge_money"),
         )
     )
 
@@ -303,7 +292,7 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DQ_CHECKS = """
+ORACLE_DQ_CHECKS = f"""
 WITH li_agg AS (
   SELECT count(*) AS n,
          count(CASE WHEN l_quantity <= 0 THEN 1 END) AS bad_qty,
@@ -315,24 +304,14 @@ WITH li_agg AS (
                       OR abs(l_discount)      >= CAST('inf' AS DOUBLE)
                       OR abs(l_tax)           >= CAST('inf' AS DOUBLE)
                THEN 1 END) AS bad_money,
-         count(CASE WHEN (abs(l_quantity) >= 9.0e12
-                          AND abs(l_quantity) < CAST('inf' AS DOUBLE))
-                      OR (abs(l_extendedprice) >= 9.0e12
-                          AND abs(l_extendedprice) < CAST('inf' AS DOUBLE))
-                      OR (abs(l_discount) >= 9.0e12
-                          AND abs(l_discount) < CAST('inf' AS DOUBLE))
-                      OR (abs(l_tax) >= 9.0e12
-                          AND abs(l_tax) < CAST('inf' AS DOUBLE))
-               THEN 1 END) AS huge_money
+         count(CASE WHEN {_HUGE_LINEITEM} THEN 1 END) AS huge_money
   FROM lineitem
 ),
 ev_agg AS (
   SELECT count(*) AS n,
          count(CASE WHEN abs(value) >= CAST('inf' AS DOUBLE)
                THEN 1 END) AS bad_money,
-         count(CASE WHEN abs(value) >= 9.0e12
-                     AND abs(value) < CAST('inf' AS DOUBLE)
-               THEN 1 END) AS huge_money
+         count(CASE WHEN {_huge_sql("value")} THEN 1 END) AS huge_money
   FROM events
 ),
 emb_agg AS (
@@ -347,9 +326,7 @@ ord_agg AS (
   SELECT count(*) AS n, count(*) - count(DISTINCT o_orderkey) AS dup_pk,
          count(CASE WHEN abs(o_totalprice) >= CAST('inf' AS DOUBLE)
                THEN 1 END) AS bad_money,
-         count(CASE WHEN abs(o_totalprice) >= 9.0e12
-                     AND abs(o_totalprice) < CAST('inf' AS DOUBLE)
-               THEN 1 END) AS huge_money
+         count(CASE WHEN {_huge_sql("o_totalprice")} THEN 1 END) AS huge_money
   FROM orders
 ),
 orph AS (
@@ -526,7 +503,7 @@ def q_stats_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual matching rows."""
     li = load(spark, sf_dir, "lineitem").select(
         (F.col("l_orderkey") % 8).cast("int").alias("pid"),
-        F.expr("case when abs(l_quantity) < 9.0e12 then cast(floor(l_quantity * 1000000 + 0.5) as bigint) end").alias("q_fp"),
+        F.expr(cents_sql("l_quantity", 1000000)).alias("q_fp"),
         F.to_date("l_shipdate").alias("sd"),
         (
             (F.col("l_quantity") < 10)
@@ -574,7 +551,7 @@ def q_stats_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_STATS_COLLECT = f"""
 WITH li AS (
   SELECT CAST(l_orderkey % 8 AS INT) AS pid,
-         CASE WHEN abs(l_quantity) < 9.0e12 THEN CAST(floor(l_quantity * 1000000 + 0.5) AS BIGINT) END AS q_fp,
+         {cents_sql("l_quantity", 1000000)} AS q_fp,
          CAST(l_shipdate AS DATE) AS sd,
          (l_quantity < 10 AND CAST(l_shipdate AS DATE) >= {_SC_DLIT}) AS hit
   FROM lineitem
@@ -1079,13 +1056,7 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select(
         "c_mktsegment",
         "c_nationkey",
-        F.when(
-            F.abs(F.col("c_acctbal")) < F.lit(9.0e12),
-            F.floor(
-                F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint")
-                / F.lit(100000.0)
-            ).cast("bigint"),
-        ).alias("bal_bucket"),
+        F.expr(_BAL_BUCKET).alias("bal_bucket"),
     )
     classes = cust.groupBy("c_mktsegment", "c_nationkey", "bal_bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
@@ -1122,9 +1093,7 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_K_ANONYMITY = f"""
 WITH classes AS (
   SELECT c_mktsegment, c_nationkey,
-         CASE WHEN abs(c_acctbal) < 9.0e12
-              THEN CAST(floor(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
-                              / 100000.0) AS BIGINT) END AS bal_bucket,
+         {_BAL_BUCKET} AS bal_bucket,
          CAST(count(*) AS BIGINT) AS n
   FROM customer
   GROUP BY 1, 2, 3

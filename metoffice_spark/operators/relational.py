@@ -23,48 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.parity import rhu_sql
-
-
-def _cents(col: F.Column, scale: int = 100):
-    """floor(x*scale + 0.5) as BIGINT — per-row exact in both engines.
-
-    Validity guard (r10 non-finite probe, TIGHTENED r12 by the
-    huge-finite probe): an input that is NaN/±Inf OR huge-finite
-    (|x| >= FIXED_POINT_MAX = 9.0e12, where the scaled value
-    overflows int64 at the strictest scale in use) is an invalid
-    measurement and becomes a NULL fixed-point value — missing data,
-    handled by the NULL semantics every null-axis probe pins.
-
-    Why quarantine rather than crash (supersedes the r11 "loud
-    symmetric crash" decision): the r12 registry-wide probe
-    (--extval kind=huge at 1e17, --raise-symmetric) FALSIFIED the
-    crash-symmetry premise — Spark's floor(double) returns LONG via
-    Java's SATURATING conversion, so un-summed floor paths silently
-    answer Long.MAX-shaped values (q_benford_test, q_case_when, 13
-    asymmetric divergences total) while DuckDB's explicit CAST
-    raises. Silent saturation is worse than either crash or NULL.
-    Huge-finite is now the fourth quarantined validity class (after
-    NULL, non-finite, out-of-horizon), DETECTED by q_dq_checks'
-    *_fits_fixed_point rows. Every _cents-shaped site (here, the
-    inline spellings in stats.py/mining.py/behavior.py, rhu_sql/
-    fixed_str_sql in parity.py, and the obs substrate) shares this ONE
-    bound; do NOT widen individual sites ad hoc."""
-    from metoffice_spark.parity import FIXED_POINT_MAX
-
-    return F.when(
-        F.abs(col) < F.lit(FIXED_POINT_MAX),
-        F.floor(col * F.lit(float(scale)) + F.lit(0.5)).cast("bigint"),
-    )
-
-
-def _cents_sql(x: str, scale: int = 100) -> str:
-    from metoffice_spark.parity import FIXED_POINT_MAX_SQL
-
-    return (
-        f"CASE WHEN abs({x}) < {FIXED_POINT_MAX_SQL} "
-        f"THEN CAST(floor(({x}) * {scale} + 0.5) AS BIGINT) END"
-    )
+from metoffice_spark.parity import cents_sql, fits_sql, rhu_sql
 
 
 # --- scans / projections / filters ----------------------------------------
@@ -156,21 +115,22 @@ FROM customer
 
 # --- aggregations ----------------------------------------------------------
 
+_DISC_PRICE = "l_extendedprice * (1.0 - l_discount)"
+_CHARGE = f"({_DISC_PRICE}) * (1.0 + l_tax)"
+
 def q_agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan → filter → hash aggregate. Partial (map-side)
     aggregation is automatic; money sums use the integer-cents pattern."""
     li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
-            (F.sum(_cents(F.col("l_extendedprice"))) / F.lit(100.0)).alias("sum_base_price"),
-            (F.sum(_cents(disc_price, 10000)) / F.lit(10000.0)).alias("sum_disc_price"),
-            (F.sum(_cents(charge, 10000)) / F.lit(10000.0)).alias("sum_charge"),
+            (F.sum(F.expr(cents_sql("l_extendedprice"))) / F.lit(100.0)).alias("sum_base_price"),
+            (F.sum(F.expr(cents_sql(_DISC_PRICE, 10000))) / F.lit(10000.0)).alias("sum_disc_price"),
+            (F.sum(F.expr(cents_sql(_CHARGE, 10000))) / F.lit(10000.0)).alias("sum_charge"),
             (F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty"),
-            (F.sum(_cents(F.col("l_extendedprice"))) / F.lit(100.0) / F.count(F.lit(1))).alias(
+            (F.sum(F.expr(cents_sql("l_extendedprice"))) / F.lit(100.0) / F.count(F.lit(1))).alias(
                 "avg_price"
             ),
             F.count(F.lit(1)).alias("count_order"),
@@ -182,11 +142,11 @@ def q_agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_AGG_HASH = f"""
 SELECT l_returnflag, l_linestatus,
        sum(l_quantity) AS sum_qty,
-       sum({_cents_sql("l_extendedprice")}) / 100.0 AS sum_base_price,
-       sum({_cents_sql("l_extendedprice * (1.0 - l_discount)", 10000)}) / 10000.0 AS sum_disc_price,
-       sum({_cents_sql("(l_extendedprice * (1.0 - l_discount)) * (1.0 + l_tax)", 10000)}) / 10000.0 AS sum_charge,
+       sum({cents_sql("l_extendedprice")}) / 100.0 AS sum_base_price,
+       sum({cents_sql(_DISC_PRICE, 10000)}) / 10000.0 AS sum_disc_price,
+       sum({cents_sql(_CHARGE, 10000)}) / 10000.0 AS sum_charge,
        sum(l_quantity) / count(*) AS avg_qty,
-       sum({_cents_sql("l_extendedprice")}) / 100.0 / count(*) AS avg_price,
+       sum({cents_sql("l_extendedprice")}) / 100.0 / count(*) AS avg_price,
        count(*) AS count_order
 FROM lineitem
 GROUP BY l_returnflag, l_linestatus
@@ -227,7 +187,7 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rolled = joined.rollup("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        (F.sum(_cents(F.col("c_acctbal"))) / F.lit(100.0)).alias("total_bal"),
+        (F.sum(F.expr(cents_sql("c_acctbal"))) / F.lit(100.0)).alias("total_bal"),
     )
     return rolled.select(
         F.coalesce(F.col("r_name"), F.lit("ALL")).alias("region"),
@@ -246,7 +206,7 @@ SELECT COALESCE(r_name, 'ALL') AS region,
        (CASE WHEN r_name IS NULL THEN 1 ELSE 0 END) * 2
          + (CASE WHEN n_name IS NULL THEN 1 ELSE 0 END) AS grouping_level,
        count(*) AS n_customers,
-       sum({_cents_sql("c_acctbal")}) / 100.0 AS total_bal
+       sum({cents_sql("c_acctbal")}) / 100.0 AS total_bal
 FROM customer
 JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
@@ -295,11 +255,8 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FIN_QTY = "CASE WHEN abs(l_quantity) < 9.0e12 THEN l_quantity END"
-_FIN_PRICE = (
-    "CASE WHEN abs(l_extendedprice) < 9.0e12"
-    " THEN l_extendedprice END"
-)
+_FIN_QTY = f"CASE WHEN {fits_sql('l_quantity')} THEN l_quantity END"
+_FIN_PRICE = f"CASE WHEN {fits_sql('l_extendedprice')} THEN l_extendedprice END"
 _SD_QTY = rhu_sql(f"stddev_samp({_FIN_QTY})", 6)
 _VAR_QTY = rhu_sql(f"var_samp({_FIN_QTY})", 6)
 _CORR_QTY_PRICE = rhu_sql(f"corr({_FIN_QTY}, {_FIN_PRICE})", 6)
@@ -330,7 +287,7 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
-            (F.sum(_cents(F.col("l_extendedprice"))) / F.lit(100.0)).alias("revenue"),
+            (F.sum(F.expr(cents_sql("l_extendedprice"))) / F.lit(100.0)).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -339,7 +296,7 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_JOIN_BROADCAST = f"""
 SELECT p_brand,
        sum(l_quantity) AS sum_qty,
-       sum({_cents_sql("l_extendedprice")}) / 100.0 AS revenue,
+       sum({cents_sql("l_extendedprice")}) / 100.0 AS revenue,
        count(*) AS n_lines
 FROM lineitem JOIN part ON l_partkey = p_partkey
 GROUP BY p_brand
@@ -357,7 +314,7 @@ def q_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            (F.sum(_cents(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 10000))
+            (F.sum(F.expr(cents_sql(_DISC_PRICE, 10000)))
              / F.lit(10000.0)).alias("revenue"),
         )
     )
@@ -366,7 +323,7 @@ def q_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_JOIN_SHUFFLE = f"""
 SELECT o_orderpriority,
        count(*) AS n_lines,
-       sum({_cents_sql("l_extendedprice * (1.0 - l_discount)", 10000)}) / 10000.0 AS revenue
+       sum({cents_sql(_DISC_PRICE, 10000)}) / 10000.0 AS revenue
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority
 """
@@ -381,7 +338,7 @@ def q_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "c_mktsegment")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(F.sum(_cents(F.col("o_totalprice"))) / F.lit(100.0), F.lit(0.0)).alias(
+            F.coalesce(F.sum(F.expr(cents_sql("o_totalprice"))) / F.lit(100.0), F.lit(0.0)).alias(
                 "total_spent"
             ),
         )
@@ -391,7 +348,7 @@ def q_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_JOIN_OUTER = f"""
 SELECT c_custkey, c_mktsegment,
        count(o_orderkey) AS n_orders,
-       COALESCE(sum({_cents_sql("o_totalprice")}) / 100.0, 0.0) AS total_spent
+       COALESCE(sum({cents_sql("o_totalprice")}) / 100.0, 0.0) AS total_spent
 FROM customer LEFT JOIN orders ON c_custkey = o_custkey
 GROUP BY c_custkey, c_mktsegment
 """
@@ -437,14 +394,14 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band_id")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            (F.sum(_cents(F.col("o_totalprice"))) / F.lit(100.0)).alias("band_value"),
+            (F.sum(F.expr(cents_sql("o_totalprice"))) / F.lit(100.0)).alias("band_value"),
         )
     )
 
 
 ORACLE_JOIN_THETA_RANGE = f"""
 SELECT band_id, count(*) AS n_orders,
-       sum({_cents_sql("o_totalprice")}) / 100.0 AS band_value
+       sum({cents_sql("o_totalprice")}) / 100.0 AS band_value
 FROM orders
 JOIN (SELECT r_regionkey AS band_id,
              CAST(r_regionkey AS DOUBLE) * 100000.0 AS lo,
@@ -466,7 +423,7 @@ def q_join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ORACLE deliberately uses the naive O(n^2) formulation: same
     answer, different physical strategy."""
     p = load(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    binned = p.withColumn("bin", F.when(F.abs(F.col("p_retailprice") / 1.0) < F.lit(9.0e12), F.floor(F.col("p_retailprice") / 1.0).cast("bigint")))
+    binned = p.withColumn("bin", F.expr(f"CASE WHEN {fits_sql('p_retailprice / 1.0')} THEN CAST(floor(p_retailprice / 1.0) AS BIGINT) END"))
     probe = binned.select(
         F.col("p_partkey").alias("part_a"),
         F.col("p_retailprice").alias("price_a"),
@@ -582,7 +539,7 @@ def q_win_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     running = w.rowsBetween(Window.unboundedPreceding, 0)
     sliding = w.rowsBetween(-2, 0)
-    cents = _cents(F.col("o_totalprice"))
+    cents = F.expr(cents_sql("o_totalprice"))
     return o.select(
         "o_orderkey",
         "o_custkey",
@@ -595,10 +552,10 @@ def q_win_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_WIN_FRAME = f"""
 SELECT o_orderkey, o_custkey,
-       sum({_cents_sql("o_totalprice")}) OVER (
+       sum({cents_sql("o_totalprice")}) OVER (
          PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 100.0 AS running_total,
-       sum({_cents_sql("o_totalprice")}) OVER w3 / 100.0
+       sum({cents_sql("o_totalprice")}) OVER w3 / 100.0
          / count(*) OVER w3 AS sliding_avg3
 FROM orders
 WHERE o_orderdate IS NOT NULL
@@ -735,11 +692,8 @@ def q_fn_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt("l_quantity"),
         ).alias("sqrt_qty"),
         F.expr(_QTY_SQ).alias("qty_sq"),
-        F.when(F.abs("l_extendedprice") < F.lit(9.0e12), F.floor("l_extendedprice").cast("bigint")).alias("floor_price"),
-        F.when(
-            F.abs("l_extendedprice") < F.lit(9.0e12),
-            F.ceil("l_extendedprice").cast("bigint"),
-        ).alias("ceil_price"),
+        F.expr(_FLOOR_PRICE).alias("floor_price"),
+        F.expr(_CEIL_PRICE).alias("ceil_price"),
         F.expr(_EXP_DISC).alias("exp_disc"),
         F.expr(_LN_PRICE).alias("ln_price"),
         F.expr(_LOG10_PRICE).alias("log10_price"),
@@ -762,6 +716,8 @@ _LN_PRICE = rhu_sql("CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice
 _LOG10_PRICE = rhu_sql("CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice)"
                        " THEN log10(l_extendedprice) END", 8)
 _COS_DISC = rhu_sql("cos(l_discount)", 8)
+_FLOOR_PRICE = f"CASE WHEN {fits_sql('l_extendedprice')} THEN CAST(floor(l_extendedprice) AS BIGINT) END"
+_CEIL_PRICE = f"CASE WHEN {fits_sql('l_extendedprice')} THEN CAST(ceil(l_extendedprice) AS BIGINT) END"
 
 ORACLE_FN_MATH_SUITE = f"""
 SELECT l_orderkey, l_linenumber,
@@ -769,9 +725,8 @@ SELECT l_orderkey, l_linenumber,
        CASE WHEN l_quantity >= 0 AND NOT isnan(l_quantity)
             THEN sqrt(l_quantity) END AS sqrt_qty,
        {_QTY_SQ} AS qty_sq,
-       CASE WHEN abs(l_extendedprice) < 9.0e12 THEN CAST(floor(l_extendedprice) AS BIGINT) END AS floor_price,
-       CASE WHEN abs(l_extendedprice) < 9.0e12
-            THEN CAST(ceil(l_extendedprice) AS BIGINT) END AS ceil_price,
+       {_FLOOR_PRICE} AS floor_price,
+       {_CEIL_PRICE} AS ceil_price,
        {_EXP_DISC} AS exp_disc,
        {_LN_PRICE} AS ln_price,
        {_LOG10_PRICE} AS log10_price,
@@ -974,7 +929,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     per customer, plus planted new customers (custkey % 100 == 0 →
     custkey + 1000000) to exercise the insert branch."""
     base = load(spark, sf_dir, "customer").select(
-        "c_custkey", _cents(F.col("c_acctbal")).alias("bal_cents")
+        "c_custkey", F.expr(cents_sql("c_acctbal")).alias("bal_cents")
     )
     orders = load(spark, sf_dir, "orders").filter(
         F.expr(
@@ -983,7 +938,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     deltas = orders.groupBy("o_custkey").agg(
-        F.sum(_cents(F.col("o_totalprice"))).alias("delta_cents")
+        F.sum(F.expr(cents_sql("o_totalprice"))).alias("delta_cents")
     )
     changes = deltas.select(
         F.when(
@@ -1007,13 +962,13 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_MERGE_UPSERT = f"""
 WITH base AS (
-  SELECT c_custkey, {_cents_sql("c_acctbal")} AS bal_cents FROM customer
+  SELECT c_custkey, {cents_sql("c_acctbal")} AS bal_cents FROM customer
 ),
 changes AS (
   SELECT k, sum(delta_cents) AS delta_cents FROM (
     SELECT CASE WHEN o_custkey % 100 = 0 THEN o_custkey + 1000000
                 ELSE o_custkey END AS k,
-           sum({_cents_sql("o_totalprice")}) AS delta_cents
+           sum({cents_sql("o_totalprice")}) AS delta_cents
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
       AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
@@ -1082,7 +1037,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("station_id", "region_name")
         .agg(
             F.count("*").alias("n_obs"),
-            F.sum(_cents(F.col("windspeed_ms"), 1000000)).alias("ws_sum_fp"),
+            F.sum(F.expr(cents_sql("windspeed_ms", 1000000))).alias("ws_sum_fp"),
         )
         .select("station_id", "region_name", "n_obs", "ws_sum_fp")
     )
@@ -1093,7 +1048,7 @@ from metoffice_spark.obs import oracle_cte as _obs_cte  # noqa: E402
 ORACLE_JOIN_SALTED = f"""{_obs_cte()}
 SELECT o.station_id, r.r_name AS region_name,
        count(*) AS n_obs,
-       CAST(sum({_cents_sql("windspeed_ms", 1000000)}) AS BIGINT) AS ws_sum_fp
+       CAST(sum({cents_sql("windspeed_ms", 1000000)}) AS BIGINT) AS ws_sum_fp
 FROM observations o
 JOIN region r ON CAST(r.r_regionkey AS STRING) = o.station_id
 GROUP BY o.station_id, r.r_name
@@ -1239,11 +1194,11 @@ QUERIES["q_set_bag"] = (q_set_bag, ORACLE_SET_BAG)
 # the identical string as the oracle. Demonstrates the engine's SQL
 # face (parser -> Catalyst) with zero dialect translation.
 
-_ANSI_SQL = """
+_ANSI_SQL = f"""
 WITH order_totals AS (
   SELECT o.o_custkey AS custkey,
          count(*) AS n_orders,
-         sum(CASE WHEN abs(o.o_totalprice) < 9.0e12 THEN CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) END) AS cents
+         sum({cents_sql("o.o_totalprice")}) AS cents
   FROM orders o
   WHERE o.o_orderstatus <> 'F'
   GROUP BY o.o_custkey
@@ -1330,7 +1285,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         j.groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n_lines"),
-            F.sum(_cents(F.col("l_extendedprice") * (1.0 - F.col("l_discount")), 10000))
+            F.sum(F.expr(cents_sql(_DISC_PRICE, 10000)))
             .cast("bigint")
             .alias("revenue_fp"),
         )
@@ -1339,7 +1294,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_JOIN_BUCKETED = f"""
 SELECT o.o_orderpriority, count(*) AS n_lines,
-       CAST(sum({_cents_sql("l_extendedprice * (1.0 - l_discount)", 10000)}) AS BIGINT)
+       CAST(sum({cents_sql(_DISC_PRICE, 10000)}) AS BIGINT)
          AS revenue_fp
 FROM orders o JOIN lineitem li ON o.o_orderkey = li.l_orderkey
 GROUP BY o.o_orderpriority
@@ -1567,7 +1522,7 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scoped_persist(
         o.groupBy("o_orderstatus", "o_orderpriority").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(_cents(F.col("o_totalprice"))).cast("bigint").alias("total_cents"),
+            F.sum(F.expr(cents_sql("o_totalprice"))).cast("bigint").alias("total_cents"),
         )
     )
     n, c = F.sum("n_orders").cast("bigint"), F.sum("total_cents").cast("bigint")
@@ -1604,7 +1559,7 @@ SELECT o_orderstatus, o_orderpriority,
        CAST(o_orderstatus IS NULL AS INT) AS g_status,
        CAST(o_orderpriority IS NULL AS INT) AS g_priority,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum({_cents_sql('o_totalprice')}) AS BIGINT) AS total_cents
+       CAST(sum({cents_sql('o_totalprice')}) AS BIGINT) AS total_cents
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """

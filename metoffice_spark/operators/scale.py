@@ -14,7 +14,7 @@ query so the technique itself is under the correctness gate.
 The reference has no analog (pure EXT). Determinism follows the repo
 discipline (llm.py header): md5 is the only "random" source, every
 aggregated quantity is an exact BIGINT (fixed-point via the
-relational._cents convention), and any IEEE divide happens last, on
+parity.cents_sql convention), and any IEEE divide happens last, on
 exact integer inputs, with the identical expression on both engines.
 
 Scale design (100 TB):
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.operators.relational import _cents, _cents_sql
+from metoffice_spark.parity import cents_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -76,8 +76,8 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     def partial(side: DataFrame) -> DataFrame:
         return side.groupBy("l_returnflag", "l_linestatus").agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(_cents(F.col("l_quantity"))).alias("qty_fp"),
-            F.sum(_cents(F.col("l_extendedprice"))).alias("price_fp"),
+            F.sum(F.expr(cents_sql("l_quantity"))).alias("qty_fp"),
+            F.sum(F.expr(cents_sql("l_extendedprice"))).alias("price_fp"),
             F.min("l_shipdate").alias("first_ship"),
             F.max("l_shipdate").alias("last_ship"),
         )
@@ -124,9 +124,9 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_INCR_AGG = f"""
 SELECT l_returnflag, l_linestatus,
        count(*) AS n_rows,
-       CAST(sum({_cents_sql("l_quantity")}) AS BIGINT) AS qty_fp,
-       CAST(sum({_cents_sql("l_extendedprice")}) AS BIGINT) AS price_fp,
-       CAST(sum({_cents_sql("l_quantity")}) AS BIGINT) / 100.0
+       CAST(sum({cents_sql("l_quantity")}) AS BIGINT) AS qty_fp,
+       CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT) AS price_fp,
+       CAST(sum({cents_sql("l_quantity")}) AS BIGINT) / 100.0
          / count(*) AS avg_qty,
        min(l_shipdate) AS first_ship,
        max(l_shipdate) AS last_ship
@@ -159,7 +159,7 @@ def q_topk_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "l_orderkey",
         "l_linenumber",
-        _cents(F.col("l_extendedprice")).alias("price_fp"),
+        F.expr(cents_sql("l_extendedprice")).alias("price_fp"),
     )
     order = [F.col("price_fp").desc(), F.col("l_orderkey"), F.col("l_linenumber")]
     salted = li.withColumn(
@@ -182,10 +182,10 @@ def q_topk_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_TOPK_TWOPHASE = f"""
 WITH ranked AS (
   SELECT l_returnflag, l_orderkey, l_linenumber,
-         {_cents_sql("l_extendedprice")} AS price_fp,
+         {cents_sql("l_extendedprice")} AS price_fp,
          row_number() OVER (
            PARTITION BY l_returnflag
-           ORDER BY {_cents_sql("l_extendedprice")} DESC,
+           ORDER BY {cents_sql("l_extendedprice")} DESC,
                     l_orderkey, l_linenumber) AS rk
   FROM lineitem
 )

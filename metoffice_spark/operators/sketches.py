@@ -36,6 +36,7 @@ from metoffice_spark.operators.scale import (
     _rho_duck,
     _rho_spark,
 )
+from metoffice_spark.parity import fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -551,7 +552,7 @@ def q_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
-            & (F.abs(F.col("value")) < F.lit(9.0e12))
+            & F.expr(fits_sql("value"))
         )
         .select(
             "event_type",
@@ -620,7 +621,7 @@ WITH ev AS (
   SELECT event_type, event_id,
          CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_fp
   FROM events
-  WHERE value IS NOT NULL AND abs(value) < 9.0e12
+  WHERE value IS NOT NULL AND {fits_sql("value")}
 ),
 bins AS (
   SELECT event_type, v_fp // {_QSK_BIN} AS bin,

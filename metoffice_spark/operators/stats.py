@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
+from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -271,7 +272,7 @@ def q_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the r08 boundary exists for
         .filter(
             F.col("o_totalprice").isNotNull()
-            & (F.abs(F.col("o_totalprice")) < F.lit(9.0e12))
+            & F.expr(fits_sql("o_totalprice"))
         )
         .select(
             "o_custkey",
@@ -300,12 +301,12 @@ def q_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GINI = """
+ORACLE_GINI = f"""
 WITH spend AS (
   SELECT o_custkey, CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
                          AS BIGINT) AS x
   FROM orders WHERE o_totalprice IS NOT NULL
-    AND abs(o_totalprice) < 9.0e12
+    AND {fits_sql("o_totalprice")}
   GROUP BY o_custkey
 ),
 ranked AS (
@@ -390,10 +391,7 @@ def q_ridge_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "cast((datediff(to_date(ts), to_date('1970-01-01')) + 4) % 7 as bigint)"
         ).alias("x2"),
-        F.expr(
-            "case when abs(value) < 9.0e12 "
-            "then cast(floor(value * 100 + 0.5) as bigint) end"
-        ).alias("y"),
+        F.expr(cents_sql("value")).alias("y"),
     )
     gram = ev.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -422,8 +420,7 @@ WITH ev AS (
   SELECT CAST(hour(ts) AS BIGINT) AS x1,
          CAST((datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) + 4) % 7
               AS BIGINT) AS x2,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS y
+         {cents_sql("value")} AS y
   FROM events
 ),
 gram AS (
@@ -831,10 +828,7 @@ def q_forecast_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.to_date("ts").alias("day"),
             F.hour("ts").cast("int").alias("hr"),
-            F.expr(
-                "case when abs(value) < 9.0e12 "
-                "then cast(floor(value * 100 + 0.5) as bigint) end"
-            ).alias("cents"),
+            F.expr(cents_sql("value")).alias("cents"),
         )
     )
     last_day = ev.agg(F.max("day").alias("dmax"))
@@ -870,11 +864,10 @@ def q_forecast_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FORECAST = """
+ORACLE_FORECAST = f"""
 WITH ev AS (
   SELECT event_type, CAST(ts AS DATE) AS day, CAST(hour(ts) AS INT) AS hr,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("value")} AS cents
   FROM events
 ),
 last_day AS (SELECT max(day) AS dmax FROM ev),
@@ -920,10 +913,7 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
-            F.expr(
-            "case when abs(value) < 9.0e12 "
-            "then cast(floor(value * 100 + 0.5) as bigint) end"
-        ).alias("y"),
+            F.expr(cents_sql("value")).alias("y"),
         )
     )
     cats = ev.groupBy("event_type").agg(
@@ -952,8 +942,7 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_TARGET_ENC = f"""
 WITH ev AS (
   SELECT event_id, event_type,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS y
+         {cents_sql("value")} AS y
   FROM events
 ),
 cats AS (

@@ -38,11 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import register_views
+from metoffice_spark.operators.relational import _DISC_PRICE
+from metoffice_spark.parity import bigint_sql, cents_sql
 
 QUERIES: dict = {}
-
-_REV_CENTS = "CASE WHEN abs(l_extendedprice * (1.0 - l_discount)) < 9.0e12 THEN CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0 + 0.5) AS BIGINT) END"
-
 
 # --- q_olap_scalar_subquery: Q17 shape (correlated scalar x2) ---------------
 #
@@ -60,16 +59,14 @@ _REV_CENTS = "CASE WHEN abs(l_extendedprice * (1.0 - l_discount)) < 9.0e12 THEN 
 
 SQL_OLAP_SCALAR_SUBQUERY = f"""
 SELECT CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum({_REV_CENTS}) AS DOUBLE) / 700e0 AS avg_yearly
+       CAST(sum({cents_sql(_DISC_PRICE)}) AS DOUBLE) / 700e0 AS avg_yearly
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
 WHERE p.p_brand = 'Brand#1'
-  AND 5 * CASE WHEN abs(l.l_quantity) < 9.0e12
-               THEN CAST(l.l_quantity AS BIGINT) END
+  AND 5 * {bigint_sql("l.l_quantity")}
       * (SELECT count(*) FROM lineitem l2
          WHERE l2.l_partkey = l.l_partkey)
-      < (SELECT CAST(sum(CASE WHEN abs(l2.l_quantity) < 9.0e12
-                            THEN CAST(l2.l_quantity AS BIGINT) END) AS BIGINT)
+      < (SELECT CAST(sum({bigint_sql("l2.l_quantity")}) AS BIGINT)
          FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
 """
 
@@ -125,22 +122,20 @@ QUERIES["q_olap_exists"] = (q_olap_exists, SQL_OLAP_EXISTS)
 # lineitem — on the same l_orderkey key the outer fact join uses, so
 # the two share a co-located shuffle at scale.
 
-SQL_OLAP_HAVING_IN = """
+SQL_OLAP_HAVING_IN = f"""
 SELECT c.c_name AS c_name,
        c.c_custkey AS c_custkey,
        o.o_orderkey AS o_orderkey,
        o.o_orderdate AS o_orderdate,
-       CASE WHEN abs(o.o_totalprice) < 9.0e12 THEN CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT) END AS total_cents,
-       CAST(sum(CASE WHEN abs(l.l_quantity) < 9.0e12
-                  THEN CAST(l.l_quantity AS BIGINT) END) AS BIGINT) AS sum_qty
+       {cents_sql("o.o_totalprice")} AS total_cents,
+       CAST(sum({bigint_sql("l.l_quantity")}) AS BIGINT) AS sum_qty
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON o.o_orderkey = l.l_orderkey
 WHERE o.o_orderkey IN (
   SELECT l_orderkey FROM lineitem
   GROUP BY l_orderkey
-  HAVING sum(CASE WHEN abs(l_quantity) < 9.0e12
-             THEN CAST(l_quantity AS BIGINT) END) > 250)
+  HAVING sum({bigint_sql("l_quantity")}) > 250)
 GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
 ORDER BY total_cents DESC, o.o_orderkey
 LIMIT 20
@@ -173,7 +168,7 @@ QUERIES["q_olap_having_in"] = (q_olap_having_in, SQL_OLAP_HAVING_IN)
 # expression cannot desynchronize the two engines
 _Q15_REVENUE_SQL = f"""
   SELECT l_suppkey AS supplier_no,
-         CAST(sum({_REV_CENTS}) AS BIGINT) AS rev_cents
+         CAST(sum({cents_sql(_DISC_PRICE)}) AS BIGINT) AS rev_cents
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
     AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
@@ -234,7 +229,7 @@ QUERIES["q_olap_top_supplier"] = (q_olap_top_supplier, SQL_OLAP_TOP_SUPPLIER)
 SQL_OLAP_MARKET_SHARE = f"""
 WITH volumes AS (
   SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
-         {_REV_CENTS} AS cents,
+         {cents_sql(_DISC_PRICE)} AS cents,
          n2.n_name AS supp_nation
   FROM lineitem l
   JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -282,9 +277,9 @@ QUERIES["q_olap_market_share"] = (q_olap_market_share, SQL_OLAP_MARKET_SHARE)
 # only sound use of a cartesian join at scale); NOT EXISTS plans as
 # a left-anti join on c_custkey against the date-filtered orders.
 
-SQL_OLAP_AVG_BALANCE = """
+SQL_OLAP_AVG_BALANCE = f"""
 WITH avg_bal AS (
-  SELECT CAST(sum(CASE WHEN abs(c_acctbal) < 9.0e12 THEN CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) END) AS BIGINT)
+  SELECT CAST(sum({cents_sql("c_acctbal")}) AS BIGINT)
            AS sum_cents,
          CAST(count(*) AS BIGINT) AS cnt
   FROM customer
@@ -292,12 +287,12 @@ WITH avg_bal AS (
 )
 SELECT n.n_name AS nation,
        CAST(count(*) AS BIGINT) AS numcust,
-       CAST(sum(CASE WHEN abs(c.c_acctbal) < 9.0e12 THEN CAST(floor(c.c_acctbal * 100.0 + 0.5) AS BIGINT) END) AS DOUBLE) / 100e0
+       CAST(sum({cents_sql("c.c_acctbal")}) AS DOUBLE) / 100e0
          AS totacctbal
 FROM customer c
 JOIN nation n ON c.c_nationkey = n.n_nationkey
 CROSS JOIN avg_bal a
-WHERE CASE WHEN abs(c.c_acctbal) < 9.0e12 THEN CAST(floor(c.c_acctbal * 100.0 + 0.5) AS BIGINT) END * a.cnt > a.sum_cents
+WHERE {cents_sql("c.c_acctbal")} * a.cnt > a.sum_cents
   AND NOT EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')

@@ -8,7 +8,7 @@ interval/ordered analytics over event timelines.
 
 Cross-engine determinism: every window has a total order (ts ties
 broken by event_id / orderkey), every aggregated quantity is an exact
-BIGINT (fixed-point via relational._cents), and any IEEE divide
+BIGINT (fixed-point via parity.cents_sql), and any IEEE divide
 happens last on exact integer inputs with the identical expression on
 both engines (the llm.py discipline).
 
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.io import load
-from metoffice_spark.operators.relational import _cents, _cents_sql
+from metoffice_spark.parity import cents_sql, fits_sql
 
 QUERIES: dict = {}
 
@@ -347,9 +347,9 @@ def q_win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             F.col("value").isNotNull()
             & F.col("ts").isNotNull()
-            & (F.abs(F.col("value")) < F.lit(9.0e12))
+            & F.expr(fits_sql("value"))
         )
-        .select("event_id", "user_id", "ts", _cents(F.col("value")).alias("x_fp"))
+        .select("event_id", "user_id", "ts", F.expr(cents_sql("value")).alias("x_fp"))
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     num = F.lit(0).cast("bigint")
@@ -379,9 +379,9 @@ def _ewma_oracle() -> str:
         dens.append(f"CASE WHEN {lagx} IS NOT NULL THEN {wgt} ELSE 0 END")
     return f"""
 WITH src AS (
-  SELECT event_id, user_id, ts, {_cents_sql("value")} AS x_fp
+  SELECT event_id, user_id, ts, {cents_sql("value")} AS x_fp
   FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-    AND abs(value) < 9.0e12
+    AND {fits_sql("value")}
 )
 SELECT event_id, user_id, ts, x_fp,
        CAST({" + ".join(nums)} AS BIGINT) AS ewma_num,
@@ -414,7 +414,7 @@ def q_win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     second orders by a prefix-compatible key); segment cardinality is
     small but each partition streams — no per-row state."""
     cust = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", _cents(F.col("c_acctbal")).alias("bal_fp")
+        "c_custkey", "c_mktsegment", F.expr(cents_sql("c_acctbal")).alias("bal_fp")
     )
     w_val = Window.partitionBy("c_mktsegment").orderBy(F.desc("bal_fp"))
     w_uni = Window.partitionBy("c_mktsegment").orderBy(F.desc("bal_fp"), F.asc("c_custkey"))
@@ -432,18 +432,18 @@ def q_win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_WIN_DISTRIBUTION = f"""
 SELECT c_custkey, c_mktsegment,
-       {_cents_sql("c_acctbal")} AS bal_fp,
+       {cents_sql("c_acctbal")} AS bal_fp,
        CAST(rank() OVER w_val AS BIGINT) AS rk,
        CAST(count(*) OVER (
-         PARTITION BY c_mktsegment ORDER BY {_cents_sql("c_acctbal")} DESC
+         PARTITION BY c_mktsegment ORDER BY {cents_sql("c_acctbal")} DESC
        ) AS BIGINT) AS cume_cnt,
        CAST(count(*) OVER (PARTITION BY c_mktsegment) AS BIGINT) AS seg_n,
        CAST(ntile(4) OVER w_uni AS INT) AS quartile
 FROM customer
 WINDOW
-  w_val AS (PARTITION BY c_mktsegment ORDER BY {_cents_sql("c_acctbal")} DESC),
+  w_val AS (PARTITION BY c_mktsegment ORDER BY {cents_sql("c_acctbal")} DESC),
   w_uni AS (PARTITION BY c_mktsegment
-            ORDER BY {_cents_sql("c_acctbal")} DESC, c_custkey)
+            ORDER BY {cents_sql("c_acctbal")} DESC, c_custkey)
 """
 
 QUERIES["q_win_distribution"] = (q_win_distribution, ORACLE_WIN_DISTRIBUTION)
@@ -530,11 +530,11 @@ def q_cov_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness)."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
-        & (F.abs(F.col("value")) < F.lit(9.0e12))
+        & F.expr(fits_sql("value"))
     )
     src = ev.select(
         "event_type",
-        _cents(F.col("value")).alias("x"),
+        F.expr(cents_sql("value")).alias("x"),
         F.hour("ts").cast("bigint").alias("y"),
     )
     agg = src.groupBy("event_type").agg(
@@ -564,10 +564,10 @@ def q_cov_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_COV_STATS = f"""
 WITH src AS (
-  SELECT event_type, {_cents_sql("value")} AS x,
+  SELECT event_type, {cents_sql("value")} AS x,
          CAST(EXTRACT(hour FROM ts) AS BIGINT) AS y
   FROM events WHERE value IS NOT NULL
-    AND abs(value) < 9.0e12
+    AND {fits_sql("value")}
 ),
 agg AS (
   SELECT event_type, count(*) AS n,

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
 from metoffice_spark.io import load
+from metoffice_spark.parity import FIXED_POINT_MAX, cents_sql
 
 
 # --- q_udf_scalar: vectorized scalar pandas UDFs -----------------------------
@@ -205,20 +206,17 @@ def q_udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _minmax(pdf: pd.DataFrame) -> pd.DataFrame:
         # SQL NULL semantics, not numpy's: a NULL value is NaN here,
         # and `.astype("int64")` of NaN is the int64-min SENTINEL, not
-        # a NULL (r07 null-value fuzz finding). Keep the math in
-        # float64 (cents * 1e6 < 2^53, so floor-div stays exact),
-        # bound lo/hi over the NON-null values only (SQL min/max), and
-        # ship masked Int64 arrays so NULLs arrive as NULLs.
-        # ~(abs < 9.0e12), not isnan (r10 extreme-value probe,
-        # tightened r12 huge-finite probe): a NaN/±Inf reading is as
-        # unrepresentable in cents as a huge-finite one — numpy's
-        # .astype("int64") of 1e19 silently WRAPS where the oracle's
-        # ANSI cast raises — so the kernel mirrors the repo-wide
-        # FIXED_POINT_MAX guard: anything not provably in magnitude
-        # contract maps to NULL exactly like the oracle's cents CASE.
+        # a NULL. Keep the math in float64 (cents * 1e6 < 2^53, so
+        # floor-div stays exact), bound lo/hi over the NON-null values
+        # only (SQL min/max), and ship masked Int64 arrays so NULLs
+        # arrive as NULLs. The mask is ~(abs < FIXED_POINT_MAX), not
+        # isnan: a NaN/±Inf reading is as unrepresentable in cents as
+        # a huge-finite one (numpy's .astype("int64") of 1e19 wraps
+        # silently), so the kernel applies the oracle's cents_sql
+        # guard and maps every such value to NULL.
         raw = pdf["value"].to_numpy(dtype="float64")
         v = np.floor(raw * 100 + 0.5)
-        null = ~(np.abs(raw) < 9.0e12)
+        null = ~(np.abs(raw) < FIXED_POINT_MAX)
         valid = v[~null]
         lo = valid.min() if valid.size else 0.0
         span = max((valid.max() - lo) if valid.size else 1.0, 1.0)
@@ -250,11 +248,10 @@ def q_udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_UDF_GROUPED_MAP = """
+ORACLE_UDF_GROUPED_MAP = f"""
 WITH ev AS (
   SELECT event_type, event_id,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS v_fp
+         {cents_sql("value")} AS v_fp
   FROM events
 ),
 b AS (
@@ -325,10 +322,7 @@ def q_udf_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         # value is an invalid reading — NULL cents, same CASE as the
         # oracle (an unmasked floor would diverge: Spark floor(NaN)=0,
         # DuckDB crashes the BIGINT cast)
-        F.expr(
-            "case when abs(value) < 9.0e12 "
-            "then cast(floor(value * 100 + 0.5) as bigint) end"
-        ).alias("cents"),
+        F.expr(cents_sql("value")).alias("cents"),
     )
     # bucket count: scale-adaptive (one bucket per session core at
     # local 32 ≈ the measured optimum; more buckets on a big cluster
@@ -424,12 +418,11 @@ def q_udf_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_UDF_COGROUPED = """
+ORACLE_UDF_COGROUPED = f"""
 WITH ev AS (
   SELECT user_id, event_id, event_type,
          CAST(floor(epoch(ts)) AS BIGINT) AS ep,
-         CASE WHEN abs(value) < 9.0e12
-              THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS cents
+         {cents_sql("value")} AS cents
   FROM events
   WHERE ts IS NOT NULL
 ),

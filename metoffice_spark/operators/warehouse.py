@@ -14,6 +14,7 @@ from metoffice_spark.functions.distributed import (
     global_strict_prefix_min,
 )
 from metoffice_spark.io import load
+from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
 QUERIES: dict = {}
@@ -67,7 +68,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("o_orderdate").isNotNull()
             # finite extension (r10 composed battery, q_gini_spend
             # class): all-non-finite customers must not reach ntile
-            & (F.abs(F.col("o_totalprice")) < F.lit(9.0e12))
+            & F.expr(fits_sql("o_totalprice"))
         )
         .select(
             "o_custkey",
@@ -133,7 +134,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RFM = """
+ORACLE_RFM = f"""
 WITH per_cust AS (
   SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_d,
          CAST(count(*) AS BIGINT) AS freq,
@@ -141,7 +142,7 @@ WITH per_cust AS (
            AS money
   FROM orders
   WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-    AND abs(o_totalprice) < 9.0e12
+    AND {fits_sql("o_totalprice")}
   GROUP BY o_custkey
 ),
 obs AS (SELECT max(last_d) AS obs_d FROM per_cust),
@@ -358,7 +359,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         # finite extension (r10 composed battery): the q_gini_spend
         # all-non-finite-customer shape — NULL totals rank per-engine
         F.col("o_totalprice").isNotNull()
-        & (F.abs(F.col("o_totalprice")) < F.lit(9.0e12))
+        & F.expr(fits_sql("o_totalprice"))
     ).select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
@@ -405,12 +406,12 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("decile")
 
 
-ORACLE_LORENZ = """
+ORACLE_LORENZ = f"""
 WITH spend AS (
   SELECT o_custkey,
          CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS s
   FROM orders WHERE o_totalprice IS NOT NULL
-    AND abs(o_totalprice) < 9.0e12
+    AND {fits_sql("o_totalprice")}
   GROUP BY o_custkey
 ),
 deciled AS (
@@ -468,7 +469,7 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             # finite extension (r10 composed battery, q_gini_spend
             # class): an all-non-finite part must not reach the
             # revenue-rank cumsum
-            & (F.abs(F.col("l_extendedprice")) < F.lit(9.0e12))
+            & F.expr(fits_sql("l_extendedprice"))
         )
         .select(
             "l_partkey",
@@ -514,12 +515,12 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ABC = """
+ORACLE_ABC = f"""
 WITH rev AS (
   SELECT l_partkey,
          CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS r
   FROM lineitem WHERE l_extendedprice IS NOT NULL
-    AND abs(l_extendedprice) < 9.0e12
+    AND {fits_sql("l_extendedprice")}
   GROUP BY l_partkey
 ),
 cum AS (
@@ -570,8 +571,7 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders = load(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.when(F.abs(F.col("o_totalprice")) < F.lit(9.0e12), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .alias("cents"),
+        F.expr(cents_sql("o_totalprice")).alias("cents"),
     )
     spend = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
@@ -604,10 +604,10 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HHI = """
+ORACLE_HHI = f"""
 WITH spend AS (
   SELECT c.c_nationkey, o.o_custkey,
-         CAST(sum(CASE WHEN abs(o.o_totalprice) < 9.0e12 THEN CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) END) AS BIGINT) AS s
+         CAST(sum({cents_sql("o.o_totalprice")}) AS BIGINT) AS s
   FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
   GROUP BY c.c_nationkey, o.o_custkey
 ),
@@ -662,7 +662,7 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "part")
         .filter(
             F.col("p_retailprice").isNotNull()
-            & (F.abs(F.col("p_retailprice")) < F.lit(9.0e12))
+            & F.expr(fits_sql("p_retailprice"))
         )
         .select(
             "p_partkey",
@@ -691,14 +691,14 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SKYLINE = """
+ORACLE_SKYLINE = f"""
 WITH part_p AS (
   SELECT p_partkey,
          CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents,
          CAST(p_size AS BIGINT) AS size
   FROM part
   WHERE p_retailprice IS NOT NULL
-    AND abs(p_retailprice) < 9.0e12
+    AND {fits_sql("p_retailprice")}
 ),
 flagged AS (
   SELECT p_partkey, price_cents, size,

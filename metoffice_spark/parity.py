@@ -11,6 +11,11 @@ that has one defined answer in IEEE doubles:
 - ``rhu_sql(x, d)``       → round-half-up to d decimals, as DOUBLE
 - ``fixed_str_sql(x, d)`` → fixed-precision decimal STRING (toFixed analog)
 - ``form_enc_sql(x)``     → x-www-form-urlencoded value
+- ``fits_sql(x)``         → ``abs(x) < 9.0e12``: x is finite and fits
+  the fixed-point bound (NaN, ±Inf and NULL do not)
+- ``cents_sql(x, scale)`` → ``floor(x * scale + 0.5)`` as BIGINT, NULL
+  where x does not fit
+- ``bigint_sql(x)``       → integral x as BIGINT, NULL where it does not fit
 
 Spark consumes these via ``spark.sql`` or ``F.expr(...)``; oracle SQL
 embeds the same text verbatim. Both parsers accept the subset used
@@ -19,22 +24,18 @@ here (CASE, CAST, floor, abs, lpad, replace, ``||``).
 
 from __future__ import annotations
 
-# ONE magnitude bound for every fixed-point spelling in the repo. A
-# FINITE word with |x| >= 9.0e12 passes every abs(x) < inf guard, but
-# its scaled fixed-point value overflows int64 at scale 10^6 (9.0e12 *
-# 1e6 = 9.0e18 < 2^63 ~ 9.22e18, anything much bigger is not); scales
-# ABOVE 10^6 (d=8 is in use, relational.py exp_disc/ln_price/
-# log10_price/cos_disc) need a TIGHTER bound — see _bound_sql below.
-# The overflow is not a symmetric crash: Spark's floor(double) returns
-# LONG via Java's saturating double->long conversion, so an unguarded
-# floor path silently answers a Long.MAX-shaped value (a leading digit
-# of '9', a rounded 9223372036854.775807) while DuckDB's explicit CAST
-# raises. A huge-finite word is therefore QUARANTINED like NaN/±Inf:
-# every fixed-point guard bounds the magnitude, the value becomes NULL
-# (missing measurement, the validity-class semantics every null-axis
-# probe pins), and q_dq_checks DETECTS the violation
-# (*_fits_fixed_point rows). Keep the SQL literal '9.0e12' textually
-# identical on both engines.
+# The one magnitude bound of every fixed-point value in the repo. A
+# FINITE value with |x| >= 9.0e12 passes every abs(x) < inf guard, but
+# its scaled value overflows int64 at scale 10^6 (9.0e12 * 1e6 = 9.0e18
+# < 2^63 ~ 9.22e18); scales above 10^6 use the tighter _bound_sql(d).
+# Past int64 the engines disagree without failing: Spark's
+# floor(double) returns LONG through Java's saturating conversion (a
+# Long.MAX-shaped answer) while DuckDB's CAST raises. Such a value is
+# therefore treated like NaN/±Inf: the guard turns it into NULL (a
+# missing measurement), and q_dq_checks counts it in its
+# *_fits_fixed_point rows. Builders and oracles both spell the guard
+# through fits_sql/cents_sql/bigint_sql below, so the bound is written
+# only here.
 FIXED_POINT_MAX = 9.0e12
 FIXED_POINT_MAX_SQL = "9.0e12"
 
@@ -53,6 +54,29 @@ def _bound_sql(d: int) -> str:
     '9.0e12'. Both engines always receive the SAME generated text, so
     parity is structural whatever d is."""
     return f"9.0e{12 - max(0, d - 6)}"
+
+
+def fits_sql(x: str) -> str:
+    """``x`` is finite and inside the fixed-point bound. NaN, ±Inf,
+    NULL and huge-finite values all fail it, so a guarded value is
+    NULL exactly where it could not be scaled into int64."""
+    return f"abs({x}) < {FIXED_POINT_MAX_SQL}"
+
+
+def cents_sql(x: str, scale: int = 100) -> str:
+    """``floor(x * scale + 0.5)`` as BIGINT: integer-exact fixed point,
+    identical on both engines, so money sums add BIGINTs in any order.
+    A value that fails ``fits_sql`` becomes NULL rather than a
+    saturated Spark LONG or a DuckDB cast error. ``scale`` is at most
+    10^6, the scale the bound is sized for."""
+    return f"CASE WHEN {fits_sql(x)} THEN CAST(floor(({x}) * {scale} + 0.5) AS BIGINT) END"
+
+
+def bigint_sql(x: str) -> str:
+    """Integral ``x`` as BIGINT, NULL where it fails ``fits_sql``. Only
+    for integral values: the cast truncates on Spark and rounds on
+    DuckDB."""
+    return f"CASE WHEN {fits_sql(x)} THEN CAST({x} AS BIGINT) END"
 
 
 def rhu_sql(x: str, d: int) -> str:

@@ -891,35 +891,32 @@ def test_composed_stress_slice_parity(qid, spark, stress_dir):
         con.close()
 
 
-# --- extreme-value axes (r10 wave 2: --extval) --------------------------------
+# --- extreme-value axes (--extval) ---------------------------------------------
 #
 # The corrupt-upstream shapes no NULL probe reaches: NaN readings in
-# events.value. Registry-wide the NaN probe found 68 failures in one
-# run — the largest single-axis haul of any wave — almost all one
-# class: the integer-cents discipline's BIGINT cast CRASHES both ANSI
-# engines on NaN (DuckDB raises; Spark's floor() silently coins 0
-# where it doesn't). Contract decision: a non-finite reading is an
-# INVALID measurement — the reading-validity boundary (obs.py ev CTE)
-# extends to `abs(value) < CAST('inf' AS DOUBLE)` (the dialect-common
-# isfinite: both engines order NaN above +Inf), fixing every
-# weather/rain/stream consumer in one edit; the shared fixed-point
-# macros (_cents/_cents_sql, behavior._CENTS, parity.rhu/rhu_sql) and
-# the inline cents sites mask non-finite to NULL — missing data,
-# handled by the same NULL semantics every null-axis probe already
-# pins; and the pandas kernels use ~isfinite instead of isnan. Money
-# columns carry the same masked-cents semantics PLUS a detect row
-# (lineitem_money_finite / orders_totalprice_finite in q_dq_checks).
+# events.value. Unguarded, the integer-cents BIGINT cast raises on
+# NaN in DuckDB while Spark's floor() silently coins 0. A non-finite
+# reading is an INVALID measurement: the reading-validity boundary
+# (obs.py ev CTE) excludes it with the dialect-common isfinite
+# (`parity.fits_sql`: both engines order NaN above +Inf), which covers
+# every weather/rain/stream consumer at once; the parity fragments
+# (cents_sql, bigint_sql, rhu_sql) mask non-finite to NULL — missing
+# data, handled by the same NULL semantics every null-axis probe
+# already pins; and the pandas kernels mask ~(abs < FIXED_POINT_MAX)
+# instead of isnan. Money columns carry the same masked-cents
+# semantics PLUS a detect row (lineitem_money_finite /
+# orders_totalprice_finite in q_dq_checks).
 EXTVAL_NAN_QIDS = (
     "q_rain_rate",          # obs substrate boundary
     "q_percentile_exact",   # rank-validity boundary extension
     "q_mad_outlier",        # rank-validity boundary extension
-    "q_attribution",        # behavior._CENTS macro mask
+    "q_attribution",        # cents_sql mask on events.value
     "q_ts_trend",           # inline sum-cents mask
     "q_ohlc_bars",          # masked v_fp through struct min/max picks
     "q_udf_grouped_map",    # pandas kernel ~isfinite
     "q_udf_cogrouped",      # pandas kernel + oracle CASE cents
     "q_join_spatial",       # masked grid-cell key (±inf INT overflow)
-    "q_win_ewma",           # _cents_sql mask behind the finite filter
+    "q_win_ewma",           # cents_sql mask behind the finite filter
     "q_forecast_snaive",    # inline cents in stats.py
 )
 
@@ -1672,7 +1669,7 @@ HUGE_EXTVAL = {
 HUGE_QUARANTINE_QIDS = (
     "q_agg_hash",         # lineitem.l_extendedprice cents sum
     "q_win_frame",        # orders.o_totalprice cents running windows
-    "q_attribution",      # events.value cents credit (behavior._CENTS)
+    "q_attribution",      # events.value cents credit (cents_sql)
     "q_benford_test",     # the saturated-digit finder (digit '9')
     "q_case_when",        # the rhu() saturation finder
     "q_udf_grouped_map",  # numpy astype(int64) wrap -> kernel mask

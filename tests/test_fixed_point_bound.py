@@ -1,23 +1,25 @@
-"""Pin the repo-wide fixed-point magnitude bound (ADVICE r12 items 1+3).
+"""Pin the repo-wide fixed-point magnitude bound.
 
-Two contracts:
+Three contracts:
 
-1. **Literal sync** — the bound literal ``9.0e12`` is hard-coded at
-   ~140 dialect-common SQL sites across the operator modules (it must
-   be: the SQL text is embedded verbatim in oracle strings, so it
-   cannot always be interpolated without rebuilding every oracle as an
-   f-string). If ``FIXED_POINT_MAX_SQL`` is ever retuned in parity.py,
-   every stale site must be flagged loudly — this test greps the
-   source tree and asserts every bound-class literal equals the
-   canonical one.
+1. **One home** — ``parity.py`` is the only module under
+   ``metoffice_spark/`` that writes the bound literal ``9.0e12``.
+   Builders and oracles spell every guard through ``fits_sql`` /
+   ``cents_sql`` / ``bigint_sql`` (or ``FIXED_POINT_MAX`` in numpy
+   kernels), so retuning the bound is a one-line change. Under
+   ``tools/``, ``__spark_entry__.py`` and ``bench.py`` a copy of the
+   literal must still equal ``FIXED_POINT_MAX_SQL``.
 
-2. **Scale-aware guard** — ``rhu_sql``/``fixed_str_sql`` at scale 10**d must
-   bound the INPUT so the scaled value ``floor(x * 10**d + 0.5)``
-   stays inside int64 (ADVICE r12 item 1: a flat 9.0e12 guard at d=8
-   admits inputs in [2**63/1e8 ~ 9.22e10, 9.0e12) whose scaled floor
-   saturates Spark's LONG while DuckDB keeps an exact double — the
-   silent asymmetric class the r12 `huge` probe established). The
-   dual-engine slice below sits exactly in that band.
+2. **Scale-aware guard** — ``rhu_sql``/``fixed_str_sql`` at scale
+   10**d must bound the INPUT so the scaled value
+   ``floor(x * 10**d + 0.5)`` stays inside int64: a flat 9.0e12 guard
+   at d=8 admits inputs in [2**63/1e8 ~ 9.22e10, 9.0e12) whose scaled
+   floor saturates Spark's LONG while DuckDB keeps an exact double.
+   The dual-engine slice below sits exactly in that band.
+
+3. **Golden fragments** — ``cents_sql``/``fits_sql``/``bigint_sql``
+   give the same value on Spark and DuckDB at the rounding ties, at
+   the bound, and on NaN/±Inf/NULL.
 """
 
 from __future__ import annotations
@@ -34,6 +36,9 @@ from metoffice_spark.parity import (
     FIXED_POINT_MAX,
     FIXED_POINT_MAX_SQL,
     _bound_sql,
+    bigint_sql,
+    cents_sql,
+    fits_sql,
     fixed_str_sql,
     rhu_sql,
 )
@@ -59,18 +64,25 @@ def _source_files():
 
 
 def test_bound_literal_in_sync_everywhere():
+    """Under metoffice_spark/ the bound is written only in parity.py;
+    elsewhere every bound-class literal equals the canonical one."""
     assert float(FIXED_POINT_MAX_SQL) == FIXED_POINT_MAX
-    stale = []
+    stray, stale = [], []
     for path in _source_files():
-        if os.path.basename(path) == "parity.py":
-            # canonical definition site (incl. the 9.0e18 headroom
-            # arithmetic in the contract comment)
-            continue
+        rel = os.path.relpath(path, _ROOT)
+        if rel == os.path.join("metoffice_spark", "parity.py"):
+            continue  # canonical definition site
         with open(path) as f:
             for lineno, line in enumerate(f, 1):
                 for lit in _BOUND_CLASS.findall(line):
-                    if lit != FIXED_POINT_MAX_SQL:
-                        stale.append(f"{os.path.relpath(path, _ROOT)}:{lineno}: {lit}")
+                    if rel.startswith("metoffice_spark" + os.sep):
+                        stray.append(f"{rel}:{lineno}: {lit}")
+                    elif lit != FIXED_POINT_MAX_SQL:
+                        stale.append(f"{rel}:{lineno}: {lit}")
+    assert stray == [], (
+        "bound literal written outside parity.py; use fits_sql/cents_sql/"
+        "bigint_sql or FIXED_POINT_MAX:\n" + "\n".join(stray)
+    )
     assert stale == [], (
         "bound-class literals out of sync with parity.FIXED_POINT_MAX_SQL "
         f"({FIXED_POINT_MAX_SQL}) — retune left these behind:\n" + "\n".join(stale)
@@ -201,3 +213,40 @@ def test_d8_band_nulls_on_both_engines(spark, x):
     o = con.sql(f"SELECT {rhu_sql(ve, 8)} AS v").fetchone()[0]
     got = spark.range(1).select(F.expr(rhu_sql(ve, 8)).alias("r")).first()["r"]
     assert got == o == 1.23456789
+
+
+def _dbl(v: str) -> str:
+    return f"CAST({v} AS DOUBLE)"
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        (cents_sql(_dbl("0.125")), 13),
+        (cents_sql(_dbl("-0.125")), -12),
+        (cents_sql(_dbl("8.99e12"), 10**6), 8_990_000_000_000_000_000),
+        (cents_sql(_dbl("9.0e12"), 10**6), None),
+        (cents_sql(_dbl("'NaN'")), None),
+        (cents_sql(_dbl("'inf'")), None),
+        (cents_sql(_dbl("'-inf'")), None),
+        (cents_sql(_dbl("NULL")), None),
+        (fits_sql(_dbl("8.99e12")), True),
+        (fits_sql(_dbl("-8.99e12")), True),
+        (fits_sql(_dbl("9.0e12")), False),
+        (fits_sql(_dbl("'NaN'")), False),
+        (fits_sql(_dbl("'inf'")), False),
+        (fits_sql(_dbl("'-inf'")), False),
+        (fits_sql(_dbl("NULL")), None),
+        (bigint_sql(_dbl("-7.0")), -7),
+        (bigint_sql(_dbl("9.0e12")), None),
+        (bigint_sql(_dbl("'NaN'")), None),
+    ],
+)
+def test_fragments_agree_on_both_engines(spark, sql, want):
+    """The fixed-point fragments give one answer on both engines."""
+    con = duckdb.connect()
+    got_duck = con.sql(f"SELECT {sql} AS v").fetchone()[0]
+    got_spark = spark.range(1).select(F.expr(sql).alias("v")).first()["v"]
+    assert got_duck == got_spark == want
+    if want is not None:
+        assert type(got_duck) is type(got_spark) is type(want)

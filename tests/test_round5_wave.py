@@ -535,7 +535,6 @@ def test_pattern_match_recount(spark, sf_smoke):
 def test_percentile_cont_brackets(spark, sf_smoke):
     """The interpolated value lies in [v_lo, v_hi], v_lo <= v_hi, and
     the exact integer interpolation reproduces in Python."""
-    from metoffice_spark.operators.behavior import _CENTS  # noqa: F401
     from metoffice_spark.operators.analytics import _PCTC, q_percentile_cont
 
     rows = q_percentile_cont(spark, sf_smoke).collect()

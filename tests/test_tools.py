@@ -46,3 +46,29 @@ def test_measure_reports_one_record_per_qid(sf_smoke):
     } <= set(record)
     assert record["qid"] == "q_sink_http_form" and record["error"] is None
     assert record["spark.jobs"] > 0
+
+
+def _node(name: str, acc: int | None, *children: dict) -> dict:
+    metrics = [] if acc is None else [{"name": "m", "accumulatorId": acc, "metricType": "sum"}]
+    return {"nodeName": name, "children": list(children), "metrics": metrics}
+
+
+def test_plan_shape_counts_a_cached_subtree_once():
+    from measure import plan_shape
+
+    def cached() -> dict:  # the same cached plan, as each scan of it reports it
+        return _node("InMemoryRelation", 10,
+                     _node("Exchange", 11, _node("Scan parquet ", 12)))
+
+    plans = [
+        _node("SortMergeJoin", 1,
+              _node("InMemoryTableScan", 2, cached()),
+              _node("InMemoryTableScan", 3, cached())),
+        _node("Exchange", 4, _node("WholeStageCodegen (1)", None,
+                                   _node("Window", 5, _node("InMemoryTableScan", 6, cached())))),
+    ]
+    shape = plan_shape(plans)
+    assert shape["plan.scans"] == 1
+    assert shape["plan.exchanges"] == 2
+    assert shape["plan.joins"] == {"SortMergeJoin": 1}
+    assert shape["plan.windows"] == 1

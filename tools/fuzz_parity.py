@@ -808,10 +808,10 @@ if __name__ == "__main__":
     use_nullprobe = "--nullprobe" in args
     if use_nullprobe:
         args.remove("--nullprobe")
-    # --raise-symmetric (r12, the huge-finite axis): some extval kinds
+    # --raise-symmetric (the huge-finite axis): some extval kinds
     # inject OUT-OF-CONTRACT data whose documented surface is a LOUD
-    # crash (relational.py _cents docstring: a finite money word whose
-    # fixed-point scaling overflows int64 raises the ANSI BIGINT cast).
+    # crash (a finite money word whose fixed-point scaling overflows
+    # int64 raises the ANSI BIGINT cast where no guard applies).
     # Under this flag a qid where BOTH engines raise scores
     # RAISE-BOTH — contract-conformant: no silent wrong answer, no
     # asymmetric survival. A qid where only ONE engine raises (the

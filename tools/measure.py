@@ -9,9 +9,9 @@ with ``build:`` and ``exec:`` children, so its jobs, stages and SQL
 executions are attributed to it. After the session stops, the event
 log gives every counter ``layers.span_counters`` reports (jobs, stages,
 tasks, executor run/CPU time, shuffle bytes, spill, Python-eval time,
-exchanges in the final AQE plan, driver gap), plus counts of scans,
-joins by strategy and windows from the node names of that same final
-plan. ``q_stream_*`` qids add the setup / stream / read-back split and
+driver gap), plus counts of scans, exchanges, joins by strategy and
+windows from the node names of the final AQE plans, each node counted
+once per qid (``plan_shape``). ``q_stream_*`` qids add the setup / stream / read-back split and
 each micro-batch's progress, from ``layers.StreamEvents``.
 
 A qid that fails is recorded with its error and the run goes on.
@@ -43,15 +43,27 @@ _STATE_KEYS = (
 
 
 def plan_shape(plans: list[dict]) -> dict:
-    """Scan, join (by strategy) and window counts of event-log plans."""
-    shape = {"plan.scans": 0, "plan.joins": {}, "plan.windows": 0}
+    """Scan, exchange, join (by strategy) and window counts of event-log
+    plans. Each node counts once, keyed by its metrics' accumulator
+    ids: a cached frame's plan is the child of every InMemoryTableScan
+    of it, and a reused subtree appears at each reuse, but each ran
+    once."""
+    shape = {"plan.scans": 0, "plan.exchanges": 0, "plan.joins": {}, "plan.windows": 0}
+    seen: set[tuple] = set()
     stack = list(plans)
     while stack:
         node = stack.pop()
+        key = tuple(sorted(m["accumulatorId"] for m in node.get("metrics", ())))
+        if key in seen:
+            continue
+        if key:
+            seen.add(key)
         stack += node["children"]
         name = node["nodeName"]
         if name.startswith("Scan "):
             shape["plan.scans"] += 1
+        elif name in ("Exchange", "BroadcastExchange"):
+            shape["plan.exchanges"] += 1
         elif name == "Window":
             shape["plan.windows"] += 1
         elif name.endswith("Join") or name == "CartesianProduct":

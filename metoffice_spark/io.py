@@ -6,6 +6,11 @@ the 100 TB layout assumption is date/key-partitioned parquet, which
 the same reader handles via partition discovery. A repeated load of
 one file version passes the schema inferred the first time, so only
 the first load runs Spark's schema-inference job.
+
+The SQL-text builders go through :func:`sql_frame`, which parses and
+analyses each text once per session, input file versions and
+analysis confs; every call still returns a Dataset of its own, so
+each action optimises, plans and scans again.
 """
 
 from __future__ import annotations
@@ -101,3 +106,31 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     """Register each table as a temp view so SQL-form queries can run."""
     for name in names:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+# The analysed frame of each SQL text, one entry per text, with the key
+# it was analysed under: the session, the path and file version of
+# every table the text reads, and the confs analysis bakes into the
+# plan (the time zone of date/time expressions, ANSI arithmetic and
+# casts). A changed key analyses the text again. Each call returns a
+# new Dataset over the kept frame (``alias``), so each action gets its
+# own QueryExecution: it is optimised and planned again, scans every
+# file again and writes its own shuffles, while parsing and analysis
+# of the text are skipped.
+# ``obs.observations`` is left out: it is a building block, and two
+# Datasets over one analysed plan share attribute ids, so a self-join
+# of two of them by Dataset columns is ambiguous.
+_ANALYSIS_CONFS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
+_FRAMES: dict[str, tuple[tuple, DataFrame]] = {}
+
+
+def sql_frame(spark: SparkSession, sf_dir: str, tables, text: str) -> DataFrame:
+    """``spark.sql(text)`` over the views of ``tables``, analysed once
+    per key (see ``_FRAMES``); a hit registers no views."""
+    stamps = [(p, _stamp(p)) for p in (table_path(sf_dir, t) for t in tables)]
+    key = (spark, stamps, [spark.conf.get(c) for c in _ANALYSIS_CONFS])
+    kept = _FRAMES.get(text)
+    if kept is None or kept[0] != key:
+        register_views(spark, sf_dir, tables)
+        kept = _FRAMES[text] = (key, spark.sql(text))
+    return kept[1].alias("sql_frame")

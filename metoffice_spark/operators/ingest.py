@@ -46,7 +46,7 @@ from metoffice_spark.functions.weather import (
     mm_to_in_sql,
     ms_to_mph_sql,
 )
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.obs import observations, oracle_cte
 from metoffice_spark.operators.rain import _RAIN_BASE_SQL, _RAIN_DAILY_SQL, _RAIN_RATE_SQL
 from metoffice_spark.parity import cents_sql, fixed_str_sql, form_enc_sql
@@ -238,13 +238,13 @@ def wow_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation composed end-to-end, one row per observation.
 
     Runs as ONE SQL text, the template the DuckDB oracle also executes
-    (only the timestamp formatter differs), so the build is a single
-    SQL parse rather than hundreds of py4j expression-builder calls.
+    (only the timestamp formatter differs), so the build is parsed and
+    analysed once per events file version (``io.sql_frame``) rather
+    than hundreds of py4j expression-builder calls per build.
     Its last stage fuses into a whole-stage method too large for the
     JIT; ``spark.sql.codegen.hugeMethodLimit`` in ``session`` makes
     Spark run that stage unfused (see the comment there)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_WOW_PAYLOAD_SPARK_SQL)
+    return sql_frame(spark, sf_dir, ("events",), _WOW_PAYLOAD_SPARK_SQL)
 
 
 def q_sink_http_form(spark: SparkSession, sf_dir: str) -> DataFrame:

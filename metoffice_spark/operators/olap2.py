@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from metoffice_spark.io import register_views
+from metoffice_spark.io import sql_frame
 from metoffice_spark.operators.relational import _DISC_PRICE
 from metoffice_spark.parity import bigint_sql, cents_sql
 
@@ -30,8 +30,7 @@ QUERIES: dict = {}
 
 def _sql_query(qid: str, sql: str, tables: tuple, doc: str):
     def fn(spark: SparkSession, sf_dir: str, _sql=sql, _tables=tables) -> DataFrame:
-        register_views(spark, sf_dir, _tables)
-        return spark.sql(_sql)
+        return sql_frame(spark, sf_dir, _tables, _sql)
 
     fn.__name__ = qid
     fn.__doc__ = doc

@@ -1220,10 +1220,9 @@ def q_sql_ansi(spark: SparkSession, sf_dir: str) -> DataFrame:
     over registered views — parser, analyzer, and Catalyst pick the
     same physical strategies the DataFrame builders get (broadcast
     dims, partial aggregation)."""
-    from metoffice_spark.io import register_views
+    from metoffice_spark.io import sql_frame
 
-    register_views(spark, sf_dir, ("customer", "nation", "orders"))
-    return spark.sql(_ANSI_SQL)
+    return sql_frame(spark, sf_dir, ("customer", "nation", "orders"), _ANSI_SQL)
 
 
 QUERIES["q_sql_ansi"] = (q_sql_ansi, _ANSI_SQL)

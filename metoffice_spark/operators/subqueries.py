@@ -12,7 +12,8 @@ a per-row re-execution and never a BNLJ over the fact table
 (tests/test_plans.py locks the shapes).
 
 Dialect discipline: each query is ONE ANSI string run verbatim by
-both engines — ``spark.sql(SQL)`` on the Spark side, the identical
+both engines — ``io.sql_frame`` (``spark.sql`` over the table
+views) on the Spark side, the identical
 text as the DuckDB oracle (the q_sql_ansi pattern,
 relational.py:1145). That forces the shared-subset rules:
 
@@ -37,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import register_views
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.relational import _DISC_PRICE
 from metoffice_spark.parity import bigint_sql, cents_sql
 
@@ -75,8 +76,7 @@ def q_olap_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q17: correlated scalar subqueries, exact-integer rewrite of
     the 0.2*avg threshold; one final IEEE division for the yearly
     average."""
-    register_views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(SQL_OLAP_SCALAR_SUBQUERY)
+    return sql_frame(spark, sf_dir, ("lineitem", "part"), SQL_OLAP_SCALAR_SUBQUERY)
 
 
 QUERIES["q_olap_scalar_subquery"] = (q_olap_scalar_subquery, SQL_OLAP_SCALAR_SUBQUERY)
@@ -107,8 +107,7 @@ ORDER BY o.o_orderpriority
 
 def q_olap_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4: correlated EXISTS -> left-semi join with a date residual."""
-    register_views(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(SQL_OLAP_EXISTS)
+    return sql_frame(spark, sf_dir, ("orders", "lineitem"), SQL_OLAP_EXISTS)
 
 
 QUERIES["q_olap_exists"] = (q_olap_exists, SQL_OLAP_EXISTS)
@@ -145,8 +144,7 @@ LIMIT 20
 def q_olap_having_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18: IN over a grouped-HAVING subquery -> semi-join on the
     grouped orderkeys; top-20 by exact cents with a key tie-break."""
-    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
-    return spark.sql(SQL_OLAP_HAVING_IN)
+    return sql_frame(spark, sf_dir, ("customer", "orders", "lineitem"), SQL_OLAP_HAVING_IN)
 
 
 QUERIES["q_olap_having_in"] = (q_olap_having_in, SQL_OLAP_HAVING_IN)
@@ -196,10 +194,9 @@ def q_olap_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, distributed 1-row max, broadcast filter join."""
     from metoffice_spark.session import scoped_persist
 
-    register_views(spark, sf_dir, ("supplier", "lineitem"))
-    revenue = scoped_persist(spark.sql(_Q15_REVENUE_SQL))
+    revenue = scoped_persist(sql_frame(spark, sf_dir, ("lineitem",), _Q15_REVENUE_SQL))
     mx = revenue.agg(F.max("rev_cents").alias("max_cents"))
-    supplier = spark.table("supplier")
+    supplier = load(spark, sf_dir, "supplier")
     return (
         revenue.crossJoin(F.broadcast(mx))
         .filter(F.col("rev_cents") == F.col("max_cents"))
@@ -257,12 +254,12 @@ def q_olap_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8: nation market share per year — five broadcast dims, one
     fact-fact shuffle, share as a single IEEE division of exact
     cents."""
-    register_views(
+    return sql_frame(
         spark,
         sf_dir,
         ("lineitem", "orders", "customer", "nation", "region", "supplier", "part"),
+        SQL_OLAP_MARKET_SHARE,
     )
-    return spark.sql(SQL_OLAP_MARKET_SHARE)
 
 
 QUERIES["q_olap_market_share"] = (q_olap_market_share, SQL_OLAP_MARKET_SHARE)
@@ -304,8 +301,7 @@ ORDER BY n.n_name
 def q_olap_avg_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22: above-average balances with NOT EXISTS recent orders —
     1-row scalar broadcast + left-anti join."""
-    register_views(spark, sf_dir, ("customer", "nation", "orders"))
-    return spark.sql(SQL_OLAP_AVG_BALANCE)
+    return sql_frame(spark, sf_dir, ("customer", "nation", "orders"), SQL_OLAP_AVG_BALANCE)
 
 
 QUERIES["q_olap_avg_balance"] = (q_olap_avg_balance, SQL_OLAP_AVG_BALANCE)

@@ -28,7 +28,7 @@ from metoffice_spark.functions.weather import (
     mm_to_in_sql,
     ms_to_mph_sql,
 )
-from metoffice_spark.io import register_views
+from metoffice_spark.io import sql_frame
 from metoffice_spark.obs import observations, oracle_cte
 from metoffice_spark.parity import fixed_str_sql, rhu_sql
 
@@ -38,8 +38,7 @@ _CTE = oracle_cte()
 def q_fn_dewpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Magnus dew point with the reference's as-written denominator
     constant (MWC:189-191)."""
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(ORACLE_DEWPOINT)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_DEWPOINT)
 
 
 ORACLE_DEWPOINT = f"""{_CTE}
@@ -52,8 +51,7 @@ FROM observations
 def q_fn_winddir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wind-direction decode: '000' calm / '360' north / sector degrees
     (MWC:282-307)."""
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(ORACLE_WINDDIR)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_WINDDIR)
 
 
 ORACLE_WINDDIR = f"""{_CTE}
@@ -66,8 +64,7 @@ FROM observations
 def q_fn_mast_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WMO mast-height wind correction; gust only corrected when speed!=0
     (quirk, MWC:292-306)."""
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(ORACLE_MAST_CORR)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_MAST_CORR)
 
 
 ORACLE_MAST_CORR = f"""{_CTE}
@@ -80,8 +77,7 @@ FROM observations
 
 def q_fn_baro_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SMHI sea-level pressure reduction (MWC:309-331)."""
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(ORACLE_BARO_REDUCE)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_BARO_REDUCE)
 
 
 ORACLE_BARO_REDUCE = f"""{_CTE}
@@ -93,8 +89,7 @@ FROM observations
 
 def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way piecewise temperature correction bands (MWC:320-327)."""
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(ORACLE_CASE_WHEN)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_CASE_WHEN)
 
 
 ORACLE_CASE_WHEN = f"""{_CTE}
@@ -110,8 +105,7 @@ FROM observations
 def q_fn_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Imperial unit conversions (MWC:338-365). Linear IEEE ops — exact,
     no rounding needed for parity."""
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(ORACLE_UNITS)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_UNITS)
 
 
 ORACLE_UNITS = f"""{_CTE}
@@ -126,8 +120,7 @@ FROM observations
 
 def q_fn_round_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JS toFixed analog: fixed-precision decimal strings (MWC:290, 349-365)."""
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(ORACLE_ROUND_FIXED)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_ROUND_FIXED)
 
 
 ORACLE_ROUND_FIXED = f"""{_CTE}

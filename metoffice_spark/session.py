@@ -143,14 +143,17 @@ def get_spark(app_name: str = "metoffice-spark") -> SparkSession:
     ``local[$SPARK_GRAFT_CPUS]`` (default 32) mirrors the driver's
     bench environment; shuffle partitions match core count so every
     shuffle round-trip uses all threads without tiny-partition
-    overhead at test scale.
+    overhead at test scale. The driver heap is ``$SPARK_DRIVER_MEM``,
+    else a quarter of the host's memory and at most 12g, so a few
+    sessions side by side still fit the host.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    heap_mb = min(os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 4 // 2**20, 12 * 1024)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb}m"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/metoffice-spark-warehouse")
     )

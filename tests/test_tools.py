@@ -43,9 +43,14 @@ def test_measure_reports_one_record_per_qid(sf_smoke):
         "spark.executor_run_s", "spark.executor_cpu_s", "spark.driver_gap_s",
         "shuffle.read_bytes", "shuffle.write_bytes", "shuffle.spill_bytes",
         "plan.exchanges", "python.eval_s", "plan.scans", "plan.joins", "plan.windows",
+        "build_s", "build.parsing_ms", "build.analysis_ms", "warm",
     } <= set(record)
     assert record["qid"] == "q_sink_http_form" and record["error"] is None
     assert record["spark.jobs"] > 0
+    warm = record["warm"]
+    assert {"wall_s", "build_s", "build.analysis_ms", "spark.jobs"} <= set(warm)
+    assert warm["error"] is None and warm["spark.jobs"] == record["spark.jobs"]
+    assert warm["build.analysis_ms"] is not None
 
 
 def _node(name: str, acc: int | None, *children: dict) -> dict:

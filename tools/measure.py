@@ -3,16 +3,21 @@
     PYTHONPATH=. python tools/measure.py [sf_dir] [qid ...]
 
 Runs each qid (default: ``bench.HEADLINE``) once through the noop sink
-in one ``session.get_spark()`` session with the Spark event log on.
-Each run is a ``perfbench/layers.py`` Tracer span named after the qid,
-with ``build:`` and ``exec:`` children, so its jobs, stages and SQL
-executions are attributed to it. After the session stops, the event
-log gives every counter ``layers.span_counters`` reports (jobs, stages,
-tasks, executor run/CPU time, shuffle bytes, spill, Python-eval time,
-driver gap), plus counts of scans, exchanges, joins by strategy and
-windows from the node names of the final AQE plans, each node counted
-once per qid (``plan_shape``). ``q_stream_*`` qids add the setup / stream / read-back split and
-each micro-batch's progress, from ``layers.StreamEvents``.
+in one ``session.get_spark()`` session with the Spark event log on,
+then once more warm (build and run again, span ``warm:<qid>``). Each
+run is a ``perfbench/layers.py`` Tracer span with ``build:`` and
+``exec:`` children, so its jobs, stages and SQL executions are
+attributed to it. After the session stops, the event log gives every
+counter ``layers.span_counters`` reports (jobs, stages, tasks,
+executor run/CPU time, shuffle bytes, spill, Python-eval time, driver
+gap), plus counts of scans, exchanges, joins by strategy and windows
+from the node names of the final AQE plans, each node counted once per
+run (``plan_shape``). Each run also reports the builder's wall time
+(``build_s``) and the built frame's parsing and analysis times
+(``build_phases``). ``q_stream_*`` qids add the setup / stream /
+read-back split and each micro-batch's progress, from
+``layers.StreamEvents``. The warm run's record is the ``warm`` entry
+of its qid's record.
 
 A qid that fails is recorded with its error and the run goes on.
 PYTHONPATH must name the repo root: Spark's Python workers import
@@ -102,6 +107,17 @@ def stream_split(events: list, root: dict) -> dict:
     }
 
 
+def build_phases(df) -> dict:
+    """Milliseconds of the parsing and analysis phases in the built
+    frame's own QueryExecution, None for a phase it did not run (a
+    frame over an already-analysed plan is not parsed). Frames built
+    step by step analyse each step in a QueryExecution of its own, so
+    this is the last step's analysis."""
+    phases = df._jdf.queryExecution().tracker().phases()
+    return {f"build.{p}_ms": phases.apply(p).durationMs() if phases.contains(p) else None
+            for p in ("parsing", "analysis")}
+
+
 def _epoch(iso: str) -> float:
     return datetime.fromisoformat(iso).timestamp()
 
@@ -130,17 +146,20 @@ def main() -> None:
     tracer.spark_context = spark.sparkContext
 
     errors: dict[str, str] = {}
-    for qid in qids:
-        with tracer.span(qid) as root:
+    builds: dict[str, dict] = {}
+    for run in (name for qid in qids for name in (qid, f"warm:{qid}")):
+        with tracer.span(run) as root:
             try:
-                with tracer.span(f"build:{qid}"):
-                    df = reg[qid](spark, sf_dir)
-                with tracer.span(f"exec:{qid}"):
+                with tracer.span(f"build:{run}") as build:
+                    df = reg[run.removeprefix("warm:")](spark, sf_dir)
+                builds[run] = {"build_s": round(build["end"] - build["start"], 3),
+                               **build_phases(df)}
+                with tracer.span(f"exec:{run}"):
                     df.write.format("noop").mode("overwrite").save()
             except Exception as exc:  # noqa: BLE001 - record it, run the rest
-                errors[qid] = f"{type(exc).__name__}: {exc}"
+                errors[run] = f"{type(exc).__name__}: {exc}"
         wall = root["end"] - root["start"]
-        print(f"{qid}: {'FAILED ' + errors[qid] if qid in errors else f'{wall:.3f} s'}",
+        print(f"{run}: {'FAILED ' + errors[run] if run in errors else f'{wall:.3f} s'}",
               file=sys.stderr, flush=True)
     stream.wait_terminated()
     spark.stop()
@@ -150,21 +169,26 @@ def main() -> None:
         log = read_eventlog(os.path.join(log_dir, log_file))
     finally:
         shutil.rmtree(log_dir, ignore_errors=True)
-    for root in (s for s in tracer.spans if s["parent"] is None):
-        qid = root["name"]
+    roots = {s["name"]: s for s in tracer.spans if s["parent"] is None}
+
+    def run_record(run: str) -> dict:
+        root = roots[run]
         ids = {s["id"] for s in tracer.spans if root["id"] in (s["id"], s["parent"])}
         # the owner rule of span_counters: a span's job group, else the
         # innermost span open when the execution started (stream batches)
         plans = [x["plan"] for x in log["execs"].values()
                  if (int(x["group"][5:]) if (x["group"] or "").startswith("span-")
                      else tracer.innermost(x["time"])) in ids]
-        record = {"qid": qid, "wall_s": round(root["end"] - root["start"], 3),
-                  "error": errors.get(qid)}
-        (counters,) = span_counters(tracer, log, qid)
+        record = {"wall_s": round(root["end"] - root["start"], 3), "error": errors.get(run),
+                  **builds.get(run, {})}
+        (counters,) = span_counters(tracer, log, run)
         record.update(counters)
         record.update(plan_shape(plans))
         record.update(stream_split(stream.events, root))
-        print(json.dumps(record))
+        return record
+
+    for qid in qids:
+        print(json.dumps({"qid": qid, **run_record(qid), "warm": run_record(f"warm:{qid}")}))
 
 
 if __name__ == "__main__":

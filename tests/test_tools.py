@@ -49,7 +49,7 @@ def test_measure_reports_one_record_per_qid(sf_smoke):
     assert record["spark.jobs"] > 0
     warm = record["warm"]
     assert {"wall_s", "build_s", "build.analysis_ms", "spark.jobs"} <= set(warm)
-    assert warm["error"] is None and warm["spark.jobs"] == record["spark.jobs"]
+    assert warm["error"] is None and warm["spark.jobs"] > 0
     assert warm["build.analysis_ms"] is not None
 
 

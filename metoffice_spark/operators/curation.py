@@ -548,7 +548,6 @@ QUERIES["q_fn_regex_suite"] = (q_fn_regex_suite, ORACLE_FN_REGEX_SUITE)
 # (deterministic smallest-c tiebreak), never a window over the
 # exploded corpus.
 
-_PQ_SUBS = 8          # subspaces
 _PQ_SUBDIM = 8        # dims per subspace
 _PQ_K = 16            # codebook entries per subspace
 _PQ_QUERIES = 5       # vec_id < 5 are the query set

@@ -253,7 +253,6 @@ QUERIES["q_pack_sequences"] = (q_pack_sequences, ORACLE_PACK_SEQUENCES)
 # flagged against an eval doc when they share >= _MIN_SHARED distinct
 # word-5-grams (hashed; the join key is the 32-hex digest).
 
-_GRAM_N = 5
 _MIN_SHARED = 3
 
 # CASE guard for the same descending-sequence trap as _BIGRAMS_SPARK
@@ -977,7 +976,6 @@ QUERIES["q_kmeans_train"] = (q_kmeans_train, _oracle_kmeans_train())
 # hash mod N and the negative's features arrive via one equi-join.
 
 _NEG_K = 4
-_NEG_RES = 16_777_216  # 16^6 — 6-nibble digest prefix
 
 
 def _hex6_spark(h: str) -> str:

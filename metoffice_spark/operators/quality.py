@@ -858,10 +858,6 @@ def q_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bf_positions_sql(key_expr: str) -> list[str]:
-    return _bf_positions(key_expr)  # instr/md5/substring are dialect-common
-
-
 ORACLE_BLOOM_FILE_INDEX = f"""
 WITH li AS (
   SELECT CAST(l_orderkey % 8 AS INT) AS pid, l_partkey FROM lineitem

@@ -295,7 +295,6 @@ QUERIES["q_join_bloom"] = (q_join_bloom, ORACLE_JOIN_BLOOM)
 # because the sketch construction is deterministic.
 
 _CMS_D = 4
-_CMS_W = 256
 _CMS_TRACKED = 10
 
 

@@ -19,8 +19,8 @@ builders themselves never call ``tune``. Builders may run bounded
 setup actions (q_graph_pagerank's ``nodes.count()``, the streaming
 replays' max-ts lookups) but no cache refresh: q_rollup_hypertable is
 one grouping-sets aggregate. A builder's ``scoped_persist`` caches
-survive until ``session._RETAIN_SCOPES`` newer persist-bearing builders
-have started, so a driver may build the next query before executing
+survive the next persist-bearing builder and are released when the one
+after it starts, so a driver may build the next query before executing
 the previous frame; a frame run after its scope was released merely
 recomputes.
 """

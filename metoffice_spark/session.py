@@ -63,61 +63,58 @@ _RUNTIME_CONF = {
 # Persisted intermediates, grouped per query-build SCOPE. One session
 # runs ~290 queries, so persists must be released or they accumulate.
 # Each builder's ``scoped_persist`` calls form one scope. :func:`tune`,
-# which the registry runs before every builder, closes the current
-# scope into a retention queue and unpersists only what falls off the
-# end of it (scopes older than the newest ``_RETAIN_SCOPES``).
+# which the registry runs before every builder, unpersists the previous
+# scope and makes the current one the previous. So builder k's caches
+# live until builder k+2 starts:
 #   - A driver may build the next query before executing the previous
-#     frame: that frame's cache is still retained.
-#   - Memory stays bounded: at most ``_RETAIN_SCOPES`` executed
-#     queries' intermediates are cached at once (persist() is lazy, so
-#     a scope that was built but never executed holds no blocks), and
-#     MEMORY_AND_DISK eviction backstops pressure.
+#     frame: that frame's cache is still held.
+#   - Memory stays bounded: at most two builders' intermediates are
+#     cached at once (persist() is lazy, so a scope that was built but
+#     never executed holds no blocks), and MEMORY_AND_DISK eviction
+#     backstops pressure.
 #   - A released scope may uncache a plan that a newer build of the
 #     SAME query still references; that frame then recomputes, which
 #     is correct, merely slower.
-# Depth 1 measured the same as depth 0 on the bench (sf0.1, local[32]),
-# while depth 4 was ~5 % slower: extra caches squeeze execution memory.
-_RETAIN_SCOPES = 1
-_SCOPES: list[list] = []   # retention queue, oldest first
-_CURRENT: list = []        # persists of the currently building query
+# Keeping one previous scope measured the same as keeping none on the
+# bench (sf0.1, local[32]), while keeping four was ~5 % slower: extra
+# caches squeeze execution memory.
+_PREVIOUS: list = []  # persists of the previous persist-bearing builder
+_CURRENT: list = []   # persists of the currently building query
 
 
 def scoped_persist(df):
     """``df.persist()`` scoped to the building query.
 
-    The cache lives until ``_RETAIN_SCOPES`` newer persist-bearing
-    builders have started, then is unpersisted. A builder with no
-    scoped persists adds no scope, so it does not age the queue."""
+    The cache lives until the second persist-bearing builder after this
+    one starts, then is unpersisted. A builder with no scoped persists
+    does not rotate the scopes."""
     df = df.persist()
     _CURRENT.append(df)
     return df
 
 
+def _unpersist(dfs: list) -> None:
+    for df in dfs:
+        try:
+            df.unpersist()
+        except Exception:
+            pass  # session already stopped; nothing to release
+
+
 def _rotate_scope() -> None:
-    """Close the current scope into the retention queue; release only
-    the queue overflow. Empty scopes are not pushed (see
-    :func:`scoped_persist`)."""
-    global _CURRENT
+    """Release the previous scope and make the current one previous.
+    An empty current scope rotates nothing (see :func:`scoped_persist`)."""
+    global _PREVIOUS, _CURRENT
     if _CURRENT:
-        _SCOPES.append(_CURRENT)
-        _CURRENT = []
-    while len(_SCOPES) > _RETAIN_SCOPES:
-        for df in _SCOPES.pop(0):
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to release
+        _unpersist(_PREVIOUS)
+        _PREVIOUS, _CURRENT = _CURRENT, []
 
 
 def release_scoped_persists() -> None:
-    """Full flush — every retained scope AND the in-progress one."""
-    _rotate_scope()
-    while _SCOPES:
-        for df in _SCOPES.pop():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to release
+    """Full flush: the previous scope AND the in-progress one."""
+    global _PREVIOUS, _CURRENT
+    _unpersist(_PREVIOUS + _CURRENT)
+    _PREVIOUS, _CURRENT = [], []
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -126,8 +123,8 @@ def tune(spark: SparkSession) -> SparkSession:
     The registry wraps every builder so this runs once before it
     (``registry._collect``); ``get_spark`` and the driver's ``entry``
     call it for sessions that bypass the registry. Starting a scope
-    rotates the previous builder's scoped persists into the retention
-    queue (see the scope comment above)."""
+    releases the persists of the builder before the previous one (see
+    the scope comment above)."""
     _rotate_scope()
     for k, v in _RUNTIME_CONF.items():
         try:

@@ -22,14 +22,59 @@ reverted shapes). Queries whose
 global window runs over a genuinely bounded non-pid aggregate (decile
 tables, calendar days, sketch registers) must be listed explicitly in
 the caller's allowlist with their expected window count.
+
+A persisted frame is an ``InMemoryTableScan`` leaf of the plan that
+reads it. The window, Cartesian and nested-loop walkers descend from
+it into the cached frame's own physical plan (through the AQE wrapper
+to its input plan), once per cache however many scans read it.
+``exchange_count`` keeps the leaf rule.
 """
 
 from __future__ import annotations
+
+from pyspark import SparkContext
 
 
 def _head(node) -> str:
     s = node.toString()
     return s.splitlines()[0] if s else ""
+
+
+def _cached_plan(node):
+    """The physical plan of the cache an InMemoryTableScan reads, else
+    None."""
+    if node.nodeName() != "InMemoryTableScan":
+        return None
+    plan = node.relation().cacheBuilder().cachedPlan()
+    return plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+
+
+def _kids(node) -> list:
+    return [node.children().apply(j) for j in range(node.children().length())]
+
+
+def _children(node) -> list:
+    """The node's children, plus the cached plan under an
+    InMemoryTableScan."""
+    cached = _cached_plan(node)
+    return _kids(node) if cached is None else [*_kids(node), cached]
+
+
+def plan_nodes(plan):
+    """Every node of ``plan`` and of each cached plan below it; a cache
+    read by several scans is walked once."""
+    seen: set[int] = set()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack += _kids(node)
+        cached = _cached_plan(node)
+        if cached is not None:
+            key = SparkContext._jvm.System.identityHashCode(cached)
+            if key not in seen:
+                seen.add(key)
+                stack.append(cached)
 
 
 def _sanctions(node) -> bool:
@@ -42,11 +87,7 @@ def _sanctions(node) -> bool:
 
 
 def _has_sanction_below(node) -> bool:
-    for j in range(node.children().length()):
-        ch = node.children().apply(j)
-        if _sanctions(ch) or _has_sanction_below(ch):
-            return True
-    return False
+    return any(_sanctions(ch) or _has_sanction_below(ch) for ch in _children(node))
 
 
 def _first_agg_head_below(node) -> str:
@@ -54,12 +95,12 @@ def _first_agg_head_below(node) -> str:
     'no-aggregate-below' — identifies WHICH bounded table an
     allowlisted global window runs over, so swapping it for a
     data-sized input changes the descriptor and trips the test."""
-    queue = [node.children().apply(j) for j in range(node.children().length())]
+    queue = _children(node)
     while queue:
         ch = queue.pop(0)
         if "Aggregate" in ch.nodeName():
             return _head(ch)[:160]
-        queue += [ch.children().apply(j) for j in range(ch.children().length())]
+        queue += _children(ch)
     return "no-aggregate-below"
 
 
@@ -70,21 +111,17 @@ def unbounded_global_windows_in(plan) -> list[str]:
     REPORTED, not skipped — a walker that goes blind after a Spark
     upgrade must fail the suite, not pass it vacuously."""
     bad: list[str] = []
-
-    def walk(node):
+    for node in plan_nodes(plan):
         name = node.nodeName()
-        if "Window" in name:
-            try:
-                empty = node.partitionSpec().isEmpty()
-            except Exception as e:  # noqa: BLE001 - surface, don't skip
-                bad.append(f"{name} (partitionSpec unreadable: {type(e).__name__})")
-                empty = False
-            if empty and not _has_sanction_below(node):
-                bad.append(f"{name} over {_first_agg_head_below(node)}")
-        for j in range(node.children().length()):
-            walk(node.children().apply(j))
-
-    walk(plan)
+        if "Window" not in name:
+            continue
+        try:
+            empty = node.partitionSpec().isEmpty()
+        except Exception as e:  # noqa: BLE001 - surface, don't skip
+            bad.append(f"{name} (partitionSpec unreadable: {type(e).__name__})")
+            continue
+        if empty and not _has_sanction_below(node):
+            bad.append(f"{name} over {_first_agg_head_below(node)}")
     return bad
 
 
@@ -101,31 +138,17 @@ def cartesian_product_count(plan) -> int:
     registered query at any SF: a semantically tiny side must be
     broadcast explicitly (Catalyst's size estimate cannot see through
     filters on derived columns, so the strategy FLIPS with SF)."""
-    count = 0
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        if "CartesianProduct" in node.nodeName():
-            count += 1
-        for j in range(node.children().length()):
-            stack.append(node.children().apply(j))
-    return count
+    return sum("CartesianProduct" in node.nodeName() for node in plan_nodes(plan))
 
 
 def nested_loop_join_count(plan) -> int:
     """CartesianProduct + BroadcastNestedLoopJoin nodes in a physical
     plan node — the per-row join shapes that explode at scale unless
     one side is a bounded broadcast (1-row scalars, vocab grids)."""
-    count = 0
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        name = node.nodeName()
-        if "CartesianProduct" in name or "BroadcastNestedLoop" in name:
-            count += 1
-        for j in range(node.children().length()):
-            stack.append(node.children().apply(j))
-    return count
+    return sum(
+        "CartesianProduct" in name or "BroadcastNestedLoop" in name
+        for name in (node.nodeName() for node in plan_nodes(plan))
+    )
 
 
 def exchange_count(plan) -> int:

@@ -1,7 +1,7 @@
 """Cache-scope tripwire.
 
-`scoped_persist` retention (`_RETAIN_SCOPES=1`) deliberately lets one
-query's cache survive into the NEXT builder's scope.  Today no bench
+`scoped_persist` retention deliberately lets one query's cache survive
+into the NEXT builder's scope.  Today no bench
 headliner consumes a predecessor's substrate — every persist is keyed
 on query-private intermediates — so no cross-query subsidy exists.
 But one shared-substrate refactor away, a headliner could silently

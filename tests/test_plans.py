@@ -671,28 +671,22 @@ def test_pagerank_degree_join_no_window_sort(spark, sf_smoke):
 
 
 def test_scope_retention_survives_interleaved_builds(spark):
-    """A builder's scoped persists must stay cached while up to
-    _RETAIN_SCOPES newer builders start (each tune() call is a scope
-    rotation), so an interleaved build/execute
-    driver keeps the cached plan; only the retention-queue overflow is
-    unpersisted, and a full flush releases everything."""
-    from metoffice_spark.session import (
-        _RETAIN_SCOPES,
-        release_scoped_persists,
-        scoped_persist,
-        tune,
-    )
+    """A builder's scoped persists must stay cached while the next
+    builder starts (each tune() call is a scope boundary), so an
+    interleaved build/execute driver keeps the cached plan; they are
+    unpersisted when the builder after that starts, and a full flush
+    releases everything."""
+    from metoffice_spark.session import release_scoped_persists, scoped_persist, tune
 
     release_scoped_persists()
     dfs = []
     try:
-        for i in range(_RETAIN_SCOPES + 3):
+        for i in range(4):
             tune(spark)  # scope boundary, as the registry runs before each builder
             dfs.append(scoped_persist(spark.range(100 + i)))
-        overflow = len(dfs) - (_RETAIN_SCOPES + 1)  # queue + current
-        for d in dfs[:overflow]:
-            assert not d.storageLevel.useMemory, "overflow not released"
-        for d in dfs[overflow:]:
+        for d in dfs[:2]:
+            assert not d.storageLevel.useMemory, "scope older than the previous one not released"
+        for d in dfs[2:]:  # the previous scope and the current one
             assert d.storageLevel.useMemory, (
                 "retained scope lost its cache — interleaved "
                 "build/execute would degrade to recompute"

@@ -14,8 +14,11 @@ gap), plus counts of scans, exchanges, joins by strategy and windows
 from the node names of the final AQE plans, each node counted once per
 run (``plan_shape``). Each run also reports the builder's wall time
 (``build_s``) and the built frame's parsing and analysis times
-(``build_phases``). ``q_stream_*`` qids add the setup / stream /
-read-back split and each micro-batch's progress, from
+(``build_phases``), and the block-manager bytes that its persisted
+frames hold right after its exec (``cache.bytes``). Every run starts
+with no persisted frame, so the warm run recomputes what the cold run
+cached instead of reading it. ``q_stream_*`` qids add the
+setup / stream / read-back split and each micro-batch's progress, from
 ``layers.StreamEvents``. The warm run's record is the ``warm`` entry
 of its qid's record.
 
@@ -38,8 +41,9 @@ from datetime import datetime
 from bench import HEADLINE
 from metoffice_spark.io import DEFAULT_SF_DIR
 from metoffice_spark.registry import all_queries
-from metoffice_spark.session import get_spark
+from metoffice_spark.session import get_spark, release_scoped_persists
 from perfbench.layers import StreamEvents, Tracer, read_eventlog, span_counters
+from perfbench.worker import storage_bytes
 
 _STATE_KEYS = (
     "operatorName", "numRowsTotal", "numRowsUpdated",
@@ -148,6 +152,7 @@ def main() -> None:
     errors: dict[str, str] = {}
     builds: dict[str, dict] = {}
     for run in (name for qid in qids for name in (qid, f"warm:{qid}")):
+        release_scoped_persists()
         with tracer.span(run) as root:
             try:
                 with tracer.span(f"build:{run}") as build:
@@ -156,6 +161,7 @@ def main() -> None:
                                **build_phases(df)}
                 with tracer.span(f"exec:{run}"):
                     df.write.format("noop").mode("overwrite").save()
+                builds[run]["cache.bytes"] = storage_bytes(spark)
             except Exception as exc:  # noqa: BLE001 - record it, run the rest
                 errors[run] = f"{type(exc).__name__}: {exc}"
         wall = root["end"] - root["start"]

@@ -106,6 +106,7 @@ def global_order_stats(
     # frame feeds both the offsets aggregate and the final join (see
     # module docstring — two range exchanges may sample different
     # boundaries)
+    # kept: correctness barrier, pins one RangePartitioner sample
     d = scoped_persist(d)
     # bounded offsets table: one row per range partition
     per_aggs = []
@@ -237,6 +238,7 @@ def global_strict_prefix_min(
         .rangeBetween(Window.unboundedPreceding, -1)
     )
     # same persist barrier as global_order_stats (module docstring)
+    # kept: correctness barrier, pins one RangePartitioner sample
     d = scoped_persist(d.withColumn("__l_min", F.min("__gv").over(w_local)))
     per = d.groupBy(_PID).agg(F.min("__gv").alias("__p_min"))
     w_off = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)

@@ -618,7 +618,7 @@ _PCTC = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
 def q_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, percentile): n, the lo/hi bracket values, and
     the exact interpolated value (1e-3 fixed point)."""
-    # rank-validity boundary (r08 ts+value probe): as
+    # rank-validity boundary (a ts+value probe): as
     # q_percentile_exact — NULL/non-finite readings are not
     # distribution points.
     ev = load(spark, sf_dir, "events").filter(
@@ -630,6 +630,7 @@ def q_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("bigint").alias("v_fp"),
     )
     w = Window.partitionBy("event_type").orderBy("v_fp", "event_id")
+    # kept: the plain plan ran 1.91x slower (A/B: 5 pairs, sf0.1)
     ranked = scoped_persist(
         ev.select(
             "event_type",
@@ -723,6 +724,7 @@ def q_collab_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per anchor part: its top-5 co-purchase partners by lift
     (1e-6 fixed point), with support counts."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    # kept: the plain plan ran 1.19x slower (A/B: 5 pairs, sf0.1)
     baskets = scoped_persist(li.distinct())
     part_cnt = baskets.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
@@ -829,10 +831,10 @@ QUERIES["q_collab_filter"] = (q_collab_filter, ORACLE_COLLAB_FILTER)
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: n, p05/p95 cutoffs (1e-3 fp), clipped-low/high
     counts, raw mean, winsorized mean."""
-    # rank-validity boundary (r08 ts+value probe): NULL readings are
+    # rank-validity boundary (a ts+value probe): NULL readings are
     # not distribution points — they'd shift the p05/p95 rank indices
     # differently per engine (NULLS FIRST vs LAST).
-    ev = scoped_persist(
+    ev = (
         load(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
@@ -845,10 +847,9 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("event_type").orderBy("v_fp", "event_id")
-    # persisted (the q_percentile_cont precedent): lo and hi each
-    # filter ranked — without the barrier the per-type sort +
-    # row_number window recomputes twice
-    ranked = scoped_persist(
+    # lo and hi both filter ranked; not persisted, as the plain plan
+    # ran no slower (A/B: 5 pairs, sf0.1)
+    ranked = (
         ev.select(
             "event_type",
             "v_fp",
@@ -951,7 +952,7 @@ def q_metric_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: period counts/cents, total delta (1e-6 fp),
     volume effect, residual rate/mix effect; volume + rate == delta
     exactly."""
-    ev = scoped_persist(
+    ev = (
         load(spark, sf_dir, "events").select(
             "event_type",
             F.to_date("ts").alias("d"),

@@ -228,7 +228,7 @@ daily AS (
 def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, lag in {1, 2}): pair count, exact moment sums,
     and the autocorrelation coefficient (IEEE, computed last)."""
-    daily = scoped_persist(_daily(spark, sf_dir))
+    daily = _daily(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("day")
     out = None
     for lag in (1, 2):
@@ -314,9 +314,10 @@ QUERIES["q_ts_autocorr"] = (q_ts_autocorr, ORACLE_TS_AUTOCORR)
 def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: series length, the CUSUM-peak day (earliest on
     ties), peak |cusum| (1e-6 fixed point), and shift direction."""
-    # persisted: consumed twice (per-type stats + the cusum scan) —
-    # without it the events scan and daily aggregate run twice.
-    daily = scoped_persist(_daily(spark, sf_dir))
+    # consumed twice (per-type stats + the cusum scan) through one
+    # daily-aggregate exchange and its reuse; a persist measured no
+    # faster (A/B: 5 pairs, sf0.1)
+    daily = _daily(spark, sf_dir)
     stats = daily.groupBy(F.col("event_type").alias("et")).agg(
         F.sum("cnt").cast("bigint").alias("total"),
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
@@ -961,6 +962,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey", F.lit(3).alias("version"),
         F.lit("U").alias("op"), (F.col("cents") + 5000).alias("bal_cents"),
     )
+    # kept: the plain plan ran 1.14x slower (A/B: 5 pairs, sf0.1)
     log = scoped_persist(
         v1.unionByName(v2u).unionByName(v2d).unionByName(v3i).unionByName(v3u)
     )
@@ -1051,12 +1053,12 @@ QUERIES["q_time_travel"] = (q_time_travel, ORACLE_TIME_TRAVEL)
 def q_mad_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event type: n, median, MAD, and points beyond 3 MADs
     (count + share)."""
-    # rank-validity boundary (r08 ts+value probe; non-finite added by
-    # the r10 extreme-value probe, mirrored in the oracle): a NULL or
+    # rank-validity boundary (a ts+value probe; non-finite added by
+    # an extreme-value probe, mirrored in the oracle): a NULL or
     # NaN/±Inf reading is not a point of the distribution — NULL rank
     # position differs per engine, and a NaN would crash both ANSI
     # engines' cents cast.
-    ev = scoped_persist(
+    ev = (
         load(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
@@ -1080,7 +1082,7 @@ def q_mad_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr("rn = (n + 1) div 2"))
         .select("event_type", F.col("v_fp").alias("med_fp"), "n")
     )
-    dev = scoped_persist(
+    dev = (
         ev.join(F.broadcast(med), "event_type").select(
             "event_type",
             "event_id",
@@ -1301,6 +1303,7 @@ QUERIES["q_ts_trend"] = (q_ts_trend, ORACLE_TS_TREND)
 def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: n converted users, min / lower-median / p90 / max
     click→purchase latency in whole seconds."""
+    # kept: exchanges 7 -> 8 without it (A/B: 5 pairs, sf0.1)
     ev = scoped_persist(
         load(spark, sf_dir, "events").select(
             "user_id",

@@ -88,7 +88,7 @@ def q_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lang label, and the corpus model counts are a SECOND-LEVEL
     # aggregate of those partials (the q_lm_bigram_score two-level
     # shape) — no second scan + explode of the corpus.
-    tf = scoped_persist(
+    tf = (
         load(spark, sf_dir, "documents")
         .select("doc_id", "lang", F.explode(F.expr(TOKS_SPARK)).alias("tok"))
         .groupBy("doc_id", "lang", "tok")
@@ -406,6 +406,7 @@ def q_bool_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, n_hits, first five doc_ids '|'-joined)."""
     docs = load(spark, sf_dir, "documents")
     terms = ", ".join(f"'{t}'" for t in _BOOL_TERMS)
+    # kept: the plain plan ran 1.69x slower (A/B: 5 pairs, sf0.1)
     postings = scoped_persist(
         docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("tok"))
         .filter(F.expr(f"tok in ({terms})"))
@@ -509,6 +510,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = ", ".join(f"'{t}'" for t in _MMR_TERMS)
     # persisted: tf feeds both the candidate ranking and the max_tf
     # scalar — without the barrier the tokenize+explode runs twice.
+    # kept: jobs 39 -> 61, exchanges 22 -> 47 without it (A/B: 5 pairs, sf0.1)
     tf = scoped_persist(
         docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("tok"))
         .filter(F.expr(f"tok in ({terms})"))
@@ -517,6 +519,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # distributed top-k candidate cut (TakeOrderedAndProject) — no
     # full-corpus global rank window
+    # kept: jobs 39 -> 61, exchanges 22 -> 47 without it (A/B: 5 pairs, sf0.1)
     cands = scoped_persist(
         tf.orderBy(F.col("tf").desc(), F.col("doc_id").asc())
         .limit(_MMR_CANDS)
@@ -535,6 +538,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = ctoks.select(F.col("doc_id").alias("da"), F.col("toks").alias("ta"))
     b = ctoks.select(F.col("doc_id").alias("db"), F.col("toks").alias("tb"))
+    # kept: jobs 39 -> 61, exchanges 22 -> 47 without it (A/B: 5 pairs, sf0.1)
     sims = scoped_persist(
         # broadcast right: the candidate grid is <= _MMR_CANDS^2 rows,
         # but ctoks derives from a semi-join whose size estimate
@@ -552,7 +556,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim_fp"),
         )
     )
-    # r13 optimization round: persist each round's 1-row pick. The
+    # Persist each round's 1-row pick. The
     # selection loop references `picked` TWICE per round (the
     # remaining-candidates anti-join and the picked-similarity
     # semi-join) and unions it forward, so the unpersisted lineage
@@ -560,6 +564,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~2^(K-1) times (measured 9-21 s at sf0.1; ~1.5 s persisted).
     # Same per-level persist discipline as the BFS frontier; the
     # cached frames are single rows.
+    # kept: rebound per round; cuts lineage that grows with the round count
     picked = scoped_persist(
         cands.orderBy(F.col("rel_fp").desc(), F.col("doc_id").asc())
         .limit(1)
@@ -592,6 +597,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # union of ALREADY-persisted 1-row frames (the BFS pattern) —
         # persisting the union would re-materialize every level
+        # kept: rebound per round; cuts lineage that grows with the round count
         picked = picked.unionByName(scoped_persist(nxt))
     return picked
 

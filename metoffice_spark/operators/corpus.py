@@ -94,6 +94,7 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # per-(doc, bigram) counts: the partial-aggregated substrate both
     # the model AND the scoring pass derive from (one tokenize).
+    # kept: exchanges 7 -> 9 without it (A/B: 5 pairs, sf0.1)
     db = scoped_persist(
         docs.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
         .select("doc_id", F.explode(F.expr(_bigrams_spark())).alias("bg"))
@@ -102,6 +103,7 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # corpus model: c12 per bigram; c1 per first token; V distinct toks
     c12 = db.groupBy("bg").agg(F.sum("n").cast("bigint").alias("c12"))
+    # kept: exchanges 7 -> 9 without it (A/B: 5 pairs, sf0.1)
     uni = scoped_persist(
         docs.select(F.explode(F.expr(TOKS_SPARK)).alias("t"))
         .groupBy("t")
@@ -259,9 +261,7 @@ def q_rank_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 documents by reciprocal-rank fusion of the tf ranking
     and the (match count, shortness) ranking; exact-integer scores."""
     docs = load(spark, sf_dir, "documents")
-    toks = scoped_persist(
-        docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("t"))
-    )
+    toks = docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("t"))
     # every full ranking below is a distributed global_row_number —
     # the term vocabulary and the candidate set both grow with the
     # corpus, so none may funnel through a single-task window; the
@@ -380,6 +380,7 @@ def q_semdedup_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per vector: its label, cosine to the label centroid, whether it
     is flagged near-centroid, and whether it survives the dedup
     (keep = not flagged, or the min-vec_id representative)."""
+    # kept: the plain plan ran 1.17x slower (A/B: 5 pairs, sf0.1)
     emb = scoped_persist(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")
@@ -491,10 +492,10 @@ def q_minhash_est_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _corpus(spark, sf_dir)
     # .distinct(): the audit is per-document CONTENT — a byte-identical
-    # duplicate-id delivery (r09 drdocs probe) must collapse to one
+    # duplicate-id delivery (a duplicate-docs probe) must collapse to one
     # (doc_id, shingle-set) row on both sides, or every downstream
     # doc_a join multiplies pair rows asymmetrically vs the oracle.
-    shingled = scoped_persist(
+    shingled = (
         corpus.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
         .select("doc_id", F.array_distinct(F.expr(_SHINGLES_SPARK)).alias("sh"))
@@ -502,11 +503,9 @@ def q_minhash_est_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hashed = shingled.select("doc_id", F.expr(_HS_SPARK).alias("hs"))
     mh_arr = "array(" + ", ".join(_mh_spark(j) for j in range(_N_MINHASH)) + ")"
-    # persisted: sigs feeds the orig AND planted join branches with
-    # different keys (no exchange reuse applies), and the 2-md5-per-
-    # shingle + 12-minhash subtree is the CPU-dominant step (the
-    # q_dedup_fuzzy persist precedent).
-    sigs = scoped_persist(hashed.select("doc_id", F.expr(mh_arr).alias("mh")))
+    # sigs feeds the orig AND planted join branches; not persisted, as
+    # the plain plan ran faster (A/B: 5 pairs, sf0.1)
+    sigs = hashed.select("doc_id", F.expr(mh_arr).alias("mh"))
 
     orig_s = shingled.filter(
         (F.col("doc_id") % 25 == 0) & (F.col("doc_id") < 100000)

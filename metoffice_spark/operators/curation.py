@@ -57,8 +57,8 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = int(n_docs * _BP_DF_FRAC)
 
     # sequence(1, 0) is DESCENDING in Spark — docs with < 3 tokens must
-    # short-circuit to an empty array (the round-3 short-doc guard).
-    # On a materialized `toks` column (r13): the transform() lambda is
+    # short-circuit to an empty array (the short-doc guard).
+    # On a materialized `toks` column: the transform() lambda is
     # interpreted, so inlining the tokenizer re-split the document per
     # gram index — O(tokens²) per doc (see corpus._bigrams_spark).
     grams_expr = (
@@ -66,7 +66,7 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         " else transform(sequence(1, size(toks) - 2),"
         " i -> concat_ws(' ', toks[i - 1], toks[i], toks[i + 1])) end"
     )
-    grams = scoped_persist(
+    grams = (
         docs.select("doc_id", "source", F.expr(_TOKS_ARR).alias("toks")).select(
             "doc_id",
             "source",
@@ -226,9 +226,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: vocab is top-k (bounded, broadcast); the per-token
     membership probe is map-side; only (lang) partial sums shuffle."""
     docs = load(spark, sf_dir, "documents")
-    toks = scoped_persist(
-        docs.select("lang", F.explode(F.expr(TOKS_SPARK)).alias("t"))
-    )
+    toks = docs.select("lang", F.explode(F.expr(TOKS_SPARK)).alias("t"))
     vocab = (
         toks.groupBy("t")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -598,7 +596,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dim") % _PQ_SUBDIM).cast("int").alias("d"),
         "a",
     )
-    book = scoped_persist(book)
 
     # encode: per (vec_id, s) the argmin-c subspace distance, via the
     # dist2*16+c packing (one aggregate, smallest-c tiebreak)
@@ -761,7 +758,7 @@ def q_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at 100 TB even that disappears if the explode/regroup runs
     partition-local per document batch."""
     docs = load(spark, sf_dir, "documents")
-    toks = scoped_persist(
+    toks = (
         docs.select(
             "doc_id", F.posexplode(F.expr(TOKS_SPARK)).alias("pos", "t")
         )
@@ -854,6 +851,7 @@ def q_rank_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide inputs are two broadcast scalars and a 3-row term
     table."""
     docs = load(spark, sf_dir, "documents")
+    # kept: the plain plan ran 1.30x slower (A/B: 5 pairs, sf0.1)
     toks = scoped_persist(
         docs.select("doc_id", F.explode(F.expr(TOKS_SPARK)).alias("t"))
     )
@@ -1006,6 +1004,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("freq"))
     )
     vocab = words.orderBy(F.desc("freq"), F.asc("w")).limit(_BPE_VOCAB)
+    # kept: the plain plan ran 1.20x slower (A/B: 5 pairs, sf0.1)
     cur = scoped_persist(
         vocab.select(F.expr(_bpe_spaced_spark("w")).alias("s"), "freq")
     )

@@ -129,7 +129,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivec_spark,
     )
 
-    emb = scoped_persist(
+    emb = (
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")
         )
@@ -229,6 +229,7 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metoffice_spark.operators.llm import TOKS_SPARK
 
     docs = load(spark, sf_dir, "documents").filter("doc_id % 7 = 0")
+    # kept: the plain plan ran 1.25x slower (A/B: 5 pairs, sf0.1)
     toks = scoped_persist(
         docs.select(
             "doc_id", F.posexplode(F.expr(TOKS_SPARK)).alias("pos", "tok")

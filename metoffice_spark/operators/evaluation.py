@@ -62,6 +62,7 @@ def q_eval_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang")
         .agg(F.sum("w").cast("bigint").alias("score_fp"))
     )
+    # kept: exchanges 9 -> 11 without it (A/B: 5 pairs, sf0.1)
     labeled = scoped_persist(
         docs.select("doc_id", "lang")
         .join(scored.select("doc_id", "score_fp"), "doc_id", "left")
@@ -299,7 +300,7 @@ def q_eval_rouge(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted as doubles)."""
     from metoffice_spark.operators.corpus import _bigrams_spark
 
-    docs = scoped_persist(load(spark, sf_dir, "documents").select("doc_id", "source", "text"))
+    docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
     w_src = Window.partitionBy("source").orderBy("doc_id")
     pairs = (
         docs.select(
@@ -310,11 +311,11 @@ def q_eval_rouge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # tokenize ONCE into a column before the bigram builder: its
     # transform() lambda is interpreted, so an inlined tokenizer
-    # re-splits the document per bigram index (r13 finding, see
+    # re-splits the document per bigram index (see
     # corpus._bigrams_spark)
     toksed = docs.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
-    uni = scoped_persist(_rouge_counts(toksed, "toks"))
-    bi = scoped_persist(_rouge_counts(toksed, _bigrams_spark()))
+    uni = _rouge_counts(toksed, "toks")
+    bi = _rouge_counts(toksed, _bigrams_spark())
     ov1, len1 = _rouge_side(pairs, uni, "1")
     ov2, len2 = _rouge_side(pairs, bi, "2")
 
@@ -467,10 +468,10 @@ def q_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang")
         .agg(F.sum("w").cast("bigint").alias("score_fp"))
     )
-    # persisted (the q_eval_pr precedent): labeled feeds BOTH the
-    # bounds aggregate and the binning crossJoin — without the barrier
-    # the explode+hash scoring chain executes twice.
-    labeled = scoped_persist(
+    # labeled feeds BOTH the bounds aggregate and the binning
+    # crossJoin; not persisted, as the plain plan ran no slower
+    # (A/B: 5 pairs, sf0.1)
+    labeled = (
         docs.select("doc_id", "lang")
         .join(scored.select("doc_id", "score_fp"), "doc_id", "left")
         .select(

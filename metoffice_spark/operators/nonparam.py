@@ -221,10 +221,12 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-(F.col("l_suppkey") + 1)).cast("bigint").alias("dst"),
         )
     )
+    # kept: read by every round; cuts lineage that grows with the round count
     fwd = scoped_persist(fwd)
     seed = orders.agg(F.min("o_custkey").cast("bigint").alias("node")).select(
         "node", F.lit(0).cast("int").alias("level")
     )
+    # kept: rebound per round; cuts lineage that grows with the round count
     reached = scoped_persist(seed)
     frontier = reached
     for lvl in range(1, _BFS_MAX_LEVEL + 1):
@@ -239,6 +241,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(reached.select("node")), "node", "left_anti")
             .select("node", F.lit(lvl).cast("int").alias("level"))
         )
+        # kept: rebound per round; cuts lineage that grows with the round count
         nxt = scoped_persist(nxt)
         # reached is a union of ALREADY-persisted per-level frames —
         # persisting the union again would re-materialize every level

@@ -75,8 +75,9 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist barrier: CollapseProject would otherwise inline the
     # tokenize expression into EVERY downstream reference (the two
     # bigram size() calls, the explode, the CASE guard) — recomputing
-    # split+filter per reference and blowing up codegen (the round-2
-    # q_dedup_fuzzy lesson). Cached, toks is computed once per row.
+    # split+filter per reference and blowing up codegen. Cached,
+    # toks is computed once per row.
+    # kept: plain 1.15x slower here, 20.7x in q_pipeline_e2e (A/B: 5 pairs, sf0.1)
     base = scoped_persist(
         _spread(docs, "doc_id").select(
             "doc_id", "lang", F.expr(TOKS_SPARK.format(col="text")).alias("toks")
@@ -766,6 +767,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree re-evaluates per branch (~3x, with the tokenize explode
     # inside doubling again; measured 16 s at sf0.1). The persisted
     # frame is tiny: one (doc_id, lang, n_tokens) row per unique doc.
+    # kept: the plain plan ran 20.7x slower (A/B: 5 pairs, sf0.1)
     winners = scoped_persist(
         g.join(docs, "doc_id")
         .groupBy("k")

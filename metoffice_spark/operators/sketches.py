@@ -101,7 +101,7 @@ def q_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # elem IS NOT NULL boundary (mirrored in the oracle): a NULL
     # user_id yields a NULL element with no identity — and its NULL
     # hash would enter the bottom-k under Spark's NULLS FIRST default
-    # yet miss it under DuckDB's NULLS LAST (r07 null-key fuzz
+    # yet miss it under DuckDB's NULLS LAST (a null-key fuzz
     # finding). An element that cannot be identified is not a set
     # member.
     base = ev.select(
@@ -110,7 +110,7 @@ def q_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
             "concat(cast(user_id as string), '|', cast(to_date(ts) as string))"
         ).alias("elem"),
     ).filter(F.col("elem").isNotNull())
-    flags = scoped_persist(
+    flags = (
         base.groupBy("elem").agg(
             *[
                 F.max(F.when(F.col("event_type") == t, 1).otherwise(0)).alias(
@@ -322,6 +322,7 @@ def q_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: type count, register mismatches between merged and
     direct sketches (must be 0), both estimates, exact distinct."""
     ev = load(spark, sf_dir, "events")
+    # kept: the plain plan ran 1.25x slower (A/B: 5 pairs, sf0.1)
     hashed = scoped_persist(
         ev.select(
             "event_type",
@@ -544,11 +545,11 @@ def q_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, percentile): histogram-sketch estimate (bin
     lower edge), the exact value, and the within-bin error in
     cents."""
-    # rank-validity boundary (r08 ts+value probe, mirrored in the
+    # rank-validity boundary (a ts+value probe, mirrored in the
     # oracle): a NULL reading has neither a histogram bin nor an
     # exact rank — and its NULL bin/rank sorts at opposite ends on
     # the two engines.
-    ev = scoped_persist(
+    ev = (
         load(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
@@ -694,9 +695,7 @@ def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the N/K heavy-hitter verdict."""
     from metoffice_spark.operators.llm import TOKS_SPARK
 
-    from metoffice_spark.session import scoped_persist
-
-    toks = scoped_persist(
+    toks = (
         load(spark, sf_dir, "documents").select(
             (F.col("doc_id") % _HH_SHARDS).cast("int").alias("shard"),
             F.explode(F.expr(TOKS_SPARK)).alias("tok"),

@@ -467,6 +467,7 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair, intersection, union, jaccard_fp."""
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    # kept: the plain plan ran 1.42x slower (A/B: 5 pairs, sf0.1)
     edges = scoped_persist(
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
@@ -823,7 +824,7 @@ QUERIES["q_sink_jsonl"] = (q_sink_jsonl, ORACLE_SINK_JSONL)
 def q_forecast_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: holdout hours scored, seasonal-naive MAE_fp
     (1e-6 cents) on the final day."""
-    ev = scoped_persist(
+    ev = (
         load(spark, sf_dir, "events").select(
             "event_type",
             F.to_date("ts").alias("day"),
@@ -909,7 +910,7 @@ _TE_SMOOTH = 10
 def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per sampled event: its category, target cents, and the
     leave-one-out smoothed target encoding (1e-6 fixed point)."""
-    ev = scoped_persist(
+    ev = (
         load(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -986,11 +987,11 @@ _DRIFT_BASE_DAYS = 14
 def q_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: baseline/current counts, window shares in
     1e-6 fixed point, and the 2x2 chi-squared drift statistic."""
-    # sequencing-validity boundary (r08 null-ts probe, mirrored in the
+    # sequencing-validity boundary (a null-ts probe, mirrored in the
     # oracle): an undated event belongs to neither drift window — and
     # the engines disagree on its flag (Spark's cast(NULL<14 as int)
     # is NULL and drops out of sum(); DuckDB's CASE lands it in ELSE 0).
-    ev = scoped_persist(
+    ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
         .select("event_type", F.to_date("ts").alias("day"))
@@ -1086,7 +1087,6 @@ def q_eval_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metoffice_spark.operators.classify import q_nb_langid
 
     conf = q_nb_langid(spark, sf_dir)
-    conf = scoped_persist(conf)
     actuals = conf.groupBy(F.col("actual_lang").alias("cls")).agg(
         F.sum("n_docs").cast("bigint").alias("support")
     )

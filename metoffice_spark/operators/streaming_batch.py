@@ -126,6 +126,7 @@ def _replay(spark: SparkSession, frame: DataFrame, preds=None) -> tuple[str, str
     # one task; the single action before the writes fills the cache with
     # all cores instead. That action is the max-ts collect when the split
     # needs it, and a noop write otherwise.
+    # kept: the only persist on the stream_ticks path
     frame = scoped_persist(frame)
     if callable(preds):
         mx = frame.select(F.max("ts")).collect()[0][0]

@@ -194,6 +194,7 @@ def q_olap_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, distributed 1-row max, broadcast filter join."""
     from metoffice_spark.session import scoped_persist
 
+    # kept: exchanges 5 -> 6 without it (A/B: 5 pairs, sf0.1)
     revenue = scoped_persist(sql_frame(spark, sf_dir, ("lineitem",), _Q15_REVENUE_SQL))
     mx = revenue.agg(F.max("rev_cents").alias("max_cents"))
     supplier = load(spark, sf_dir, "supplier")

@@ -66,7 +66,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             F.col("o_totalprice").isNotNull()
             & F.col("o_orderdate").isNotNull()
-            # finite extension (r10 composed battery, q_gini_spend
+            # finite extension (a composed-battery probe, q_gini_spend
             # class): all-non-finite customers must not reach ntile
             & F.expr(fits_sql("o_totalprice"))
         )
@@ -78,6 +78,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+    # kept: exchanges 16 -> 17 without it (A/B: 5 pairs, sf0.1)
     per_cust = scoped_persist(
         orders.groupBy("o_custkey").agg(
             F.max("d").alias("last_d"),
@@ -288,9 +289,7 @@ def q_dataset_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_hexn(row_h, 8)).cast("bigint").alias("h32"),
         F.expr(_hexn(row_h, 12)).cast("bigint").alias("h48"),
     )
-    from metoffice_spark.session import scoped_persist
-
-    base = scoped_persist(
+    base = (
         hashed.groupBy("shard").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum("h32").cast("bigint").alias("checksum_add"),

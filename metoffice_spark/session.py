@@ -75,6 +75,9 @@ _RUNTIME_CONF = {
 #   - A released scope may uncache a plan that a newer build of the
 #     SAME query still references; that frame then recomputes, which
 #     is correct, merely slower.
+# Every call site has a ``# kept:`` line quoting the persist A/B
+# under artifacts/: the plain plan against the persisted one, 5
+# alternating pairs of tools/measure.py at sf0.1.
 # Keeping one previous scope measured the same as keeping none on the
 # bench (sf0.1, local[32]), while keeping four was ~5 % slower: extra
 # caches squeeze execution memory.

@@ -32,6 +32,9 @@ to its input plan), once per cache however many scans read it.
 
 from __future__ import annotations
 
+from collections import deque
+from itertools import islice
+
 from pyspark import SparkContext
 
 
@@ -53,28 +56,26 @@ def _kids(node) -> list:
     return [node.children().apply(j) for j in range(node.children().length())]
 
 
-def _children(node) -> list:
-    """The node's children, plus the cached plan under an
-    InMemoryTableScan."""
-    cached = _cached_plan(node)
-    return _kids(node) if cached is None else [*_kids(node), cached]
-
-
 def plan_nodes(plan):
-    """Every node of ``plan`` and of each cached plan below it; a cache
-    read by several scans is walked once."""
-    seen: set[int] = set()
-    stack = [plan]
-    while stack:
-        node = stack.pop()
+    """Every node of ``plan`` and of each cached plan below it, in
+    breadth-first order; a cache read by several scans is walked once
+    (caches are told apart by JVM object identity)."""
+    jutil = SparkContext._jvm.java.util
+    seen = jutil.Collections.newSetFromMap(jutil.IdentityHashMap())
+    queue = deque([plan])
+    while queue:
+        node = queue.popleft()
         yield node
-        stack += _kids(node)
+        queue += _kids(node)
         cached = _cached_plan(node)
-        if cached is not None:
-            key = SparkContext._jvm.System.identityHashCode(cached)
-            if key not in seen:
-                seen.add(key)
-                stack.append(cached)
+        if cached is not None and cached not in seen:
+            seen.add(cached)
+            queue.append(cached)
+
+
+def _below(node):
+    """The nodes under ``node``, caches included (see plan_nodes)."""
+    return islice(plan_nodes(node), 1, None)
 
 
 def _sanctions(node) -> bool:
@@ -87,7 +88,7 @@ def _sanctions(node) -> bool:
 
 
 def _has_sanction_below(node) -> bool:
-    return any(_sanctions(ch) or _has_sanction_below(ch) for ch in _children(node))
+    return any(_sanctions(n) for n in _below(node))
 
 
 def _first_agg_head_below(node) -> str:
@@ -95,13 +96,10 @@ def _first_agg_head_below(node) -> str:
     'no-aggregate-below' — identifies WHICH bounded table an
     allowlisted global window runs over, so swapping it for a
     data-sized input changes the descriptor and trips the test."""
-    queue = _children(node)
-    while queue:
-        ch = queue.pop(0)
-        if "Aggregate" in ch.nodeName():
-            return _head(ch)[:160]
-        queue += _children(ch)
-    return "no-aggregate-below"
+    return next(
+        (_head(n)[:160] for n in _below(node) if "Aggregate" in n.nodeName()),
+        "no-aggregate-below",
+    )
 
 
 def unbounded_global_windows_in(plan) -> list[str]:

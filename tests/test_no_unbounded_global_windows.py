@@ -39,7 +39,6 @@ from plan_walkers import (
     cartesian_product_count,
     exchange_count,
     nested_loop_join_count,
-    plan_nodes,
     unbounded_global_windows_in,
 )
 
@@ -72,10 +71,13 @@ _NLJ_RATCHET = {
     "q_drift_chi2": 3,
     "q_er_blocking": 4,
     "q_eval_calibration": 1,
-    # 2 in the metric frame, plus the 4 of q_nb_langid's plan inside
-    # the persisted confusion frame (its pin below): one 1-row
-    # broadcast scalar and three |langs|-bounded grids
-    "q_eval_multiclass": 6,
+    # 2 in the metric frame, plus the 4 of q_nb_langid's plan (its pin
+    # below: one 1-row broadcast scalar and three |langs|-bounded
+    # grids) under each of the 6 readers of the confusion frame, which
+    # is no longer persisted. Exchange reuse runs that subtree once:
+    # the executed AQE plan at sf0.001 holds 6 BroadcastNestedLoopJoins
+    # (tools/measure.py spark.jobs 41 -> 28 at sf0.1)
+    "q_eval_multiclass": 26,
     "q_eval_pr": 1,
     "q_forecast_snaive": 1,
     "q_graph_assortativity": 1,
@@ -139,7 +141,10 @@ _EXCHANGE_RATCHET = {
     "q_rollup_hypertable": 5,
     "q_win_rank": 1,
     "q_dedup_exact": 1,
-    "q_dedup_fuzzy": 6,
+    # 6 -> 10: the shingle and hash persists are gone, so the subtree
+    # the cache leaf hid is planned under each of its readers; AQE
+    # reuses it (tools/measure.py plan.exchanges 7 -> 6 at sf0.1)
+    "q_dedup_fuzzy": 10,
     "q_sim_search_lsh": 2,
     "q_sim_search_ivf": 10,
     "q_ann_pq": 10,
@@ -149,10 +154,14 @@ _EXCHANGE_RATCHET = {
     "q_funnel_steps": 3,
     "q_scd2_build": 1,
     "q_interval_sweep": 1,
-    "q_nb_langid": 18,
+    # 18 -> 21: the tf persist is gone (see q_dedup_fuzzy; measured
+    # plan.exchanges 20 -> 19)
+    "q_nb_langid": 21,
     "q_dedup_lines": 4,
     "q_attribution": 2,
-    "q_sketch_setops": 5,
+    # 5 -> 7: the flags persist is gone (see q_dedup_fuzzy; measured
+    # plan.exchanges 6 -> 6)
+    "q_sketch_setops": 7,
     "q_behavior_e2e": 2,
     "q_olap_volume_shipping": 7,
     "q_olap_waiting_supplier": 8,
@@ -294,7 +303,6 @@ def test_no_quadratic_unbounded_following_frame(registry_plans):
     offenders = {
         qid: m
         for qid, plan in registry_plans.items()
-        if (m := [f for node in plan_nodes(plan) if "Window" in node.nodeName()
-                  for f in pat.findall(node.toString().splitlines()[0])])
+        if (m := pat.findall(plan.toString()))
     }
     assert offenders == {}

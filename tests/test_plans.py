@@ -424,14 +424,18 @@ def test_dedup_lines_shuffles_digests_not_text(spark, sf_smoke):
 
 
 def test_changepoint_daily_agg_computed_once(spark, sf_smoke):
-    """The persisted daily series must feed both consumers (stats +
-    cusum) from cache: two InMemoryTableScans in the plan. (Raw "Scan
-    parquet" strings also appear INSIDE the printed InMemoryRelation
-    description, so they cannot be counted directly.)"""
+    """The daily series must feed both consumers (stats + cusum) from
+    one events scan: after execution the final AQE plan holds a single
+    FileScan, and the second reader of the daily aggregate's shuffle
+    is a ReusedExchange of the first."""
     from metoffice_spark.operators.behavior import q_ts_changepoint
 
-    plan = _plan(q_ts_changepoint(spark, sf_smoke))
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    df = q_ts_changepoint(spark, sf_smoke)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    assert final.count("FileScan parquet") == 1, final
+    assert "ReusedExchange" in final, final
 
 
 def test_triangles_joins_are_hash_equi(spark, sf_smoke):

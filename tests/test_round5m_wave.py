@@ -99,7 +99,12 @@ def test_5m_plan_shapes(spark, sf_smoke):
     p = plan(q_attribution_linear(spark, sf_smoke))
     assert "CartesianProduct" not in p
 
-    p = plan(q_simpson_check(spark, sf_smoke))
-    assert "CartesianProduct" not in p
-    # pooled derives from the persisted group partials — one scan
-    assert p.count(") Scan parquet") == 1, p.count(") Scan parquet")
+    df = q_simpson_check(spark, sf_smoke)
+    assert "CartesianProduct" not in plan(df)
+    # pooled derives from the group partials — one scan: executed, the
+    # final AQE plan reads the partials' shuffle a second time as a
+    # ReusedExchange
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, final
+    assert "ReusedExchange" in final, final

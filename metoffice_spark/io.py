@@ -117,6 +117,10 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
 # own QueryExecution: it is optimised and planned again, scans every
 # file again and writes its own shuffles, while parsing and analysis
 # of the text are skipped.
+# Bound: one entry per text, whatever the number of builds, sessions or
+# sf_dirs. The texts are module constants, at most one per registered
+# builder (``rain_metrics`` reads the oracle text of q_stream_stateful),
+# so the dict holds at most 292 entries, one per registered qid.
 # ``obs.observations`` is left out: it is a building block, and two
 # Datasets over one analysed plan share attribute ids, so a self-join
 # of two of them by Dataset columns is ambiguous.

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.relational import _DISC_PRICE
 from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
@@ -221,20 +221,7 @@ def q_olap_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct suppliers shipping each small-part brand, excluding
     suppliers in arrears (anti join) — distinct-agg + anti-join in one
     plan."""
-    part = load(spark, sf_dir, "part").filter(F.col("p_size") <= 10)
-    bad = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
-        "s_suppkey"
-    )
-    li = load(spark, sf_dir, "lineitem")
-    ok_lines = li.join(
-        F.broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti"
-    )
-    joined = ok_lines.join(F.broadcast(part), ok_lines.l_partkey == part.p_partkey)
-    return (
-        joined.groupBy("p_brand")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .select("p_brand", "supplier_cnt")
-    )
+    return sql_frame(spark, sf_dir, ("supplier", "part", "lineitem"), ORACLE_OLAP_PARTS_SUPPLIERS)
 
 
 ORACLE_OLAP_PARTS_SUPPLIERS = """
@@ -256,7 +243,7 @@ QUERIES = {
 }
 
 
-# --- Round-3 behavioral-analytics suite: percentiles / funnel / cohorts ------
+# --- Behavioral-analytics suite: percentiles / funnel / cohorts --------------
 #
 # The product-analytics workloads (exact distributed percentiles,
 # ordered event funnels, cohort retention) a warehouse user runs over
@@ -341,64 +328,16 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id; both window passes share the same
     (user, ts, event_id) sort, so Spark plans one exchange + one sort;
     per-user frames are bounded by that user's event count."""
-    # sequencing-validity boundary (r10 composed stress probe,
-    # mirrored in the oracle): "strictly after" is defined on the
-    # time axis — a NULL-ts click sits at the frame's START in Spark
-    # (sees no prior view) but at its END in DuckDB (sees every view),
-    # flipping click_ok for that user.
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull()
-    ).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    prior = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    s1 = ev.withColumn(
-        "prior_view",
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(prior),
-    ).withColumn(
-        "click_ok",
-        (F.col("event_type") == "click") & F.col("prior_view").isNotNull(),
-    )
-    s2 = s1.withColumn(
-        "prior_click",
-        F.min(F.when(F.col("click_ok"), F.col("ts"))).over(prior),
-    ).withColumn(
-        "purchase_ok",
-        (F.col("event_type") == "purchase") & F.col("prior_click").isNotNull(),
-    )
-    agg = s2.agg(
-        F.countDistinct(
-            F.when(F.col("event_type") == "view", F.col("user_id"))
-        ).alias("n_view_users"),
-        F.countDistinct(F.when(F.col("click_ok"), F.col("user_id"))).alias(
-            "n_click_users"
-        ),
-        F.countDistinct(F.when(F.col("purchase_ok"), F.col("user_id"))).alias(
-            "n_purchase_users"
-        ),
-    )
-    # nullif on the denominators: on an empty slice every count is 0,
-    # where ANSI `/` raises and DuckDB's IEEE double divide gives NaN —
-    # NULL is the one value both engines can agree on (r07 empty-slice
-    # fuzz finding); at any non-degenerate SF the funnel head is
-    # non-zero and the rates are unchanged.
-    return agg.select(
-        "n_view_users",
-        "n_click_users",
-        "n_purchase_users",
-        (F.col("n_click_users") / F.expr("nullif(n_view_users, 0)")).alias(
-            "click_rate"
-        ),
-        (F.col("n_purchase_users") / F.expr("nullif(n_click_users, 0)")).alias(
-            "purchase_rate"
-        ),
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_FUNNEL_STEPS)
 
 
+# "Strictly after" is defined on the time axis, so a NULL-ts event is
+# left out: a NULL-ts click would sit at the frame's start in Spark
+# (seeing no prior view) but at its end in DuckDB (seeing every view).
+# nullif on the denominators: on an empty slice every count is 0, where
+# ANSI `/` raises and DuckDB's double divide gives NaN; NULL is the one
+# value both engines agree on. At any non-empty input the funnel head is
+# non-zero and the rates are unchanged.
 ORACLE_FUNNEL_STEPS = """
 WITH s1 AS (
   SELECT user_id, event_id, ts, event_type,

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_order_stats
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
@@ -228,41 +228,13 @@ daily AS (
 def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_type, lag in {1, 2}): pair count, exact moment sums,
     and the autocorrelation coefficient (IEEE, computed last)."""
-    daily = _daily(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("day")
-    out = None
-    for lag in (1, 2):
-        pairs = daily.select(
-            "event_type",
-            F.col("cnt").alias("x"),
-            F.lead("cnt", lag).over(w).alias("y"),
-        ).filter(F.col("y").isNotNull())
-        mom = pairs.groupBy("event_type").agg(
-            F.lit(lag).cast("int").alias("lag"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("x").cast("bigint").alias("sx"),
-            F.sum("y").cast("bigint").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-            F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
-        )
-        out = mom if out is None else out.unionByName(mom)
-    # zero-variance guard (the q_ts_trend CASE pattern): a constant
-    # series or a single lag pair makes a variance leg 0 — definition-
-    # ally NULL on BOTH engines instead of relying on each engine's
-    # double-division-by-zero behavior (NULL vs NaN across DuckDB
-    # versions).
-    return out.withColumn(
-        "acf",
-        F.expr(
-            "case when (n * sxx - sx * sx) > 0 and (n * syy - sy * sy) > 0"
-            " then cast(n * sxy - sx * sy as double)"
-            " / (sqrt(cast(n * sxx - sx * sx as double))"
-            "    * sqrt(cast(n * syy - sy * sy as double))) end"
-        ),
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_TS_AUTOCORR)
 
 
+# Zero-variance guard (the q_ts_trend CASE pattern): a constant series
+# or a single lag pair makes a variance leg 0, and the CASE makes the
+# result NULL on both engines instead of relying on each engine's
+# double division by zero (NULL or NaN across DuckDB versions).
 ORACLE_TS_AUTOCORR = f"""
 WITH {_DAILY_DUCK},
 pairs AS (
@@ -412,57 +384,15 @@ QUERIES["q_ts_changepoint"] = (q_ts_changepoint, ORACLE_TS_CHANGEPOINT)
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation after applying the 3-version changelog: surviving
     customer count and total balance in exact integer cents."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_nationkey",
-        F.expr(cents_sql("c_acctbal")).alias("cents"),
-    )
-    v1 = cust.select(
-        "c_custkey", "c_nationkey", F.lit(1).alias("version"),
-        F.lit("I").alias("op"), F.col("cents").alias("bal_cents"),
-    )
-    v2u = cust.filter(F.col("c_custkey") % 7 == 0).select(
-        "c_custkey", "c_nationkey", F.lit(2).alias("version"),
-        F.lit("U").alias("op"), (F.col("cents") + 10000).alias("bal_cents"),
-    )
-    v2d = cust.filter(F.col("c_custkey") % 13 == 0).select(
-        "c_custkey", "c_nationkey", F.lit(2).alias("version"),
-        F.lit("D").alias("op"), F.lit(None).cast("bigint").alias("bal_cents"),
-    )
-    v3i = cust.filter(F.col("c_custkey") % 26 == 0).select(
-        "c_custkey", "c_nationkey", F.lit(3).alias("version"),
-        F.lit("I").alias("op"), F.lit(0).cast("bigint").alias("bal_cents"),
-    )
-    # % 26 is excluded from the v3 update: a key matching both would
-    # carry TWO version-3 records (I and U) whose relative order no
-    # tie-break defines — cross-engine nondeterminism. One op per key
-    # per version is the changelog well-formedness contract.
-    v3u = cust.filter(
-        (F.col("c_custkey") % 5 == 0) & (F.col("c_custkey") % 26 != 0)
-    ).select(
-        "c_custkey", "c_nationkey", F.lit(3).alias("version"),
-        F.lit("U").alias("op"), (F.col("cents") + 5000).alias("bal_cents"),
-    )
-    log = v1.unionByName(v2u).unionByName(v2d).unionByName(v3i).unionByName(v3u)
-    # Within one version at most one op per key by construction except
-    # v2 (7 and 13 can both divide); deletes win ties (op 'D' < 'I' <
-    # 'U' would be wrong — order by op DESC puts 'U' first; make the
-    # tie explicit: D beats U at equal version, matching a log where
-    # the delete is the later physical record).
-    w = Window.partitionBy("c_custkey").orderBy(
-        F.col("version").desc(),
-        F.when(F.col("op") == "D", 1).otherwise(0).desc(),
-    )
-    final = (
-        log.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "D"))
-    )
-    return final.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-        F.sum("bal_cents").cast("bigint").alias("balance_cents"),
-    )
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_CDC_APPLY)
 
 
+# Keys divisible by 26 are left out of the v3 update: such a key would
+# carry TWO version-3 records (I and U) whose order no tie-break
+# defines. One op per key per version is the changelog's well-formedness
+# contract. Within a version only v2 can hold two ops for one key (7 and
+# 13 can both divide it), and the delete wins that tie, as in a log
+# where the delete is the later physical record.
 ORACLE_CDC_APPLY = f"""
 WITH cust AS (
   SELECT c_custkey, c_nationkey,
@@ -935,53 +865,7 @@ QUERIES["q_ohlc_bars"] = (q_ohlc_bars, ORACLE_OHLC_BARS)
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (as_of_version, nation): surviving customers and balance
     cents of the snapshot at that version."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_nationkey",
-        F.expr(cents_sql("c_acctbal")).alias("cents"),
-    )
-    v1 = cust.select(
-        "c_custkey", "c_nationkey", F.lit(1).alias("version"),
-        F.lit("I").alias("op"), F.col("cents").alias("bal_cents"),
-    )
-    v2u = cust.filter(F.col("c_custkey") % 7 == 0).select(
-        "c_custkey", "c_nationkey", F.lit(2).alias("version"),
-        F.lit("U").alias("op"), (F.col("cents") + 10000).alias("bal_cents"),
-    )
-    v2d = cust.filter(F.col("c_custkey") % 13 == 0).select(
-        "c_custkey", "c_nationkey", F.lit(2).alias("version"),
-        F.lit("D").alias("op"), F.lit(None).cast("bigint").alias("bal_cents"),
-    )
-    v3i = cust.filter(F.col("c_custkey") % 26 == 0).select(
-        "c_custkey", "c_nationkey", F.lit(3).alias("version"),
-        F.lit("I").alias("op"), F.lit(0).cast("bigint").alias("bal_cents"),
-    )
-    v3u = cust.filter(
-        (F.col("c_custkey") % 5 == 0) & (F.col("c_custkey") % 26 != 0)
-    ).select(
-        "c_custkey", "c_nationkey", F.lit(3).alias("version"),
-        F.lit("U").alias("op"), (F.col("cents") + 5000).alias("bal_cents"),
-    )
-    # kept: the plain plan ran 1.14x slower (A/B: 5 pairs, sf0.1)
-    log = scoped_persist(
-        v1.unionByName(v2u).unionByName(v2d).unionByName(v3i).unionByName(v3u)
-    )
-    asof = spark.createDataFrame([(1,), (2,), (3,)], "as_of_version int")
-    fan = log.crossJoin(F.broadcast(asof)).filter(
-        F.col("version") <= F.col("as_of_version")
-    )
-    w = Window.partitionBy("as_of_version", "c_custkey").orderBy(
-        F.col("version").desc(),
-        F.when(F.col("op") == "D", 1).otherwise(0).desc(),
-    )
-    final = (
-        fan.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "D"))
-    )
-    return final.groupBy("as_of_version", "c_nationkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-        F.sum("bal_cents").cast("bigint").alias("balance_cents"),
-    )
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_TIME_TRAVEL)
 
 
 ORACLE_TIME_TRAVEL = f"""

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_row_number
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.llm import (
     DOT_DUCK,
     DOT_SPARK,
@@ -746,38 +746,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('new' = digest unseen anywhere, 'batch_first' = duplicate within
     the batch only, kept as first holder) — plus merge==batch audit
     columns proving the incremental result equals full-corpus dedup."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.md5("text").alias("digest")
-    )
-    index = docs.filter(F.col("doc_id") % 2 == 0)
-    batch = docs.filter(F.col("doc_id") % 2 == 1)
-
-    first_in_batch = batch.groupBy("digest").agg(
-        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("batch_copies")
-    )
-    survivors = first_in_batch.join(
-        index.select("digest"), "digest", "left_anti"
-    )
-    # merge==batch audit: the full-corpus keep-set winner for this
-    # digest must be the same doc the incremental path kept, PROVIDED
-    # no index doc holds the digest — which the anti-join guarantees.
-    full_winner = docs.groupBy("digest").agg(
-        F.min("doc_id").alias("full_winner_id")
-    )
-    return (
-        survivors.join(full_winner, "digest")
-        .select(
-            "doc_id",
-            "digest",
-            F.when(F.col("batch_copies") == 1, F.lit("new"))
-            .otherwise(F.lit("batch_first"))
-            .alias("survivor_class"),
-            F.col("batch_copies").cast("bigint").alias("batch_copies"),
-            (F.col("full_winner_id") == F.col("doc_id")).alias("merge_eq_batch"),
-        )
-    )
+    return sql_frame(spark, sf_dir, ("documents",), ORACLE_DEDUP_INCREMENTAL)
 
 
+# merge==batch audit: the full-corpus keep-set winner of a digest must
+# be the doc the incremental path kept, provided no index doc holds the
+# digest, which the NOT EXISTS guarantees.
 ORACLE_DEDUP_INCREMENTAL = """
 WITH d AS (SELECT doc_id, md5(text) AS digest FROM documents),
 batch AS (SELECT * FROM d WHERE doc_id % 2 = 1),

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_order_stats
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.classify import _QC_BUCKET, _QC_WEIGHT
 from metoffice_spark.operators.corpus import _BIGRAMS_DUCK
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK
@@ -187,35 +187,7 @@ _Z_EXPR = (
 def q_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: cohort sizes, conversions, conversion rates, the
     pooled z statistic, and the 5%-level significance flag."""
-    ev = load(spark, sf_dir, "events")
-    flagged = ev.select(
-        (F.col("event_id") % 2).alias("grp"),
-        F.when(
-            (F.col("event_type") == "purchase") & (F.col("value") > 100.0), 1
-        )
-        .otherwise(0)
-        .alias("conv"),
-    )
-    counts = flagged.agg(
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("bigint").alias("n_a"),
-        F.sum(F.when(F.col("grp") == 0, F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("x_a"),
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("bigint").alias("n_b"),
-        F.sum(F.when(F.col("grp") == 1, F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("x_b"),
-    )
-    return counts.select(
-        "n_a",
-        "x_a",
-        "n_b",
-        "x_b",
-        F.expr("cast(x_a as double) / cast(nullif(n_a, 0) as double)").alias("p_a"),
-        F.expr("cast(x_b as double) / cast(nullif(n_b, 0) as double)").alias("p_b"),
-        F.expr(_Z_EXPR).alias("z_stat"),
-        F.expr(f"abs({_Z_EXPR}) > 1.96e0").alias("significant"),
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_AB_ZTEST)
 
 
 ORACLE_AB_ZTEST = f"""

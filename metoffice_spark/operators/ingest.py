@@ -359,18 +359,7 @@ def q_sink_error_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter channel (MWC:125-135, 399-409): validation failures
     become rows with a reason instead of aborting — the distributed
     analog of log+email+abort."""
-    df = observations(spark, sf_dir)
-    reason = (
-        F.when(F.col("hum") > 99.5, F.lit("humidity_out_of_range"))
-        .when(F.col("windgust_ms") > F.lit(25.0), F.lit("gust_implausible"))
-        .when(F.col("pressure_site_hpa") < 980.0, F.lit("pressure_low"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    return (
-        df.withColumn("reason", reason)
-        .filter(F.col("reason").isNotNull())
-        .select("obs_id", "station_id", "reason")
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_SINK_ERROR_ALERT)
 
 
 ORACLE_SINK_ERROR_ALERT = f"""{_CTE}

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.session import scoped_persist
 
 # --- shared dialect snippets ------------------------------------------------
@@ -1459,18 +1459,7 @@ def q_split_train_val(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, stratified report per (split, lang). Map-only assignment —
     at 100 TB the split column is computed at scan time and partitions
     the written dataset; no shuffle beyond the tiny report rollup."""
-    docs = load(spark, sf_dir, "documents")
-    tagged = docs.withColumn("split", F.expr(_SPLIT_EXPR))
-    return (
-        tagged.groupBy("split", "lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("n_chars").cast("bigint")).alias("chars_total"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-        )
-        .select("split", "lang", "n_docs", "chars_total", "min_doc_id", "max_doc_id")
-    )
+    return sql_frame(spark, sf_dir, ("documents",), ORACLE_SPLIT_TRAIN_VAL)
 
 
 ORACLE_SPLIT_TRAIN_VAL = f"""

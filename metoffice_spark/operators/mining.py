@@ -28,7 +28,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
 from metoffice_spark.parity import bigint_sql, cents_sql
 from metoffice_spark.session import scoped_persist
@@ -677,7 +677,7 @@ QUERIES["q_text_keyphrase"] = (q_text_keyphrase, _keyphrase_oracle())
 # aggregation tree, no second scan); slopes, signs, AND the
 # degeneracy guards all evaluate through the shared _ols_num /
 # _ols_den DOUBLE helpers — the integer forms n·Sxy − Sx·Sy would
-# wrap int64 at ~1.4e5 rows per group (review r05), with DuckDB
+# wrap int64 at ~1.4e5 rows per group, with DuckDB
 # hard-erroring while Spark wraps silently.
 #
 # Scale: one (flag)-keyed aggregate with map-side combine + a
@@ -691,56 +691,7 @@ QUERIES["q_text_keyphrase"] = (q_text_keyphrase, _keyphrase_oracle())
 def q_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per return flag: group OLS slope of price-cents on quantity,
     the pooled slope, and whether the signs reverse."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.expr(bigint_sql("l_quantity")).alias("x"),
-        F.expr(cents_sql("l_extendedprice")).alias("y"),
-    )
-    g = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-    )
-    # the pooled branch re-aggregates the |groups|-row partials; not
-    # persisted, as the plain plan ran faster (A/B: 5 pairs, sf0.1)
-    pooled = g.agg(
-        F.sum("n").cast("bigint").alias("pn"),
-        F.sum("sx").cast("bigint").alias("psx"),
-        F.sum("sy").cast("bigint").alias("psy"),
-        F.sum("sxx").cast("bigint").alias("psxx"),
-        F.sum("sxy").cast("bigint").alias("psxy"),
-    )
-    # all slope/sign/guard arithmetic in DOUBLE via the shared
-    # helpers: the integer forms (n*sxy - sx*sy etc.) wrap int64 at
-    # ~1.4e5 lineitem rows per group — DuckDB would hard-error while
-    # Spark silently wraps, the exact cross-engine split the house
-    # rules exist to prevent
-    slope_g = f"{_ols_num('n', 'sxy', 'sx', 'sy')} / {_ols_den('n', 'sxx', 'sx')}"
-    slope_p = (
-        f"{_ols_num('pn', 'psxy', 'psx', 'psy')}"
-        f" / {_ols_den('pn', 'psxx', 'psx')}"
-    )
-    sign_g = f"sign({_ols_num('n', 'sxy', 'sx', 'sy')})"
-    sign_p = f"sign({_ols_num('pn', 'psxy', 'psx', 'psy')})"
-    guard = (
-        f"{_ols_den('n', 'sxx', 'sx')} > 0"
-        f" AND {_ols_den('pn', 'psxx', 'psx')} > 0"
-    )
-    return (
-        g.crossJoin(F.broadcast(pooled))
-        .filter(guard)
-        .select(
-            "l_returnflag",
-            "n",
-            F.expr(slope_g).alias("slope_group"),
-            F.expr(slope_p).alias("slope_pooled"),
-            F.expr(
-                f"CAST(CASE WHEN {sign_g} * {sign_p} < 0 THEN 1 ELSE 0 END AS INT)"
-            ).alias("reversed"),
-        )
-    )
+    return sql_frame(spark, sf_dir, ("lineitem",), ORACLE_SIMPSON_CHECK)
 
 
 def _simpson_oracle() -> str:
@@ -782,7 +733,8 @@ WHERE {_ols_den('n', 'sxx', 'sx')} > 0
 """
 
 
-QUERIES["q_simpson_check"] = (q_simpson_check, _simpson_oracle())
+ORACLE_SIMPSON_CHECK = _simpson_oracle()
+QUERIES["q_simpson_check"] = (q_simpson_check, ORACLE_SIMPSON_CHECK)
 
 
 # --- q_rolling_regression: trailing-window OLS slope per entity --------------

@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
 from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
@@ -508,29 +508,7 @@ _BAL_BUCKET = (
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of QI classes by sensitive diversity l: (l, below_l,
     n_classes, n_rows)."""
-    cust = load(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").cast("bigint").alias("nat"),
-        F.expr(_BAL_BUCKET).alias("bal_bucket"),
-        "c_mktsegment",
-    )
-    classes = cust.groupBy("nat", "bal_bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.countDistinct("c_mktsegment").cast("bigint").alias("l"),
-    )
-    return (
-        classes.groupBy("l")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_classes"),
-            F.sum("n").cast("bigint").alias("n_rows"),
-        )
-        .select(
-            "l",
-            F.when(F.col("l") < _L_DIVERSE, 1).otherwise(0).cast("int").alias("below_l"),
-            "n_classes",
-            "n_rows",
-        )
-        .orderBy("l")
-    )
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_L_DIVERSITY)
 
 
 ORACLE_L_DIVERSITY = f"""

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metoffice_spark.functions.distributed import global_running_sum
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK, _spread
 from metoffice_spark.parity import bigint_sql, cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
@@ -351,35 +351,7 @@ _RARE_PERMILLE = 15
 def q_rare_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding table after collapsing p_name values with < 1.5 %
     share: (label, n_rows, n_labels_merged, is_other)."""
-    part = load(spark, sf_dir, "part").select("p_name")
-    counts = part.groupBy("p_name").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    total = counts.agg(F.sum("cnt").cast("bigint").alias("n_total"))
-    flagged = counts.crossJoin(F.broadcast(total)).select(
-        F.when(
-            F.col("cnt") * 1000 < F.lit(_RARE_PERMILLE) * F.col("n_total"),
-            F.lit("__other__"),
-        )
-        .otherwise(F.col("p_name"))
-        .alias("label"),
-        "cnt",
-    )
-    return (
-        flagged.groupBy("label")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("n_rows"),
-            F.count(F.lit(1)).cast("bigint").alias("n_labels_merged"),
-        )
-        .select(
-            "label",
-            "n_rows",
-            "n_labels_merged",
-            F.when(F.col("label") == "__other__", 1).otherwise(0).cast("int").alias(
-                "is_other"
-            ),
-        )
-    )
+    return sql_frame(spark, sf_dir, ("part",), ORACLE_RARE_LABEL)
 
 
 ORACLE_RARE_LABEL = f"""

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.nonparam import _BAL_BUCKET
 from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
@@ -411,39 +411,7 @@ def q_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE full-outer join keyed on the primary key; with both
     snapshots bucketed on the key (q_join_bucketed layout) this is
     zero-shuffle; op classification is a map-side CASE."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_mktsegment"
-    )
-    old = cust.filter(F.col("c_custkey") % 10 != 0)
-    new = cust.filter(F.col("c_custkey") % 7 != 0).withColumn(
-        "c_nationkey",
-        F.when(F.col("c_custkey") % 5 == 0, (F.col("c_nationkey") + 1) % 25).otherwise(
-            F.col("c_nationkey")
-        ),
-    )
-    j = old.alias("o").join(
-        new.alias("n"), F.col("o.c_custkey") == F.col("n.c_custkey"), "full_outer"
-    )
-    op = (
-        F.when(F.col("o.c_custkey").isNull(), F.lit("insert"))
-        .when(F.col("n.c_custkey").isNull(), F.lit("delete"))
-        .when(
-            (F.col("o.c_nationkey") != F.col("n.c_nationkey"))
-            | (F.col("o.c_mktsegment") != F.col("n.c_mktsegment")),
-            F.lit("update"),
-        )
-        .otherwise(F.lit("unchanged"))
-    )
-    key = F.coalesce(F.col("o.c_custkey"), F.col("n.c_custkey"))
-    return (
-        j.select(op.alias("op"), key.alias("k"))
-        .groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("k").alias("min_key"),
-            F.max("k").alias("max_key"),
-        )
-    )
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_CDC_DIFF)
 
 
 ORACLE_CDC_DIFF = """
@@ -729,20 +697,7 @@ _DP_NOISE = (
 def q_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type: true count, the seeded Laplace noise (1e-6
     fixed point), and the released noisy count."""
-    ev = load(spark, sf_dir, "events")
-    counts = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_true")
-    )
-    return counts.select(
-        "event_type",
-        "n_true",
-        F.expr(f"cast(floor(1000000e0 * ({_DP_NOISE})) as bigint)").alias(
-            "noise_fp"
-        ),
-    ).withColumn(
-        "n_released_fp",
-        F.expr("cast(1000000 * n_true + noise_fp as bigint)"),
-    ).withColumn("eps_fp", F.lit(_DP_EPS_FP).cast("bigint"))
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_DP_RELEASE)
 
 
 ORACLE_DP_RELEASE = f"""
@@ -1050,41 +1005,7 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: equivalence classes over the
     quasi-identifier tuple, classes/rows below k=5, suppression
     rate."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_mktsegment",
-        "c_nationkey",
-        F.expr(_BAL_BUCKET).alias("bal_bucket"),
-    )
-    classes = cust.groupBy("c_mktsegment", "c_nationkey", "bal_bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    return (
-        classes.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_classes"),
-            F.sum(F.when(F.col("n") < _K_ANON, 1).otherwise(0))
-            .cast("bigint")
-            .alias("classes_below_k"),
-            F.sum("n").cast("bigint").alias("n_rows"),
-            F.sum(F.when(F.col("n") < _K_ANON, F.col("n")).otherwise(0))
-            .cast("bigint")
-            .alias("suppressed_rows"),
-            F.min("n").cast("bigint").alias("k_actual"),
-        )
-        .withColumn(
-            "suppression_rate",
-            F.col("suppressed_rows").cast("double") / F.col("n_rows").cast("double"),
-        )
-        .select(
-            "c_mktsegment",
-            "n_classes",
-            "classes_below_k",
-            "n_rows",
-            "suppressed_rows",
-            "k_actual",
-            "suppression_rate",
-        )
-    )
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_K_ANONYMITY)
 
 
 ORACLE_K_ANONYMITY = f"""

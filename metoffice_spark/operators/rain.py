@@ -18,6 +18,10 @@ attributed to neither day (reset writes C2=0, MWC:236-239), and the
 first rain of the day uses the daily accumulation as the rate base
 (MWC:257-263).
 
+The windows are written once, as the ``_RAIN_BASE_SQL`` CTE chain; the
+builders run their oracle text through ``io.sql_frame``, and the WOW
+payload (ingest.py) embeds the same chain.
+
 Scale note: the windows partition by (station_id, day) — at 100 TB
 that is the natural parquet partition layout, so the sort is local
 per partition and no global shuffle hotspot exists.
@@ -28,13 +32,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from metoffice_spark.io import sql_frame
 from metoffice_spark.obs import OBS_PER_HOUR, observations, oracle_cte
 
 _CTE = oracle_cte()
 
-# Shared CTE chain used by all rain oracle SQL. Dialect-common.
-# The counter is the FINAL ordering tie-break in both state windows
-# (r09 duprows probe class, fixed pre-emptively with q_win_lag):
+# Shared CTE chain used by all rain SQL: the oracles, the builders
+# below and the WOW payload (ingest.py). Dialect-common.
+# The counter is the FINAL ordering tie-break in both state windows:
 # byte-identical duplicate deliveries tie on (ts, obs_id) with
 # DISTINCT counter values, so FIRST_VALUE at a duplicated day-first
 # click and the 1-PRECEDING frame boundary between twins are
@@ -58,61 +63,8 @@ rain_state AS (
 )
 """
 
-
-def add_rain_state(df: DataFrame) -> DataFrame:
-    """Attach day/fresh/day_start/prev_saved state columns to any
-    obs-shaped DataFrame (station_id, ts, obs_id, rain_counter_mm,
-    rain_sensor_ts). DataFrame mirror of the rain_base/rain_state CTEs."""
-    w_day = Window.partitionBy("station_id", "day").orderBy(
-        "ts", "obs_id", "rain_counter_mm"
-    )
-    if "day" not in df.columns:  # obs substrate already carries day
-        df = df.withColumn("day", F.to_date("ts"))
-    base = (
-        df.withColumn("r", F.col("rain_counter_mm"))
-        .withColumn("fresh", F.to_date("rain_sensor_ts") == F.col("day"))
-        .withColumn("day_start", F.first("r").over(w_day))
-    )
-    return base.withColumn(
-        "prev_saved",
-        F.max(F.when(F.col("fresh") & (F.col("r") != F.col("day_start")), F.col("r"))).over(
-            w_day.rowsBetween(Window.unboundedPreceding, -1)
-        ),
-    )
-
-
-def _rain_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return add_rain_state(observations(spark, sf_dir))
-
-
-def rain_metrics_from_obs(df: DataFrame) -> DataFrame:
-    """dailyrainmm + rainmm per observation, exactly per MWC:229-280."""
-    st = add_rain_state(df)
-    raining = F.col("fresh") & (F.col("r") != F.col("day_start"))
-    daily = F.when(raining, F.col("r") - F.col("day_start")).otherwise(F.lit(0.0))
-    c2 = F.coalesce(F.col("prev_saved"), F.lit(0.0))
-    rate = F.when(
-        raining,
-        F.when(c2 != 0.0, F.lit(float(OBS_PER_HOUR)) * (F.col("r") - c2)).otherwise(
-            F.lit(float(OBS_PER_HOUR)) * (F.col("r") - F.col("day_start"))
-        ),
-    ).otherwise(F.lit(0.0))
-    return st.select(
-        "station_id",
-        "obs_id",
-        "ts",
-        "r",
-        daily.alias("dailyrainmm"),
-        rate.alias("rainmm"),
-    )
-
-
-def rain_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return rain_metrics_from_obs(observations(spark, sf_dir))
-
-
-# The two metrics as SQL over rain_state's columns, shared by the oracle
-# texts below and the WOW payload (ingest.py).
+# The two metrics as SQL over rain_state's columns, shared by the texts
+# below and the WOW payload (ingest.py).
 _RAIN_DAILY_SQL = "CASE WHEN fresh AND r <> day_start THEN r - day_start ELSE 0.0 END"
 _RAIN_RATE_SQL = (
     "CASE WHEN fresh AND r <> day_start THEN "
@@ -130,41 +82,29 @@ FROM rain_state
 ORACLE_RAIN_METRICS = f"{_CTE}, {_RAIN_BASE_SQL.strip()} {_RAIN_METRICS_SELECT}"
 
 
+def rain_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dailyrainmm + rainmm per observation, exactly per MWC:229-280:
+    the batch answer the streaming rain machine is checked against."""
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_RAIN_METRICS)
+
+
 def q_win_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Previous-observation lookup (Totalrainlatest analog, MWC:216/256).
-
-    Bounded to (station_id, day) — the same partition the rain machine
-    uses (and the reference's own state resets daily, MWC:231-240), so
-    at 100 TB the window sort is local to one day of one station
-    instead of a 4-key whole-history sort. The day's first observation
-    has no previous row (prev_r NULL, delta 0) — exactly the day-reset
-    semantics.
-
-    The counter is the FINAL ordering tie-break (r09 duprows probe):
-    byte-identical duplicate deliveries tie on (ts, obs_id) but the
-    substrate's within-day running sum assigns them DISTINCT counter
-    values (prior+x, prior+2x — a deterministic SET, arbitrarily
-    paired to the twins), and this consumer's window re-sorts the tie
-    independently — without the tie-break, which twin lags which is
-    an engine accident. Ordering by the counter itself makes the
-    order total and naturally monotone; on unique-(ts, obs_id) data
-    it is a no-op."""
-    df = observations(spark, sf_dir)
-    w = Window.partitionBy("station_id", "day").orderBy(
-        "ts", "obs_id", "rain_counter_mm"
-    )
-    prev_r = F.lag("rain_counter_mm").over(w)
-    return df.select(
-        "station_id",
-        "obs_id",
-        F.col("rain_counter_mm").alias("r"),
-        prev_r.alias("prev_r"),
-        (F.col("rain_counter_mm") - F.coalesce(prev_r, F.col("rain_counter_mm"))).alias(
-            "delta_r"
-        ),
-    )
+    """Previous-observation lookup (Totalrainlatest analog, MWC:216/256)."""
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_WIN_LAG)
 
 
+# Bounded to (station_id, day), the partition the rain machine uses
+# (the reference's own state resets daily, MWC:231-240), so at 100 TB
+# the window sort is local to one day of one station. The day's first
+# observation has no previous row (prev_r NULL, delta 0): the
+# day-reset semantics.
+# The counter is the FINAL ordering tie-break: byte-identical
+# duplicate deliveries tie on (ts, obs_id), but the substrate's
+# within-day running sum gives them DISTINCT counter values (prior+x,
+# prior+2x), and this window re-sorts the tie on its own; without the
+# tie-break, which twin lags which is an engine accident. The counter
+# is monotone within a day, so the order stays natural, and on
+# unique-(ts, obs_id) data the tie-break is a no-op.
 ORACLE_WIN_LAG = f"""{_CTE}
 SELECT station_id, obs_id, rain_counter_mm AS r,
        LAG(rain_counter_mm) OVER (PARTITION BY station_id, day
@@ -179,8 +119,7 @@ FROM observations
 
 def q_win_first_of_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-start anchor (Totalrainstart analog, MWC:215/249)."""
-    st = _rain_state(spark, sf_dir)
-    return st.select("station_id", "obs_id", "day", "r", "day_start")
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_WIN_FIRST_OF_DAY)
 
 
 ORACLE_WIN_FIRST_OF_DAY = f"""{_CTE}, {_RAIN_BASE_SQL.strip()}
@@ -190,9 +129,7 @@ SELECT station_id, obs_id, day, r, day_start FROM rain_state
 
 def q_rain_daily_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dailyrainmm with day-boundary reset + staleness guard (MWC:229-255)."""
-    return rain_metrics(spark, sf_dir).select(
-        "station_id", "obs_id", "ts", "r", "dailyrainmm"
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_RAIN_DAILY)
 
 
 ORACLE_RAIN_DAILY = f"""{_CTE}, {_RAIN_BASE_SQL.strip()}
@@ -204,7 +141,7 @@ FROM rain_state
 
 def q_rain_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rainmm rate incl. first-rain-of-day branch (MWC:256-279)."""
-    return rain_metrics(spark, sf_dir).select("station_id", "obs_id", "ts", "r", "rainmm")
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_RAIN_RATE)
 
 
 ORACLE_RAIN_RATE = f"""{_CTE}, {_RAIN_BASE_SQL.strip()}
@@ -215,6 +152,10 @@ FROM rain_state
 
 # --- state table: what the spreadsheet rows would contain ------------------
 
+# End-of-day rainhistory rows (A2-D2 analog, MWC:211-216/236-239/271-272).
+# ``MIN(r)`` and ``MAX(...)`` are the day's day_start and last saved
+# counter because the counter is monotone within a day, so the state
+# row is one plain aggregate with no window over the day's rows.
 _STATE_TABLE_SQL = f"""{_CTE}, {_RAIN_BASE_SQL.strip()}
 SELECT station_id, day,
        MIN(r) AS day_start_r,
@@ -225,26 +166,9 @@ GROUP BY station_id, day
 """
 
 
-def state_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-of-day rainhistory rows (A2-D2 analog, MWC:211-216/236-239/271-272).
-
-    ``min(r)``/``max(...)`` are valid day_start/last_saved because the
-    counter is monotone within a day.
-    """
-    st = _rain_state(spark, sf_dir)
-    return st.groupBy("station_id", "day").agg(
-        F.min("r").alias("day_start_r"),
-        F.coalesce(
-            F.max(F.when(F.col("fresh") & (F.col("r") != F.col("day_start")), F.col("r"))),
-            F.lit(0.0),
-        ).alias("last_saved_r"),
-        F.max("ts").alias("last_obs_ts"),
-    )
-
-
 def q_sink_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The state rows a day's run would write back (MWC:236-239, 271-272)."""
-    return state_table(spark, sf_dir)
+    return sql_frame(spark, sf_dir, ("events",), _STATE_TABLE_SQL)
 
 
 # previous state-snapshot roots of THIS process, deleted on the next
@@ -262,7 +186,7 @@ def q_src_state_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     # unique per-run dir: concurrent sessions (pytest + bench + driver)
-    # must not clobber each other's state snapshot (ADVICE r01).
+    # must not clobber each other's state snapshot.
     # Keep-latest-delete-stale (the q_join_bucketed _BUCKET_ROOTS
     # discipline): the returned DataFrame re-reads its root lazily, so
     # only PREVIOUS roots of this process are removed — without this,
@@ -270,7 +194,8 @@ def q_src_state_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lifetime.
     root = os.path.join(tempfile.gettempdir(), "metoffice_spark_state")
     path = os.path.join(root, uuid.uuid4().hex[:12], os.path.basename(sf_dir))
-    state_table(spark, sf_dir).write.mode("overwrite").parquet(path)
+    state = sql_frame(spark, sf_dir, ("events",), _STATE_TABLE_SQL)
+    state.write.mode("overwrite").parquet(path)
     while _STATE_ROOTS:
         shutil.rmtree(_STATE_ROOTS.pop(), ignore_errors=True)
     _STATE_ROOTS.append(os.path.dirname(path))
@@ -281,31 +206,18 @@ def q_src_state_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_join_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-lookup join: each observation × yesterday's state row
-    (the MWC:211-216 read, generalized per station-day). The state side
-    is tiny → explicit ``broadcast`` hash join, no shuffle of the obs side."""
-    st = state_table(spark, sf_dir).select(
-        "station_id",
-        F.date_add("day", 1).alias("next_day"),
-        F.col("day_start_r").alias("y_day_start_r"),
-    )
-    obs = _rain_state(spark, sf_dir)
-    joined = obs.join(
-        F.broadcast(st),
-        (obs.station_id == st.station_id) & (obs.day == st.next_day),
-        "left",
-    )
-    return joined.select(
-        obs.station_id.alias("station_id"),
-        "obs_id",
-        "r",
-        "y_day_start_r",
-        (F.col("r") - F.coalesce(F.col("y_day_start_r"), F.col("r"))).alias(
-            "rain_since_yesterday_start"
-        ),
-    )
+    """Point-lookup join: each observation x yesterday's state row
+    (the MWC:211-216 read, generalized per station-day)."""
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_JOIN_STATE_LOOKUP)
 
 
+# The state side is one row per station-day, so the join broadcasts it
+# and never shuffles the observation side: AQE turns the join into a
+# broadcast hash join once the state aggregate has run, while that
+# side is under spark.sql.autoBroadcastJoinThreshold (10 MB by
+# default, about 200k station-days at ~48 bytes a row; 4 stations
+# give ~140 years). Past that bound it runs as a sort-merge join on
+# (station_id, day): correct, with one more shuffle of the observations.
 ORACLE_JOIN_STATE_LOOKUP = f"""{_CTE}, {_RAIN_BASE_SQL.strip()},
 state AS (
   SELECT station_id, day,

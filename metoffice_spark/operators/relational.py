@@ -1,8 +1,10 @@
 """Relational EXT surface (SURVEY.md §2.2-2.8, §2.10 partial).
 
-General-purpose operators over the TPC-H-ish driver tables, written
-DataFrame-first so Catalyst picks the physical plan: broadcast joins
-for dims, shuffle joins for fact-fact, partial aggregation, pushdown.
+General-purpose operators over the TPC-H-ish driver tables. Catalyst
+picks the physical plan: broadcast joins for dims, shuffle joins for
+fact-fact, partial aggregation, pushdown. A builder whose oracle text
+Spark runs as written runs that text (``io.sql_frame``); the others
+are DataFrame builders.
 
 Cross-engine float parity: SUM/AVG over doubles is order-dependent,
 and Spark's partial-agg tree never adds in DuckDB's order. Every
@@ -22,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.parity import cents_sql, fits_sql, rhu_sql
 
 
@@ -31,10 +33,7 @@ from metoffice_spark.parity import cents_sql, fits_sql, rhu_sql
 def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + filter that must reach the parquet scan
     (PushedFilters + pruned ReadSchema; verified in tests/test_plans)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.filter((F.col("l_quantity") < 25) & (F.col("l_discount") > 0.02)).select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_discount"
-    )
+    return sql_frame(spark, sf_dir, ("lineitem",), ORACLE_SCAN_PARQUET)
 
 
 ORACLE_SCAN_PARQUET = """
@@ -45,13 +44,7 @@ FROM lineitem WHERE l_quantity < 25 AND l_discount > 0.02
 
 def q_filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunction/disjunction/range guards (the MWC:125/244/289 shapes)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_discount") != 0.0)
-        & (F.col("l_quantity") >= 10)
-        & ((F.col("l_returnflag") == "R") | (F.col("l_tax") < 0.05))
-        & F.col("l_linestatus").isin("O", "F")
-    ).select("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus", "l_quantity")
+    return sql_frame(spark, sf_dir, ("lineitem",), ORACLE_FILTER_PREDICATE)
 
 
 ORACLE_FILTER_PREDICATE = """
@@ -65,15 +58,7 @@ WHERE l_discount <> 0.0 AND l_quantity >= 10
 
 def q_project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Computed projection pipeline — per-row IEEE arithmetic, exact."""
-    li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        disc_price.alias("disc_price"),
-        (disc_price * (F.lit(1.0) + F.col("l_tax"))).alias("charge"),
-        (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"),
-    )
+    return sql_frame(spark, sf_dir, ("lineitem",), ORACLE_PROJECT_COMPUTE)
 
 
 ORACLE_PROJECT_COMPUTE = """
@@ -86,24 +71,11 @@ FROM lineitem
 
 
 def q_project_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Struct/array/map construction + field extraction (the
-    devices[i].measurement shape, MWC:142-157, on relational data)."""
-    c = load(spark, sf_dir, "customer")
-    nested = c.select(
-        "c_custkey",
-        F.struct(
-            F.col("c_name").alias("name"), F.col("c_acctbal").alias("bal")
-        ).alias("info"),
-        F.array(F.col("c_acctbal"), F.col("c_acctbal") * 2.0).alias("bals"),
-        F.create_map(F.lit("segment"), F.col("c_mktsegment")).alias("attrs"),
-    )
-    return nested.select(
-        "c_custkey",
-        F.col("info.name").alias("name"),
-        F.col("info.bal").alias("bal"),
-        F.element_at("bals", 2).alias("bal_x2"),
-        F.element_at("attrs", "segment").alias("segment"),
-    )
+    """The nested-record read (the devices[i].measurement shape,
+    MWC:142-157) on relational data: fields taken from a just-built
+    struct, array and map are the plain projection of the text, which
+    is what Catalyst folds such extraction to."""
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_PROJECT_NESTED)
 
 
 ORACLE_PROJECT_NESTED = """
@@ -155,13 +127,7 @@ GROUP BY l_returnflag, l_linestatus
 
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct aggregates (expand + two-phase agg under the hood)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.sum_distinct(F.col("l_quantity")).alias("sum_distinct_qty"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
+    return sql_frame(spark, sf_dir, ("lineitem",), ORACLE_AGG_DISTINCT)
 
 
 ORACLE_AGG_DISTINCT = """
@@ -356,15 +322,7 @@ GROUP BY c_custkey, c_mktsegment
 
 def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Existence (left_semi) and non-existence (left_anti) in one result."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
-    semi = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", F.lit("has_open_order").alias("status")
-    )
-    anti = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", F.lit("no_open_order").alias("status")
-    )
-    return semi.unionByName(anti)
+    return sql_frame(spark, sf_dir, ("customer", "orders"), ORACLE_JOIN_SEMI_ANTI)
 
 
 ORACLE_JOIN_SEMI_ANTI = """
@@ -503,19 +461,7 @@ FROM enriched WHERE event_type = 'purchase'
 
 def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank / ntile with a unique tiebreak."""
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        "o_totalprice",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-    )
+    return sql_frame(spark, sf_dir, ("orders",), ORACLE_WIN_RANK)
 
 
 ORACLE_WIN_RANK = """
@@ -566,23 +512,12 @@ WINDOW w3 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
 
 def q_win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead / lag / first_value / last_value / nth_value."""
-    # sequencing-validity boundary (r08 null-orderdate probe): as
-    # q_win_frame — positional analytics need a positioned row.
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.first("o_totalprice").over(w).alias("first_price"),
-        F.last("o_totalprice").over(full).alias("last_price"),
-        F.nth_value("o_totalprice", 2).over(full).alias("second_price"),
-    )
+    return sql_frame(spark, sf_dir, ("orders",), ORACLE_WIN_ANALYTIC)
 
 
+# An undated order has no position in its customer's order sequence,
+# so it is left out (as in q_win_frame): positional analytics need a
+# positioned row.
 ORACLE_WIN_ANALYTIC = """
 SELECT o_orderkey, o_custkey, o_totalprice,
        lag(o_totalprice) OVER w AS prev_price,
@@ -603,10 +538,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
 def q_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort (value compare is order-insensitive; the sort
     itself is exercised by the plan test)."""
-    o = load(spark, sf_dir, "orders")
-    return o.orderBy(
-        F.col("o_orderpriority").asc(), F.col("o_totalprice").desc(), F.col("o_orderkey")
-    ).select("o_orderkey", "o_orderpriority", "o_totalprice")
+    return sql_frame(spark, sf_dir, ("orders",), ORACLE_SORT)
 
 
 ORACLE_SORT = """
@@ -616,14 +548,9 @@ ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey
 
 
 def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k: orderBy+limit → TakeOrderedAndProject (no full sort; each
+    """Top-k: ORDER BY + LIMIT → TakeOrderedAndProject (no full sort; each
     partition keeps k, driver merges). Unique tiebreak for determinism."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(100)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
+    return sql_frame(spark, sf_dir, ("orders",), ORACLE_TOPK)
 
 
 ORACLE_TOPK = """
@@ -633,9 +560,7 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
 
 
 def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.union(s).distinct()
+    return sql_frame(spark, sf_dir, ("customer", "supplier"), ORACLE_SET_UNION)
 
 
 ORACLE_SET_UNION = """
@@ -646,9 +571,7 @@ SELECT s_nationkey FROM supplier
 
 
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.intersect(s)
+    return sql_frame(spark, sf_dir, ("customer", "supplier"), ORACLE_SET_INTERSECT)
 
 
 ORACLE_SET_INTERSECT = """
@@ -659,9 +582,7 @@ SELECT s_nationkey FROM supplier
 
 
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.subtract(s)
+    return sql_frame(spark, sf_dir, ("customer", "supplier"), ORACLE_SET_EXCEPT)
 
 
 ORACLE_SET_EXCEPT = """
@@ -677,38 +598,15 @@ def q_fn_math_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General math surface (extends the reference's ln/log10/cos/exp/π,
     MWC:190/301/319/328). Transcendentals rounded via rhu_sql, the
     same text the oracle embeds."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.abs(F.col("l_discount") - 0.05).alias("abs_v"),
-        # domain guards (r10 neg/zero money probe): DuckDB RAISES on
-        # sqrt/ln of a negative where Spark returns NaN/NULL — the
-        # root/log of an out-of-domain value is NULL on both sides.
-        # NOT isnan is spelled out because the >= guard itself splits
-        # on NaN (Spark total-order true, DuckDB vectorized false).
-        F.when(
-            (F.col("l_quantity") >= 0) & ~F.isnan("l_quantity"),
-            F.sqrt("l_quantity"),
-        ).alias("sqrt_qty"),
-        F.expr(_QTY_SQ).alias("qty_sq"),
-        F.expr(_FLOOR_PRICE).alias("floor_price"),
-        F.expr(_CEIL_PRICE).alias("ceil_price"),
-        F.expr(_EXP_DISC).alias("exp_disc"),
-        F.expr(_LN_PRICE).alias("ln_price"),
-        F.expr(_LOG10_PRICE).alias("log10_price"),
-        F.expr(_COS_DISC).alias("cos_disc"),
-        # NaN masked (r10 money probe): sign(NaN) is NaN in Spark but
-        # 0.0 in DuckDB — the sign of an unmeasurable value is NULL
-        F.when(
-            ~F.isnan(F.col("l_discount")),
-            F.signum(F.col("l_discount") - 0.05),
-        ).alias("sign_v"),
-        F.greatest("l_tax", "l_discount").alias("max_rate"),
-        F.least("l_tax", "l_discount").alias("min_rate"),
-    )
+    return sql_frame(spark, sf_dir, ("lineitem",), ORACLE_FN_MATH_SUITE)
 
 
+# Domain guards: DuckDB raises on sqrt/ln of a negative where Spark
+# returns NaN/NULL, so the root or log of an out-of-domain value is NULL
+# on both engines. NOT isnan is spelled out because the >= guard itself
+# splits on NaN (true in Spark's total order, false in DuckDB's
+# vectorized compare). sign(NaN) is NaN in Spark but 0.0 in DuckDB, so
+# the sign of an unmeasurable value is NULL.
 _QTY_SQ = rhu_sql("pow(l_quantity, 2.0)", 6)
 _EXP_DISC = rhu_sql("exp(l_discount)", 8)
 _LN_PRICE = rhu_sql("CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice)"
@@ -820,19 +718,7 @@ JOIN embeddings ON event_id = vec_id
 
 def q_fn_date_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-part extraction + truncation (generalizes MWC:206-222)."""
-    o = load(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.month("o_orderdate").alias("mo"),
-        F.dayofmonth("o_orderdate").alias("dom"),
-        F.quarter("o_orderdate").alias("qtr"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("month_start"),
-        F.to_date("o_orderdate").alias("order_day"),
-        F.datediff(F.to_date(F.lit("2025-01-01")), F.to_date("o_orderdate")).alias(
-            "days_to_2025"
-        ),
-    )
+    return sql_frame(spark, sf_dir, ("orders",), ORACLE_FN_DATE_EXTRACT)
 
 
 ORACLE_FN_DATE_EXTRACT = """
@@ -1148,21 +1034,7 @@ def q_set_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_set_intersect/q_set_except's DISTINCT forms don't cover. Spark
     plans these as aggregate+join on value with count arithmetic —
     shuffle on the value key, no row explosion."""
-    li = load(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_returnflag") == "A").select("l_quantity")
-    b = li.filter(F.col("l_returnflag") == "R").select("l_quantity")
-    inter = a.intersectAll(b).groupBy("l_quantity").agg(
-        F.count("*").alias("n_inter")
-    )
-    diff = a.exceptAll(b).groupBy("l_quantity").agg(F.count("*").alias("n_diff"))
-    return (
-        inter.join(diff, "l_quantity", "full_outer")
-        .select(
-            "l_quantity",
-            F.coalesce("n_inter", F.lit(0)).alias("n_inter"),
-            F.coalesce("n_diff", F.lit(0)).alias("n_diff"),
-        )
-    )
+    return sql_frame(spark, sf_dir, ("lineitem",), ORACLE_SET_BAG)
 
 
 ORACLE_SET_BAG = """
@@ -1379,36 +1251,7 @@ QUERIES["q_agg_histogram"] = (q_agg_histogram, ORACLE_AGG_HISTOGRAM)
 def q_fn_null_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation: row count, non-null counts/sums of a planted
     nullable column, and null-safe equality tallies."""
-    c = load(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_nationkey",
-        F.expr("nullif(c_custkey % 7, 0)").alias("nv"),
-        F.expr("nullif(c_custkey % 14, 0)").alias("nv2"),
-    )
-    return (
-        c.select(
-            "c_nationkey",
-            "nv",
-            F.coalesce("nv", F.lit(-1)).alias("nv_filled"),
-            F.expr("nv <=> nv2").alias("ns_eq"),
-            F.expr("case when nv is null then 'missing' else 'present' end").alias(
-                "presence"
-            ),
-        )
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.count("nv").cast("bigint").alias("n_nonnull"),
-            F.sum("nv").cast("bigint").alias("sum_nv"),
-            F.sum("nv_filled").cast("bigint").alias("sum_filled"),
-            F.sum(F.when(F.col("ns_eq"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_nullsafe_eq"),
-            F.sum(F.when(F.col("presence") == "missing", 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_missing"),
-        )
-    )
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_FN_NULL_SUITE)
 
 
 ORACLE_FN_NULL_SUITE = """

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.parity import cents_sql, fits_sql
 
 QUERIES: dict = {}
@@ -339,37 +339,12 @@ def q_win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle+sort on user_id; the kernel is 8 lag()
     expressions sharing that single window — map-side after the sort,
     no UDF, no recursion."""
-    # value boundary (failed reading) + ts boundary (r08 null-ts
-    # probe: an untimestamped reading has no kernel position — NULL
-    # sorts at opposite ends on the two engines).
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(
-            F.col("value").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.expr(fits_sql("value"))
-        )
-        .select("event_id", "user_id", "ts", F.expr(cents_sql("value")).alias("x_fp"))
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    num = F.lit(0).cast("bigint")
-    den = F.lit(0).cast("bigint")
-    for j in range(_EWMA_K):
-        wgt = 1 << (_EWMA_K - 1 - j)
-        lagx = F.col("x_fp") if j == 0 else F.lag("x_fp", j).over(w)
-        num = num + F.coalesce(lagx * wgt, F.lit(0))
-        den = den + F.when(lagx.isNotNull(), F.lit(wgt)).otherwise(0)
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "x_fp",
-        num.alias("ewma_num"),
-        den.alias("ewma_den"),
-        (num / den).alias("ewma"),
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_WIN_EWMA)
 
 
+# A failed reading (NULL or non-finite value) and an untimestamped one
+# are left out: a NULL ts has no kernel position, and the engines sort
+# it at opposite ends.
 def _ewma_oracle() -> str:
     nums, dens = [], []
     for j in range(_EWMA_K):
@@ -393,7 +368,8 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-QUERIES["q_win_ewma"] = (q_win_ewma, _ewma_oracle())
+ORACLE_WIN_EWMA = _ewma_oracle()
+QUERIES["q_win_ewma"] = (q_win_ewma, ORACLE_WIN_EWMA)
 
 
 # --- q_win_distribution: rank-distribution functions as exact integers -------
@@ -413,21 +389,7 @@ def q_win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both windows share one shuffle+sort on c_mktsegment (the
     second orders by a prefix-compatible key); segment cardinality is
     small but each partition streams — no per-row state."""
-    cust = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", F.expr(cents_sql("c_acctbal")).alias("bal_fp")
-    )
-    w_val = Window.partitionBy("c_mktsegment").orderBy(F.desc("bal_fp"))
-    w_uni = Window.partitionBy("c_mktsegment").orderBy(F.desc("bal_fp"), F.asc("c_custkey"))
-    w_all = Window.partitionBy("c_mktsegment")
-    return cust.select(
-        "c_custkey",
-        "c_mktsegment",
-        "bal_fp",
-        F.rank().over(w_val).cast("bigint").alias("rk"),
-        F.count(F.lit(1)).over(w_val).cast("bigint").alias("cume_cnt"),
-        F.count(F.lit(1)).over(w_all).cast("bigint").alias("seg_n"),
-        F.ntile(4).over(w_uni).cast("int").alias("quartile"),
-    )
+    return sql_frame(spark, sf_dir, ("customer",), ORACLE_WIN_DISTRIBUTION)
 
 
 ORACLE_WIN_DISTRIBUTION = f"""
@@ -464,32 +426,12 @@ def q_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the rank window runs over #distinct-segments rows per
     nation, never raw customers; the nation dim joins broadcast."""
-    cust = load(spark, sf_dir, "customer")
-    nation = load(spark, sf_dir, "nation")
-    counts = cust.groupBy("c_nationkey", "c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_seg")
-    )
-    # NULLS LAST spelled out (r10 dim-null probe): a NULL segment is a
-    # real category and may win the mode, but the ASC tie-break must
-    # place it identically — Spark ASC is NULLS FIRST, DuckDB ASC is
-    # NULLS LAST
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.desc("n_seg"), F.asc_nulls_last("c_mktsegment")
-    )
-    tot = Window.partitionBy("c_nationkey")
-    modal = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_total", F.sum("n_seg").over(tot))
-        .filter(F.col("rn") == 1)
-    )
-    return modal.join(F.broadcast(nation), modal.c_nationkey == nation.n_nationkey).select(
-        "n_name",
-        F.col("c_mktsegment").alias("mode_segment"),
-        F.col("n_seg").alias("n_mode"),
-        F.col("n_total").cast("bigint").alias("n_total"),
-    )
+    return sql_frame(spark, sf_dir, ("nation", "customer"), ORACLE_MODE_AGG)
 
 
+# NULLS LAST is spelled out: a NULL segment is a real category and may
+# win the mode, but the ASC tie-break must place it the same way on both
+# engines (Spark's ASC puts NULLs first, DuckDB's last).
 ORACLE_MODE_AGG = """
 WITH counts AS (
   SELECT c_nationkey, c_mktsegment, count(*) AS n_seg
@@ -528,40 +470,12 @@ def q_cov_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     #event-types rows — the textbook distributive-aggregate shape
     (a Welford/centered pass would need the same shuffle but lose
     exactness)."""
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-        & F.expr(fits_sql("value"))
-    )
-    src = ev.select(
-        "event_type",
-        F.expr(cents_sql("value")).alias("x"),
-        F.hour("ts").cast("bigint").alias("y"),
-    )
-    agg = src.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    cov_num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    var_y_num = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    return agg.select(
-        "event_type",
-        "n",
-        F.col("sx").cast("bigint").alias("sx"),
-        F.col("sy").cast("bigint").alias("sy"),
-        F.col("sxy").cast("bigint").alias("sxy"),
-        cov_num.cast("bigint").alias("cov_num"),
-        var_y_num.cast("bigint").alias("var_y_num"),
-        # nullif: a degenerate slice can leave a group with one row (or
-        # one distinct hour), zeroing the variance numerator — Spark
-        # ANSI raises where DuckDB gives inf/NaN, so the slope is NULL
-        # on both engines instead (r07 near-empty fuzz finding).
-        (cov_num / F.nullif(var_y_num, F.lit(0))).alias("slope_x_on_y"),
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_COV_STATS)
 
 
+# nullif: a degenerate slice can leave a group with one row (or one
+# distinct hour), zeroing the variance term, where Spark ANSI raises and
+# DuckDB gives inf/NaN; the slope is NULL on both engines instead.
 ORACLE_COV_STATS = f"""
 WITH src AS (
   SELECT event_type, {cents_sql("value")} AS x,

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.operators.llm import TOKS_DUCK, TOKS_SPARK
 
 
@@ -96,14 +96,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram-marker language ID: deterministic stopword scoring with a
     fixed argmax precedence (en > de > fr > es on ties). Map-only —
     the 100 TB plan is a pure projection, zero shuffles."""
-    docs = load(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        "lang",
-        *[F.expr(_SCORES[lg]).alias(f"score_{lg}") for lg in _MARKERS],
-        F.expr(_PREDICT).alias("predicted_lang"),
-        (F.expr(_PREDICT) == F.col("lang")).alias("agrees"),
-    )
+    return sql_frame(spark, sf_dir, ("documents",), ORACLE_TEXT_LANGID)
 
 
 ORACLE_TEXT_LANGID = f"""

@@ -13,7 +13,7 @@ from metoffice_spark.functions.distributed import (
     global_running_sum,
     global_strict_prefix_min,
 )
-from metoffice_spark.io import load
+from metoffice_spark.io import load, sql_frame
 from metoffice_spark.parity import cents_sql, fits_sql
 from metoffice_spark.session import scoped_persist
 
@@ -201,37 +201,14 @@ _PATH_TOPK = 20
 
 def q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top 20 'a>b>c' consecutive event-type paths with counts."""
-    # event_type IS NOT NULL: Spark's concat_ws SKIPS null arguments
-    # while the oracle's || propagates NULL — a NULL type row would
-    # silently produce a 2-element path on one engine and a NULL
-    # group on the other, so nulls are excluded explicitly BOTH sides.
-    # ts IS NOT NULL (r08 null-ts probe): an untimestamped event has
-    # no position in the path — Spark sorts NULL ts first, DuckDB
-    # last, so keeping it re-splices every affected user's trigrams.
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter("event_type IS NOT NULL AND ts IS NOT NULL")
-        .select("user_id", "event_type", "ts", "event_id")
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    paths = (
-        ev.select(
-            "event_type",
-            F.lead("event_type", 1).over(w).alias("t1"),
-            F.lead("event_type", 2).over(w).alias("t2"),
-        )
-        .filter("t1 IS NOT NULL AND t2 IS NOT NULL")
-        .select(
-            F.concat_ws(">", F.col("event_type"), F.col("t1"), F.col("t2")).alias(
-                "path"
-            )
-        )
-        .groupBy("path")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    return paths.orderBy(F.col("n").desc(), F.col("path").asc()).limit(_PATH_TOPK)
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_EVENT_PATHS)
 
 
+# event_type IS NOT NULL: Spark's concat_ws skips NULL arguments while
+# || propagates NULL, so a NULL type would give a 2-element path on one
+# engine and a NULL group on the other. ts IS NOT NULL: an untimestamped
+# event has no position in the path, and the engines sort a NULL ts at
+# opposite ends, which would re-splice the user's trigrams.
 ORACLE_EVENT_PATHS = f"""
 WITH seq AS (
   SELECT event_type,

@@ -201,20 +201,7 @@ FROM observations
 
 def q_fn_num_coerce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """parseFloat / isNaN-guard analog: try_cast with fallback (MWC:181-183, 296-297)."""
-    df = observations(spark, sf_dir)
-    dirty = F.when(F.col("obs_id") % 7 == 0, F.lit("N/A")).otherwise(
-        F.col("tempc").cast("string")
-    )
-    parsed = F.expr("try_cast(dirty AS DOUBLE)")
-    return (
-        df.withColumn("dirty", dirty)
-        .select(
-            "obs_id",
-            parsed.alias("parsed"),
-            F.coalesce(parsed, F.lit(-999.0)).alias("parsed_or_default"),
-            parsed.isNull().alias("is_nan"),
-        )
-    )
+    return sql_frame(spark, sf_dir, ("events",), ORACLE_NUM_COERCE)
 
 
 ORACLE_NUM_COERCE = f"""{_CTE}

@@ -23,6 +23,13 @@ survive the next persist-bearing builder and are released when the one
 after it starts, so a driver may build the next query before executing
 the previous frame; a frame run after its scope was released merely
 recomputes.
+
+A builder whose oracle text Spark runs as written builds through
+``io.sql_frame`` over that text, with no Column-DSL copy of it. A DSL
+builder stays where its plan is the point (a 100 TB formulation the
+text lacks, a UDF or a sink's file IO) or where the text lost a
+measured A/B against it (the tables are under artifacts/);
+tests/test_sql_frame.py lists the builders that run their oracle text.
 """
 
 from __future__ import annotations

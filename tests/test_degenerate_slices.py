@@ -624,7 +624,7 @@ DUP_QIDS = (
     # rain-state family: fixed PRE-emptively (the probe pass was
     # distributional luck — FIRST_VALUE/frame-boundary divergence
     # needs a day's FIRST obs to be a duplicated click): counter
-    # tie-break in _RAIN_BASE_SQL + add_rain_state + _rain_machine.
+    # tie-break in _RAIN_BASE_SQL + _rain_machine.
     "q_rain_daily_delta",
     "q_rain_rate",
     "q_win_first_of_day",

@@ -73,11 +73,8 @@ _NLJ_RATCHET = {
     "q_eval_calibration": 1,
     # 2 in the metric frame, plus the 4 of q_nb_langid's plan (its pin
     # below: one 1-row broadcast scalar and three |langs|-bounded
-    # grids) under each of the 6 readers of the confusion frame, which
-    # is no longer persisted. Exchange reuse runs that subtree once:
-    # the executed AQE plan at sf0.001 holds 6 BroadcastNestedLoopJoins
-    # (tools/measure.py spark.jobs 41 -> 28 at sf0.1)
-    "q_eval_multiclass": 26,
+    # grids) inside the persisted confusion frame, counted once
+    "q_eval_multiclass": 6,
     "q_eval_pr": 1,
     "q_forecast_snaive": 1,
     "q_graph_assortativity": 1,

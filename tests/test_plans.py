@@ -188,14 +188,14 @@ def test_sink_partitioned_read_back_prunes_partitions(spark, sf_smoke):
 
 
 def test_obs_substrate_single_full_data_exchange(spark, sf_smoke):
-    """The substrate + rain-state window stack must share ONE full-data
+    """The substrate + rain-state window stack (``q_win_first_of_day``
+    reads the whole ``_RAIN_BASE_SQL`` chain) must share ONE full-data
     exchange and sort: day is exposed by the substrate so downstream
-    (station, day) windows reuse its partitioning (round-3 fix — a
-    recomputed to_date(ts) used to force a second whole-surface
-    shuffle)."""
-    from metoffice_spark.operators.rain import _rain_state
+    (station, day) windows reuse its partitioning (a recomputed
+    to_date(ts) used to force a second whole-surface shuffle)."""
+    from metoffice_spark.operators.rain import q_win_first_of_day
 
-    plan = _plan(_rain_state(spark, sf_smoke))
+    plan = _plan(q_win_first_of_day(spark, sf_smoke))
     full = [
         ln
         for ln in plan.splitlines()

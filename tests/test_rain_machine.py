@@ -1,8 +1,9 @@
 """Scripted-scenario tests for the rain state machine (MWC:196-280).
 
-Replays FIXTURES.md §A4's six golden scenarios through the batch
-window-function re-expression and checks dailyrainmm/rainmm against
-values hand-traced through the reference's branch logic.
+Replays FIXTURES.md §A4's golden scenarios through the batch rain SQL
+(``_RAIN_BASE_SQL`` + ``_RAIN_METRICS_SELECT``) and checks
+dailyrainmm/rainmm against values hand-traced through the reference's
+branch logic.
 """
 
 from __future__ import annotations
@@ -11,24 +12,36 @@ from datetime import datetime
 
 import pytest
 
-from metoffice_spark.operators.rain import rain_metrics_from_obs
+from metoffice_spark.operators.rain import _RAIN_BASE_SQL, _RAIN_METRICS_SELECT
 
 FREQ = 4.0  # observ_exec_freq (MWC:34-39)
 
 
 def _obs(spark, rows):
-    """rows: (obs_id, ts, counter, sensor_ts) for one station."""
+    """rows: (obs_id, ts, counter, sensor_ts) for one station; ``day``
+    is the observation's UTC date, as the obs substrate gives it."""
     data = [
-        ("st1", datetime.fromisoformat(ts), oid, float(r), datetime.fromisoformat(sts))
+        (
+            "st1",
+            datetime.fromisoformat(ts),
+            oid,
+            float(r),
+            datetime.fromisoformat(sts),
+            datetime.fromisoformat(ts).date(),
+        )
         for oid, ts, r, sts in rows
     ]
     return spark.createDataFrame(
-        data, "station_id string, ts timestamp, obs_id long, rain_counter_mm double, rain_sensor_ts timestamp"
+        data,
+        "station_id string, ts timestamp, obs_id long, rain_counter_mm double,"
+        " rain_sensor_ts timestamp, day date",
     )
 
 
 def _run(spark, rows):
-    df = rain_metrics_from_obs(_obs(spark, rows))
+    """The rain SQL the builders and the WOW payload run, over the rows."""
+    _obs(spark, rows).createOrReplaceTempView("observations")
+    df = spark.sql(f"WITH {_RAIN_BASE_SQL.strip()} {_RAIN_METRICS_SELECT}")
     return {r.obs_id: (r.dailyrainmm, r.rainmm) for r in df.collect()}
 
 

@@ -18,14 +18,15 @@ def _rows(df, cols):
 
 def test_stateful_replay_equals_batch(spark, sf_smoke):
     """The applyInPandasWithState rain machine replayed over two
-    micro-batches must equal the batch window-function computation —
-    the reference's spreadsheet state vs its whole-history recompute."""
-    from metoffice_spark.operators.rain import rain_metrics
+    micro-batches must equal the batch rain SQL (``ORACLE_RAIN_METRICS``)
+    — the reference's spreadsheet state vs its whole-history recompute."""
+    from metoffice_spark.io import sql_frame
+    from metoffice_spark.operators.rain import ORACLE_RAIN_METRICS
     from metoffice_spark.operators.streaming_batch import q_stream_stateful
 
     cols = ["station_id", "obs_id", "r", "dailyrainmm", "rainmm"]
     streamed = _rows(q_stream_stateful(spark, sf_smoke), cols)
-    batch = _rows(rain_metrics(spark, sf_smoke), cols)
+    batch = _rows(sql_frame(spark, sf_smoke, ("events",), ORACLE_RAIN_METRICS), cols)
     assert streamed == batch
 
 
@@ -45,9 +46,10 @@ def test_checkpoint_recovery_resumes_state(spark, sf_smoke):
       treat them as a fresh day reset and diverge from batch."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from metoffice_spark.io import sql_frame
     from metoffice_spark.obs import observations
     from metoffice_spark.operators import streaming_batch as sb
-    from metoffice_spark.operators.rain import rain_metrics
+    from metoffice_spark.operators.rain import ORACLE_RAIN_METRICS
 
     root = tempfile.mkdtemp(prefix="metoffice_ckpt_recovery_")
     input_dir = os.path.join(root, "input")
@@ -101,7 +103,8 @@ def test_checkpoint_recovery_resumes_state(spark, sf_smoke):
         assert final.select("obs_id").distinct().count() == obs.count()
         # recovered state: identical to the uninterrupted batch machine
         cols = ["station_id", "obs_id", "r", "dailyrainmm", "rainmm"]
-        assert _rows(final, cols) == _rows(rain_metrics(spark, sf_smoke), cols)
+        batch = sql_frame(spark, sf_smoke, ("events",), ORACLE_RAIN_METRICS)
+        assert _rows(final, cols) == _rows(batch, cols)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
